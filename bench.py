@@ -451,6 +451,14 @@ def main() -> None:
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "sf": sf_val,
+                # what makes two artifacts comparable: the regression
+                # gate judges only against a baseline with this same
+                # fingerprint (r13: 8-core runs vs 32-core minima)
+                "fingerprint": {
+                    "cpus": spark.sparkContext.defaultParallelism,
+                    "sf": sf_val,
+                    "spark_version": spark.version,
+                },
                 "k_headline": k,
                 "k_rest": k_rest,
                 "rest_stat": "min",

@@ -35,12 +35,14 @@ def persistent_rdd_ids(spark) -> set:
 
 def tracked_checkpoint(df: DataFrame, owned_ids: list) -> DataFrame:
     """``localCheckpoint`` that records the storage ids it pinned into
-    ``owned_ids`` for later :func:`release_rdds`."""
+    ``owned_ids`` for later :func:`release_rdds` — also when the eager
+    checkpoint job fails, which leaves its RDD registered as pinned."""
     spark = df.sparkSession
     before = persistent_rdd_ids(spark)
-    ck = df.localCheckpoint()
-    owned_ids.extend(persistent_rdd_ids(spark) - before)
-    return ck
+    try:
+        return df.localCheckpoint()
+    finally:
+        owned_ids.extend(persistent_rdd_ids(spark) - before)
 
 
 @contextmanager

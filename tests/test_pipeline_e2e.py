@@ -11,7 +11,9 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql import DataFrameWriter
 
+from echem_dft_etl_spark.operators.storage import persistent_rdd_ids
 from echem_dft_etl_spark.pipeline import (
     generate_slabs,
     run_reference_pipeline,
@@ -23,25 +25,26 @@ from echem_dft_etl_spark.sources.sinks import (
     upsert_parquet,
 )
 
+MATERIALS = [
+    ("mp-0001", "V-O", [[5.0, 0.0, 0.0], [0.0, 6.0, 0.0], [0.0, 0.0, 20.0]],
+     ["V", "O", "O"], 5.0, 6.0),
+    ("mp-0002", "V-O", [[4.0, 0.0, 0.0], [0.0, 4.0, 0.0], [0.0, 0.0, 18.0]],
+     ["V", "V", "O"], 4.0, 4.0),
+    ("mp-0003", "V-O", [[3.5, 0.0, 0.0], [0.0, 7.0, 0.0], [0.0, 0.0, 22.0]],
+     ["V", "O"], 3.5, 7.0),
+    ("mp-9999", "Fe-O", [[3.0, 0.0, 0.0], [0.0, 3.0, 0.0], [0.0, 0.0, 15.0]],
+     ["Fe", "O"], 3.0, 3.0),
+]
+MATERIALS_SCHEMA = (
+    "material_id string, chemsys string, "
+    "lattice array<array<double>>, ion_names array<string>, "
+    "cell00 double, cell11 double"
+)
+
 
 @pytest.fixture()
 def materials(spark):
-    rows = [
-        ("mp-0001", "V-O", [[5.0, 0.0, 0.0], [0.0, 6.0, 0.0], [0.0, 0.0, 20.0]],
-         ["V", "O", "O"], 5.0, 6.0),
-        ("mp-0002", "V-O", [[4.0, 0.0, 0.0], [0.0, 4.0, 0.0], [0.0, 0.0, 18.0]],
-         ["V", "V", "O"], 4.0, 4.0),
-        ("mp-0003", "V-O", [[3.5, 0.0, 0.0], [0.0, 7.0, 0.0], [0.0, 0.0, 22.0]],
-         ["V", "O"], 3.5, 7.0),
-        ("mp-9999", "Fe-O", [[3.0, 0.0, 0.0], [0.0, 3.0, 0.0], [0.0, 0.0, 15.0]],
-         ["Fe", "O"], 3.0, 3.0),
-    ]
-    return spark.createDataFrame(
-        rows,
-        "material_id string, chemsys string, "
-        "lattice array<array<double>>, ion_names array<string>, "
-        "cell00 double, cell11 double",
-    )
+    return spark.createDataFrame(MATERIALS, MATERIALS_SCHEMA)
 
 
 def test_pipeline_end_to_end(spark, materials, tmp_path):
@@ -69,6 +72,40 @@ def test_pipeline_rerun_idempotent(spark, materials, tmp_path):
     assert sorted((r.MP_id, r.pzc) for r in first) == sorted(
         (r.MP_id, r.pzc) for r in second
     )
+
+
+def test_pipeline_scans_its_source_once(spark, tmp_path):
+    """Every sink and the solver read the source checkpoint: each input
+    row passes through the source lineage exactly once per call."""
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def tick(row):
+        seen.add(1)
+        return row
+
+    materials = spark.createDataFrame(
+        sc.parallelize(MATERIALS, 2).map(tick), MATERIALS_SCHEMA
+    )
+    run_reference_pipeline(spark, materials, str(tmp_path / "run")).collect()
+    assert seen.value == len(MATERIALS)
+
+
+def test_pipeline_releases_its_checkpoints(spark, materials, tmp_path):
+    """A call leaves executor storage as it found it, also when the
+    solver raises after the source checkpoint is pinned."""
+    before = persistent_rdd_ids(spark)
+    run_reference_pipeline(spark, materials, str(tmp_path / "ok")).collect()
+    assert persistent_rdd_ids(spark) == before
+
+    def broken_solver(runs):
+        raise RuntimeError("solver unavailable")
+
+    with pytest.raises(RuntimeError, match="solver unavailable"):
+        run_reference_pipeline(
+            spark, materials, str(tmp_path / "failed"), solver=broken_solver
+        )
+    assert persistent_rdd_ids(spark) == before
 
 
 def test_generate_slabs_indexing(spark, materials):
@@ -113,6 +150,38 @@ def test_upsert_first_wins(spark, tmp_path):
     assert got2 == {"a": 1.0, "b": 3.0, "c": 4.0}
 
 
+def test_upsert_leaves_no_pinned_storage(spark, tmp_path, monkeypatch):
+    """The insert-set checkpoint is released after the append and after
+    a failed append."""
+    path = str(tmp_path / "tbl")
+    schema = "MP_id string, pzc double"
+    upsert_parquet(
+        spark.createDataFrame([("a", 1.0)], schema),
+        path, key_cols=["MP_id"], order_col="pzc",
+    )
+    before = persistent_rdd_ids(spark)
+    upsert_parquet(
+        spark.createDataFrame([("b", 2.0)], schema),
+        path, key_cols=["MP_id"], order_col="pzc",
+    )
+    assert persistent_rdd_ids(spark) == before
+
+    def broken_parquet(self, *args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", broken_parquet)
+    with pytest.raises(OSError, match="disk full"):
+        upsert_parquet(
+            spark.createDataFrame([("d", 4.0)], schema),
+            path, key_cols=["MP_id"], order_col="pzc",
+        )
+    assert persistent_rdd_ids(spark) == before
+    monkeypatch.undo()
+    assert sorted(r.MP_id for r in spark.read.parquet(path).collect()) == [
+        "a", "b",
+    ]
+
+
 def test_read_text_runs_lines(spark, tmp_path):
     d = tmp_path / "outs"
     d.mkdir()
@@ -128,10 +197,16 @@ def test_read_text_runs_lines(spark, tmp_path):
 
 def test_append_report(spark, tmp_path):
     path = str(tmp_path / "report")
-    append_report(spark, path, ["## run 1"])
+
+    def n_parts():
+        return len(list((tmp_path / "report").glob("part-*")))
+
+    append_report(spark, path, ["## run 1", "![plot](run1.png)"])
+    assert n_parts() == 1  # one file per append
     append_report(spark, path, ["## run 2"])
-    vals = {r.value for r in spark.read.text(path).collect()}
-    assert vals == {"## run 1", "## run 2"}
+    assert n_parts() == 2
+    vals = [r.value for r in spark.read.text(path).collect()]
+    assert sorted(vals) == sorted(["## run 1", "![plot](run1.png)", "## run 2"])
 
 
 def test_observation_rides_the_job(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -2003,6 +2004,31 @@ def test_storage_tracked_checkpoint_roundtrip(spark):
     # idempotent / unknown ids: no raise
     release_rdds(spark, owned)
     release_rdds(spark, [999_999])
+
+
+def test_storage_tracked_checkpoint_records_a_failed_job(spark):
+    """A failed eager checkpoint job leaves its RDD pinned; the ids
+    still land in ``owned`` so the caller's ``finally`` frees them."""
+    from echem_dft_etl_spark.operators.storage import (
+        persistent_rdd_ids,
+        release_rdds,
+        tracked_checkpoint,
+    )
+
+    before = persistent_rdd_ids(spark)
+    owned: list = []
+    # over a range, not local rows, so the optimizer cannot fold the
+    # error into the plan; no shuffle, so it fails in the checkpoint job
+    bad = spark.range(4).select(
+        F.when(F.col("id") == 3, F.raise_error(F.lit("bad row")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="bad row"):
+        tracked_checkpoint(bad, owned)
+    assert owned
+    release_rdds(spark, owned)
+    assert persistent_rdd_ids(spark) == before
 
 
 def test_skyline_two_phase_matches_bruteforce(spark):
