@@ -36,9 +36,12 @@ def pipe_map(
 
     ``serialize`` renders a batch to the child's stdin text; ``parse``
     turns the child's stdout (plus the originating batch, for keys)
-    into the output batch. Timeout kills the child and fails the task —
-    Spark's retry/blacklist machinery then re-schedules, replacing the
-    reference's Airflow-level retry handling.
+    into the output batch. The protocol is one output line per input
+    row: a child that answers with another line count fails the task
+    instead of silently dropping or inventing rows. Timeout kills the
+    child and fails the task — Spark's retry/blacklist machinery then
+    re-schedules, replacing the reference's Airflow-level retry
+    handling.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -57,6 +60,13 @@ def pipe_map(
                     f"pipe command {command!r} failed "
                     f"(rc={proc.returncode}): {proc.stderr[:500]}"
                 )
+            lines = proc.stdout.split("\n")
+            n_out = len(lines) - (lines[-1] == "")
+            if n_out != len(pdf):
+                raise RuntimeError(
+                    f"pipe command {command!r} returned {n_out} lines "
+                    f"for a batch of {len(pdf)} rows"
+                )
             yield parse(proc.stdout, pdf)
 
     return df.mapInPandas(run, output_schema)
@@ -71,33 +81,41 @@ def pipe_solver_stub(runs: DataFrame, timeout_s: float = 60.0) -> DataFrame:
     the reference's 'FillingsUpdate: mu: ... nElectrons: ...' line
     format (cf. output/gc_dft/*.out) so the downstream Q5/Q6 parser
     consumes it unchanged.
+
+    Rows cross the pipe tab-delimited (``run_id<TAB>charge`` in,
+    ``run_id<TAB>FillingsUpdate: ...`` out) so a run id may hold
+    spaces; a run id with a tab or a newline is refused.
     """
     awk = (
-        '{ printf "%s FillingsUpdate:  mu: %.6f  nElectrons: %.3f\\n",'
+        '{ printf "%s\\tFillingsUpdate:  mu: %.6f  nElectrons: %.3f\\n",'
         " $1, -0.2 + 0.05 * $2, 250 + 10 * $2 }"
     )
 
     def serialize(pdf: pd.DataFrame) -> str:
-        return "".join(
-            f"{r.run_id} {r.charge}\n" for r in pdf.itertuples(index=False)
-        )
+        lines = []
+        for r in pdf.itertuples(index=False):
+            if "\t" in r.run_id or "\n" in r.run_id:
+                raise ValueError(f"run_id {r.run_id!r} holds a tab or a newline")
+            lines.append(f"{r.run_id}\t{r.charge}\n")
+        return "".join(lines)
 
     def parse(stdout: str, pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
-        for line in stdout.splitlines():
-            parts = line.split()
+        for line in stdout.split("\n")[:-1]:
+            run_id, fillings = line.split("\t", 1)
+            parts = fillings.split()
             rows.append(
                 {
-                    "run_id": parts[0],
-                    "mu": float(parts[3]),
-                    "ne": float(parts[5]),
+                    "run_id": run_id,
+                    "mu": float(parts[2]),
+                    "ne": float(parts[4]),
                 }
             )
         return pd.DataFrame(rows, columns=["run_id", "mu", "ne"])
 
     return pipe_map(
         runs,
-        ["awk", awk],
+        ["awk", "-F\t", awk],
         "run_id string, mu double, ne double",
         serialize,
         parse,

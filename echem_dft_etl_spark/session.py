@@ -13,15 +13,124 @@ absolute sizes tuned to the laptop:
   the DuckDB oracle used by the correctness harness.
 - Nested-schema pruning on so struct-heavy tables (the materials model,
   SURVEY.md §1.2) only read the accessed subfields off parquet.
+- ``file://`` without child processes. A JVM without ``libhadoop``
+  (Spark's own distributions ship none) runs Hadoop's local filesystem
+  through ``chmod`` and ``readlink`` processes: one ``chmod`` per file
+  created and per directory made, one ``readlink`` per FileContext
+  status lookup (every streaming offset, commit and state-delta file).
+  A warm ``run_reference_pipeline`` call spawned about 400 of them, a
+  stateful ``x10_*`` stream 150-250. ``jvm/NioLocalFileSystem.java``
+  overrides just those two calls with java.nio; checksums, permission
+  bits and the checkpoint manager's atomic rename are Hadoop's own, and
+  ``rename`` keeps the rule of the class it replaces (Hive's
+  ``ProxyLocalFileSystem``: never over an existing file).
+  It is wired in only for a local master (``local`` / ``local[...]``),
+  where the driver JVM also runs every task; executors of any other
+  master would not have the class. The source is compiled with Spark's
+  bundled Janino, once per source hash, into ``jvm/build/<hash>/``
+  (gitignored), so only the first session of a checkout pays for it
+  (about a second). If it cannot be compiled, or the JVM was already
+  launched without it, ``file://`` stays Hadoop's default.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import warnings
+from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+_JVM_DIR = Path(__file__).resolve().parent / "jvm"
+_NIO_FS_SOURCE = _JVM_DIR / "NioLocalFileSystem.java"
+_NIO_FS_CLASS = "echem_dft_etl_spark.jvm.NioLocalFileSystem"
+
+
+def _spark_jar(jars: Path, prefix: str) -> str:
+    """Path of the one ``<prefix><version>.jar`` in Spark's jars dir."""
+    (jar,) = jars.glob(f"{prefix}[0-9]*.jar")
+    return str(jar)
+
+
+def nio_fs_classes() -> str | None:
+    """Class directory of ``NioLocalFileSystem``, compiled on first use.
+
+    The directory is named after the source's hash, so an edited source
+    gets a fresh build and an unchanged one is never rebuilt. The build
+    goes to a temporary directory that is renamed into place, so
+    concurrent first sessions cannot see a half-written one. Returns
+    None, with a warning, if the compile fails."""
+    out = (
+        _JVM_DIR / "build"
+        / hashlib.sha256(_NIO_FS_SOURCE.read_bytes()).hexdigest()[:16]
+    )
+    if out.is_dir():
+        return str(out)
+    from pyspark.find_spark_home import _find_spark_home
+
+    jars = Path(_find_spark_home()) / "jars"
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else "java"
+    out.parent.mkdir(exist_ok=True)
+    tmp = tempfile.mkdtemp(dir=out.parent, prefix=".tmp-")
+    try:
+        cmd = [
+            java, "-XX:TieredStopAtLevel=1",
+            "-cp", os.pathsep.join(
+                _spark_jar(jars, p) for p in ("janino-", "commons-compiler-")
+            ),
+            "org.codehaus.commons.compiler.samples.CompilerDemo",
+            "-classpath", os.pathsep.join(
+                _spark_jar(jars, p) for p in ("hadoop-client-api-", "slf4j-api-")
+            ),
+            "-d", tmp, str(_NIO_FS_SOURCE),
+        ]
+        proc = subprocess.run(cmd, capture_output=True, text=True)
+        if proc.returncode != 0:
+            raise RuntimeError(proc.stderr.strip() or proc.stdout.strip())
+        try:
+            os.rename(tmp, out)
+        except OSError:  # a concurrent session renamed its build first
+            if not out.is_dir():
+                raise
+    except (OSError, RuntimeError, ValueError) as exc:
+        warnings.warn(
+            f"could not compile {_NIO_FS_SOURCE.name} ({exc}); "
+            "file:// stays Hadoop's forking local filesystem",
+            stacklevel=3,
+        )
+        return None
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return str(out)
+
+
+def _nio_fs_conf(master: str) -> dict[str, str]:
+    """Confs that route ``file://`` through ``NioLocalFileSystem``, or
+    none: for a non-local master, or when this process's JVM is already
+    running without the class on its classpath."""
+    if master != "local" and not master.startswith("local["):
+        return {}
+    classes = nio_fs_classes()
+    if classes is None:
+        return {}
+    jvm = SparkContext._jvm
+    if jvm is not None and classes not in jvm.java.lang.System.getProperty(
+        "java.class.path"
+    ).split(os.pathsep):
+        return {}
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": _NIO_FS_CLASS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{_NIO_FS_CLASS}$Fs",
+    }
 
 
 def get_session(
@@ -92,6 +201,11 @@ def get_session(
         )
         .config("spark.ui.enabled", "false")
     )
+    conf = _nio_fs_conf(master)
     for k, v in (extra_conf or {}).items():
+        if k == "spark.driver.extraClassPath" and k in conf:
+            v = os.pathsep.join((conf[k], v))
+        conf[k] = v
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -53,6 +53,36 @@ def test_pipe_solver_stub(spark):
     assert got["r3"] == pytest.approx((-0.195, 251.0))
 
 
+def test_pipe_solver_stub_keeps_run_ids_with_spaces(spark):
+    # A whitespace-split protocol returned run_id 'UNITED' with the
+    # charge misread as 0 (mu -0.2, ne 250.0).
+    runs = spark.createDataFrame(
+        [("UNITED KINGDOM_-0.1", -0.1), ("a  b_0.1", 0.1)],
+        "run_id string, charge double",
+    )
+    got = {r.run_id: (r.mu, r.ne) for r in pipe_solver_stub(runs).collect()}
+    assert set(got) == {"UNITED KINGDOM_-0.1", "a  b_0.1"}
+    assert got["UNITED KINGDOM_-0.1"] == pytest.approx((-0.205, 249.0))
+    assert got["a  b_0.1"] == pytest.approx((-0.195, 251.0))
+    tabbed = spark.createDataFrame([("a\tb", 0.0)], "run_id string, charge double")
+    with pytest.raises(Exception, match="holds a tab or a newline"):
+        pipe_solver_stub(tabbed).collect()
+
+
+def test_pipe_map_refuses_a_line_count_mismatch(spark):
+    df = spark.createDataFrame([("x",), ("y",)], "v string").coalesce(1)
+    doubled = pipe_map(
+        df,
+        ["awk", "{ print; print }"],  # two lines per input row
+        "v string",
+        lambda pdf: "".join(f"{v}\n" for v in pdf.v),
+        lambda out, pdf: pdf,
+        timeout_s=10,
+    )
+    with pytest.raises(Exception, match="returned 4 lines for a batch of 2 rows"):
+        doubled.collect()
+
+
 def test_pipe_failure_raises(spark):
     df = spark.createDataFrame([("x",)], "v string")
     bad = pipe_map(
