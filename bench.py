@@ -199,6 +199,7 @@ def bench_names(specs) -> tuple[str, ...]:
 
 
 def main() -> None:
+    from echem_dft_etl_spark.operators.storage import persistent_rdd_ids, release_rdds
     from echem_dft_etl_spark.registry import all_queries
     from echem_dft_etl_spark.session import get_session
 
@@ -244,22 +245,8 @@ def main() -> None:
         RDDs and cached plans a query left behind so later queries are
         measured against a clean heap, not the accumulated storage of
         everything before them (the whole registry shares this JVM)."""
-        try:
-            # NOTE (r12 measurement fix): py4j's JavaMap implements the
-            # Python MutableMapping protocol, so .values() returns a
-            # Python ValuesView (no .iterator()); the previous
-            # Java-style `m.values().iterator()` spelling raised
-            # AttributeError into the except — which silently skipped
-            # BOTH the unpersist sweep and clearCache(), letting every
-            # query's checkpoint blocks accumulate in the shared JVM
-            # for the whole suite. Python-style iteration actually
-            # runs the documented hygiene.
-            m = spark.sparkContext._jsc.getPersistentRDDs()
-            for rdd in m.values():
-                rdd.unpersist(False)
-            spark.catalog.clearCache()
-        except Exception:
-            pass
+        release_rdds(spark, persistent_rdd_ids(spark))
+        spark.catalog.clearCache()
 
     release_leftovers()
 

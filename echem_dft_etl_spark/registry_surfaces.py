@@ -2475,11 +2475,11 @@ def x10_stream_custom_source(spark, sf_dir):
     position in the sorted listing, replayable via readBetweenOffsets —
     and the reference's last-match parse runs as a streaming
     aggregation (complete mode). Driven by the processingTime
-    continuous mode with the status-based drain watch
-    (run_processing_time): the simple Python stream reader prefetches
-    one batch per trigger, so availableNow would stop after the first
-    prefetch — the periodic trigger drains all 4 batches and the
-    watch stops the query when the source reports empty. Proves the
+    continuous mode (run_to_memory with ``interval=``): the simple
+    Python stream reader prefetches one batch per trigger, so
+    availableNow would stop after the first prefetch — the periodic
+    trigger drains every batch, and ``processAllAvailable()`` returns
+    once a trigger finds the source empty. Proves the
     streaming layer composes with user-defined sources exactly like
     built-in ones: same parse expressions as the batch connector row
     (s02_custom_datasource), same oracle arithmetic, results equal to
@@ -2489,7 +2489,7 @@ def x10_stream_custom_source(spark, sf_dir):
         make_solver_out_datasource,
         make_solver_out_stream_datasource,
     )
-    from .streaming.windows import run_processing_time
+    from .streaming.windows import run_to_memory
 
     path = build_solver_out_fixture(spark, sf_dir)
     spark.dataSource.register(make_solver_out_stream_datasource())
@@ -2536,7 +2536,7 @@ def x10_stream_custom_source(spark, sf_dir):
     # 100 ms cadence: the corpus is bounded (7 micro-batches), so the
     # trigger interval is pure idle time between prefetched batches —
     # production cadence is a latency/cost knob, not a semantics one
-    return run_processing_time(agg, spark, mode="complete", interval="100 milliseconds")
+    return run_to_memory(agg, spark, mode="complete", interval="100 milliseconds")
 
 
 @_register(
@@ -6906,67 +6906,62 @@ def x10_stream_custom_sink(spark, sf_dir):
     and aggregated; the oracle replays the same aggregation from the
     events table, so a green row proves stream → write → commit →
     manifest → read-back end-to-end. Reentrant via the s01 pattern
-    (per-invocation scratch dirs, deleted before return); one retry
-    for the local-master transient-worker-death class
-    (run_to_memory's rationale)."""
+    (per-invocation scratch dirs, deleted before return). The stream
+    runs through streaming/windows.py::_run_stream, which retries a
+    failed query once with fresh scratch dirs; the read-back uses the
+    last attempt's dirs."""
     import shutil
 
     from .sources.report_sink import make_report_stream_sink_datasource
-    from .streaming.windows import read_events_stream
+    from .streaming.windows import _run_stream, read_events_stream
 
     spark.dataSource.register(make_report_stream_sink_datasource())
-    last_exc: Exception | None = None
-    for _attempt in range(2):
+    # Tab-delimited, not comma: an event_type containing a comma would
+    # shift user_id into the wrong field and silently corrupt the
+    # checksum. Tab cannot appear in a line-oriented text sink's fields.
+    lines = read_events_stream(spark, sf_dir).select(
+        F.concat_ws("\t", "event_type", F.col("user_id").cast("string")).alias(
+            "value"
+        )
+    )
+    attempts: list[tuple[str, str]] = []  # (out, checkpoint) per start
+
+    def start():
         out = _scratch_dir("echem_stream_sink_")
         ck = _scratch_dir("echem_stream_sink_ck_")
-        try:
-            # Tab-delimited, not comma: an event_type containing a
-            # comma would shift user_id into the wrong field and
-            # silently corrupt the checksum. Tab cannot appear in a
-            # line-oriented text sink's fields.
-            lines = read_events_stream(spark, sf_dir).select(
-                F.concat_ws(
-                    "\t", "event_type", F.col("user_id").cast("string")
-                ).alias("value")
-            )
-            q = (
-                lines.writeStream.format("reportsink_stream")
-                .option("path", out)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        attempts.append((out, ck))
+        return (
+            lines.writeStream.format("reportsink_stream")
+            .option("path", out)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
 
-            manifests = spark.read.option("multiLine", "true").json(
-                f"{out}/manifest-*.json"
-            )
-            committed = manifests.select(
-                F.explode("parts").alias("p")
-            ).select("p.file", "p.n_rows")
-            files = [r["file"] for r in committed.select("file").collect()]
-            manifest_rows = committed.agg(
-                F.sum("n_rows").cast("bigint")
-            ).collect()[0][0]
-            parsed = spark.read.text(
-                [f"{out}/{name}" for name in files]
-            ).select(
-                F.split("value", "\t").alias("f")
-            ).select(
-                F.col("f")[0].alias("event_type"),
-                F.col("f")[1].cast("bigint").alias("user_id"),
-            )
-            result = parsed.groupBy("event_type").agg(
-                F.count("*").cast("bigint").alias("n_events"),
-                F.countDistinct("user_id").cast("bigint").alias("n_users"),
-                F.sum("user_id").cast("bigint").alias("user_checksum"),
-            ).withColumn(
-                "manifest_rows", F.lit(manifest_rows).cast("bigint")
-            )
-            return _literal_result(spark, result)
-        except Exception as exc:  # pragma: no cover - transient worker death
-            last_exc = exc
-        finally:
+    try:
+        _run_stream(spark, start)
+        out = attempts[-1][0]
+        manifests = spark.read.option("multiLine", "true").json(
+            f"{out}/manifest-*.json"
+        )
+        committed = manifests.select(F.explode("parts").alias("p")).select(
+            "p.file", "p.n_rows"
+        )
+        files = [r["file"] for r in committed.select("file").collect()]
+        manifest_rows = committed.agg(F.sum("n_rows").cast("bigint")).collect()[0][0]
+        parsed = spark.read.text([f"{out}/{name}" for name in files]).select(
+            F.split("value", "\t").alias("f")
+        ).select(
+            F.col("f")[0].alias("event_type"),
+            F.col("f")[1].cast("bigint").alias("user_id"),
+        )
+        result = parsed.groupBy("event_type").agg(
+            F.count("*").cast("bigint").alias("n_events"),
+            F.countDistinct("user_id").cast("bigint").alias("n_users"),
+            F.sum("user_id").cast("bigint").alias("user_checksum"),
+        ).withColumn("manifest_rows", F.lit(manifest_rows).cast("bigint"))
+        return _literal_result(spark, result)
+    finally:
+        for out, ck in attempts:
             shutil.rmtree(out, ignore_errors=True)
             shutil.rmtree(ck, ignore_errors=True)
-    raise last_exc

@@ -8,18 +8,26 @@ watermarks; results are replay-checked against the batch forms in
 ``operators/sessions.py`` (the DuckDB-checkable correctness proxies,
 SURVEY §7 streaming-state risk note).
 
-Everything here runs with ``trigger(availableNow=True)`` against the
-parquet events table in tests — the same code takes a Kafka/file stream
-at scale; only the reader line changes.
+Every bounded stream here runs through one runner, :func:`_run_stream`:
+it narrows the shuffle width for the query's lifetime, starts the
+query, finishes it with ``processAllAvailable()`` (the engine's own
+"every available offset is committed" signal, for ``availableNow`` and
+``processingTime`` triggers alike) and stops it. A started query that
+fails is retried once, after a warning that names the failure. The
+replays read the parquet events table — the same code takes a
+Kafka/file stream at scale; only the reader line changes.
 """
 
 from __future__ import annotations
 
-import os
 import uuid
+import warnings
+from typing import Callable
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.tables import load_table, prepare_session
 
@@ -36,9 +44,8 @@ from ..sources.tables import load_table, prepare_session
 #: plans/r13/stream_phase_before.json phase splits attribute the gap to
 #: state-store commits). A production deployment sizes this ONCE at
 #: first start from its key cardinality (the checkpoint then pins it for
-#: the query's lifetime) — that is why it is an env knob and not a
-#: constant buried in the runner.
-STREAM_STATE_WIDTH = int(os.environ.get("SPARK_GRAFT_STREAM_WIDTH", "4"))
+#: the query's lifetime).
+STREAM_STATE_WIDTH = 4
 
 
 def _as_stream_dir(sf_dir: str, table: str = "events") -> str:
@@ -157,14 +164,73 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> Data
     )
 
 
+def _run_stream(
+    spark: SparkSession,
+    start: Callable[[], StreamingQuery],
+    state_width: int = STREAM_STATE_WIDTH,
+) -> StreamingQuery:
+    """Run a bounded stream to completion; return the stopped query.
+
+    ``start`` is a zero-argument callable returning a started query.
+    The shuffle width is narrowed to ``min(session, state_width)`` for
+    the query's lifetime — the width is baked in at stream START and,
+    for a checkpointed production query, pinned by the checkpoint — and
+    restored after. Completion is ``processAllAvailable()``: it returns
+    once a trigger finds no new data or the query terminates (an
+    ``availableNow`` query stops itself), and raises the query's
+    failure. The query is stopped either way.
+
+    A started query that fails is retried once, with a warning naming
+    the failure: local masters run task.maxFailures=1, so one transient
+    executor/worker hiccup aborts the whole query — a failure class a
+    real cluster absorbs with task retries. ``start`` builds a fresh
+    sink (and checkpoint) per call, so a retry cannot see the failed
+    attempt's state. Errors raised by ``start()`` itself (analysis,
+    bad options) are not transient and propagate at once.
+    """
+    conf_key = "spark.sql.shuffle.partitions"
+    saved_width = spark.conf.get(conf_key)
+    spark.conf.set(conf_key, str(min(int(saved_width), state_width)))
+    try:
+        for attempt in (1, 2):
+            q = start()
+            try:
+                q.processAllAvailable()
+                return q
+            except StreamingQueryException as exc:
+                if attempt == 2:
+                    raise
+                warnings.warn(
+                    f"stream {q.id} failed, retrying once: {exc}",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
+            finally:
+                q.stop()
+    finally:
+        spark.conf.set(conf_key, saved_width)
+
+
 def run_to_memory(
     stream_df: DataFrame,
     spark: SparkSession,
     mode: str = "append",
-    state_width: int | None = None,
+    state_width: int = STREAM_STATE_WIDTH,
+    interval: str | None = None,
 ) -> DataFrame:
-    """Execute a bounded stream with availableNow into a memory sink and
-    return the materialized result as a batch DataFrame.
+    """Execute a bounded stream into a memory sink through
+    :func:`_run_stream` and return the materialized result as a batch
+    DataFrame.
+
+    ``interval=None`` runs ``trigger(availableNow=True)``; a string
+    such as ``"500 milliseconds"`` runs ``trigger(processingTime=...)``
+    — the CONTINUOUS operation mode (SURVEY §1.2), where the query
+    fires micro-batches on a wall-clock cadence. Either way the runner
+    finishes the query with ``processAllAvailable()``, so the result
+    is the same: trigger cadence moves batch BOUNDARIES only, and every
+    operator here is batch-boundary-agnostic (watermark semantics, not
+    trigger semantics). A started query that fails is retried once,
+    with a warning; each attempt gets a fresh memory sink.
 
     Mode notes for bounded replays: time-window aggregations can use
     'complete' (all windows emitted regardless of watermark); session
@@ -173,21 +239,11 @@ def run_to_memory(
     withheld, and replay checks against batch must compare only sessions
     ending below ``max(ts) − watermark``.
 
-    One retry on failure: local masters run with task.maxFailures=1, so
-    a single transient executor/worker hiccup aborts the whole query —
-    a failure class a real cluster absorbs with task retries. The
-    bounded replay is deterministic and side-effect-free (fresh memory
-    sink per attempt), so a retry cannot change results.
-
     Stateful stream operators (aggregations, stream-stream joins,
     dedup) instantiate ONE STATE STORE per shuffle partition and pay a
     per-partition commit every micro-batch; the batch-oriented session
     width (32) makes bounded fixture replays spend most of their time
-    in near-empty store commits. The runner narrows the width for the
-    query's lifetime (the width is baked in at stream START and, for a
-    checkpointed production query, pinned by the checkpoint — sized
-    once to key cardinality there) and restores it after.
-
+    in near-empty store commits, hence the runner's narrowing.
     ``state_width`` overrides :data:`STREAM_STATE_WIDTH` for streams
     whose per-batch cost is NOT the state commits: the
     ``applyInPandasWithState`` operators execute per-key Python work
@@ -196,124 +252,20 @@ def run_to_memory(
     stateful_profile 1.63 s at width 8 vs 2.30 s at width 4, cusum
     1.72 vs 2.10 — the inverse of the built-in stateful operators).
     """
-    conf_key = "spark.sql.shuffle.partitions"
-    saved_width = spark.conf.get(conf_key)
-    width = state_width if state_width is not None else STREAM_STATE_WIDTH
-    last_exc: Exception | None = None
-    try:
-        spark.conf.set(conf_key, str(min(int(saved_width), width)))
-        for _attempt in range(2):
-            name = f"sink_{uuid.uuid4().hex[:12]}"
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                return spark.table(name)
-            except Exception as exc:  # StreamingQueryException and kin
-                last_exc = exc
-    finally:
-        spark.conf.set(conf_key, saved_width)
-    raise last_exc
+    trigger = (
+        {"availableNow": True} if interval is None else {"processingTime": interval}
+    )
 
-
-def run_processing_time(
-    stream_df: DataFrame,
-    spark: SparkSession,
-    mode: str = "append",
-    interval: str = "500 milliseconds",
-    drain_timeout: float = 120.0,
-) -> DataFrame:
-    """Execute a stream under a periodic ``processingTime`` trigger —
-    the CONTINUOUS operation mode (SURVEY §1.2): the query stays up and
-    fires micro-batches on a wall-clock cadence, unlike the bounded
-    ``availableNow`` replays used everywhere else here.
-
-    Against a bounded source this drains in the first few triggers;
-    the helper watches the query STATUS (not progress events — idle
-    triggers don't run batches, and no-data progress is only emitted
-    every ~10 s) until the source reports no data available with no
-    trigger in flight after ≥ 1 non-empty batch, then stops the query
-    and returns the memory-sink table. Results are identical to the
-    availableNow replay of the same plan — asserted in
-    tests/test_streaming.py — because trigger cadence changes only
-    batch BOUNDARIES, and every operator here is
-    batch-boundary-agnostic (watermark semantics, not trigger
-    semantics). On an unbounded source, callers own the lifecycle:
-    start the writeStream themselves and skip the drain watch.
-
-    One retry on transient failure, same rationale as
-    :func:`run_to_memory` (local masters run task.maxFailures=1).
-    """
-    conf_key = "spark.sql.shuffle.partitions"
-    saved_width = spark.conf.get(conf_key)
-    try:
-        # Same state-store-width rationale as run_to_memory.
-        spark.conf.set(conf_key, str(min(int(saved_width), STREAM_STATE_WIDTH)))
-        return _run_processing_time_inner(
-            stream_df, spark, mode, interval, drain_timeout
-        )
-    finally:
-        spark.conf.set(conf_key, saved_width)
-
-
-def _run_processing_time_inner(
-    stream_df: DataFrame,
-    spark: SparkSession,
-    mode: str,
-    interval: str,
-    drain_timeout: float,
-) -> DataFrame:
-    import time
-
-    last_exc: Exception | None = None
-    for _attempt in range(2):
-        name = f"sink_{uuid.uuid4().hex[:12]}"
-        q = (
+    def start() -> StreamingQuery:
+        return (
             stream_df.writeStream.format("memory")
-            .queryName(name)
+            .queryName(f"sink_{uuid.uuid4().hex[:12]}")
             .outputMode(mode)
-            .trigger(processingTime=interval)
+            .trigger(**trigger)
             .start()
         )
-        try:
-            deadline = time.monotonic() + drain_timeout
-            drained_polls = 0
-            while time.monotonic() < deadline:
-                if q.exception() is not None:
-                    raise q.exception()
-                p = q.lastProgress
-                s = q.status
-                if (
-                    p is not None
-                    and not s["isDataAvailable"]
-                    and not s["isTriggerActive"]
-                ):
-                    # three consecutive idle polls 0.1 s apart (0.2 s
-                    # of proven quiet): not a gap between file-listing
-                    # and batch start
-                    drained_polls += 1
-                    if drained_polls >= 3:
-                        break
-                else:
-                    drained_polls = 0
-                # 0.1 s cadence: the watch is pure idle time after the
-                # last batch; finer polls shave the post-drain tail
-                time.sleep(0.1)
-            else:
-                raise TimeoutError(
-                    f"stream did not drain in {drain_timeout}s"
-                )
-            return spark.table(name)
-        except Exception as exc:
-            last_exc = exc
-        finally:
-            q.stop()
-    raise last_exc
+
+    return spark.table(_run_stream(spark, start, state_width).name)
 
 
 def stream_interval_join(
@@ -405,8 +357,9 @@ def stream_merge_latest(
     determinism a naive per-batch argmax + blind upsert does NOT have.
 
     Returns the final table state read back from the last committed
-    snapshot. Bounded replay via ``availableNow``; one retry like
-    :func:`run_to_memory` (fresh state dir per attempt, merge snapshot
+    snapshot. Bounded replay via ``availableNow`` through
+    :func:`_run_stream`, which narrows the state-store width and retries
+    a failed query once (fresh state dir per attempt; merge snapshot
     versioning makes the second attempt's commits supersede torn
     first-attempt output). In production the same code runs unbounded
     with a watermark-bounded state TTL and per-file merge pruning in a
@@ -444,36 +397,14 @@ def stream_merge_latest(
             bdf, table_root, ["user_id"], "user_id", keep_snapshots=1
         )
 
-    # A streaming aggregation instantiates one STATE STORE per shuffle
-    # partition, and every micro-batch pays a commit (delta file +
-    # fsync) per instance — at the session's batch-oriented width (32)
-    # that is 32 commits per batch for a per-user state that fits in a
-    # handful of partitions. Same width discipline as the
-    # connected_components loop: narrow for the bounded fixture,
-    # restore on exit; a production deployment sizes this to its key
-    # cardinality ONCE at first start (the width is then pinned in the
-    # checkpoint for the query's lifetime).
-    conf_key = "spark.sql.shuffle.partitions"
-    saved_width = spark.conf.get(conf_key)
-    last_exc: Exception | None = None
-    try:
-        spark.conf.set(conf_key, str(min(int(saved_width), STREAM_STATE_WIDTH)))
-        for _attempt in range(2):
-            q = (
-                latest.writeStream.outputMode("update")
-                .foreachBatch(write_batch)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                last_exc = None
-                break
-            except Exception as exc:  # StreamingQueryException and kin
-                last_exc = exc
-    finally:
-        spark.conf.set(conf_key, saved_width)
-    if last_exc is not None:
-        raise last_exc
+    def start() -> StreamingQuery:
+        return (
+            latest.writeStream.outputMode("update")
+            .foreachBatch(write_batch)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    _run_stream(spark, start)
     snaps = sinks._committed_snapshots(spark, table_root)
     return spark.read.parquet(snaps[-1][1])

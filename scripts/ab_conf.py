@@ -41,6 +41,10 @@ def main() -> int:
     n_rounds = int(sys.argv[5]) if len(sys.argv) > 5 else 3
     out_path = Path(sys.argv[6]) if len(sys.argv) > 6 else REPO / "AB_CONF.json"
 
+    from echem_dft_etl_spark.operators.storage import (
+        persistent_rdd_ids,
+        release_rdds,
+    )
     from echem_dft_etl_spark.registry import all_queries
     from echem_dft_etl_spark.session import get_session
 
@@ -50,13 +54,8 @@ def main() -> int:
     names = list(specs) if qarg == "ALL" else qarg.split(",")
 
     def release() -> None:
-        try:
-            m = spark.sparkContext._jsc.getPersistentRDDs()
-            for rdd in m.values():
-                rdd.unpersist(False)
-            spark.catalog.clearCache()
-        except Exception:
-            pass
+        release_rdds(spark, persistent_rdd_ids(spark))
+        spark.catalog.clearCache()
 
     def timed(name: str, val: str) -> tuple[float, float]:
         spark.conf.set(conf_key, val)

@@ -319,35 +319,20 @@ def test_stream_foreachbatch_into_report_sink(spark, tmp_path):
             .save()
         )
 
-    # processingTime + status drain, NOT availableNow: the simple
-    # stream reader prefetches one batch per trigger, so availableNow
-    # stops after the first prefetch (same finding as
-    # x10_stream_custom_source)
-    import time
-
+    # processingTime, NOT availableNow: the simple stream reader
+    # prefetches one batch per trigger, so availableNow stops after the
+    # first prefetch (same finding as x10_stream_custom_source);
+    # processAllAvailable returns once a trigger finds the source empty
     q = (
         lines.writeStream.foreachBatch(land)
         .trigger(processingTime="100 milliseconds")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
-    deadline = time.monotonic() + 120
-    idle = 0
-    while time.monotonic() < deadline and idle < 2:
-        if q.exception() is not None:
-            raise q.exception()
-        s = q.status
-        if (
-            q.lastProgress is not None
-            and not s["isDataAvailable"]
-            and not s["isTriggerActive"]
-        ):
-            idle += 1
-        else:
-            idle = 0
-        time.sleep(0.25)
-    q.stop()
-    assert idle >= 2, "stream did not drain"
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
     manifest = json.loads((tmp_path / "landed" / "manifest.json").read_text())
     total_lines = sum(

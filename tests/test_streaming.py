@@ -4,14 +4,18 @@
 from __future__ import annotations
 
 import datetime as dt
+import warnings
+from types import SimpleNamespace
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from echem_dft_etl_spark.operators.sessions import session_aggregate, sessionize
 from echem_dft_etl_spark.sources import load_table
 from echem_dft_etl_spark.streaming.windows import (
+    _run_stream,
     read_events_stream,
-    run_processing_time,
     run_to_memory,
     session_windows,
     tumbling_counts,
@@ -43,7 +47,7 @@ def test_stream_tumbling_processing_time_trigger(spark):
     stream = tumbling_counts(read_events_stream(spark, SF_SMOKE), "1 hour", "2 hours")
     got = {
         (r.window_start, r.event_type): r.n_events
-        for r in run_processing_time(
+        for r in run_to_memory(
             stream, spark, mode="complete", interval="500 milliseconds"
         ).collect()
     }
@@ -55,6 +59,75 @@ def test_stream_tumbling_processing_time_trigger(spark):
         ).agg(F.count("*").alias("n")).collect()
     }
     assert got == exp
+
+
+class _FakeConf:
+    def __init__(self):
+        self.values = {"spark.sql.shuffle.partitions": "32"}
+
+    def get(self, key):
+        return self.values[key]
+
+    def set(self, key, value):
+        self.values[key] = value
+
+
+class _FakeQuery:
+    def __init__(self, spark, n, error=None):
+        self.width = spark.conf.get("spark.sql.shuffle.partitions")
+        self.id = f"q{n}"
+        self.error = error
+        self.stopped = False
+
+    def processAllAvailable(self):
+        if self.error is not None:
+            raise self.error
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_run_stream_retries_a_failed_query_once_with_a_warning():
+    """A started query that dies is stopped, reported by one warning
+    naming its error, and replaced by a second attempt whose query is
+    returned; the shuffle width is narrowed while the streams run and
+    restored afterwards."""
+    spark = SimpleNamespace(conf=_FakeConf())
+    started = []
+
+    def start():
+        error = StreamingQueryException("worker died") if not started else None
+        started.append(_FakeQuery(spark, len(started), error))
+        return started[-1]
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        q = _run_stream(spark, start, state_width=4)
+
+    assert q is started[1]
+    assert [s.stopped for s in started] == [True, True]
+    assert len(caught) == 1 and "worker died" in str(caught[0].message)
+    assert [s.width for s in started] == ["4", "4"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+
+
+def test_run_stream_does_not_retry_a_failing_start():
+    """An error raised by start() itself is not a transient query
+    failure: it propagates at once, unretried, with the width restored."""
+    spark = SimpleNamespace(conf=_FakeConf())
+    calls = []
+
+    def start():
+        calls.append(1)
+        raise ValueError("bad sink option")
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        with pytest.raises(ValueError, match="bad sink option"):
+            _run_stream(spark, start)
+
+    assert len(calls) == 1 and caught == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
 
 
 def test_stream_sessions_subset_of_batch(spark):
