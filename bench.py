@@ -60,7 +60,7 @@ sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: 1/5/15-min /proc/loadavg sampled at suite start (set in main()).
+#: 1/5/15-min loadavg sampled at suite start (set in main()).
 LOAD_AT_START: list[float] = []
 
 #: Host-load GATE (r11, VERDICT r10 item 3): r10 recorded
@@ -75,14 +75,6 @@ LOAD_GATE = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_GATE", "2.0"))
 LOAD_GATE_WAIT_S = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT", "300"))
 
 
-def _load1() -> float:
-    try:
-        with open("/proc/loadavg") as fh:
-            return float(fh.read().split()[0])
-    except Exception:
-        return -1.0
-
-
 #: One dict per gate invocation, recorded in BENCH_DETAIL
 #: (``load_gate_events``): stage, loadavg before/after, seconds spent
 #: waiting, and whether the gate had to be WAIVED (still hot after the
@@ -92,11 +84,11 @@ LOAD_GATE_EVENTS: list[dict] = []
 
 def wait_for_calm_host(stage: str) -> None:
     t0 = time.time()
-    before = _load1()
+    before = os.getloadavg()[0]
     la = before
     while la > LOAD_GATE and time.time() - t0 < LOAD_GATE_WAIT_S:
         time.sleep(10)
-        la = _load1()
+        la = os.getloadavg()[0]
     LOAD_GATE_EVENTS.append(
         {
             "stage": stage,
@@ -208,11 +200,7 @@ def main() -> None:
     wait_for_calm_host("suite_start")
 
     global LOAD_AT_START
-    try:
-        with open("/proc/loadavg") as fh:
-            LOAD_AT_START = [float(x) for x in fh.read().split()[:3]]
-    except Exception:
-        LOAD_AT_START = []
+    LOAD_AT_START = list(os.getloadavg())
 
     # No console progress bar: its \r-spam shares the driver's ~2000-char
     # output tail with the one JSON line this script must deliver.
@@ -230,15 +218,16 @@ def main() -> None:
     # corpora) happens OUTSIDE the timed loop — fixture generation
     # isn't query execution, and only the first run of a round would
     # ever pay it
-    try:
-        from echem_dft_etl_spark.operators import multimodal
-        from echem_dft_etl_spark.sources import load_table
+    from echem_dft_etl_spark.operators import multimodal
+    from echem_dft_etl_spark.sources import load_table
 
-        docs = load_table(spark, SF_DIR, "documents")
-        multimodal.materialize_bmp_files(spark, SF_DIR, docs)
-        multimodal.materialize_wav_files(spark, SF_DIR, docs)
-    except Exception:
-        pass
+    docs = load_table(spark, SF_DIR, "documents")
+    multimodal.materialize_bmp_files(spark, SF_DIR, docs)
+    multimodal.materialize_wav_files(spark, SF_DIR, docs)
+
+    # Failures of the best-effort stages (early probes, warm-up, phase
+    # probes), as {"stage", "query", "error"}; empty on a clean run.
+    harness_errors: list[dict] = []
 
     def release_leftovers() -> None:
         """Between-query storage hygiene (UNTIMED): drop any persistent
@@ -252,7 +241,7 @@ def main() -> None:
 
     def timed_run(name: str) -> tuple[float, float]:
         """(elapsed seconds, 1-min loadavg at run start)."""
-        la = _load1()
+        la = os.getloadavg()[0]
         t0 = time.perf_counter()
         df = specs[name].fn(spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
@@ -280,8 +269,10 @@ def main() -> None:
                     "loadavg_1m": la,
                     "first_run_seconds": _cold[0],
                 }
-            except Exception:
-                pass
+            except Exception as exc:
+                harness_errors.append(
+                    {"stage": "early_probe", "query": name, "error": repr(exc)}
+                )
 
     # UNTIMED warmup pass at the benched scale factor: pays codegen,
     # shuffle-file creation and page-cache fill once, outside the
@@ -292,8 +283,10 @@ def main() -> None:
     for name in names:
         try:
             warmup_runs[name], warmup_load[name] = timed_run(name)
-        except Exception:
-            pass  # warm-up is best-effort; the timed run reports errors
+        except Exception as exc:
+            harness_errors.append(
+                {"stage": "warmup", "query": name, "error": repr(exc)}
+            )
 
     k = int(os.environ.get("SPARK_GRAFT_BENCH_K", "3"))
     # Non-headline queries get k=2/min instead of the old single shot:
@@ -405,8 +398,10 @@ def main() -> None:
     phase_seconds: dict[str, dict] = {}
     try:
         phase_seconds["s01_zorder_scan"] = zorder_phase_probe()
-    except Exception:
-        pass
+    except Exception as exc:
+        harness_errors.append(
+            {"stage": "phase_probe", "query": "s01_zorder_scan", "error": repr(exc)}
+        )
     release_leftovers()
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -424,13 +419,6 @@ def main() -> None:
     # suite 2x; recording 1/5/15-min loadavg at suite start and end
     # lets a reader tell contamination from regression without
     # re-running anything.
-    def _loadavg() -> list[float]:
-        try:
-            with open("/proc/loadavg") as fh:
-                return [float(x) for x in fh.read().split()[:3]]
-        except Exception:
-            return []
-
     with open(detail_path, "w") as f:
         json.dump(
             {
@@ -451,7 +439,7 @@ def main() -> None:
                 "rest_stat": "min",
                 "headline_seconds": round(sum(headline.values()), 3),
                 "loadavg_start": LOAD_AT_START,
-                "loadavg_end": _loadavg(),
+                "loadavg_end": list(os.getloadavg()),
                 "queries": timings,
                 "runs": runs,
                 "run_loadavg": run_loadavg,
@@ -468,6 +456,7 @@ def main() -> None:
                     ),
                 },
                 "phase_seconds": phase_seconds,
+                "harness_errors": harness_errors,
                 "early_probe_seconds": early_probe,
                 "load_gate": {
                     "gate": LOAD_GATE,

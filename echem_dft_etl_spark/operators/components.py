@@ -477,6 +477,41 @@ def integer_pagerank(
             _release_rdds(spark, prev_ids)
 
 
+def co_order_pairs(lineitem: DataFrame) -> DataFrame:
+    """(a, b): the co-order part graph — parts appearing in the same
+    order — as a canonical undirected edge list (a < b, distinct), the
+    input every x05 graph query (triangle counts, label communities,
+    k-core, coreness) runs on.
+
+    A SINGLE scan: collect_set of parts per order, then the
+    unordered-pair expansion as a nested array transform (bounded by
+    lines-per-order², ≤49 structs/order) — one shuffle on orderkey
+    plus the canonical distinct, instead of the self-join's two scans
+    + two shuffles. Strictly less work per run (one lineitem scan, one
+    pre-distinct shuffle); wall-clock at sf0.1 is comparable-to-better
+    under load noise. At 100 TB the fan-out bound is the same
+    (per-order line count, not node degree). The oracles keep the
+    naive lineitem self-join spelling, so parity also proves the two
+    constructions equivalent."""
+    grp = lineitem.groupBy("l_orderkey").agg(
+        F.collect_set("l_partkey").alias("ps")
+    )
+    pair_arr = F.flatten(
+        F.transform(
+            "ps",
+            lambda x: F.transform(
+                F.col("ps"), lambda y: F.struct(x.alias("a"), y.alias("b"))
+            ),
+        )
+    )
+    return (
+        grp.select(F.explode(pair_arr).alias("p"))
+        .filter(F.col("p.a") < F.col("p.b"))
+        .select("p.a", "p.b")
+        .distinct()
+    )
+
+
 def triangle_counts(pairs: DataFrame, checkpoint: bool = True) -> DataFrame:
     """Per-node exact triangle participation counts.
 

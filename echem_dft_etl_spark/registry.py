@@ -318,13 +318,20 @@ def q01_pushdown_scan(spark, sf_dir):
     )
 
 
-@_register(
-    "q02_keylist_scan",
-    oracle="""
+#: The ``search(material_ids=ids)`` key list (``my_dag.py:69-70``).
+_Q02_KEYS = [1, 7, 42, 99, 123, 500, 777, 1024, 1500, 1999]
+
+#: One oracle for both key-list strategies: they must agree exactly.
+_KEYLIST_SQL = f"""
     SELECT p_partkey, p_name, p_brand, p_size
     FROM part
-    WHERE p_partkey IN (1, 7, 42, 99, 123, 500, 777, 1024, 1500, 1999)
-    """,
+    WHERE p_partkey IN ({", ".join(map(str, _Q02_KEYS))})
+    """
+
+
+@_register(
+    "q02_keylist_scan",
+    oracle=_KEYLIST_SQL,
     survey_ids=("Q2",),
 )
 def q02_keylist_scan(spark, sf_dir):
@@ -332,21 +339,16 @@ def q02_keylist_scan(spark, sf_dir):
     (``my_dag.py:69-70``). ``isin`` compiles to an IN filter pushed to the
     parquet row-group stats; for large key sets the engine switches to a
     broadcast left-semi join (tests cover both forms)."""
-    keys = [1, 7, 42, 99, 123, 500, 777, 1024, 1500, 1999]
     return (
         _ld(spark, sf_dir, "part")
-        .filter(F.col("p_partkey").isin(keys))
+        .filter(F.col("p_partkey").isin(_Q02_KEYS))
         .select("p_partkey", "p_name", "p_brand", "p_size")
     )
 
 
 @_register(
     "q02_keylist_semijoin",
-    oracle="""
-    SELECT p_partkey, p_name, p_brand, p_size
-    FROM part
-    WHERE p_partkey IN (1, 7, 42, 99, 123, 500, 777, 1024, 1500, 1999)
-    """,
+    oracle=_KEYLIST_SQL,
     survey_ids=("Q2", "X5"),
 )
 def q02_keylist_semijoin(spark, sf_dir):
@@ -354,8 +356,7 @@ def q02_keylist_semijoin(spark, sf_dir):
     key DataFrame — the form that scales past IN-list limits (millions
     of keys arrive as a table, not a literal). Identical oracle to
     q02_keylist_scan: the two physical strategies must agree exactly."""
-    keys = [1, 7, 42, 99, 123, 500, 777, 1024, 1500, 1999]
-    key_df = spark.createDataFrame([(k,) for k in keys], "p_partkey bigint")
+    key_df = spark.createDataFrame([(k,) for k in _Q02_KEYS], "p_partkey bigint")
     return (
         _ld(spark, sf_dir, "part")
         .join(F.broadcast(key_df), "p_partkey", "left_semi")
@@ -948,9 +949,9 @@ def x01_group_topk(spark, sf_dir):
     )
 
 
-@_register(
-    "x02_set_ops",
-    oracle="""
+#: Yearly customer-key set operations — one oracle for the set-op
+#: spelling and its single-scan twin.
+_SET_OPS_SQL = """
     WITH k95 AS (SELECT DISTINCT o_custkey FROM orders
                  WHERE o_orderdate >= TIMESTAMP '1995-01-01'
                    AND o_orderdate < TIMESTAMP '1996-01-01'),
@@ -962,7 +963,12 @@ def x01_group_topk(spark, sf_dir):
     SELECT 'only95' AS bucket, o_custkey FROM (SELECT * FROM k95 EXCEPT SELECT * FROM k96)
     UNION ALL
     SELECT 'only96' AS bucket, o_custkey FROM (SELECT * FROM k96 EXCEPT SELECT * FROM k95)
-    """,
+    """
+
+
+@_register(
+    "x02_set_ops",
+    oracle=_SET_OPS_SQL,
     survey_ids=("X2",),
 )
 def x02_set_ops(spark, sf_dir):
@@ -992,19 +998,7 @@ def x02_set_ops(spark, sf_dir):
 
 @_register(
     "x02_set_ops_oneshot",
-    oracle="""
-    WITH k95 AS (SELECT DISTINCT o_custkey FROM orders
-                 WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-                   AND o_orderdate < TIMESTAMP '1996-01-01'),
-         k96 AS (SELECT DISTINCT o_custkey FROM orders
-                 WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-                   AND o_orderdate < TIMESTAMP '1997-01-01')
-    SELECT 'both' AS bucket, o_custkey FROM (SELECT * FROM k95 INTERSECT SELECT * FROM k96)
-    UNION ALL
-    SELECT 'only95' AS bucket, o_custkey FROM (SELECT * FROM k95 EXCEPT SELECT * FROM k96)
-    UNION ALL
-    SELECT 'only96' AS bucket, o_custkey FROM (SELECT * FROM k96 EXCEPT SELECT * FROM k95)
-    """,
+    oracle=_SET_OPS_SQL,
     survey_ids=("X2",),
 )
 def x02_set_ops_oneshot(spark, sf_dir):
@@ -1651,17 +1645,21 @@ def x09_session_window_native(spark, sf_dir):
     )
 
 
-@_register(
-    "x09_tumbling_window",
-    oracle="""
+#: Hourly tumbling-window event counts — the batch form, and the
+#: oracle of its streaming replay (registry_surfaces.x10_stream_tumbling).
+_TUMBLING_SQL = """
     SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
            CAST(date_trunc('hour', ts) AS TIMESTAMP) + INTERVAL 1 HOUR
              AS window_end,
            event_type,
            COUNT(*) AS n_events
-    FROM events
-    GROUP BY 1, 2, 3
-    """,
+    FROM events GROUP BY 1, 2, 3
+    """
+
+
+@_register(
+    "x09_tumbling_window",
+    oracle=_TUMBLING_SQL,
     survey_ids=("X9",),
 )
 def x09_tumbling_window(spark, sf_dir):

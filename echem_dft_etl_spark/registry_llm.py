@@ -392,14 +392,9 @@ def _band_selects(n_bands: int, rows_per_band: int) -> str:
 _MINHASH_AGGS = _minhash_aggs(dedup.N_PERMS)
 _BAND_SELECTS = _band_selects(dedup.N_BANDS, dedup.ROWS_PER_BAND)
 
-
-@_register(
-    "d12_minhash_lsh",
-    oracle=_minhash_cte()
-    + f""",
-    sigs AS (SELECT doc_id, {_MINHASH_AGGS} FROM hh GROUP BY doc_id),
-    bands AS ({_BAND_SELECTS}),
-    cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
+#: LSH candidates and their shared-shingle counts over ``bands`` and
+#: ``sh`` — mirrors dedup.lsh_candidate_pairs + the exact verify join.
+_LSH_INTER = """cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
              FROM bands l JOIN bands r
                ON l.band = r.band AND l.band_key = r.band_key
               AND l.doc_id < r.doc_id),
@@ -408,16 +403,52 @@ _BAND_SELECTS = _band_selects(dedup.N_BANDS, dedup.ROWS_PER_BAND)
               FROM cand c
               JOIN sh sa ON sa.doc_id = c.a
               JOIN sh sb ON sb.doc_id = c.b AND sb.shingle = sa.shingle
-              GROUP BY c.a, c.b)
-    SELECT i.a, i.b, i.n_inter, za.n_sh AS na, zb.n_sh AS nb,
-           CAST(i.n_inter AS DOUBLE)
-             / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) AS jaccard
-    FROM inter i
+              GROUP BY c.a, c.b)"""
+
+#: The exact-Jaccard >= 0.8 verify of ``inter`` rows (i, za, zb).
+_JACCARD_08 = """FROM inter i
     JOIN sizes za ON za.doc_id = i.a
     JOIN sizes zb ON zb.doc_id = i.b
     WHERE CAST(i.n_inter AS DOUBLE)
-            / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) >= 0.8
-    """,
+            / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) >= 0.8"""
+
+#: Verified near-dup pairs with their overlap evidence.
+_LSH_PAIRS = f"""SELECT i.a, i.b, i.n_inter, za.n_sh AS na, zb.n_sh AS nb,
+           CAST(i.n_inter AS DOUBLE)
+             / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) AS jaccard
+    {_JACCARD_08}
+    """
+
+#: Near-dup clusters ``lab(doc_id, cluster_id)``: the verified LSH
+#: pairs' transitive closure as a recursive CTE (reach = every label a
+#: vertex can see; MIN per vertex = the component min) — mirrors
+#: components.duplicate_clusters.
+_DUP_CLUSTERS_CTE = (
+    "WITH RECURSIVE "
+    + _minhash_cte().replace("WITH t AS", "t AS", 1)
+    + f""",
+    sigs AS (SELECT doc_id, {_MINHASH_AGGS} FROM hh GROUP BY doc_id),
+    bands AS ({_BAND_SELECTS}),
+    {_LSH_INTER},
+    edges AS (SELECT i.a, i.b {_JACCARD_08}),
+    sym AS (SELECT a AS src, b AS dst FROM edges
+            UNION ALL SELECT b, a FROM edges),
+    reach AS (SELECT doc_id AS v, doc_id AS lbl FROM documents
+              UNION
+              SELECT s.dst AS v, r.lbl
+              FROM reach r JOIN sym s ON s.src = r.v),
+    lab AS (SELECT v AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY v)"""
+)
+
+
+@_register(
+    "d12_minhash_lsh",
+    oracle=_minhash_cte()
+    + f""",
+    sigs AS (SELECT doc_id, {_MINHASH_AGGS} FROM hh GROUP BY doc_id),
+    bands AS ({_BAND_SELECTS}),
+    {_LSH_INTER}
+    {_LSH_PAIRS}""",
     survey_ids=("X11", "X12"),
 )
 def d12_minhash_lsh(spark, sf_dir):
@@ -441,25 +472,8 @@ _PROD_PERMS = _PROD_BANDS * _PROD_ROWS
     + f""",
     sigs AS (SELECT doc_id, {_minhash_aggs(_PROD_PERMS)} FROM hh GROUP BY doc_id),
     bands AS ({_band_selects(_PROD_BANDS, _PROD_ROWS)}),
-    cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-             FROM bands l JOIN bands r
-               ON l.band = r.band AND l.band_key = r.band_key
-              AND l.doc_id < r.doc_id),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (SELECT c.a, c.b, COUNT(*) AS n_inter
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.a
-              JOIN sh sb ON sb.doc_id = c.b AND sb.shingle = sa.shingle
-              GROUP BY c.a, c.b)
-    SELECT i.a, i.b, i.n_inter, za.n_sh AS na, zb.n_sh AS nb,
-           CAST(i.n_inter AS DOUBLE)
-             / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) AS jaccard
-    FROM inter i
-    JOIN sizes za ON za.doc_id = i.a
-    JOIN sizes zb ON zb.doc_id = i.b
-    WHERE CAST(i.n_inter AS DOUBLE)
-            / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) >= 0.8
-    """,
+    {_LSH_INTER}
+    {_LSH_PAIRS}""",
     survey_ids=("X11", "X12"),
 )
 def d12_minhash_lsh_prod(spark, sf_dir):
@@ -481,33 +495,8 @@ def d12_minhash_lsh_prod(spark, sf_dir):
 
 @_register(
     "d12_dup_clusters",
-    oracle="WITH RECURSIVE "
-    + _minhash_cte().replace("WITH t AS", "t AS", 1)
-    + f""",
-    sigs AS (SELECT doc_id, {_MINHASH_AGGS} FROM hh GROUP BY doc_id),
-    bands AS ({_BAND_SELECTS}),
-    cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-             FROM bands l JOIN bands r
-               ON l.band = r.band AND l.band_key = r.band_key
-              AND l.doc_id < r.doc_id),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (SELECT c.a, c.b, COUNT(*) AS n_inter
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.a
-              JOIN sh sb ON sb.doc_id = c.b AND sb.shingle = sa.shingle
-              GROUP BY c.a, c.b),
-    edges AS (SELECT i.a, i.b FROM inter i
-              JOIN sizes za ON za.doc_id = i.a
-              JOIN sizes zb ON zb.doc_id = i.b
-              WHERE CAST(i.n_inter AS DOUBLE)
-                      / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) >= 0.8),
-    sym AS (SELECT a AS src, b AS dst FROM edges
-            UNION ALL SELECT b, a FROM edges),
-    reach AS (SELECT doc_id AS v, doc_id AS lbl FROM documents
-              UNION
-              SELECT s.dst AS v, r.lbl
-              FROM reach r JOIN sym s ON s.src = r.v),
-    lab AS (SELECT v AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY v)
+    oracle=_DUP_CLUSTERS_CTE
+    + """
     SELECT doc_id, cluster_id, (doc_id = cluster_id) AS is_canonical,
            CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS n_members
     FROM lab
@@ -562,25 +551,27 @@ def d14_ngram_jaccard(spark, sf_dir):
 
 _SEED_H = _HSTR.format(e=f"substr(text, p, {dedup.DUP_SPAN_SEED})")
 
+#: Content-defined anchor positions ``p`` of a ``(text, n)`` row:
+#: hash-gated seed grams — mirrors dedup.doc_anchor_grams.
+_ANCHORS = f"""unnest(list_filter(
+                      range(1, n - {dedup.DUP_SPAN_WINDOW - 1} + 1),
+                      p -> {_SEED_H} % {dedup.DUP_SPAN_MOD} = 0)) AS p"""
 
-@_register(
-    "d29_dup_spans",
-    oracle=f"""
+#: An anchor's character interval [s, e] and its window gram.
+_ANCHOR_GRAM = f"""CAST(p AS BIGINT) AS s,
+                 CAST(p + {dedup.DUP_SPAN_WINDOW - 1} AS BIGINT) AS e,
+                 substr(text, p, {dedup.DUP_SPAN_WINDOW}) AS gram"""
+
+#: Anchor grams ``g`` of every document at least one window long.
+_DOC_GRAMS = f"""
     WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents
                WHERE length(text) >= {dedup.DUP_SPAN_WINDOW}),
-    anch AS (SELECT doc_id, text, n,
-                    unnest(list_filter(
-                      range(1, n - {dedup.DUP_SPAN_WINDOW - 1} + 1),
-                      p -> {_SEED_H} % {dedup.DUP_SPAN_MOD} = 0)) AS p
-             FROM d),
-    g AS (SELECT doc_id, n, CAST(p AS BIGINT) AS s,
-                 CAST(p + {dedup.DUP_SPAN_WINDOW - 1} AS BIGINT) AS e,
-                 substr(text, p, {dedup.DUP_SPAN_WINDOW}) AS gram
-          FROM anch),
-    dup AS (SELECT gram FROM g GROUP BY gram
-            HAVING COUNT(DISTINCT doc_id) >= 2),
-    h AS (SELECT g.doc_id, g.n, g.s, g.e FROM g JOIN dup USING (gram)),
-    m AS (SELECT doc_id, n, s, e,
+    anch AS (SELECT doc_id, text, n, {_ANCHORS} FROM d),
+    g AS (SELECT doc_id, n, {_ANCHOR_GRAM} FROM anch)"""
+
+#: Gaps-and-islands merge of the duplicated-gram hits ``h(doc_id, n,
+#: s, e)`` into maximal spans ``sp`` — mirrors dedup.merge_hit_islands.
+_SPAN_ISLANDS = """m AS (SELECT doc_id, n, s, e,
                  MAX(e) OVER (PARTITION BY doc_id ORDER BY s
                               ROWS BETWEEN UNBOUNDED PRECEDING
                               AND 1 PRECEDING) AS pme
@@ -593,13 +584,24 @@ _SEED_H = _HSTR.format(e=f"substr(text, p, {dedup.DUP_SPAN_SEED})")
             FROM m),
     sp AS (SELECT doc_id, island, MIN(s) AS ss, MAX(e) AS se,
                   MAX(n) AS n
-           FROM isl GROUP BY doc_id, island)
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_spans,
+           FROM isl GROUP BY doc_id, island)"""
+
+#: Per-doc span accounting over ``sp`` — mirrors dedup.span_accounting.
+_SPAN_PPM = """CAST(COUNT(*) AS BIGINT) AS n_spans,
            CAST(SUM(se - ss + 1) AS BIGINT) AS dup_chars,
            CAST(MAX(n) AS BIGINT) AS n_chars,
            CAST(SUM(se - ss + 1) * 1000000 // MAX(n) AS BIGINT) AS dup_ppm
-    FROM sp GROUP BY doc_id
+    FROM sp GROUP BY doc_id"""
+
+
+@_register(
+    "d29_dup_spans",
+    oracle=f"""{_DOC_GRAMS},
+    dup AS (SELECT gram FROM g GROUP BY gram
+            HAVING COUNT(DISTINCT doc_id) >= 2),
+    h AS (SELECT g.doc_id, g.n, g.s, g.e FROM g JOIN dup USING (gram)),
+    {_SPAN_ISLANDS}
+    SELECT doc_id, {_SPAN_PPM}
     """,
     survey_ids=("X11",),
 )
@@ -614,36 +616,12 @@ def d29_dup_spans(spark, sf_dir):
 
 @_register(
     "d29_dup_spans_excise",
-    oracle=f"""
-    WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents
-               WHERE length(text) >= {dedup.DUP_SPAN_WINDOW}),
-    anch AS (SELECT doc_id, text, n,
-                    unnest(list_filter(
-                      range(1, n - {dedup.DUP_SPAN_WINDOW - 1} + 1),
-                      p -> {_SEED_H} % {dedup.DUP_SPAN_MOD} = 0)) AS p
-             FROM d),
-    g AS (SELECT doc_id, n, CAST(p AS BIGINT) AS s,
-                 CAST(p + {dedup.DUP_SPAN_WINDOW - 1} AS BIGINT) AS e,
-                 substr(text, p, {dedup.DUP_SPAN_WINDOW}) AS gram
-          FROM anch),
+    oracle=f"""{_DOC_GRAMS},
     dup AS (SELECT gram, MIN(doc_id) AS keeper FROM g GROUP BY gram
             HAVING COUNT(DISTINCT doc_id) >= 2),
     h AS (SELECT g.doc_id, g.n, g.s, g.e FROM g JOIN dup USING (gram)
           WHERE g.doc_id <> dup.keeper),
-    m AS (SELECT doc_id, n, s, e,
-                 MAX(e) OVER (PARTITION BY doc_id ORDER BY s
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND 1 PRECEDING) AS pme
-          FROM h),
-    isl AS (SELECT doc_id, n, s, e,
-                   SUM(CASE WHEN pme IS NULL OR s > pme + 1
-                       THEN 1 ELSE 0 END)
-                     OVER (PARTITION BY doc_id ORDER BY s
-                           ROWS UNBOUNDED PRECEDING) AS island
-            FROM m),
-    sp AS (SELECT doc_id, island, MIN(s) AS ss, MAX(e) AS se,
-                  MAX(n) AS n
-           FROM isl GROUP BY doc_id, island),
+    {_SPAN_ISLANDS},
     segs AS (
       SELECT doc_id,
              coalesce(LAG(se) OVER (PARTITION BY doc_id ORDER BY ss) + 1,
@@ -734,9 +712,9 @@ def d18_incremental_dedup(spark, sf_dir):
     )
 
 
-@_register(
-    "d13_simhash",
-    oracle=f"""
+#: 32-bit SimHash ``sig(doc_id, simhash)``: per-token string hash, a
+#: ±1 vote per bit, positive tallies set the bit.
+_SIMHASH_SIG = f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     tok AS (SELECT doc_id, unnest(toks) AS tk FROM t),
     th AS (SELECT doc_id, {_HSTR.format(e='tk')} AS h FROM tok),
@@ -747,7 +725,13 @@ def d18_incremental_dedup(spark, sf_dir):
     sig AS (SELECT doc_id,
                    CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b)
                             ELSE 0 END) AS BIGINT) AS simhash
-            FROM bitsum GROUP BY doc_id)
+            FROM bitsum GROUP BY doc_id)"""
+
+
+@_register(
+    "d13_simhash",
+    oracle=_SIMHASH_SIG
+    + """
     SELECT d.doc_id, CAST(coalesce(g.simhash, 0) AS BIGINT) AS simhash
     FROM documents d LEFT JOIN sig g ON g.doc_id = d.doc_id
     """,
@@ -766,18 +750,8 @@ def d13_simhash(spark, sf_dir):
 
 @_register(
     "d13_simhash_pairs",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    tok AS (SELECT doc_id, unnest(toks) AS tk FROM t),
-    th AS (SELECT doc_id, {_HSTR.format(e='tk')} AS h FROM tok),
-    bitsum AS (SELECT doc_id, b.b,
-                      SUM(CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-               FROM th CROSS JOIN (SELECT unnest(range(0, 32)) AS b) b
-               GROUP BY doc_id, b.b),
-    sig AS (SELECT doc_id,
-                   CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b)
-                            ELSE 0 END) AS BIGINT) AS simhash
-            FROM bitsum GROUP BY doc_id)
+    oracle=_SIMHASH_SIG
+    + """
     SELECT x.doc_id AS a, y.doc_id AS b,
            CAST(bit_count(xor(x.simhash, y.simhash)) AS INTEGER) AS hamming
     FROM sig x JOIN sig y ON x.doc_id < y.doc_id
@@ -832,12 +806,10 @@ def t13_repetition(spark, sf_dir):
     return textstats.repetition_stats(_ld(spark, sf_dir, "documents"))
 
 
-@_register(
-    "t13_quality_gate",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    s AS (SELECT doc_id,
-                 CAST(len(toks) AS BIGINT) AS n_tokens,
+#: The quality gate's per-doc signal columns over ``toks`` and the
+#: ``hits_<lang>`` stopword counts (``_LANG_HITS``) — mirrors
+#: textstats.quality_gate.
+_GATE_SIGNALS = f"""CAST(len(toks) AS BIGINT) AS n_tokens,
                  CASE WHEN len(toks) > 0
                       THEN CAST(coalesce(list_sum(list_transform(toks,
                                x -> length(x))), 0) AS DOUBLE)
@@ -851,9 +823,17 @@ def t13_repetition(spark, sf_dir):
                                AS DOUBLE)
                              / CAST(len(toks) - 1 AS DOUBLE)
                       ELSE CAST(0.0 AS DOUBLE) END AS dup_2gram_frac,
-                 {_BEST} > 0 AS pass_lang
+                 {_BEST} > 0 AS pass_lang"""
+_LANG_HITS = ", ".join(f"{_stop_list_sql(l)} AS hits_{l}" for l in _LANGS)
+
+
+@_register(
+    "t13_quality_gate",
+    oracle=f"""
+    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    s AS (SELECT doc_id, {_GATE_SIGNALS}
           FROM (SELECT doc_id, toks,
-                       {", ".join(f"{_stop_list_sql(l)} AS hits_{l}" for l in _LANGS)}
+                       {_LANG_HITS}
                 FROM t))
     SELECT doc_id, n_tokens, avg_token_len, dup_2gram_frac, pass_lang,
            n_tokens BETWEEN {textstats.GATE_MIN_TOKENS}
@@ -1071,44 +1051,15 @@ def x10_stream_near_dup(spark, sf_dir):
     ba AS (SELECT doc_id, text, length(text) AS n FROM aug
            WHERE doc_id % 10 = 7 AND doc_id < 3000000
              AND length(text) >= {dedup.DUP_SPAN_WINDOW}),
-    canch AS (SELECT text,
-                     unnest(list_filter(
-                       range(1, n - {dedup.DUP_SPAN_WINDOW - 1} + 1),
-                       p -> {_SEED_H} % {dedup.DUP_SPAN_MOD} = 0)) AS p
-              FROM co),
+    canch AS (SELECT text, {_ANCHORS} FROM co),
     cgs AS (SELECT DISTINCT
                    substr(text, p, {dedup.DUP_SPAN_WINDOW}) AS gram
             FROM canch),
-    banch AS (SELECT doc_id, text, n,
-                     unnest(list_filter(
-                       range(1, n - {dedup.DUP_SPAN_WINDOW - 1} + 1),
-                       p -> {_SEED_H} % {dedup.DUP_SPAN_MOD} = 0)) AS p
-              FROM ba),
-    bg AS (SELECT doc_id, n, CAST(p AS BIGINT) AS s,
-                  CAST(p + {dedup.DUP_SPAN_WINDOW - 1} AS BIGINT) AS e,
-                  substr(text, p, {dedup.DUP_SPAN_WINDOW}) AS gram
-           FROM banch),
+    banch AS (SELECT doc_id, text, n, {_ANCHORS} FROM ba),
+    bg AS (SELECT doc_id, n, {_ANCHOR_GRAM} FROM banch),
     h AS (SELECT bg.doc_id, bg.n, bg.s, bg.e FROM bg JOIN cgs USING (gram)),
-    m AS (SELECT doc_id, n, s, e,
-                 MAX(e) OVER (PARTITION BY doc_id ORDER BY s
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND 1 PRECEDING) AS pme
-          FROM h),
-    isl AS (SELECT doc_id, n, s, e,
-                   SUM(CASE WHEN pme IS NULL OR s > pme + 1
-                       THEN 1 ELSE 0 END)
-                     OVER (PARTITION BY doc_id ORDER BY s
-                           ROWS UNBOUNDED PRECEDING) AS island
-            FROM m),
-    sp AS (SELECT doc_id, island, MIN(s) AS ss, MAX(e) AS se,
-                  MAX(n) AS n
-           FROM isl GROUP BY doc_id, island)
-    SELECT doc_id AS batch_id,
-           CAST(COUNT(*) AS BIGINT) AS n_spans,
-           CAST(SUM(se - ss + 1) AS BIGINT) AS dup_chars,
-           CAST(MAX(n) AS BIGINT) AS n_chars,
-           CAST(SUM(se - ss + 1) * 1000000 // MAX(n) AS BIGINT) AS dup_ppm
-    FROM sp GROUP BY doc_id
+    {_SPAN_ISLANDS}
+    SELECT doc_id AS batch_id, {_SPAN_PPM}
     """,
     survey_ids=("X10", "X11"),
 )
@@ -1220,9 +1171,9 @@ _QUERY_IDS = [0, 1, 2, 3, 4]
 _QID_SQL = ", ".join(str(i) for i in _QUERY_IDS)
 
 
-@_register(
-    "s12_cosine_topk",
-    oracle=f"""
+#: Exact cosine top-10 per query — one oracle for the JVM-expression
+#: and pandas-UDF scoring kernels.
+_COSINE_TOPK_SQL = f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb
                FROM embeddings WHERE vec_id IN ({_QID_SQL})),
     sc AS (SELECT q.query_id, e.vec_id,
@@ -1234,7 +1185,12 @@ _QID_SQL = ", ".join(str(i) for i in _QUERY_IDS)
                        ORDER BY cosine DESC, vec_id) AS INTEGER) AS rk
            FROM sc)
     SELECT query_id, vec_id, cosine, rk FROM rk WHERE rk <= 10
-    """,
+    """
+
+
+@_register(
+    "s12_cosine_topk",
+    oracle=_COSINE_TOPK_SQL,
     survey_ids=("X12",),
 )
 def s12_cosine_topk(spark, sf_dir):
@@ -1396,19 +1352,7 @@ def s12_ann_lsh(spark, sf_dir):
 
 @_register(
     "s12_cosine_topk_pandas",
-    oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb
-               FROM embeddings WHERE vec_id IN ({_QID_SQL})),
-    sc AS (SELECT q.query_id, e.vec_id,
-                  {_cosine_sql('q.q_emb', 'e.embedding')} AS cosine
-           FROM embeddings e CROSS JOIN q
-           WHERE e.vec_id <> q.query_id),
-    rk AS (SELECT query_id, vec_id, cosine,
-                  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id) AS INTEGER) AS rk
-           FROM sc)
-    SELECT query_id, vec_id, cosine, rk FROM rk WHERE rk <= 10
-    """,
+    oracle=_COSINE_TOPK_SQL,
     survey_ids=("X12", "X14"),
 )
 def s12_cosine_topk_pandas(spark, sf_dir):
@@ -1475,10 +1419,11 @@ def s12_ivf_topk(spark, sf_dir):
     )
 
 
-@_register(
-    "s12_pq_topk",
-    oracle=f"""
-    WITH p AS (SELECT vec_id,
+#: PQ encoding and query distance tables: micro-quantized vectors
+#: ``p``, the 16-codeword codebook ``cb``, per-subspace squared
+#: distances ``sd``, each vector's 4 ``codes`` and the queries' tables
+#: ``qd`` — mirrors similarity._pq_codes, in exact bigint micro² units.
+_PQ_CTE = f"""p AS (SELECT vec_id,
                       list_transform(embedding,
                            x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000)
                                      AS BIGINT)) AS m
@@ -1498,7 +1443,13 @@ def s12_ivf_topk(spark, sf_dir):
                                          ORDER BY d, cent_id) AS rn
                FROM sd) WHERE rn = 1),
     qd AS (SELECT vec_id AS query_id, j, cent_id, d
-           FROM sd WHERE vec_id IN ({_QID_SQL})),
+           FROM sd WHERE vec_id IN ({_QID_SQL}))"""
+
+
+@_register(
+    "s12_pq_topk",
+    oracle=f"""
+    WITH {_PQ_CTE},
     ad AS (SELECT q.query_id, x.vec_id,
                   CAST(SUM(q.d) AS BIGINT) AS adist_micro2
            FROM codes x JOIN qd q ON q.j = x.j AND q.cent_id = x.code
@@ -1549,27 +1500,7 @@ def s12_pq_topk(spark, sf_dir):
                                  c.cent_id) AS prk
             FROM embeddings q CROSS JOIN cent c
             WHERE q.vec_id IN ({_QID_SQL})) WHERE prk <= {_IVF_PROBE}),
-    p AS (SELECT vec_id,
-                 list_transform(embedding,
-                      x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000)
-                                AS BIGINT)) AS m
-          FROM embeddings),
-    cb AS (SELECT vec_id AS cent_id, m AS cm FROM p WHERE vec_id < 16),
-    sd AS (SELECT v.vec_id, t.j, c.cent_id,
-                  CAST(list_sum(list_transform(range(1, 17),
-                       i -> (v.m[t.j * 16 + i] - c.cm[t.j * 16 + i])
-                          * (v.m[t.j * 16 + i] - c.cm[t.j * 16 + i])))
-                       AS BIGINT) AS d
-           FROM p v
-           CROSS JOIN (SELECT unnest(range(0, 4)) AS j) t
-           CROSS JOIN cb c),
-    codes AS (SELECT vec_id, j, cent_id AS code FROM (
-               SELECT vec_id, j, cent_id,
-                      ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                                         ORDER BY d, cent_id) AS rn
-               FROM sd) WHERE rn = 1),
-    qd AS (SELECT vec_id AS query_id, j, cent_id, d
-           FROM sd WHERE vec_id IN ({_QID_SQL})),
+    {_PQ_CTE},
     cand AS (SELECT qp.query_id, cl.vec_id
              FROM cells cl JOIN qp ON cl.cell = qp.cell
              WHERE cl.vec_id <> qp.query_id),
@@ -1937,25 +1868,9 @@ _PIPE_SQL = f"""
     WITH train AS (SELECT doc_id, source, text FROM documents
                    WHERE doc_id % 97 <> 0),
     t0 AS (SELECT doc_id, source, text, {_TOKS} AS toks FROM train),
-    sigl AS (SELECT doc_id, source, text, toks,
-                    CAST(len(toks) AS BIGINT) AS n_tokens,
-                    CASE WHEN len(toks) > 0
-                         THEN CAST(coalesce(list_sum(list_transform(toks,
-                                  x -> length(x))), 0) AS DOUBLE)
-                              / CAST(len(toks) AS DOUBLE)
-                         ELSE CAST(0.0 AS DOUBLE) END AS avg_token_len,
-                    CASE WHEN len(toks) > 1
-                         THEN CAST(1.0 AS DOUBLE)
-                              - CAST(len(list_distinct(list_transform(
-                                    range(1, len(toks)),
-                                    i -> toks[i] || ' ' || toks[i+1])))
-                                  AS DOUBLE)
-                                / CAST(len(toks) - 1 AS DOUBLE)
-                         ELSE CAST(0.0 AS DOUBLE) END AS dup_2gram_frac,
-                    {_BEST} > 0 AS pass_lang
+    sigl AS (SELECT doc_id, source, text, toks, {_GATE_SIGNALS}
              FROM (SELECT doc_id, source, text, toks,
-                          {", ".join(f"{_stop_list_sql(l)} AS hits_{l}"
-                                     for l in _LANGS)}
+                          {_LANG_HITS}
                    FROM t0)),
     q AS (SELECT doc_id, source, text, toks, n_tokens FROM sigl
           WHERE pass_lang
@@ -1974,23 +1889,8 @@ _PIPE_SQL = f"""
     hh AS (SELECT doc_id, {_HSTR.format(e='shingle')} AS h FROM sh),
     sigs AS (SELECT doc_id, {_MINHASH_AGGS} FROM hh GROUP BY doc_id),
     bands AS ({_BAND_SELECTS}),
-    cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-             FROM bands l JOIN bands r
-               ON l.band = r.band AND l.band_key = r.band_key
-              AND l.doc_id < r.doc_id),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (SELECT c.a, c.b, COUNT(*) AS n_inter
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.a
-              JOIN sh sb ON sb.doc_id = c.b AND sb.shingle = sa.shingle
-              GROUP BY c.a, c.b),
-    dupb AS (SELECT DISTINCT i.b AS doc_id
-             FROM inter i
-             JOIN sizes za ON za.doc_id = i.a
-             JOIN sizes zb ON zb.doc_id = i.b
-             WHERE CAST(i.n_inter AS DOUBLE)
-                     / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE)
-                   >= 0.8),
+    {_LSH_INTER},
+    dupb AS (SELECT DISTINCT i.b AS doc_id {_JACCARD_08}),
     nd AS (SELECT * FROM ex
            WHERE doc_id NOT IN (SELECT doc_id FROM dupb)),
     evt AS (SELECT doc_id, {_TOKS} AS toks FROM documents
@@ -2712,37 +2612,11 @@ def x05_triangle_counts(spark, sf_dir):
     exactly once at its lowest-(degree, id) corner and closed with one
     canonical equi-join. The oracle is the naive three-way self-join
     with a < b < c ordering — same triangle set, so parity proves the
-    oriented enumeration exact.
-
-    Pairs construction is a SINGLE scan: collect_set of parts per
-    order, then the unordered-pair expansion as a nested array
-    transform (bounded by lines-per-order², ≤49 structs/order) —
-    one shuffle on orderkey plus the canonical distinct, instead of
-    the self-join's two scans + two shuffles. Strictly less work per
-    run (one lineitem scan, one pre-distinct shuffle); wall-clock at
-    sf0.1 is comparable-to-better under this VM's load noise. At
-    100 TB the fan-out bound is the same (per-order line count, not
-    node degree). The oracle keeps the naive self-join spelling, so
-    parity also proves the two constructions equivalent.
+    oriented enumeration exact. Pairs: components.co_order_pairs.
     operators/components.py::triangle_counts."""
-    from .operators.components import triangle_counts
+    from .operators.components import co_order_pairs, triangle_counts
 
-    li = _ld(spark, sf_dir, "lineitem")
-    grp = li.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("ps"))
-    pair_arr = F.flatten(
-        F.transform(
-            "ps",
-            lambda x: F.transform(
-                F.col("ps"), lambda y: F.struct(x.alias("a"), y.alias("b"))
-            ),
-        )
-    )
-    pairs = (
-        grp.select(F.explode(pair_arr).alias("p"))
-        .filter(F.col("p.a") < F.col("p.b"))
-        .select("p.a", "p.b")
-        .distinct()
-    )
+    pairs = co_order_pairs(_ld(spark, sf_dir, "lineitem"))
     return triangle_counts(pairs)
 
 
@@ -3514,33 +3388,8 @@ def s18_l_diversity(spark, sf_dir):
 
 @_register(
     "d30_group_split",
-    oracle="WITH RECURSIVE "
-    + _minhash_cte().replace("WITH t AS", "t AS", 1)
+    oracle=_DUP_CLUSTERS_CTE
     + f""",
-    sigs AS (SELECT doc_id, {_MINHASH_AGGS} FROM hh GROUP BY doc_id),
-    bands AS ({_BAND_SELECTS}),
-    cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-             FROM bands l JOIN bands r
-               ON l.band = r.band AND l.band_key = r.band_key
-              AND l.doc_id < r.doc_id),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (SELECT c.a, c.b, COUNT(*) AS n_inter
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.a
-              JOIN sh sb ON sb.doc_id = c.b AND sb.shingle = sa.shingle
-              GROUP BY c.a, c.b),
-    edges AS (SELECT i.a, i.b FROM inter i
-              JOIN sizes za ON za.doc_id = i.a
-              JOIN sizes zb ON zb.doc_id = i.b
-              WHERE CAST(i.n_inter AS DOUBLE)
-                      / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) >= 0.8),
-    sym AS (SELECT a AS src, b AS dst FROM edges
-            UNION ALL SELECT b, a FROM edges),
-    reach AS (SELECT doc_id AS v, doc_id AS lbl FROM documents
-              UNION
-              SELECT s.dst AS v, r.lbl
-              FROM reach r JOIN sym s ON s.src = r.v),
-    lab AS (SELECT v AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY v),
     split AS (
         SELECT doc_id, cluster_id,
                CASE WHEN {duckdb_det_hash_i64('cluster_id', 7)} % 100 < 80
@@ -3690,20 +3539,26 @@ def t13_boilerplate_shingles(spark, sf_dir):
     return boilerplate_shingle_scores(aug, n=5, min_df=3)
 
 
+#: The co-order part graph as distinct canonical (a < b) edges: the
+#: naive self-join spelling of components.co_order_pairs, the first
+#: stage of every unrolled x05 graph oracle below.
+_CO_ORDER_E0 = """(
+        SELECT DISTINCT LEAST(l1.l_partkey, l2.l_partkey) AS a,
+               GREATEST(l1.l_partkey, l2.l_partkey) AS b
+        FROM lineitem l1 JOIN lineitem l2
+          ON l1.l_orderkey = l2.l_orderkey
+         AND l1.l_partkey <> l2.l_partkey
+    )"""
+
+
 def _lpa_sql(rounds: int = 3) -> str:
     """Unrolled fixed-round synchronous label propagation as chained
     CTEs — same constraint as _kcore_sql (recursive CTEs cannot
     aggregate in the recursive term), same MATERIALIZED discipline.
     Constants mirror operators/components.py::label_communities."""
     parts = [
-        """
-    e0 AS MATERIALIZED (
-        SELECT DISTINCT LEAST(l1.l_partkey, l2.l_partkey) AS a,
-               GREATEST(l1.l_partkey, l2.l_partkey) AS b
-        FROM lineitem l1 JOIN lineitem l2
-          ON l1.l_orderkey = l2.l_orderkey
-         AND l1.l_partkey <> l2.l_partkey
-    ),
+        f"""
+    e0 AS MATERIALIZED {_CO_ORDER_E0},
     e AS MATERIALIZED (SELECT a AS src, b AS dst FROM e0
                        UNION ALL SELECT b AS src, a AS dst FROM e0),
     l0 AS MATERIALIZED (SELECT DISTINCT src AS v, src AS label FROM e)"""
@@ -3742,28 +3597,12 @@ def x05_label_communities(spark, sf_dir):
     graph. 3 synchronous rounds, most-frequent-neighbor label with
     min-label tie-break — a pure function of the previous round, so
     the unrolled-CTE oracle replays it bit-identically (asynchronous
-    LPA would be schedule-dependent and unverifiable). Pair
-    construction reuses the single-scan collect_set expansion from
-    x05_kcore; the oracle keeps the naive self-join spelling.
+    LPA would be schedule-dependent and unverifiable). Pairs:
+    components.co_order_pairs.
     operators/components.py::label_communities."""
-    from .operators.components import label_communities
+    from .operators.components import co_order_pairs, label_communities
 
-    li = _ld(spark, sf_dir, "lineitem")
-    grp = li.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("ps"))
-    pair_arr = F.flatten(
-        F.transform(
-            "ps",
-            lambda x: F.transform(
-                F.col("ps"), lambda y: F.struct(x.alias("a"), y.alias("b"))
-            ),
-        )
-    )
-    pairs = (
-        grp.select(F.explode(pair_arr).alias("p"))
-        .filter(F.col("p.a") < F.col("p.b"))
-        .select("p.a", "p.b")
-        .distinct()
-    )
+    pairs = co_order_pairs(_ld(spark, sf_dir, "lineitem"))
     return label_communities(pairs, rounds=3)
 
 
@@ -3777,16 +3616,8 @@ def _kcore_sql(k: int = 3, rounds: int = 8) -> str:
     # expand ~3^rounds-fold and exhaust file handles re-scanning the
     # parquet. Materialization pins each peel once (exactly the
     # semantics the Spark loop's checkpoints give).
-    parts = [
-        """
-    e0 AS MATERIALIZED (
-        SELECT DISTINCT LEAST(l1.l_partkey, l2.l_partkey) AS a,
-               GREATEST(l1.l_partkey, l2.l_partkey) AS b
-        FROM lineitem l1 JOIN lineitem l2
-          ON l1.l_orderkey = l2.l_orderkey
-         AND l1.l_partkey <> l2.l_partkey
-    )"""
-    ]
+    parts = [f"""
+    e0 AS MATERIALIZED {_CO_ORDER_E0}"""]
     for r in range(1, rounds + 1):
         parts.append(f"""
     d{r} AS MATERIALIZED (SELECT v, COUNT(*) AS deg FROM (
@@ -3811,16 +3642,8 @@ def _coreness_sql(ks: tuple = (60, 80, 90), rounds: int = 8) -> str:
     nesting property components.py::coreness_grid exploits), so the
     generated stages chain across grades exactly like the Spark loop.
     Same MATERIALIZED discipline as _kcore_sql."""
-    parts = [
-        """
-    e0_r0 AS MATERIALIZED (
-        SELECT DISTINCT LEAST(l1.l_partkey, l2.l_partkey) AS a,
-               GREATEST(l1.l_partkey, l2.l_partkey) AS b
-        FROM lineitem l1 JOIN lineitem l2
-          ON l1.l_orderkey = l2.l_orderkey
-         AND l1.l_partkey <> l2.l_partkey
-    )"""
-    ]
+    parts = [f"""
+    e0_r0 AS MATERIALIZED {_CO_ORDER_E0}"""]
     for g, k in enumerate(ks, start=1):
         for r in range(1, rounds + 1):
             # grade g's round 0 IS the previous grade's final edge list
@@ -3870,27 +3693,11 @@ def x05_coreness(spark, sf_dir):
     surviving edges (k-core nesting), so the full edge list is paid
     once and later grades start contracted; round budgets are fixed
     with the proven early exits, bit-identical to this nested
-    unrolled-CTE oracle. Same co-order part graph and pairs
-    construction as x05_kcore.
+    unrolled-CTE oracle. Pairs: components.co_order_pairs.
     operators/components.py::coreness_grid."""
-    from .operators.components import coreness_grid
+    from .operators.components import co_order_pairs, coreness_grid
 
-    li = _ld(spark, sf_dir, "lineitem")
-    grp = li.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("ps"))
-    pair_arr = F.flatten(
-        F.transform(
-            "ps",
-            lambda x: F.transform(
-                F.col("ps"), lambda y: F.struct(x.alias("a"), y.alias("b"))
-            ),
-        )
-    )
-    pairs = (
-        grp.select(F.explode(pair_arr).alias("p"))
-        .filter(F.col("p.a") < F.col("p.b"))
-        .select("p.a", "p.b")
-        .distinct()
-    )
+    pairs = co_order_pairs(_ld(spark, sf_dir, "lineitem"))
     return coreness_grid(pairs, ks=(60, 80, 90), rounds=8)
 
 
@@ -3910,26 +3717,9 @@ def x05_kcore(spark, sf_dir):
     with tracked release (the components.py storage discipline); round
     count fixed rather than converged so the result is bit-identical
     to the unrolled-CTE oracle in any engine (the integer_pagerank
-    design). Pairs construction reuses the single-scan collect_set
-    expansion from x05_triangle_counts; the oracle keeps the naive
-    self-join spelling, so parity also proves the constructions
-    equivalent. operators/components.py::kcore_nodes."""
-    from .operators.components import kcore_nodes
+    design). Pairs: components.co_order_pairs.
+    operators/components.py::kcore_nodes."""
+    from .operators.components import co_order_pairs, kcore_nodes
 
-    li = _ld(spark, sf_dir, "lineitem")
-    grp = li.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("ps"))
-    pair_arr = F.flatten(
-        F.transform(
-            "ps",
-            lambda x: F.transform(
-                F.col("ps"), lambda y: F.struct(x.alias("a"), y.alias("b"))
-            ),
-        )
-    )
-    pairs = (
-        grp.select(F.explode(pair_arr).alias("p"))
-        .filter(F.col("p.a") < F.col("p.b"))
-        .select("p.a", "p.b")
-        .distinct()
-    )
+    pairs = co_order_pairs(_ld(spark, sf_dir, "lineitem"))
     return kcore_nodes(pairs, k=80, rounds=8)

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from .functions.hashing import det_hash_i64
 from .functions.text import DUCKDB_TOKENS
 from .operators import multimodal, pipe, udfs
-from .registry import _cents, _ld, _register
+from .registry import _TUMBLING_SQL, _cents, _ld, _register
 
 
 def _scratch_dir(prefix: str) -> str:
@@ -393,9 +393,9 @@ def mm_resize_bmp(spark, sf_dir):
 
 
 
-@_register(
-    "mm_decode_features",
-    oracle="""
+#: BMP header fields and leading-pixel byte-sum per document — one
+#: oracle for the file-drop and parquet-payload ingestion twins.
+_BMP_DECODE_SQL = """
     WITH d AS (SELECT doc_id,
                       hex(encode(text)) AS hx,
                       octet_length(encode(text)) AS L,
@@ -411,7 +411,12 @@ def mm_resize_bmp(spark, sf_dir):
                 i -> ('0x' || substr(hx, (i % L) * 2 + 1, 2))::BIGINT)), 0)
              AS BIGINT) AS feature_sum
     FROM d
-    """,
+    """
+
+
+@_register(
+    "mm_decode_features",
+    oracle=_BMP_DECODE_SQL,
     survey_ids=("X14",),
 )
 def mm_decode_features(spark, sf_dir):
@@ -434,23 +439,7 @@ def mm_decode_features(spark, sf_dir):
 
 @_register(
     "mm_decode_features_parquet",
-    oracle="""
-    WITH d AS (SELECT doc_id,
-                      hex(encode(text)) AS hx,
-                      octet_length(encode(text)) AS L,
-                      ((doc_id % 4) + 1) * 4 AS w,
-                      ((doc_id % 3) + 1) * 4 AS h
-               FROM documents)
-    SELECT doc_id,
-           CAST(54 + w * h * 3 AS BIGINT) AS n_bytes,
-           'image/bmp' AS format,
-           CAST(w AS INTEGER) AS width,
-           CAST(h AS INTEGER) AS height,
-           CAST(COALESCE(list_sum(list_transform(range(0, least(64, w * h * 3)),
-                i -> ('0x' || substr(hx, (i % L) * 2 + 1, 2))::BIGINT)), 0)
-             AS BIGINT) AS feature_sum
-    FROM d
-    """,
+    oracle=_BMP_DECODE_SQL,
     survey_ids=("X14",),
 )
 def mm_decode_features_parquet(spark, sf_dir):
@@ -518,14 +507,7 @@ def mm_decode_features_png(spark, sf_dir):
 
 @_register(
     "x10_stream_tumbling",
-    oracle="""
-    SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
-           CAST(date_trunc('hour', ts) AS TIMESTAMP) + INTERVAL 1 HOUR
-             AS window_end,
-           event_type,
-           COUNT(*) AS n_events
-    FROM events GROUP BY 1, 2, 3
-    """,
+    oracle=_TUMBLING_SQL,
     survey_ids=("X10", "X9"),
 )
 def x10_stream_tumbling(spark, sf_dir):

@@ -27,14 +27,6 @@ sys.path.insert(0, str(REPO))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _load1() -> float:
-    try:
-        with open("/proc/loadavg") as fh:
-            return float(fh.read().split()[0])
-    except Exception:
-        return -1.0
-
-
 def main() -> int:
     conf_key, val_a, val_b = sys.argv[1], sys.argv[2], sys.argv[3]
     qarg = sys.argv[4]
@@ -59,7 +51,7 @@ def main() -> int:
 
     def timed(name: str, val: str) -> tuple[float, float]:
         spark.conf.set(conf_key, val)
-        la = _load1()
+        la = os.getloadavg()[0]
         t0 = time.perf_counter()
         specs[name].fn(spark, SF_DIR).write.format("noop").mode(
             "overwrite"

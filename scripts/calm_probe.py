@@ -32,14 +32,6 @@ sys.path.insert(0, str(REPO))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _load1() -> float:
-    try:
-        with open("/proc/loadavg") as fh:
-            return float(fh.read().split()[0])
-    except Exception:
-        return -1.0
-
-
 def _artifact_path() -> Path:
     if len(sys.argv) > 4:
         return Path(sys.argv[4])
@@ -60,10 +52,10 @@ def main() -> int:
     # gate BEFORE the JVM exists (it adds its own load)
     t0 = time.time()
     waited = 0.0
-    while _load1() > gate and time.time() - t0 < 900:
+    while os.getloadavg()[0] > gate and time.time() - t0 < 900:
         time.sleep(10)
     waited = round(time.time() - t0, 1)
-    load_at_start = _load1()
+    load_at_start = os.getloadavg()[0]
 
     from echem_dft_etl_spark.registry import all_queries
     from echem_dft_etl_spark.session import get_session
@@ -73,7 +65,7 @@ def main() -> int:
     specs = all_queries()
 
     def timed(name: str) -> tuple[float, float]:
-        la = _load1()
+        la = os.getloadavg()[0]
         t = time.perf_counter()
         specs[name].fn(spark, SF_DIR).write.format("noop").mode(
             "overwrite"
@@ -100,7 +92,7 @@ def main() -> int:
         "gate": gate,
         "gate_wait_seconds": waited,
         "loadavg_at_start": load_at_start,
-        "loadavg_at_end": _load1(),
+        "loadavg_at_end": os.getloadavg()[0],
         "n_runs": n_runs,
         "queries": results,
     }

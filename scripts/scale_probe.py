@@ -283,6 +283,7 @@ def build_probes(spark, k: int, cc_stats: list, tmpdir: str,
     )
     from echem_dft_etl_spark.operators.components import (
         bfs_distances,
+        co_order_pairs,
         duplicate_clusters,
         kcore_nodes,
     )
@@ -404,24 +405,7 @@ def build_probes(spark, k: int, cc_stats: list, tmpdir: str,
             ["l_orderkey", "l_partkey"],
             k,
         )
-        grp = li.groupBy("l_orderkey").agg(
-            F.collect_set("l_partkey").alias("ps")
-        )
-        pair_arr = F.flatten(
-            F.transform(
-                "ps",
-                lambda x: F.transform(
-                    F.col("ps"),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
-        )
-        return (
-            grp.select(F.explode(pair_arr).alias("p"))
-            .filter(F.col("p.a") < F.col("p.b"))
-            .select("p.a", "p.b")
-            .distinct()
-        )
+        return co_order_pairs(li)
 
     def bfs_probe():
         edges = coorder_edges().localCheckpoint(eager=True)
@@ -652,11 +636,7 @@ def main() -> None:
     spark = get_session(app_name="scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    try:
-        with open("/proc/loadavg") as fh:
-            load0 = [float(x) for x in fh.read().split()[:3]]
-    except Exception:
-        load0 = []
+    load0 = list(os.getloadavg())
 
     import shutil
     import tempfile
@@ -682,20 +662,13 @@ def main() -> None:
     gate_wait = float(os.environ.get("SPARK_GRAFT_PROBE_LOAD_WAIT", "300"))
     gate_events: list[dict] = []
 
-    def _load1() -> float:
-        try:
-            with open("/proc/loadavg") as fh:
-                return float(fh.read().split()[0])
-        except Exception:
-            return -1.0
-
     def wait_calm(stage: str) -> None:
         t0 = time.time()
-        before = _load1()
+        before = os.getloadavg()[0]
         la = before
         while la > gate and time.time() - t0 < gate_wait:
             time.sleep(10)
-            la = _load1()
+            la = os.getloadavg()[0]
         gate_events.append(
             {
                 "stage": stage,
@@ -735,11 +708,7 @@ def main() -> None:
                 # knee on a FIXED-OUTPUT twin that an isolated re-run
                 # measured at ~1.2x — pure suite-context inflation,
                 # indistinguishable without per-rung load context.
-                try:
-                    with open("/proc/loadavg") as fh:
-                        la = float(fh.read().split()[0])
-                except Exception:
-                    la = None
+                la = os.getloadavg()[0]
                 t0 = time.perf_counter()
                 n = (build(ctx) if setup else build()).count()
                 dt = round(time.perf_counter() - t0, 2)

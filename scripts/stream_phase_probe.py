@@ -38,14 +38,6 @@ import os
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _load1() -> float:
-    try:
-        with open("/proc/loadavg") as fh:
-            return float(fh.read().split()[0])
-    except Exception:
-        return -1.0
-
-
 def main() -> int:
     names = sys.argv[1].split(",")
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -74,7 +66,7 @@ def main() -> int:
 
     def probe_once(name: str) -> dict:
         captured.clear()
-        la = _load1()
+        la = os.getloadavg()[0]
         t0 = time.perf_counter()
         df = specs[name].fn(spark, SF_DIR)
         t_built = time.perf_counter()

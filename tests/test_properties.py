@@ -2356,3 +2356,46 @@ def test_label_communities_matches_bruteforce(spark):
     final = _lpa_bruteforce(edges, 3)
     assert final[0] == final[4] and final[10] == final[14]
     assert final[0] != final[10]
+
+
+def test_co_order_pairs_matches_the_self_join(spark):
+    """Edge cases the parity data need not contain: a part repeated
+    within one order (no self-pair, no double count), a one-line order
+    (no pairs) and a pair co-occurring in two orders (listed once).
+    The helper must equal the naive ``l1.l_partkey < l2.l_partkey``
+    self-join, with each pair once."""
+    from echem_dft_etl_spark.operators.components import co_order_pairs
+
+    lineitem = spark.createDataFrame(
+        [(1, 10), (1, 20), (1, 10), (1, 30), (2, 40), (3, 20), (3, 10)],
+        "l_orderkey bigint, l_partkey bigint",
+    )
+    l1, l2 = lineitem.alias("l1"), lineitem.alias("l2")
+    naive = {
+        (r.a, r.b)
+        for r in l1.join(
+            l2,
+            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
+            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
+        )
+        .select(F.col("l1.l_partkey").alias("a"), F.col("l2.l_partkey").alias("b"))
+        .collect()
+    }
+    got = [(r.a, r.b) for r in co_order_pairs(lineitem).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == naive == {(10, 20), (10, 30), (20, 30)}
+
+
+def test_identical_oracles_share_one_definition():
+    """Queries whose oracles are the same SQL must be registered with
+    one named constant, so the twins cannot drift apart."""
+    from echem_dft_etl_spark.registry import all_queries
+
+    first: dict[str, tuple[str, str]] = {}
+    for name, spec in all_queries().items():
+        text = " ".join(spec.oracle.split())
+        if text in first:
+            twin, oracle = first[text]
+            assert spec.oracle is oracle, f"{name} pastes {twin}'s oracle"
+        else:
+            first[text] = (name, spec.oracle)
