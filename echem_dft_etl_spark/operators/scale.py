@@ -327,6 +327,39 @@ def _monotone_pid(df: DataFrame, key_col: str, num_partitions: int):
     return pid
 
 
+def global_row_number(df: DataFrame, order_cols: list[str]) -> DataFrame:
+    """``df`` plus ``rn``, its 1-based bigint ``ROW_NUMBER() OVER (ORDER
+    BY order_cols)``, WITHOUT a global-order window.
+
+    The window with no PARTITION BY collapses to a single task in Spark
+    — the canonical 100 TB scale-killer. Two phases instead: (1) bucket
+    rows by a MONOTONE literal pid of the first order column
+    (:func:`_monotone_pid`, a pure expression of the key, so the window
+    branch and the counts branch can never observe different
+    assignments) and number rows WITHIN each bucket with a
+    partition-local window; (2) count rows per bucket (a ~32-row
+    aggregate), turn the counts into cumulative start offsets with a
+    window over that TINY frame, and broadcast-join the offsets back.
+    Every full-data pass stays parallel; only the offset table is ever
+    globally ordered. ``order_cols`` must be a total order for the
+    numbering to be deterministic.
+    """
+    part = df.withColumn("pid", _monotone_pid(df, order_cols[0], 32))
+    wp = Window.partitionBy("pid").orderBy(*order_cols)
+    local = part.withColumn("local_rn", F.row_number().over(wp))
+    counts = part.groupBy("pid").agg(F.count("*").alias("n"))
+    wo = Window.orderBy("pid").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow - 1
+    )
+    offsets = counts.select(
+        "pid", F.coalesce(F.sum("n").over(wo), F.lit(0)).alias("offset")
+    )
+    return local.join(F.broadcast(offsets), "pid").select(
+        *df.columns,
+        (F.col("local_rn") + F.col("offset")).cast("bigint").alias("rn"),
+    )
+
+
 def missing_key_ranges(
     df: DataFrame, key: str, num_partitions: int = 32
 ) -> DataFrame:

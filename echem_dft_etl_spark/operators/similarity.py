@@ -14,6 +14,11 @@ LLM-data-pipeline extension set).
   buckets, exact cosine re-rank. The standard SimHash-for-angular-
   distance construction (Charikar).
 
+The seven top-k operators (brute force, its pandas twin, LSH,
+multi-probe LSH, IVF, PQ, IVF-PQ) differ only in candidate generation:
+the cosine ones score through one re-rank (:func:`_cosine_rerank`) and
+all seven rank through one per-query tail (:func:`_topk`).
+
 Dot products accumulate left-to-right over double-cast elements in both
 engines (Spark ``aggregate`` / DuckDB ``list_reduce``), so scores are
 bit-identical and thresholds/rankings cannot flake.
@@ -87,6 +92,39 @@ def lsh_bucket(vec: Column, n_planes: int = N_HYPERPLANES) -> Column:
     return bucket
 
 
+def _cosine_rerank(pairs: DataFrame, cosine: Column | None = None) -> DataFrame:
+    """Exact re-rank of candidate pairs: drop self pairs, score each
+    (query_id, vec_id) pair. The default score is
+    ``dot(q_emb, embedding) / (q_norm · v_norm)`` over norms hoisted
+    out of the pair loop (:func:`_with_norm`), NULL when the
+    denominator is 0 — the same float64 ops in the same order as
+    ``cosine_sim`` and the DuckDB oracle, so scores are bit-identical.
+    ``cosine`` swaps in another kernel with the same contract (the
+    pandas twin's)."""
+    if cosine is None:
+        denom = F.col("q_norm") * F.col("v_norm")
+        cosine = F.when(denom != 0, dot(F.col("q_emb"), F.col("embedding")) / denom)
+    return pairs.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id", "vec_id", cosine.alias("cosine")
+    )
+
+
+def _topk(scored: DataFrame, k: int, score: str, descending: bool) -> DataFrame:
+    """Per-query top-k tail shared by every ANN operator: rank ``rk``
+    (1, 2, ...) within each ``query_id`` by ``score``, ties to the
+    lowest ``vec_id``, and keep ``rk <= k``. Spark sorts NULL last
+    descending and first ascending. Only the tiny per-query key
+    crosses the network."""
+    require_at_least("k", k, 1)
+    key = F.col(score).desc() if descending else F.col(score)
+    w = Window.partitionBy("query_id").orderBy(key, F.col("vec_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "vec_id", score, "rk")
+    )
+
+
 def cosine_topk(
     emb: DataFrame, query_ids: list[int], k: int = 10
 ) -> DataFrame:
@@ -95,16 +133,12 @@ def cosine_topk(
     Queries are a broadcast dimension; scoring is map-side over corpus
     partitions; ranking shuffles only on the (tiny) query key.
 
-    Norms are hoisted out of the pair loop: the corpus norm is computed
-    once per row (not once per (row, query) pair) and the query norm
-    once per query inside the broadcast side — ``dot / (n_q · n_v)``
-    performs the exact same float64 ops in the same order as
-    ``cosine_sim``, so scores are bit-identical while the interpreted
-    higher-order-aggregate work drops ~3x (r3: the only >1.3x bench
-    mover in r2 was this query; pinned n=6 runs showed single-task
-    variance, and this hoist removes most of the work outright).
+    Norms are hoisted out of the pair loop (:func:`_cosine_rerank`):
+    the corpus norm is computed once per row, not once per (row, query)
+    pair, and the query norm once per query inside the broadcast side
+    — bit-identical scores for ~3x less interpreted higher-order
+    aggregate work (r3).
     """
-    require_at_least("k", k, 1)
     # dropDuplicates + limit(len(query_ids)) writes the build side's
     # cardinality bound INTO the logical plan — Catalyst's maxRows
     # proves this BNLJ's broadcast is query-set-sized, which
@@ -122,27 +156,12 @@ def cosine_topk(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
         ),
         "q_emb",
-        "q_nrm",
+        "q_norm",
     )
-    denom = F.col("q_nrm") * F.col("v_nrm")
-    scored = (
-        _with_norm(_spread(emb), "embedding", "v_nrm")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.when(
-                denom != 0, dot(F.col("q_emb"), F.col("embedding")) / denom
-            ).alias("cosine"),
-        )
+    pairs = _with_norm(_spread(emb), "embedding", "v_norm").crossJoin(
+        F.broadcast(q)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _topk(_cosine_rerank(pairs), k, "cosine", descending=True)
 
 
 def _triangular_block_pairs(spark, n_blocks: int) -> DataFrame:
@@ -205,20 +224,20 @@ def cosine_near_pairs(
     # ~3x on the whole query. cosine = dot/(na*nb) performs the exact
     # same float ops in the same order as cosine_sim / the oracle, so
     # scores stay bit-identical.
-    blocked = _with_norm(_with_block(emb, n_blocks), "embedding", "nrm")
+    blocked = _with_norm(_with_block(emb, n_blocks), "embedding", "norm")
     left = blocked.join(
         F.broadcast(block_pairs), F.col("block") == F.col("bi")
     ).select(
         F.col("vec_id").alias("l_id"),
         F.col("embedding").alias("l_emb"),
-        F.col("nrm").alias("l_nrm"),
+        F.col("norm").alias("l_norm"),
         "bi",
         "bj",
     )
     right = blocked.select(
         F.col("vec_id").alias("r_id"),
         F.col("embedding").alias("r_emb"),
-        F.col("nrm").alias("r_nrm"),
+        F.col("norm").alias("r_norm"),
         F.col("block").alias("r_block"),
     )
     joined = left.join(right, F.col("bj") == F.col("r_block")).filter(
@@ -230,9 +249,9 @@ def cosine_near_pairs(
             F.least("l_id", "r_id").alias("a"),
             F.greatest("l_id", "r_id").alias("b"),
             F.when(
-                (F.col("l_nrm") * F.col("r_nrm")) != 0,
+                (F.col("l_norm") * F.col("r_norm")) != 0,
                 dot(F.col("l_emb"), F.col("r_emb"))
-                / (F.col("l_nrm") * F.col("r_nrm")),
+                / (F.col("l_norm") * F.col("r_norm")),
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
@@ -338,7 +357,17 @@ def ann_lsh_topk(
     tunable via multi-probe (flip one bit) or more tables; this single-
     table form is the oracle-checkable core.
     """
-    require_at_least("k", k, 1)
+    bucketed, q = _lsh_bucketed(emb, query_ids, n_planes)
+    pairs = bucketed.join(F.broadcast(q), F.col("bucket") == F.col("q_bucket"))
+    return _topk(_cosine_rerank(pairs), k, "cosine", descending=True)
+
+
+def _lsh_bucketed(
+    emb: DataFrame, query_ids: list[int], n_planes: int
+) -> tuple[DataFrame, DataFrame]:
+    """The LSH operators' two sides: the corpus with its bucket id and
+    norm (vec_id, embedding, bucket, v_norm), and the queries cut from
+    it (query_id, q_emb, q_norm, q_bucket)."""
     # bucket ids stay a JVM higher-order expression (NOT the numpy
     # matmul used by band_signatures): the DuckDB oracle reproduces the
     # exact buckets with the same sequential fold, and a different
@@ -346,34 +375,15 @@ def ann_lsh_topk(
     bucketed = _with_norm(
         emb.withColumn("bucket", lsh_bucket(F.col("embedding"), n_planes)),
         "embedding",
-        "v_nrm",
+        "v_norm",
     )
     q = bucketed.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        F.col("v_nrm").alias("q_nrm"),
+        F.col("v_norm").alias("q_norm"),
         F.col("bucket").alias("q_bucket"),
     )
-    denom = F.col("q_nrm") * F.col("v_nrm")
-    cands = (
-        bucketed.join(
-            F.broadcast(q), F.col("bucket") == F.col("q_bucket")
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.when(
-                denom != 0, dot(F.col("q_emb"), F.col("embedding")) / denom
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        cands.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return bucketed, q
 
 
 def _scored_cells(vec: Column, vec_norm: Column) -> Column:
@@ -446,6 +456,28 @@ def assign_cells(
     )
 
 
+def _centroids(emb: DataFrame, n_cells: int) -> DataFrame:
+    """Deterministic coarse centroids (cent_id, c_emb): the ``n_cells``
+    lowest vec_ids, so the DuckDB oracle reproduces the index
+    bit-for-bit; a production index swaps in k-means centroids without
+    changing any query-side code."""
+    require_at_least("n_cells", n_cells, 1)
+    return emb.filter(F.col("vec_id") < n_cells).select(
+        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
+    )
+
+
+def _queries(emb: DataFrame, query_ids: list[int]) -> DataFrame:
+    """The IVF query side: (query_id, q_emb, q_norm)."""
+    return _with_norm(
+        emb.filter(F.col("vec_id").isin(query_ids)).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+        ),
+        "q_emb",
+        "q_norm",
+    )
+
+
 def _probe_cells(q: DataFrame, cent_arr: DataFrame, n_probe: int) -> DataFrame:
     """Per-query probe list: the ``n_probe`` nearest centroids by
     cosine (ties to the lowest cent_id via the negated-id struct sort).
@@ -484,47 +516,16 @@ def ivf_topk(
     the probe join and the final per-query top-k, both keyed on the
     tiny query set. Each query touches ~n_probe/n_cells of the corpus.
     """
-    require_at_least("k", k, 1)
-    require_at_least("n_cells", n_cells, 1)
     require_at_least("n_probe", n_probe, 1)
-    centroids = emb.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
-    )
+    centroids = _centroids(emb, n_cells)
     cent_arr = _cent_array(centroids)
     assigned = assign_cells(emb, centroids)
-
-    # each query probes its n_probe closest centroids: sort the scored
-    # struct array desc (cos, then lowest cent_id) and explode the
-    # first n_probe — no window, no shuffle
-    q = _with_norm(
-        emb.filter(F.col("vec_id").isin(query_ids)).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-        ),
-        "q_emb",
-        "q_norm",
-    )
+    q = _queries(emb, query_ids)
     probes = _probe_cells(q, cent_arr, n_probe).join(
         q.select("query_id", "q_emb", "q_norm"), "query_id"
     )
-
-    denom = F.col("q_norm") * F.col("v_norm")
-    cands = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.when(
-                denom != 0, dot(F.col("q_emb"), F.col("embedding")) / denom
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        cands.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    pairs = assigned.join(F.broadcast(probes), "cell")
+    return _topk(_cosine_rerank(pairs), k, "cosine", descending=True)
 
 
 def quantize_embeddings(emb: DataFrame, bits: int = 8) -> DataFrame:
@@ -606,7 +607,6 @@ def cosine_topk_pandas(
     """cosine_topk with the scoring hot loop in an Arrow-vectorized
     pandas UDF instead of JVM expressions — same plan shape (broadcast
     queries, map-side score, per-query rank), same results."""
-    require_at_least("k", k, 1)
     cosine_pd = make_cosine_pandas_udf()
     # dedup + no-op limit = static cardinality bound for the BNLJ
     # build side, safe even under duplicate vec_ids (see cosine_topk)
@@ -618,21 +618,11 @@ def cosine_topk_pandas(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
         )
     )
-    scored = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_pd(F.col("q_emb"), F.col("embedding")).alias("cosine"),
-        )
+    scored = _cosine_rerank(
+        emb.crossJoin(F.broadcast(q)),
+        cosine_pd(F.col("q_emb"), F.col("embedding")),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _topk(scored, k, "cosine", descending=True)
 
 
 def ann_lsh_multiprobe_topk(
@@ -650,49 +640,16 @@ def ann_lsh_multiprobe_topk(
     Corpus-side cost is unchanged — one bucket id per vector, one
     shuffle; only the (tiny) query probe list fans out.
     """
-    require_at_least("k", k, 1)
-    bucketed = _with_norm(
-        emb.withColumn("bucket", lsh_bucket(F.col("embedding"), n_planes)),
-        "embedding",
-        "v_nrm",
-    )
+    bucketed, q = _lsh_bucketed(emb, query_ids, n_planes)
     probe_buckets = F.array(
         F.col("q_bucket"),
         *[F.col("q_bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)],
     )
-    q = (
-        bucketed.filter(F.col("vec_id").isin(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("v_nrm").alias("q_nrm"),
-            F.col("bucket").alias("q_bucket"),
-        )
-        .select(
-            "query_id",
-            "q_emb",
-            "q_nrm",
-            F.explode(probe_buckets).alias("bucket"),
-        )
+    probes = q.select(
+        "query_id", "q_emb", "q_norm", F.explode(probe_buckets).alias("bucket")
     )
-    denom = F.col("q_nrm") * F.col("v_nrm")
-    cands = (
-        bucketed.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.when(
-                denom != 0, dot(F.col("q_emb"), F.col("embedding")) / denom
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        cands.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    pairs = bucketed.join(F.broadcast(probes), "bucket")
+    return _topk(_cosine_rerank(pairs), k, "cosine", descending=True)
 
 
 def band_signatures(vec_col: Column, n_bands: int, band_bits: int) -> Column:
@@ -1000,24 +957,30 @@ def semdedup(
     # NULL >= τ is never true — same survive-contract as the guarded
     # expression (pinned in tests/test_properties.py).
     cos = make_cosine_pandas_udf()
-    dom = (
+    scored = (
         a.join(b, "cell")
         .filter(F.col("a") < F.col("b"))
-        .select("a", "b", cos(F.col("a_emb"), F.col("b_emb")).alias("_cos"))
-        .filter(F.col("_cos") >= F.lit(threshold))
+        .select("b", cos(F.col("a_emb"), F.col("b_emb")).alias("_cos"))
+    )
+    return _dominated(pts, scored, threshold)
+
+
+def _dominated(side: DataFrame, scored: DataFrame, threshold: float) -> DataFrame:
+    """The SemDeDup verdict per ``side`` vector (vec_id, cell): how many
+    scored pairs (b, _cos) reach ``threshold`` against it, and whether
+    it is kept (none do). A NULL ``_cos`` never dominates."""
+    dom = (
+        scored.filter(F.col("_cos") >= F.lit(threshold))
         .groupBy("b")
         .agg(F.count("*").alias("n_dominators"))
     )
-    return (
-        pts.join(dom, pts["vec_id"] == dom["b"], "left")
-        .select(
-            "vec_id",
-            "cell",
-            F.coalesce("n_dominators", F.lit(0)).cast("bigint").alias(
-                "n_dominators"
-            ),
-            F.col("n_dominators").isNull().alias("is_kept"),
-        )
+    return side.join(dom, side["vec_id"] == dom["b"], "left").select(
+        "vec_id",
+        "cell",
+        F.coalesce("n_dominators", F.lit(0)).cast("bigint").alias(
+            "n_dominators"
+        ),
+        F.col("n_dominators").isNull().alias("is_kept"),
     )
 
 
@@ -1102,7 +1065,7 @@ def semdedup_incremental(
         assign(pts_b, cent_arr).select("vec_id", "cell"), "vec_id"
     )
     cos = make_cosine_pandas_udf()
-    dom = (
+    scored = (
         b_side.select(
             F.col("vec_id").alias("b"), F.col("embedding").alias("b_emb"), "cell"
         )
@@ -1115,18 +1078,8 @@ def semdedup_incremental(
             "cell",
         )
         .select("b", cos(F.col("a_emb"), F.col("b_emb")).alias("_cos"))
-        .filter(F.col("_cos") >= F.lit(threshold))
-        .groupBy("b")
-        .agg(F.count("*").alias("n_dominators"))
     )
-    return b_side.join(dom, b_side["vec_id"] == dom["b"], "left").select(
-        "vec_id",
-        "cell",
-        F.coalesce("n_dominators", F.lit(0)).cast("bigint").alias(
-            "n_dominators"
-        ),
-        F.col("n_dominators").isNull().alias("is_kept"),
-    )
+    return _dominated(b_side, scored, threshold)
 
 
 def _pq_subdist(vec_col: Column, cm_col: Column, j: int, sub: int) -> Column:
@@ -1207,7 +1160,9 @@ def _pq_codes(mic: DataFrame, cb_arr: DataFrame, n_sub: int, sub: int) -> DataFr
     return enc.select("vec_id", *[_code_expr(j) for j in range(n_sub)])
 
 
-def _pq_dtables(q: DataFrame, cb_arr: DataFrame, n_sub: int, sub: int) -> DataFrame:
+def _pq_dtables(
+    mic: DataFrame, query_ids: list[int], cb_arr: DataFrame, n_sub: int, sub: int
+) -> DataFrame:
     """Per-query ADC distance tables: ``dt{j}`` is a ``map<cent_id,
     distance>`` of exact subspace-j distances to every codeword. A map
     keyed by codeword id (not a position-indexed array) keeps lookups
@@ -1227,6 +1182,9 @@ def _pq_dtables(q: DataFrame, cb_arr: DataFrame, n_sub: int, sub: int) -> DataFr
             f"dt{j}"
         )
 
+    q = mic.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("m").alias("qm")
+    )
     return q.crossJoin(F.broadcast(cb_arr)).select(
         "query_id", *[_dtable_expr(j) for j in range(n_sub)]
     )
@@ -1241,6 +1199,20 @@ def _pq_adist(n_sub: int) -> Column:
         term = F.col(f"dt{j}")[F.col(f"code{j}")]
         adist = term if adist is None else adist + term
     return adist
+
+
+def _pq_micro(emb: DataFrame, n_sub: int, dims: int) -> tuple[int, DataFrame]:
+    """Preamble of the PQ entry points: check that ``n_sub`` subspaces
+    split ``dims`` evenly; return the subspace width and the
+    micro-quantized frame (vec_id, m)."""
+    from .kmeans import quantize_micro
+
+    require_at_least("n_sub", n_sub, 1)
+    if dims % n_sub:
+        raise ValueError(f"dims={dims} not divisible by n_sub={n_sub}")
+    return dims // n_sub, emb.select(
+        "vec_id", quantize_micro(F.col("embedding")).alias("m")
+    )
 
 
 def pq_topk(
@@ -1275,31 +1247,17 @@ def pq_topk(
     ``n_codes`` lowest vec_ids' subvectors; argmin ties break on the
     lowest codeword id via struct ordering.
     """
-    from .kmeans import quantize_micro
-
-    if dims % n_sub:
-        raise ValueError(f"dims={dims} not divisible by n_sub={n_sub}")
-    sub = dims // n_sub
-
-    mic = emb.select("vec_id", quantize_micro(F.col("embedding")).alias("m"))
+    sub, mic = _pq_micro(emb, n_sub, dims)
     cb_arr = _pq_codebook(mic, n_codes)
     codes = _pq_codes(mic, cb_arr, n_sub, sub)
-    q = mic.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("m").alias("qm")
-    )
-    qt = _pq_dtables(q, cb_arr, n_sub, sub)
+    qt = _pq_dtables(mic, query_ids, cb_arr, n_sub, sub)
 
     cands = (
         codes.crossJoin(F.broadcast(qt))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", _pq_adist(n_sub).alias("adist_micro2"))
     )
-    w = Window.partitionBy("query_id").orderBy("adist_micro2", "vec_id")
-    return (
-        cands.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "adist_micro2", "rk")
-    )
+    return _topk(cands, k, "adist_micro2", descending=False)
 
 
 def ivfpq_build_index(
@@ -1321,20 +1279,12 @@ def ivfpq_build_index(
     ``scripts/scale_probe.py`` uses this split so the measured scaling
     exponent describes the serving path, not per-run index builds.
     """
-    from .kmeans import quantize_micro
-
-    if dims % n_sub:
-        raise ValueError(f"dims={dims} not divisible by n_sub={n_sub}")
-    sub = dims // n_sub
-
-    centroids = emb.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
-    )
+    sub, mic = _pq_micro(emb, n_sub, dims)
+    centroids = _centroids(emb, n_cells)
     cent_arr = _cent_array(centroids)
     cells = assign_cells(emb, centroids, cent_arr=cent_arr).select(
         "vec_id", "cell"
     )
-    mic = emb.select("vec_id", quantize_micro(F.col("embedding")).alias("m"))
     cb_arr = _pq_codebook(mic, n_codes)
     codes = _pq_codes(mic, cb_arr, n_sub, sub)
     return {
@@ -1379,35 +1329,21 @@ def ivfpq_topk(
     single-shot call self-contained and byte-identical to the split
     path (same owner functions, same frames).
     """
-    from .kmeans import quantize_micro
-
-    if dims % n_sub:
-        raise ValueError(f"dims={dims} not divisible by n_sub={n_sub}")
-    sub = dims // n_sub
-
+    require_at_least("n_cells", n_cells, 1)
+    require_at_least("n_probe", n_probe, 1)
+    sub, mic = _pq_micro(emb, n_sub, dims)
     if index is None:
         index = ivfpq_build_index(
             emb, n_cells=n_cells, n_sub=n_sub, n_codes=n_codes, dims=dims
         )
     cells, codes = index["cells"], index["codes"]
     cb_arr, cent_arr = index["cb_arr"], index["cent_arr"]
-    mic = emb.select("vec_id", quantize_micro(F.col("embedding")).alias("m"))
 
     # probe selection: the SAME _probe_cells owner ivf_topk uses, so
     # IVF and IVF-PQ prune identically by construction
-    q = _with_norm(
-        emb.filter(F.col("vec_id").isin(query_ids)).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-        ),
-        "q_emb",
-        "q_norm",
-    )
-    probes = _probe_cells(q, cent_arr, n_probe)
+    probes = _probe_cells(_queries(emb, query_ids), cent_arr, n_probe)
 
-    qm = mic.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("m").alias("qm")
-    )
-    qt = _pq_dtables(qm, cb_arr, n_sub, sub)
+    qt = _pq_dtables(mic, query_ids, cb_arr, n_sub, sub)
 
     cands = (
         cells.join(F.broadcast(probes), "cell")
@@ -1416,9 +1352,4 @@ def ivfpq_topk(
         .join(F.broadcast(qt), "query_id")
         .select("query_id", "vec_id", _pq_adist(n_sub).alias("adist_micro2"))
     )
-    w = Window.partitionBy("query_id").orderBy("adist_micro2", "vec_id")
-    return (
-        cands.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "adist_micro2", "rk")
-    )
+    return _topk(cands, k, "adist_micro2", descending=False)

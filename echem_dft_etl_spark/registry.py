@@ -727,12 +727,24 @@ def q13_generate_grid(spark, sf_dir):
     ).withColumn("run_id", F.format_string("%s_%.1f", F.col("n_name"), F.col("charge")))
 
 
+#: Customers ranked within their nation by balance, ties to the lowest
+#: custkey — the per-group order of q14_group_index and x01_group_topk.
+_NATION_BALANCE_RANK_SQL = """ROW_NUMBER() OVER (PARTITION BY c_nationkey
+                                   ORDER BY c_acctbal DESC, c_custkey)"""
+
+
+def _by_nation_balance():
+    """Spark side of :data:`_NATION_BALANCE_RANK_SQL`'s window."""
+    return Window.partitionBy("c_nationkey").orderBy(
+        F.col("c_acctbal").desc(), F.col("c_custkey")
+    )
+
+
 @_register(
     "q14_group_index",
-    oracle="""
+    oracle=f"""
     SELECT c_nationkey, c_custkey,
-           CAST(ROW_NUMBER() OVER (PARTITION BY c_nationkey
-                                   ORDER BY c_acctbal DESC, c_custkey) - 1
+           CAST({_NATION_BALANCE_RANK_SQL} - 1
                 AS INTEGER) AS idx
     FROM customer
     """,
@@ -742,15 +754,12 @@ def q14_group_index(spark, sf_dir):
     """Per-group index assignment (Q14): ``enumerate(slabs)`` within
     (material, facet) (``my_dag.py:93``) as a 0-based ``row_number``
     window with a total order (acctbal desc, custkey tie-break)."""
-    w = Window.partitionBy("c_nationkey").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
     return (
         _ld(spark, sf_dir, "customer")
         .select(
             "c_nationkey",
             "c_custkey",
-            (F.row_number().over(w) - 1).alias("idx"),
+            (F.row_number().over(_by_nation_balance()) - 1).alias("idx"),
         )
     )
 
@@ -919,11 +928,10 @@ def x01_topk_orders(spark, sf_dir):
 
 @_register(
     "x01_group_topk",
-    oracle="""
+    oracle=f"""
     SELECT c_nationkey, c_custkey, c_acctbal, rk
     FROM (SELECT c_nationkey, c_custkey, c_acctbal,
-                 CAST(ROW_NUMBER() OVER (PARTITION BY c_nationkey
-                                         ORDER BY c_acctbal DESC, c_custkey)
+                 CAST({_NATION_BALANCE_RANK_SQL}
                       AS INTEGER) AS rk
           FROM customer)
     WHERE rk <= 3
@@ -934,16 +942,13 @@ def x01_group_topk(spark, sf_dir):
     """Per-group top-k (X1/X4): row_number window + filter. One shuffle
     on the group key; with AQE, skewed groups split. rank<=k filters
     push below the window's sort via Spark's WindowGroupLimit at scale."""
-    w = Window.partitionBy("c_nationkey").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
     return (
         _ld(spark, sf_dir, "customer")
         .select(
             "c_nationkey",
             "c_custkey",
             "c_acctbal",
-            F.row_number().over(w).alias("rk"),
+            F.row_number().over(_by_nation_balance()).alias("rk"),
         )
         .filter(F.col("rk") <= 3)
     )
@@ -1542,17 +1547,24 @@ def x08_json_quarantine(spark, sf_dir):
     )
 
 
-@_register(
-    "x09_sessionize",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, ts, event_id,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS value_cents,
-               CASE WHEN LAG(ts) OVER w IS NULL
+#: The 30-minute session-start flag over ``events``: ``boundary`` is 1
+#: on a user's first event and on every event more than 30 minutes
+#: after the previous one (ties ordered by event_id). Shared by the
+#: batch, native session_window and streaming session oracles.
+_SESSION_BOUNDARY_SQL = """CASE WHEN LAG(ts) OVER w IS NULL
                          OR ts > LAG(ts) OVER w + INTERVAL 30 MINUTE
                     THEN 1 ELSE 0 END AS boundary
         FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"""
+
+
+@_register(
+    "x09_sessionize",
+    oracle=f"""
+    WITH ordered AS (
+        SELECT user_id, ts, event_id,
+               CAST(ROUND(value * 100, 0) AS BIGINT) AS value_cents,
+               {_SESSION_BOUNDARY_SQL}
     ),
     tagged AS (
         SELECT user_id, ts, value_cents,
@@ -1587,15 +1599,11 @@ def x09_sessionize(spark, sf_dir):
 
 @_register(
     "x09_session_window_native",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
         SELECT user_id, ts, event_id,
                CAST(ROUND(value * 100, 0) AS BIGINT) AS cents,
-               CASE WHEN LAG(ts) OVER w IS NULL
-                         OR ts > LAG(ts) OVER w + INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS boundary
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+               {_SESSION_BOUNDARY_SQL}
     ),
     tagged AS (
         SELECT user_id, ts, cents,
@@ -1937,18 +1945,35 @@ def x04_rolling_range(spark, sf_dir):
     )
 
 
-@_register(
-    "x04_interpolate",
-    oracle="""
-    WITH daily AS (
+def _daily_cents_sql(mod: int) -> str:
+    """Oracle CTE ``daily``: per (user_id, epoch day) summed value cents
+    for the users with ``user_id % mod = 0``."""
+    return f"""daily AS (
         SELECT user_id,
                CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
                     AS BIGINT) AS day,
                CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
                  AS cents
-        FROM events WHERE user_id % 13 = 0
+        FROM events WHERE user_id % {mod} = 0
         GROUP BY 1, 2
-    ),
+    )"""
+
+
+def _daily_cents(spark, sf_dir, mod: int):
+    """Spark side of :func:`_daily_cents_sql`: (user_id, day, cents)."""
+    ev = _ld(spark, sf_dir, "events").filter(F.col("user_id") % mod == 0)
+    return ev.groupBy(
+        "user_id",
+        F.datediff(
+            F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
+        ).cast("bigint").alias("day"),
+    ).agg(F.sum(_cents(F.col("value"))).alias("cents"))
+
+
+@_register(
+    "x04_interpolate",
+    oracle=f"""
+    WITH {_daily_cents_sql(13)},
     bounds AS (SELECT user_id, MIN(day) AS d0, MAX(day) AS d1
                FROM daily GROUP BY 1),
     spine AS (SELECT user_id, CAST(unnest(generate_series(d0, d1)) AS BIGINT)
@@ -1998,13 +2023,7 @@ def x04_interpolate(spark, sf_dir):
     passes over one user-partitioned sort (forward last + backward
     first, mirrored frames). Spine rows inside a span always have
     both brackets, so no edge NULLs survive."""
-    ev = _ld(spark, sf_dir, "events").filter(F.col("user_id") % 13 == 0)
-    daily = ev.groupBy(
-        "user_id",
-        F.datediff(
-            F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-        ).cast("bigint").alias("day"),
-    ).agg(F.sum(_cents(F.col("value"))).alias("cents"))
+    daily = _daily_cents(spark, sf_dir, 13)
     bounds = daily.groupBy("user_id").agg(
         F.min("day").alias("d0"), F.max("day").alias("d1")
     )
@@ -2368,37 +2387,15 @@ def x01_global_rownum(spark, sf_dir):
     """Globally contiguous row numbering WITHOUT a global-order window
     (X1): ``ROW_NUMBER() OVER (ORDER BY key)`` with no PARTITION BY
     collapses to a single task in Spark — the canonical 100 TB
-    scale-killer this query exists to avoid. Two-phase instead:
-    (1) bucket keys by a MONOTONE literal pid (quantile cuts collected
-    once — a pure expression of the key, so the window branch and the
-    counts branch can NEVER observe different assignments; a
-    spark_partition_id() after repartitionByRange only agrees across
-    branches while exchange reuse happens to fire) and number rows
-    WITHIN each bucket via a partition-local window; (2) compute
-    per-bucket row counts (a ~num-partitions-row aggregate), convert
-    them to cumulative start offsets with a window over that TINY
-    frame, and broadcast-join the offsets back. Every full-data pass
-    stays parallel; only the offset table — one row per bucket — is
-    ever globally ordered. The oracle is the single-task form, so
-    parity proves the decomposition is exact.
-    operators/scale.py::_monotone_pid."""
-    from .operators.scale import _monotone_pid
+    scale-killer this query exists to avoid. Two-phase instead: number
+    rows within monotone key buckets, then add each bucket's start
+    offset from a tiny broadcast counts table. The oracle is the
+    single-task form, so parity proves the decomposition is exact.
+    operators/scale.py::global_row_number."""
+    from .operators.scale import global_row_number
 
     o = _ld(spark, sf_dir, "orders").select("o_orderkey")
-    part = o.withColumn("pid", _monotone_pid(o, "o_orderkey", 32))
-    wp = Window.partitionBy("pid").orderBy("o_orderkey")
-    local = part.withColumn("local_rn", F.row_number().over(wp))
-    counts = part.groupBy("pid").agg(F.count("*").alias("n"))
-    wo = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow - 1
-    )
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("n").over(wo), F.lit(0)).alias("offset")
-    )
-    return local.join(F.broadcast(offsets), "pid").select(
-        "o_orderkey",
-        (F.col("local_rn") + F.col("offset")).cast("bigint").alias("rn"),
-    )
+    return global_row_number(o, ["o_orderkey"])
 
 
 @_register(
@@ -2521,7 +2518,8 @@ def x04_missing_ranges(spark, sf_dir):
     """Missing-key-range detection (the ingest completeness check: did
     any id block fail to land?) WITHOUT the global-order window the
     SQL form implies — ``LEAD() OVER (ORDER BY k)`` unpartitioned is a
-    single task, the same trap x01_global_rownum avoids. Decomposed:
+    single task, the trap operators/scale.py::global_row_number avoids.
+    Decomposed:
     bucket keys by a monotone literal pid, take each row's bucket-LOCAL
     lead, then close the bucket seams by joining each bucket's LAST row
     to the NEXT bucket's minimum key (a num-partitions-row boundary
@@ -2691,16 +2689,16 @@ def x06_equidepth_hist(spark, sf_dir):
     optimizer statistics, drift monitors and calibration tables need)
     WITHOUT the single-task global window: ``NTILE(8) OVER (ORDER BY
     ...)`` with no PARTITION BY is the same 100 TB scale-killer as
-    global ROW_NUMBER, so this reuses x01_global_rownum's two-phase
-    decomposition (monotone range bucketing -> partition-local
-    row_number -> tiny offset broadcast) and then maps each global
+    global ROW_NUMBER, so this numbers rows with the same two-phase
+    operators/scale.py::global_row_number as x01_global_rownum and
+    then maps each global
     rank to its NTILE bucket with the exact integer arithmetic of the
     SQL-standard definition (first N mod B buckets take one extra
     row). The order key (cents, o_orderkey) is total, so bucket
     assignment is deterministic and the oracle — the single-task
     NTILE form — proves the decomposition exact, tie-handling
     included."""
-    from .operators.scale import _monotone_pid
+    from .operators.scale import global_row_number
 
     o = _ld(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
@@ -2709,23 +2707,13 @@ def x06_equidepth_hist(spark, sf_dir):
     n_total = o.count()
     n_buckets = 8
     q, r = n_total // n_buckets, n_total % n_buckets
-    part = o.withColumn("pid", _monotone_pid(o, "cents", 32))
-    wp = Window.partitionBy("pid").orderBy("cents", "o_orderkey")
-    local = part.withColumn("local_rn", F.row_number().over(wp))
-    counts = part.groupBy("pid").agg(F.count("*").alias("n"))
-    wo = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow - 1
-    )
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("n").over(wo), F.lit(0)).alias("offset")
-    )
-    rn = (F.col("local_rn") + F.col("offset")).cast("bigint")
+    rn = F.col("rn")
     # SQL-standard NTILE: the first r buckets hold q+1 rows, the rest q
     bucket = F.when(
         rn <= r * (q + 1), (rn - 1) / (q + 1)
     ).otherwise(r + (rn - r * (q + 1) - 1) / q if q else F.lit(0))
     return (
-        local.join(F.broadcast(offsets), "pid")
+        global_row_number(o, ["cents", "o_orderkey"])
         .withColumn("bucket", (F.floor(bucket) + 1).cast("int"))
         .groupBy("bucket")
         .agg(

@@ -392,6 +392,16 @@ def _band_selects(n_bands: int, rows_per_band: int) -> str:
 _MINHASH_AGGS = _minhash_aggs(dedup.N_PERMS)
 _BAND_SELECTS = _band_selects(dedup.N_BANDS, dedup.ROWS_PER_BAND)
 
+#: Shingles ``sh`` and LSH ``bands`` of an augmented corpus ``aug``
+#: (doc_id, text): tokens → distinct shingles → hashes → MinHash
+#: signatures → band keys (mirrors dedup.doc_band_entries).
+_AUG_BANDS_SQL = f"""t AS (SELECT doc_id, {_TOKS} AS toks FROM aug),
+    sh AS (SELECT DISTINCT doc_id, unnest({_SHINGLES}) AS shingle
+           FROM t WHERE len(toks) >= 3),
+    hh AS (SELECT doc_id, {_HSTR.format(e='shingle')} AS h FROM sh),
+    sigs AS (SELECT doc_id, {_MINHASH_AGGS} FROM hh GROUP BY doc_id),
+    bands AS ({_BAND_SELECTS})"""
+
 #: LSH candidates and their shared-shingle counts over ``bands`` and
 #: ``sh`` — mirrors dedup.lsh_candidate_pairs + the exact verify join.
 _LSH_INTER = """cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
@@ -905,12 +915,7 @@ def d15_decontaminate(spark, sf_dir):
                'paraphrase note ' || text || ' end of copy'
         FROM documents WHERE doc_id % 97 = 0
     ),
-    t AS (SELECT doc_id, {_TOKS} AS toks FROM aug),
-    sh AS (SELECT DISTINCT doc_id, unnest({_SHINGLES}) AS shingle
-           FROM t WHERE len(toks) >= 3),
-    hh AS (SELECT doc_id, {_HSTR.format(e='shingle')} AS h FROM sh),
-    sigs AS (SELECT doc_id, {_MINHASH_AGGS} FROM hh GROUP BY doc_id),
-    bands AS ({_BAND_SELECTS}),
+    {_AUG_BANDS_SQL},
     evb AS (SELECT * FROM bands
             WHERE doc_id % 97 = 0 AND doc_id < 2000000),
     trb AS (SELECT * FROM bands
@@ -958,20 +963,41 @@ def d15_decontaminate_fuzzy(spark, sf_dir):
     return dedup.decontaminate_fuzzy(aug.filter(~is_eval), aug.filter(is_eval))
 
 
-@_register(
-    "x10_stream_near_dup",
-    oracle=f"""
-    WITH aug AS (
+#: The streaming screens' corpus: every document plus an exact twin
+#: (doc_id + 3,000,000) of each doc_id % 30 = 7; the doc_id % 10 = 7
+#: originals arrive as the stream batch.
+_STREAM_TWIN_AUG_SQL = """aug AS (
         SELECT doc_id, text FROM documents
         UNION ALL
         SELECT doc_id + 3000000, text FROM documents WHERE doc_id % 30 = 7
-    ),
-    t AS (SELECT doc_id, {_TOKS} AS toks FROM aug),
-    sh AS (SELECT DISTINCT doc_id, unnest({_SHINGLES}) AS shingle
-           FROM t WHERE len(toks) >= 3),
-    hh AS (SELECT doc_id, {_HSTR.format(e='shingle')} AS h FROM sh),
-    sigs AS (SELECT doc_id, {_MINHASH_AGGS} FROM hh GROUP BY doc_id),
-    bands AS ({_BAND_SELECTS}),
+    )"""
+
+
+def _stream_twin_corpus(spark, sf_dir):
+    """Spark side of :data:`_STREAM_TWIN_AUG_SQL`: the static corpus
+    (the augmented set minus the batch) and the batch documents as a
+    bounded stream, both (doc_id, text)."""
+    from .streaming.windows import read_table_stream
+
+    docs = _ld(spark, sf_dir, "documents").select("doc_id", "text")
+    twins = docs.filter(F.col("doc_id") % 30 == 7).select(
+        (F.col("doc_id") + F.lit(3_000_000)).alias("doc_id"), "text"
+    )
+    is_batch = (F.col("doc_id") % 10 == 7) & (F.col("doc_id") < 3_000_000)
+    corpus = docs.unionByName(twins).filter(~is_batch)
+    sdocs = (
+        read_table_stream(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") % 10 == 7)
+    )
+    return corpus, sdocs
+
+
+@_register(
+    "x10_stream_near_dup",
+    oracle=f"""
+    WITH {_STREAM_TWIN_AUG_SQL},
+    {_AUG_BANDS_SQL},
     sb AS (SELECT * FROM bands
            WHERE doc_id % 10 = 7 AND doc_id < 3000000),
     cb AS (SELECT * FROM bands
@@ -1004,21 +1030,11 @@ def x10_stream_near_dup(spark, sf_dir):
     streaming state because the downstream distinct is
     candidate-sized). operators/dedup.py::doc_band_entries;
     streaming/windows.py::read_table_stream."""
-    from .streaming.windows import read_table_stream, run_to_memory
+    from .streaming.windows import run_to_memory
 
-    docs = _ld(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(F.col("doc_id") % 30 == 7).select(
-        (F.col("doc_id") + F.lit(3_000_000)).alias("doc_id"), "text"
-    )
-    is_batch = (F.col("doc_id") % 10 == 7) & (F.col("doc_id") < 3_000_000)
-    corpus = docs.unionByName(twins).filter(~is_batch)
+    corpus, sdocs = _stream_twin_corpus(spark, sf_dir)
     corpus_bands = dedup.doc_band_entries(corpus).withColumnRenamed(
         "doc_id", "corpus_id"
-    )
-    sdocs = (
-        read_table_stream(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 10 == 7)
     )
     s_bands = dedup.doc_band_entries(sdocs).withColumnRenamed(
         "doc_id", "batch_id"
@@ -1040,11 +1056,7 @@ def x10_stream_near_dup(spark, sf_dir):
 @_register(
     "x10_stream_dup_spans",
     oracle=f"""
-    WITH aug AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 3000000, text FROM documents WHERE doc_id % 30 = 7
-    ),
+    WITH {_STREAM_TWIN_AUG_SQL},
     co AS (SELECT doc_id, text, length(text) AS n FROM aug
            WHERE NOT (doc_id % 10 = 7 AND doc_id < 3000000)
              AND length(text) >= {dedup.DUP_SPAN_WINDOW}),
@@ -1079,20 +1091,10 @@ def x10_stream_dup_spans(spark, sf_dir):
     near-total-duplication evidence at ingest.
     operators/dedup.py::doc_anchor_grams / merge_hit_islands /
     span_accounting; streaming/windows.py::read_table_stream."""
-    from .streaming.windows import read_table_stream, run_to_memory
+    from .streaming.windows import run_to_memory
 
-    docs = _ld(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(F.col("doc_id") % 30 == 7).select(
-        (F.col("doc_id") + F.lit(3_000_000)).alias("doc_id"), "text"
-    )
-    is_batch = (F.col("doc_id") % 10 == 7) & (F.col("doc_id") < 3_000_000)
-    corpus = docs.unionByName(twins).filter(~is_batch)
+    corpus, sdocs = _stream_twin_corpus(spark, sf_dir)
     corpus_grams = dedup.doc_anchor_grams(corpus).select("gram").distinct()
-    sdocs = (
-        read_table_stream(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 10 == 7)
-    )
     s_grams = dedup.doc_anchor_grams(sdocs, spread=False)
     hits = s_grams.join(F.broadcast(corpus_grams), "gram").select(
         "doc_id", "n", "s", "e"
@@ -1320,23 +1322,32 @@ _BUCKET_SQL = " + ".join(
 )
 
 
-@_register(
-    "s12_ann_lsh",
-    oracle=f"""
-    WITH be AS (SELECT vec_id, embedding,
+#: Corpus bucket ids ``be`` and the queries ``q`` cut from it — one
+#: text for both LSH oracles (mirrors similarity._lsh_bucketed).
+_LSH_BE_Q = f"""be AS (SELECT vec_id, embedding,
                        CAST({_BUCKET_SQL} AS BIGINT) AS bucket
                 FROM embeddings),
     q AS (SELECT vec_id AS query_id, embedding AS q_emb, bucket AS q_bucket
-          FROM be WHERE vec_id IN ({_QID_SQL})),
+          FROM be WHERE vec_id IN ({_QID_SQL}))"""
+
+#: Per-query top-5 by cosine over the re-ranked candidates ``cand`` —
+#: the oracle side of similarity._topk for the LSH and IVF queries.
+_TOP5_OVER_CAND = """rk AS (SELECT query_id, vec_id, cosine,
+                  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                       ORDER BY cosine DESC, vec_id) AS INTEGER) AS rk
+           FROM cand)
+    SELECT query_id, vec_id, cosine, rk FROM rk WHERE rk <= 5"""
+
+
+@_register(
+    "s12_ann_lsh",
+    oracle=f"""
+    WITH {_LSH_BE_Q},
     cand AS (SELECT q.query_id, e.vec_id,
                     {_cosine_sql('q.q_emb', 'e.embedding')} AS cosine
              FROM be e JOIN q ON e.bucket = q.q_bucket
              WHERE e.vec_id <> q.query_id),
-    rk AS (SELECT query_id, vec_id, cosine,
-                  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id) AS INTEGER) AS rk
-           FROM cand)
-    SELECT query_id, vec_id, cosine, rk FROM rk WHERE rk <= 5
+    {_TOP5_OVER_CAND}
     """,
     survey_ids=("X12",),
 )
@@ -1397,11 +1408,7 @@ _IVF_PROBE = 2
                     {_cosine_sql('p.q_emb', 'c.embedding')} AS cosine
              FROM cells c JOIN probes p ON c.cell = p.cell
              WHERE c.vec_id <> p.query_id),
-    rk AS (SELECT query_id, vec_id, cosine,
-                  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id) AS INTEGER) AS rk
-           FROM cand)
-    SELECT query_id, vec_id, cosine, rk FROM rk WHERE rk <= 5
+    {_TOP5_OVER_CAND}
     """,
     survey_ids=("X12",),
 )
@@ -1521,13 +1528,14 @@ def s12_pq_topk(spark, sf_dir):
 )
 def s12_ivfpq_topk(spark, sf_dir):
     """IVF-PQ composed (the billion-scale ANN layout): coarse cells
-    prune WHERE to look (same argmax-cosine assignment and 2-cell
-    probing as s12_ivf_topk), PQ codes compress WHAT is looked at
-    (same exact-bigint ADC as s12_pq_topk) — the search-time relation
-    is (vec_id, cell, 4 codes), a few bytes per vector, and each query
-    ADC-scans only ~n_probe/n_cells of it. The oracle composes the two
-    proven CTE chains verbatim, so the pruned scan's exact row set and
-    ranking are value-checked end-to-end.
+    prune WHERE to look (the argmax-cosine assignment and 2-cell
+    probing of similarity._probe_cells, shared with s12_ivf_topk), PQ
+    codes compress WHAT is looked at (the exact-bigint ADC of
+    similarity._pq_dtables/_pq_adist, shared with s12_pq_topk) — the
+    search-time relation is (vec_id, cell, 4 codes), a few bytes per
+    vector, and each query ADC-scans only ~n_probe/n_cells of it. The
+    oracle composes the two proven CTE chains verbatim, so the pruned
+    scan's exact row set and ranking are value-checked end-to-end.
     operators/similarity.py::ivfpq_topk."""
     return similarity.ivfpq_topk(
         _ld(spark, sf_dir, "embeddings"),
@@ -1761,11 +1769,7 @@ def d16_semdedup_incremental(spark, sf_dir):
 @_register(
     "s12_ann_lsh_multiprobe",
     oracle=f"""
-    WITH be AS (SELECT vec_id, embedding,
-                       CAST({_BUCKET_SQL} AS BIGINT) AS bucket
-                FROM embeddings),
-    q AS (SELECT vec_id AS query_id, embedding AS q_emb, bucket AS q_bucket
-          FROM be WHERE vec_id IN ({_QID_SQL})),
+    WITH {_LSH_BE_Q},
     probes AS (SELECT query_id, q_emb,
                       unnest(list_concat([q_bucket],
                           list_transform(range(0, {similarity.N_HYPERPLANES}),
@@ -1776,11 +1780,7 @@ def d16_semdedup_incremental(spark, sf_dir):
                     {_cosine_sql('p.q_emb', 'e.embedding')} AS cosine
              FROM be e JOIN probes p ON e.bucket = p.bucket
              WHERE e.vec_id <> p.query_id),
-    rk AS (SELECT query_id, vec_id, cosine,
-                  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id) AS INTEGER) AS rk
-           FROM cand)
-    SELECT query_id, vec_id, cosine, rk FROM rk WHERE rk <= 5
+    {_TOP5_OVER_CAND}
     """,
     survey_ids=("X12",),
 )
@@ -1802,19 +1802,35 @@ def s12_ann_lsh_multiprobe(spark, sf_dir):
 #: (key % (len-2)) + 2 — always interior, never the first character,
 #: so the mutated string stays within edit distance 1 of its origin.
 _TYPO_POS = "(p_partkey % (length(p_name) - 2)) + 2"
+#: The typo-bearing query string: p_name without that character.
+_TYPO_NAME_SQL = (
+    f"substr(p_name, 1, {_TYPO_POS} - 1)"
+    f" || substr(p_name, {_TYPO_POS} + 1)"
+)
+#: The distinct-name catalog ``cat`` (name_id, cname) the fuzzy
+#: matcher searches — one text for the join and its evaluation.
+_FUZZY_CAT_SQL = """cat AS (
+      SELECT MIN(p_partkey) AS name_id, p_name AS cname
+      FROM part GROUP BY p_name
+    )"""
+
+
+def _fuzzy_catalog(part):
+    """Spark side of :data:`_FUZZY_CAT_SQL`: (name_id, cname)."""
+    return (
+        part.groupBy("p_name")
+        .agg(F.min("p_partkey").alias("name_id"))
+        .select("name_id", F.col("p_name").alias("cname"))
+    )
 
 
 @_register(
     "d19_fuzzy_join",
     oracle=f"""
-    WITH cat AS (
-      SELECT MIN(p_partkey) AS name_id, p_name AS cname
-      FROM part GROUP BY p_name
-    ),
+    WITH {_FUZZY_CAT_SQL},
     q AS (
       SELECT p_partkey AS qid,
-             substr(p_name, 1, {_TYPO_POS} - 1)
-               || substr(p_name, {_TYPO_POS} + 1) AS qname
+             {_TYPO_NAME_SQL} AS qname
       FROM part
     )
     SELECT q.qid, c.name_id AS cat_id,
@@ -1836,17 +1852,10 @@ def d19_fuzzy_join(spark, sf_dir):
     from .operators.fuzzy import fuzzy_match_pairs
 
     part = _ld(spark, sf_dir, "part")
-    catalog = (
-        part.groupBy("p_name")
-        .agg(F.min("p_partkey").alias("name_id"))
-        .select("name_id", F.col("p_name").alias("cname"))
-    )
+    catalog = _fuzzy_catalog(part)
     queries = part.select(
         F.col("p_partkey").alias("qid"),
-        F.expr(
-            f"substr(p_name, 1, {_TYPO_POS} - 1)"
-            f" || substr(p_name, {_TYPO_POS} + 1)"
-        ).alias("qname"),
+        F.expr(_TYPO_NAME_SQL).alias("qname"),
     )
     return fuzzy_match_pairs(
         catalog, queries, "name_id", "cname", "qid", "qname", k=2
@@ -2026,9 +2035,31 @@ def d20_training_pipeline(spark, sf_dir):
     )
 
 
+#: Per-source chunk-store accounting over ``chunks`` (source, chash):
+#: chunk slots, distinct content addresses, and the slots a dedup
+#: store collapses — one text for the fixed-width and CDC twins.
+_CHUNK_STATS_SQL = """SELECT source,
+           COUNT(*) AS n_chunks,
+           COUNT(DISTINCT chash) AS n_unique,
+           CAST(COUNT(*) - COUNT(DISTINCT chash) AS BIGINT)
+             AS n_dedupable
+    FROM chunks GROUP BY source"""
+
+
+def _chunk_stats(chunks):
+    """Spark side of :data:`_CHUNK_STATS_SQL`."""
+    return chunks.groupBy("source").agg(
+        F.count("*").alias("n_chunks"),
+        F.count_distinct(F.col("chash")).alias("n_unique"),
+        (F.count("*") - F.count_distinct(F.col("chash")))
+        .cast("bigint")
+        .alias("n_dedupable"),
+    )
+
+
 @_register(
     "d21_chunk_dedup",
-    oracle="""
+    oracle=f"""
     WITH pos AS (
         SELECT source, text,
                unnest(range(1, length(text) + 1, 64)) AS s
@@ -2037,12 +2068,7 @@ def d20_training_pipeline(spark, sf_dir):
     chunks AS (
         SELECT source, md5(substr(text, s, 64)) AS chash FROM pos
     )
-    SELECT source,
-           COUNT(*) AS n_chunks,
-           COUNT(DISTINCT chash) AS n_unique,
-           CAST(COUNT(*) - COUNT(DISTINCT chash) AS BIGINT)
-             AS n_dedupable
-    FROM chunks GROUP BY source
+    {_CHUNK_STATS_SQL}
     """,
     survey_ids=("X11",),
 )
@@ -2076,13 +2102,7 @@ def d21_chunk_dedup(spark, sf_dir):
             )
         ).alias("chash"),
     )
-    return chunks.groupBy("source").agg(
-        F.count("*").alias("n_chunks"),
-        F.count_distinct(F.col("chash")).alias("n_unique"),
-        (F.count("*") - F.count_distinct(F.col("chash")))
-        .cast("bigint")
-        .alias("n_dedupable"),
-    )
+    return _chunk_stats(chunks)
 
 
 def _cdc_hash_sql() -> str:
@@ -2122,12 +2142,7 @@ def _d21_cdc_oracle() -> str:
                       md5(substr(text, CAST(s + 1 AS INTEGER),
                                  CAST(e - s AS INTEGER))) AS chash
                FROM c WHERE e > s)
-    SELECT source,
-           COUNT(*) AS n_chunks,
-           COUNT(DISTINCT chash) AS n_unique,
-           CAST(COUNT(*) - COUNT(DISTINCT chash) AS BIGINT)
-             AS n_dedupable
-    FROM chunks GROUP BY source
+    {_CHUNK_STATS_SQL}
     """
 
 
@@ -2156,13 +2171,7 @@ def d21_chunk_dedup_cdc(spark, sf_dir):
 
     docs = _ld(spark, sf_dir, "documents")
     chunks = chunking.cdc_chunk_hashes(docs)
-    return chunks.groupBy("source").agg(
-        F.count("*").alias("n_chunks"),
-        F.count_distinct(F.col("chash")).alias("n_unique"),
-        (F.count("*") - F.count_distinct(F.col("chash")))
-        .cast("bigint")
-        .alias("n_dedupable"),
-    )
+    return _chunk_stats(chunks)
 
 
 @_register(
@@ -2443,7 +2452,8 @@ def t13_difficulty_buckets(spark, sf_dir):
     bucketed by token count via EXACT interpolated percentile cutoffs
     — the scale-safe replacement for ``NTILE(10) OVER (ORDER BY ...)``,
     which like any unpartitioned window collapses to a single task
-    (the same trap x01_global_rownum dismantles for row numbering).
+    (the trap operators/scale.py::global_row_number dismantles for
+    row numbering).
     Here the global ordering reduces to ONE aggregate producing a
     9-element cutoff array that broadcasts back; bucket assignment is
     a per-row array comparison, embarrassingly parallel. Both engines
@@ -2716,8 +2726,7 @@ _ER_OFFSET = 1000000000
     ),
     q AS (
       SELECT p_partkey + {_ER_OFFSET} AS qid,
-             substr(p_name, 1, {_TYPO_POS} - 1)
-               || substr(p_name, {_TYPO_POS} + 1) AS qname
+             {_TYPO_NAME_SQL} AS qname
       FROM part
     ),
     matches AS (
@@ -2790,10 +2799,7 @@ def d25_entity_resolution(spark, sf_dir):
     catalog.count()
     queries = base.select(
         (F.col("p_partkey") + _ER_OFFSET).alias("qid"),
-        F.expr(
-            f"substr(p_name, 1, {_TYPO_POS} - 1)"
-            f" || substr(p_name, {_TYPO_POS} + 1)"
-        ).alias("qname"),
+        F.expr(_TYPO_NAME_SQL).alias("qname"),
     )
     matches = fuzzy_match_pairs(
         catalog, queries, "name_id", "cname", "qid", "qname", k=2
@@ -3050,14 +3056,10 @@ def t13_rare_bigram_score(spark, sf_dir):
 @_register(
     "d27_matcher_eval",
     oracle=f"""
-    WITH cat AS (
-      SELECT MIN(p_partkey) AS name_id, p_name AS cname
-      FROM part GROUP BY p_name
-    ),
+    WITH {_FUZZY_CAT_SQL},
     q AS (
       SELECT p_partkey AS qid, p_name,
-             substr(p_name, 1, {_TYPO_POS} - 1)
-               || substr(p_name, {_TYPO_POS} + 1) AS qname
+             {_TYPO_NAME_SQL} AS qname
       FROM part
     ),
     gold AS (
@@ -3108,19 +3110,11 @@ def d27_matcher_eval(spark, sf_dir):
     from .operators.fuzzy import fuzzy_match_pairs
 
     part = _ld(spark, sf_dir, "part")
-    catalog = (
-        part.groupBy("p_name")
-        .agg(F.min("p_partkey").alias("name_id"))
-        .select("name_id", F.col("p_name").alias("cname"))
-        .localCheckpoint(eager=True)
-    )
+    catalog = _fuzzy_catalog(part).localCheckpoint(eager=True)
     queries = part.select(
         F.col("p_partkey").alias("qid"),
         F.col("p_name"),
-        F.expr(
-            f"substr(p_name, 1, {_TYPO_POS} - 1)"
-            f" || substr(p_name, {_TYPO_POS} + 1)"
-        ).alias("qname"),
+        F.expr(_TYPO_NAME_SQL).alias("qname"),
     ).localCheckpoint(eager=True)
     gold = queries.join(
         catalog, queries.p_name == catalog.cname

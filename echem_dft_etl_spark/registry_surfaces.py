@@ -20,7 +20,15 @@ from pyspark.sql import functions as F
 from .functions.hashing import det_hash_i64
 from .functions.text import DUCKDB_TOKENS
 from .operators import multimodal, pipe, udfs
-from .registry import _TUMBLING_SQL, _cents, _ld, _register
+from .registry import (
+    _SESSION_BOUNDARY_SQL,
+    _TUMBLING_SQL,
+    _cents,
+    _daily_cents,
+    _daily_cents_sql,
+    _ld,
+    _register,
+)
 
 
 def _scratch_dir(prefix: str) -> str:
@@ -344,6 +352,16 @@ def pipe_external_solver(spark, sf_dir):
     return pipe.pipe_solver_stub(runs, timeout_s=60.0)
 
 
+#: Per-document geometry of the multimodal oracles: the text bytes as
+#: hex ``hx``, their count ``L`` and the ``w`` x ``h`` pixel grid —
+#: mirrors operators/multimodal.py's payload builders.
+_MM_DOC_COLS = """doc_id,
+                      hex(encode(text)) AS hx,
+                      octet_length(encode(text)) AS L,
+                      ((doc_id % 4) + 1) * 4 AS w,
+                      ((doc_id % 3) + 1) * 4 AS h"""
+
+
 def _mm_resize_checksum_sql() -> str:
     """Closed-form re-derivation of the nearest-neighbor resize
     checksum: resized flat index t → (row i, col j, channel c) →
@@ -364,11 +382,7 @@ def _mm_resize_checksum_sql() -> str:
 @_register(
     "mm_resize_bmp",
     oracle=f"""
-    WITH d AS (SELECT doc_id,
-                      hex(encode(text)) AS hx,
-                      octet_length(encode(text)) AS L,
-                      ((doc_id % 4) + 1) * 4 AS w,
-                      ((doc_id % 3) + 1) * 4 AS h
+    WITH d AS (SELECT {_MM_DOC_COLS}
                FROM documents)
     SELECT doc_id,
            CAST(w AS INTEGER) AS old_w,
@@ -395,12 +409,8 @@ def mm_resize_bmp(spark, sf_dir):
 
 #: BMP header fields and leading-pixel byte-sum per document — one
 #: oracle for the file-drop and parquet-payload ingestion twins.
-_BMP_DECODE_SQL = """
-    WITH d AS (SELECT doc_id,
-                      hex(encode(text)) AS hx,
-                      octet_length(encode(text)) AS L,
-                      ((doc_id % 4) + 1) * 4 AS w,
-                      ((doc_id % 3) + 1) * 4 AS h
+_BMP_DECODE_SQL = f"""
+    WITH d AS (SELECT {_MM_DOC_COLS}
                FROM documents)
     SELECT doc_id,
            CAST(54 + w * h * 3 AS BIGINT) AS n_bytes,
@@ -463,12 +473,8 @@ def mm_decode_features_parquet(spark, sf_dir):
 
 @_register(
     "mm_decode_features_png",
-    oracle="""
-    WITH d AS (SELECT doc_id,
-                      hex(encode(text)) AS hx,
-                      octet_length(encode(text)) AS L,
-                      ((doc_id % 4) + 1) * 4 AS w,
-                      ((doc_id % 3) + 1) * 4 AS h
+    oracle=f"""
+    WITH d AS (SELECT {_MM_DOC_COLS}
                FROM documents)
     SELECT doc_id,
            'image/png' AS format,
@@ -602,14 +608,10 @@ def x10_stream_sliding(spark, sf_dir):
 
 @_register(
     "x10_stream_sessions",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
         SELECT user_id, ts, event_id,
-               CASE WHEN LAG(ts) OVER w IS NULL
-                         OR ts > LAG(ts) OVER w + INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS boundary
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+               {_SESSION_BOUNDARY_SQL}
     ),
     tagged AS (
         SELECT user_id, ts,
@@ -705,11 +707,7 @@ def x10_stream_stateful_profile(spark, sf_dir):
     from .streaming.windows import read_events_stream, run_to_memory
 
     ev = read_events_stream(spark, sf_dir).select("user_id", "ts")
-    # width 8: per-key Python execution, not state commits, is the
-    # per-batch cost here (see run_to_memory's state_width note)
-    out = run_to_memory(
-        user_activity_profile(ev), spark, mode="update", state_width=8
-    )
+    out = run_to_memory(user_activity_profile(ev), spark, mode="update")
     w = W.partitionBy("user_id").orderBy(F.col("version").desc())
     return (
         out.withColumn("_rn", F.row_number().over(w))
@@ -845,12 +843,8 @@ def mm_frame_sample(spark, sf_dir):
 
 @_register(
     "mm_video_frames",
-    oracle="""
-    WITH d AS (SELECT doc_id,
-                      hex(encode(text)) AS hx,
-                      octet_length(encode(text)) AS L,
-                      ((doc_id % 4) + 1) * 4 AS w,
-                      ((doc_id % 3) + 1) * 4 AS h,
+    oracle=f"""
+    WITH d AS (SELECT {_MM_DOC_COLS},
                       (doc_id % 4) + 2 AS nf
                FROM documents),
     f AS (SELECT doc_id, hx, L, w, h, nf,
@@ -1398,6 +1392,32 @@ def sql_lateral_topk(spark, sf_dir):
     return spark.sql(_LATERAL_SQL)
 
 
+def _supplier_cents(spark, sf_dir):
+    """The table-sink fixture: supplier as (s_suppkey, s_nationkey,
+    bal_cents)."""
+    return _ld(spark, sf_dir, "supplier").select(
+        "s_suppkey",
+        "s_nationkey",
+        F.round(F.col("s_acctbal") * 100, 0).cast("bigint").alias("bal_cents"),
+    )
+
+
+#: Per-nation survivors of a supplier delete — the oracle side of
+#: :func:`_kept_balance`; callers append the surviving-row predicate.
+_KEPT_BALANCE_SQL = """SELECT s_nationkey, COUNT(*) AS n_kept,
+           CAST(SUM(CAST(ROUND(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT)
+               AS bal_cents
+    FROM supplier"""
+
+
+def _kept_balance(back):
+    """Per-nation row count and balance of a read-back supplier table."""
+    return back.groupBy("s_nationkey").agg(
+        F.count("*").alias("n_kept"),
+        F.sum("bal_cents").alias("bal_cents"),
+    )
+
+
 @_register(
     "s01_sink_roundtrip",
     oracle="""
@@ -1445,17 +1465,15 @@ def s01_sink_roundtrip(spark, sf_dir):
     themselves — after which the temp dir is deleted immediately. No
     shared state, no runtime blocks, no lineage: no session event of
     any kind can change what a later action on the returned frame
-    observes. Each invocation also dumps its sorted tuples to
-    ``/tmp/s01_evidence_<pid>.json`` so a cross-engine divergence is
-    diffable, not guessable.
+    observes.
 
     ROUND-6 ROOT CAUSE (why r3-r5 stayed red while every local
-    reproduction was green): the Spark side was never wrong — the r5
-    evidence dump matched the DuckDB oracle value-for-value. The
-    oracle's ``SUM(CAST(... AS BIGINT))`` returns DuckDB **HUGEINT**
-    (int128), which the driver's pandas/arrow collection path widens
-    to float64, so its value hash saw ``376931.0`` against Spark's
-    ``376931`` — hash-red with identical numbers. The local mirror
+    reproduction was green): the Spark side was never wrong — an r5
+    dump of its sorted tuples matched the DuckDB oracle
+    value-for-value. The oracle's ``SUM(CAST(... AS BIGINT))`` returns
+    DuckDB **HUGEINT** (int128), which a pandas/arrow collection path
+    widens to float64, so a value hash saw ``376931.0`` against
+    Spark's ``376931`` — hash-red with identical numbers. The local mirror
     uses ``fetchall()`` (HUGEINT → Python int), which masked it. Fix:
     outer ``CAST(SUM(...) AS BIGINT)`` in the oracle; the whole
     registry is audited for the same class by
@@ -1468,11 +1486,7 @@ def s01_sink_roundtrip(spark, sf_dir):
 
     from .sources import sinks
 
-    sup = _ld(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        "s_nationkey",
-        F.round(F.col("s_acctbal") * 100, 0).cast("bigint").alias("bal_cents"),
-    )
+    sup = _supplier_cents(spark, sf_dir)
     out = Path(
         _scratch_dir(f"echem_sink_roundtrip_{Path(sf_dir).name}_")
     )
@@ -1509,29 +1523,6 @@ def s01_sink_roundtrip(spark, sf_dir):
     # result, values held in the plan itself), then drop the sink
     # files: nothing the session does later can invalidate the rows.
     result = _literal_result(spark, result)
-    # Optional per-invocation evidence dump (diagnostic only, OFF by
-    # default so bench runs stay side-effect-free): the exact sorted
-    # tuples this call returned, so any cross-engine hash divergence
-    # is diffable against the oracle instead of guessed at. Enable
-    # with SPARK_GRAFT_EVIDENCE_DIR=/some/dir.
-    import os
-
-    evidence_dir = os.environ.get("SPARK_GRAFT_EVIDENCE_DIR")
-    if evidence_dir:
-        try:
-            import json
-
-            dump = sorted(tuple(r) for r in result.collect())
-            # One fixed file per process (pid suffix avoids concurrent
-            # clobbering); overwritten per invocation so repeated runs
-            # cannot grow the dir unboundedly.
-            path = os.path.join(
-                evidence_dir, f"s01_evidence_{os.getpid()}.json"
-            )
-            with open(path, "w") as fh:
-                json.dump(dump, fh)
-        except Exception:
-            pass  # evidence is best-effort; never fail the query over it
     shutil.rmtree(out, ignore_errors=True)
     return result
 
@@ -1696,11 +1687,8 @@ def s03_merge_upsert(spark, sf_dir):
 
 @_register(
     "s03_merge_delete",
-    oracle="""
-    SELECT s_nationkey, COUNT(*) AS n_kept,
-           CAST(SUM(CAST(ROUND(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT)
-               AS bal_cents
-    FROM supplier WHERE s_suppkey % 7 <> 0 GROUP BY 1
+    oracle=f"""
+    {_KEPT_BALANCE_SQL} WHERE s_suppkey % 7 <> 0 GROUP BY 1
     """,
     survey_ids=("S3", "S1"),
 )
@@ -1722,11 +1710,7 @@ def s03_merge_delete(spark, sf_dir):
 
     from .sources import sinks
 
-    sup = _ld(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        "s_nationkey",
-        F.round(F.col("s_acctbal") * 100, 0).cast("bigint").alias("bal_cents"),
-    )
+    sup = _supplier_cents(spark, sf_dir)
     root = _scratch_dir("echem_merge_delete_")
     try:
         table_root = f"{root}/tbl"
@@ -1736,10 +1720,7 @@ def s03_merge_delete(spark, sf_dir):
             allowMissingColumns=True,
         )
         back = sinks.delete_keys_parquet(doomed, table_root, ["s_suppkey"])
-        result = back.groupBy("s_nationkey").agg(
-            F.count("*").alias("n_kept"),
-            F.sum("bal_cents").alias("bal_cents"),
-        )
+        result = _kept_balance(back)
         return _literal_result(spark, result)
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -2230,6 +2211,11 @@ def s01_sorted_layout_scan(spark, sf_dir):
     return result
 
 
+#: mu (group 1) and nElectrons (group 2) of a solver-output
+#: 'FillingsUpdate:' line, as the solverout sources serve it.
+_FILLINGS_RE = r"mu:\s+(-?[\d.]+)\s+nElectrons:\s+(-?[\d.]+)"
+
+
 @_register(
     "s02_custom_datasource",
     oracle="""
@@ -2282,16 +2268,8 @@ def s02_custom_datasource(spark, sf_dir):
     fillings = lines.filter(F.col("value").contains("FillingsUpdate:")).select(
         "run_id",
         "line_no",
-        F.regexp_extract(
-            "value", r"mu:\s+(-?[\d.]+)\s+nElectrons:\s+(-?[\d.]+)", 1
-        )
-        .cast("double")
-        .alias("mu"),
-        F.regexp_extract(
-            "value", r"mu:\s+(-?[\d.]+)\s+nElectrons:\s+(-?[\d.]+)", 2
-        )
-        .cast("double")
-        .alias("ne"),
+        F.regexp_extract("value", _FILLINGS_RE, 1).cast("double").alias("mu"),
+        F.regexp_extract("value", _FILLINGS_RE, 2).cast("double").alias("ne"),
     )
     result = fillings.groupBy("run_id").agg(
         F.count("*").alias("n_fillings"),
@@ -2505,11 +2483,7 @@ def x10_stream_custom_source(spark, sf_dir):
     fillings = lines.filter(F.col("value").contains("FillingsUpdate:")).select(
         "run_id",
         "line_no",
-        F.regexp_extract(
-            "value", r"mu:\s+(-?[\d.]+)\s+nElectrons:\s+(-?[\d.]+)", 1
-        )
-        .cast("double")
-        .alias("mu"),
+        F.regexp_extract("value", _FILLINGS_RE, 1).cast("double").alias("mu"),
     )
     agg = fillings.groupBy("run_id").agg(
         F.count("*").alias("n_fillings"),
@@ -3199,7 +3173,8 @@ def s18_outlier_mad(spark, sf_dir):
     (mergeable sketch, one pass), with this exact form as its audit;
     the per-type sort partitions by the handful of event types, so a
     single giant type takes the salted two-phase rank-selection escape
-    (x01_global_rownum's shape) if it ever dominates a task."""
+    (operators/scale.py::global_row_number's shape) if it ever
+    dominates a task."""
     from pyspark.sql.window import Window
 
     ev = _ld(spark, sf_dir, "events").select(
@@ -3995,16 +3970,8 @@ def sql_surface_promo_share(spark, sf_dir):
 
 @_register(
     "x04_ewma_dyadic",
-    oracle="""
-    WITH daily AS (
-        SELECT user_id,
-               CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS day,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-                 AS cents
-        FROM events WHERE user_id % 17 = 0
-        GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_daily_cents_sql(17)},
     votes AS (
         SELECT user_id, day + d.d AS day,
                cents * (CASE d.d WHEN 0 THEN 8 WHEN 1 THEN 4
@@ -4032,13 +3999,7 @@ def x04_ewma_dyadic(spark, sf_dir):
     data. Output keyed by every day that receives influence, so gaps
     in a user's activity still decay correctly (absent days simply
     cast no vote)."""
-    ev = _ld(spark, sf_dir, "events").filter(F.col("user_id") % 17 == 0)
-    daily = ev.groupBy(
-        "user_id",
-        F.datediff(
-            F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-        ).cast("bigint").alias("day"),
-    ).agg(F.sum(_cents(F.col("value"))).alias("cents"))
+    daily = _daily_cents(spark, sf_dir, 17)
     dw = F.explode(
         F.array(
             *[
@@ -4062,18 +4023,14 @@ def x04_ewma_dyadic(spark, sf_dir):
 
 @_register(
     "mm_image_phash_pairs",
-    oracle="""
+    oracle=f"""
     WITH aug AS (
         SELECT doc_id, text FROM documents
         UNION ALL
         SELECT doc_id + 1200000 AS doc_id, text
         FROM documents WHERE doc_id % 50 = 0
     ),
-    d AS (SELECT doc_id,
-                 hex(encode(text)) AS hx,
-                 octet_length(encode(text)) AS L,
-                 ((doc_id % 4) + 1) * 4 AS w,
-                 ((doc_id % 3) + 1) * 4 AS h
+    d AS (SELECT {_MM_DOC_COLS}
           FROM aug),
     px AS (SELECT doc_id, w * h * 3 AS n,
                   list_transform(range(0, w * h * 3),
@@ -4134,11 +4091,8 @@ def mm_image_phash_pairs(spark, sf_dir):
 
 @_register(
     "s03_deletion_vectors",
-    oracle="""
-    SELECT s_nationkey, COUNT(*) AS n_kept,
-           CAST(SUM(CAST(ROUND(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT)
-               AS bal_cents
-    FROM supplier
+    oracle=f"""
+    {_KEPT_BALANCE_SQL}
     WHERE s_suppkey % 11 <> 0 AND s_nationkey <> 3
     GROUP BY 1
     """,
@@ -4164,11 +4118,7 @@ def s03_deletion_vectors(spark, sf_dir):
 
     from .sources import sinks
 
-    sup = _ld(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        "s_nationkey",
-        F.round(F.col("s_acctbal") * 100, 0).cast("bigint").alias("bal_cents"),
-    )
+    sup = _supplier_cents(spark, sf_dir)
     root = _scratch_dir("echem_dv_")
     try:
         table_root = f"{root}/tbl"
@@ -4184,10 +4134,7 @@ def s03_deletion_vectors(spark, sf_dir):
             ["s_suppkey"],
         )
         back = sinks.compact_dv(spark, table_root)
-        result = back.groupBy("s_nationkey").agg(
-            F.count("*").alias("n_kept"),
-            F.sum("bal_cents").alias("bal_cents"),
-        )
+        result = _kept_balance(back)
         return _literal_result(spark, result)
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -4510,48 +4457,32 @@ def x06_countmin_est(spark, sf_dir):
     bit-identical in the oracle, which replays sketch construction,
     probe, and guarantee verbatim."""
     li = _ld(spark, sf_dir, "lineitem")
-    jb = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    (
-                        det_hash_i64(
-                            F.col("l_partkey"), j * _CMS_SEED_STEP
-                        )
-                        % _CMS_W
-                    ).alias("bucket"),
-                )
-                for j in range(_CMS_D)
-            ]
-        )
-    )
-    sketch = (
-        li.select(jb.alias("p"))
-        .select("p.j", "p.bucket")
-        .groupBy("j", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    q = spark.range(1, 41).select(F.col("id").cast("bigint").alias("partkey"))
-    qjb = q.select(
-        "partkey",
-        F.explode(
+    def cells(key: str):
+        """One (row j, bucket) cell per sketch row for ``key``."""
+        return F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(j).alias("j"),
                         (
-                            det_hash_i64(
-                                F.col("partkey"), j * _CMS_SEED_STEP
-                            )
-                            % _CMS_W
+                            det_hash_i64(F.col(key), j * _CMS_SEED_STEP) % _CMS_W
                         ).alias("bucket"),
                     )
                     for j in range(_CMS_D)
                 ]
             )
-        ).alias("p"),
-    ).select("partkey", "p.j", "p.bucket")
+        )
+
+    sketch = (
+        li.select(cells("l_partkey").alias("p"))
+        .select("p.j", "p.bucket")
+        .groupBy("j", "bucket")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    q = spark.range(1, 41).select(F.col("id").cast("bigint").alias("partkey"))
+    qjb = q.select("partkey", cells("partkey").alias("p")).select(
+        "partkey", "p.j", "p.bucket"
+    )
     est = (
         qjb.join(sketch, ["j", "bucket"], "left")
         .groupBy("partkey")
@@ -4671,12 +4602,8 @@ def sql_surface_waiting_supplier(spark, sf_dir):
 
 @_register(
     "mm_scene_cuts",
-    oracle="""
-    WITH d AS (SELECT doc_id,
-                      hex(encode(text)) AS hx,
-                      octet_length(encode(text)) AS L,
-                      ((doc_id % 4) + 1) * 4 AS w,
-                      ((doc_id % 3) + 1) * 4 AS h,
+    oracle=f"""
+    WITH d AS (SELECT {_MM_DOC_COLS},
                       (doc_id % 4) + 2 AS nf
                FROM documents),
     f AS (SELECT doc_id, w, h, nf, hx, L,
@@ -5233,6 +5160,15 @@ def x04_cusum_drift(spark, sf_dir):
 #: against a calendar loop over ±20k days; hypothesis-tested).
 _WDAYS_SPARK = "(5 * CAST(floor(({d} + 3) / 7) AS BIGINT) + least(pmod({d} + 3, 7), 5) - 3)"
 _WDAYS_DUCK = "(5 * (({d} + 3) // 7) + LEAST((({d} + 3) % 7 + 7) % 7, 5) - 3)"
+#: Per-priority ship-lag summary over ``b`` (o_orderpriority, bdays) —
+#: the same text in the Spark SQL and its DuckDB oracle.
+_BDAYS_SUMMARY_SQL = """SELECT o_orderpriority,
+           CAST(COUNT(*) AS BIGINT) AS n_lines,
+           CAST(SUM(bdays) AS BIGINT) AS total_bdays,
+           CAST(MAX(bdays) AS BIGINT) AS max_bdays,
+           CAST(SUM(CASE WHEN bdays > 60 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_slow
+    FROM b GROUP BY o_orderpriority"""
 
 
 @_register(
@@ -5248,13 +5184,7 @@ _WDAYS_DUCK = "(5 * (({d} + 3) // 7) + LEAST((({d} + 3) % 7 + 7) % 7, 5) - 3)"
                  {_WDAYS_DUCK.format(d='d1')}
                    - {_WDAYS_DUCK.format(d='d0')} AS bdays
           FROM l)
-    SELECT o_orderpriority,
-           CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(SUM(bdays) AS BIGINT) AS total_bdays,
-           CAST(MAX(bdays) AS BIGINT) AS max_bdays,
-           CAST(SUM(CASE WHEN bdays > 60 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_slow
-    FROM b GROUP BY o_orderpriority
+    {_BDAYS_SUMMARY_SQL}
     """,
     survey_ids=("X7", "Q21"),
 )
@@ -5286,13 +5216,7 @@ def x07_business_days(spark, sf_dir):
                      {_WDAYS_SPARK.format(d='d1')}
                        - {_WDAYS_SPARK.format(d='d0')} AS bdays
               FROM l)
-        SELECT o_orderpriority,
-               CAST(COUNT(*) AS BIGINT) AS n_lines,
-               CAST(SUM(bdays) AS BIGINT) AS total_bdays,
-               CAST(MAX(bdays) AS BIGINT) AS max_bdays,
-               CAST(SUM(CASE WHEN bdays > 60 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_slow
-        FROM b GROUP BY o_orderpriority
+        {_BDAYS_SUMMARY_SQL}
         """
     )
 
@@ -5423,11 +5347,7 @@ def x10_stream_cusum(spark, sf_dir):
         F.col("event_id").alias("pid"),
         F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
     )
-    # width 8: per-key Python execution, not state commits, is the
-    # per-batch cost here (see run_to_memory's state_width note)
-    out = run_to_memory(
-        user_cusum_alarms(ev), spark, mode="update", state_width=8
-    )
+    out = run_to_memory(user_cusum_alarms(ev), spark, mode="update")
     w = W.partitionBy("user_id").orderBy(F.col("version").desc())
     return (
         out.withColumn("_rn", F.row_number().over(w))
@@ -6726,8 +6646,8 @@ def x01_skyline_pareto(spark, sf_dir):
        construction: survivors of phase 1 are the union of per-bucket
        skylines — for d-dimensional data that is O(buckets · skyline
        size), thousands of rows where the input is millions — the
-       same provably-small-frame argument as x01_global_rownum's
-       offset table.
+       same provably-small-frame argument as the offset table of
+       operators/scale.py::global_row_number.
 
     Tie semantics: coincident (price, size) points do not dominate
     each other — all stay (the equal-price rule keeps size == group

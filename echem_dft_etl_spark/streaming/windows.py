@@ -165,18 +165,16 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> Data
 
 
 def _run_stream(
-    spark: SparkSession,
-    start: Callable[[], StreamingQuery],
-    state_width: int = STREAM_STATE_WIDTH,
+    spark: SparkSession, start: Callable[[], StreamingQuery]
 ) -> StreamingQuery:
     """Run a bounded stream to completion; return the stopped query.
 
     ``start`` is a zero-argument callable returning a started query.
-    The shuffle width is narrowed to ``min(session, state_width)`` for
-    the query's lifetime — the width is baked in at stream START and,
-    for a checkpointed production query, pinned by the checkpoint — and
-    restored after. Completion is ``processAllAvailable()``: it returns
-    once a trigger finds no new data or the query terminates (an
+    The shuffle width is narrowed to ``min(session, STREAM_STATE_WIDTH)``
+    for the query's lifetime — the width is baked in at stream START
+    and, for a checkpointed production query, pinned by the checkpoint
+    — and restored after. Completion is ``processAllAvailable()``: it
+    returns once a trigger finds no new data or the query terminates (an
     ``availableNow`` query stops itself), and raises the query's
     failure. The query is stopped either way.
 
@@ -190,7 +188,7 @@ def _run_stream(
     """
     conf_key = "spark.sql.shuffle.partitions"
     saved_width = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, str(min(int(saved_width), state_width)))
+    spark.conf.set(conf_key, str(min(int(saved_width), STREAM_STATE_WIDTH)))
     try:
         for attempt in (1, 2):
             q = start()
@@ -215,7 +213,6 @@ def run_to_memory(
     stream_df: DataFrame,
     spark: SparkSession,
     mode: str = "append",
-    state_width: int = STREAM_STATE_WIDTH,
     interval: str | None = None,
 ) -> DataFrame:
     """Execute a bounded stream into a memory sink through
@@ -243,14 +240,11 @@ def run_to_memory(
     dedup) instantiate ONE STATE STORE per shuffle partition and pay a
     per-partition commit every micro-batch; the batch-oriented session
     width (32) makes bounded fixture replays spend most of their time
-    in near-empty store commits, hence the runner's narrowing.
-    ``state_width`` overrides :data:`STREAM_STATE_WIDTH` for streams
-    whose per-batch cost is NOT the state commits: the
-    ``applyInPandasWithState`` operators execute per-key Python work
-    per batch, so their width is Python-task parallelism first and
-    commit count second (measured interleaved A/B at sf0.1:
-    stateful_profile 1.63 s at width 8 vs 2.30 s at width 4, cusum
-    1.72 vs 2.10 — the inverse of the built-in stateful operators).
+    in near-empty store commits, hence the runner's narrowing. The
+    ``applyInPandasWithState`` operators run per-key Python work per
+    batch, yet the narrow width holds for them too (interleaved A/B at
+    sf0.1, local[4] on a 4-CPU host, 12 pairs each: width 8 lost 10 of
+    12 pairs for stateful_profile and 12 of 12 for cusum).
     """
     trigger = (
         {"availableNow": True} if interval is None else {"processingTime": interval}
@@ -265,7 +259,7 @@ def run_to_memory(
             .start()
         )
 
-    return spark.table(_run_stream(spark, start, state_width).name)
+    return spark.table(_run_stream(spark, start).name)
 
 
 def stream_interval_join(

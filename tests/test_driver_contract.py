@@ -48,25 +48,15 @@ def test_udf_queries_run_from_foreign_cwd():
     assert "CONTRACT_OK" in out.stdout, (out.stdout[-2000:], out.stderr[-2000:])
 
 
-def test_s01_evidence_dump_gated_by_env(spark, tmp_path, monkeypatch):
-    """The s01 evidence dump is diagnostic-only: a default run writes
-    NOTHING outside its per-invocation temp sink; setting
-    SPARK_GRAFT_EVIDENCE_DIR opts in and targets that dir."""
-    import json
+def test_s01_evidence_dump_gated_by_env(spark):
+    """s01_sink_roundtrip writes NOTHING outside its per-invocation temp
+    sink: a default run leaves no evidence dump behind."""
     import os
 
     from echem_dft_etl_spark.registry import all_queries
+    from tests.conftest import SF_SMOKE
 
     fn = all_queries()["s01_sink_roundtrip"].fn
-    sf = "/root/testdata/sf0.001"
-
-    monkeypatch.delenv("SPARK_GRAFT_EVIDENCE_DIR", raising=False)
-    fn(spark, sf).collect()
+    fn(spark, SF_SMOKE).collect()
     default_dump = f"/tmp/s01_evidence_{os.getpid()}.json"
-    assert not os.path.exists(default_dump), "dump written with flag off"
-
-    monkeypatch.setenv("SPARK_GRAFT_EVIDENCE_DIR", str(tmp_path))
-    rows = fn(spark, sf).collect()
-    opted = tmp_path / f"s01_evidence_{os.getpid()}.json"
-    assert opted.exists(), "flag on but no dump written"
-    assert len(json.loads(opted.read_text())) == len(rows)
+    assert not os.path.exists(default_dump), "evidence dump written"

@@ -6,8 +6,8 @@ Spark folds into NULL keys, empty sequences or division-by-zero,
 yielding an empty-or-wrong result instead of an error (the
 grid_near_join cell guard and binned-join ``bin_width`` precedents).
 
-These tests are plan-time only (no job runs): the guards fire before
-any DataFrame is built, so a lazy frame argument is enough.
+These tests are plan-time only: every guard fires before any job
+runs, so a lazy frame argument is enough.
 """
 
 from __future__ import annotations
@@ -77,6 +77,24 @@ def test_similarity_guards(spark):
         s.semdedup(emb, threshold=-2.0)
     with pytest.raises(ValueError, match="k must"):
         s.cosine_topk_pandas(emb, [1], k=0)
+    # the PQ lanes: once silently empty (k, n_cells, n_probe = 0) or a
+    # bare ZeroDivisionError (n_sub = 0)
+    with pytest.raises(ValueError, match="k must"):
+        s.pq_topk(emb, [1], k=0)
+    with pytest.raises(ValueError, match="n_sub"):
+        s.pq_topk(emb, [1], n_sub=0)
+    with pytest.raises(ValueError, match="k must"):
+        s.ivfpq_topk(emb, [1], k=0)
+    with pytest.raises(ValueError, match="n_cells"):
+        s.ivfpq_topk(emb, [1], n_cells=0)
+    with pytest.raises(ValueError, match="n_probe"):
+        s.ivfpq_topk(emb, [1], n_probe=0)
+    with pytest.raises(ValueError, match="n_sub"):
+        s.ivfpq_topk(emb, [1], n_sub=0)
+    with pytest.raises(ValueError, match="n_cells"):
+        s.ivfpq_build_index(emb, n_cells=0)
+    with pytest.raises(ValueError, match="n_sub"):
+        s.ivfpq_build_index(emb, n_sub=0)
 
 
 def test_dedup_guards(spark):

@@ -1499,6 +1499,69 @@ def test_table_arg_udtf_tolerates_null_values(spark):
     assert (row.n_rows, row.max_gap_cents) == (3, 300)
 
 
+def test_ann_topk_tail_ties_zero_norms_and_self_pairs(spark):
+    """The shared re-rank and top-k tail on a hand-built corpus with
+    exact ties and zero norms (the sf data guarantees neither): vector
+    11 duplicates vector 0 exactly and vector 7 is 2x vector 0 (a
+    power-of-two scale, so its cosines tie bit for bit), vector 3 is
+    the zero vector and also a query. At k = corpus size, every exact
+    operator must equal a brute force that folds one dimension at a
+    time in float64: ties rank by the lowest vec_id, NULL scores (zero
+    norm) rank last, and no query ever meets itself."""
+    import math
+
+    import numpy as np
+
+    from echem_dft_etl_spark.operators.similarity import (
+        cosine_topk,
+        cosine_topk_pandas,
+        ivf_topk,
+    )
+
+    rng = np.random.RandomState(11)
+    vecs = [[float(x) for x in np.round(rng.uniform(-1, 1, 8), 3)] for _ in range(16)]
+    vecs[11] = list(vecs[0])
+    vecs[7] = [2.0 * x for x in vecs[0]]
+    vecs[3] = [0.0] * 8
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id bigint, embedding array<float>"
+    )
+    query_ids = [0, 3, 5, 11]
+    n = len(vecs)
+
+    f32 = [[float(np.float32(x)) for x in v] for v in vecs]
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    expected = set()
+    for q in query_ids:
+        scored = []
+        for v in range(n):
+            if v == q:
+                continue
+            denom = math.sqrt(fold(f32[q], f32[q])) * math.sqrt(fold(f32[v], f32[v]))
+            scored.append((v, fold(f32[q], f32[v]) / denom if denom != 0 else None))
+        scored.sort(key=lambda t: (t[1] is None, -(t[1] or 0.0), t[0]))
+        expected |= {(q, v, c, rk) for rk, (v, c) in enumerate(scored, 1)}
+
+    # the corpus really has the ties and the NULLs the test is about
+    assert len({c for (q, v, c, _) in expected if q == 5 and v in (0, 7, 11)}) == 1
+    assert all(c is None for (q, v, c, _) in expected if 3 in (q, v))
+
+    for run in (
+        lambda: cosine_topk(emb, query_ids, k=n),
+        lambda: cosine_topk_pandas(emb, query_ids, k=n),
+        lambda: ivf_topk(emb, query_ids, k=n, n_cells=4, n_probe=4),
+    ):
+        got = {(r.query_id, r.vec_id, r.cosine, r.rk) for r in run().collect()}
+        assert got == expected
+        assert len(got) == len(query_ids) * (n - 1)
+
+
 def test_pq_topk_sparse_codeword_ids(spark):
     """PQ lookups are keyed by codeword id, not array position: a
     corpus whose vec_ids don't densely cover [0, n_codes) must still

@@ -102,7 +102,7 @@ def test_run_stream_retries_a_failed_query_once_with_a_warning():
 
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        q = _run_stream(spark, start, state_width=4)
+        q = _run_stream(spark, start)
 
     assert q is started[1]
     assert [s.stopped for s in started] == [True, True]
