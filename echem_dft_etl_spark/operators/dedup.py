@@ -30,7 +30,7 @@ import numpy as np
 import pandas as pd
 
 from .guards import MAX_I64_BITS, require_at_least, require_in_range
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -48,21 +48,28 @@ ROWS_PER_BAND = 2
 DEFAULT_MAX_DF = 128
 
 
+def first_per_key(
+    df: DataFrame, key_cols: list[str], order_col: str, **extra: Column
+) -> DataFrame:
+    """One row per key, the one with the smallest ``order_col``: the
+    batch dedup of every first-wins sink. ``extra`` columns are
+    computed before the filter, so their windows see every copy."""
+    w = Window.partitionBy(*key_cols).orderBy(order_col)
+    ranked = df.withColumn("_rn", F.row_number().over(w))
+    if extra:
+        ranked = ranked.withColumns(extra)
+    return ranked.filter(F.col("_rn") == 1).drop("_rn")
+
+
 def first_wins_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
     """Exact dedup, first-writer-wins (X11, generalizing Q16).
 
     Survivor per key group = smallest ``order_col``; adds ``n_copies``.
     Deterministic by construction — re-running on the survivors is a
-    no-op (idempotence test in tests/test_dedup.py).
+    no-op (tests/test_upsert_pipe_mm.py::test_first_wins_dedup_idempotent).
     """
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    wc = Window.partitionBy(*key_cols)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .withColumn("n_copies", F.count("*").over(wc))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    n_copies = F.count("*").over(Window.partitionBy(*key_cols))
+    return first_per_key(df, key_cols, order_col, n_copies=n_copies)
 
 
 def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:

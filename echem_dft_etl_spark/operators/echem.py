@@ -34,6 +34,23 @@ ELEMENTARY_CHARGE = 1.60217663e-19
 FILLINGS_PATTERN = r"FillingsUpdate:\s+mu:\s+(-?[0-9.eE+-]+)\s+nElectrons:\s+([0-9.eE+-]+)"
 
 
+def fillings_mu_ne(line: Column) -> list[Column]:
+    """``mu`` and ``ne``, as doubles, of a solver ``FillingsUpdate:`` line."""
+    return [
+        F.regexp_extract(line, FILLINGS_PATTERN, i).cast("double").alias(name)
+        for i, name in ((1, "mu"), (2, "ne"))
+    ]
+
+
+def parse_fillings(solved: DataFrame) -> DataFrame:
+    """(run_id, fillings) solver answers → (run_id, mu, ne). A line that
+    is not a ``FillingsUpdate:`` line fails the query, not a NULL row."""
+    line = F.col("fillings")
+    bad = F.concat(F.lit("not a FillingsUpdate line: "), F.coalesce(line, F.lit("NULL")))
+    checked = F.when(line.rlike(FILLINGS_PATTERN), line).otherwise(F.raise_error(bad))
+    return solved.select("run_id", *fillings_mu_ne(checked))
+
+
 def parse_fillings_lines(
     lines: DataFrame,
     file_col: str = "file",
@@ -53,14 +70,28 @@ def parse_fillings_lines(
     matched = lines.filter(v.contains("FillingsUpdate:")).select(
         f.alias("file"),
         ln.alias("line_no"),
-        F.regexp_extract(v, FILLINGS_PATTERN, 1).cast("double").alias("mu"),
-        F.regexp_extract(v, FILLINGS_PATTERN, 2).cast("double").alias("ne"),
+        *fillings_mu_ne(v),
     ).filter(F.col("mu").isNotNull() & F.col("ne").isNotNull())
     last = matched.groupBy("file").agg(
         F.max_by(F.struct("mu", "ne"), F.col("line_no")).alias("m"),
         F.max("line_no").alias("last_line_no"),
     )
     return last.select("file", "m.mu", "m.ne", "last_line_no")
+
+
+def run_key(key: Column, charge: Column) -> Column:
+    """``<key>_<charge to one decimal>``: the name of one DFT run (the
+    reference's file stem, ``my_dag.py:122,131``)."""
+    return F.concat_ws("_", key, F.format_string("%.1f", charge))
+
+
+def split_run_key(key: Column) -> tuple[Column, Column]:
+    """(key, charge) back from a :func:`run_key` value; the charge is the
+    part after the last underscore."""
+    return (
+        F.regexp_extract(key, r"(.+)_[^_]+$", 1),
+        F.regexp_extract(key, r"_([^_]+)$", 1).cast("double"),
+    )
 
 
 def slab_id_and_charge_from_file(df: DataFrame, file_col: str = "file") -> DataFrame:
@@ -70,9 +101,8 @@ def slab_id_and_charge_from_file(df: DataFrame, file_col: str = "file") -> DataF
     ``my_dag.py:122,131``); pure string expressions, no UDF.
     """
     stem = F.regexp_extract(F.col(file_col), r"([^/]+)\.out$", 1)
-    return df.withColumn("slab_id", F.regexp_extract(stem, r"(.+)_[^_]+$", 1)).withColumn(
-        "charge", F.regexp_extract(stem, r"_([^_]+)$", 1).cast("double")
-    )
+    slab_id, charge = split_run_key(stem)
+    return df.withColumn("slab_id", slab_id).withColumn("charge", charge)
 
 
 def potential_v(mu: Column) -> Column:

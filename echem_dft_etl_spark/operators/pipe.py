@@ -3,121 +3,100 @@
 The reference shells out to the ``jdftx`` solver with a 3-hour timeout
 (``subprocess.run(f"jdftx -i {f}.in | tee {f}.out", shell=True)``,
 ``my_dag.py:135``, timeout ``my_dag.py:114``). The Spark-native
-generalization is a partition-parallel pipe: each partition serializes
-its rows to a subprocess's stdin and parses stdout back into rows —
+generalization is a partition-parallel pipe: each partition streams its
+rows to a child process's stdin and reads its stdout back as rows —
 ``N`` concurrent solver instances for ``N`` partitions, scheduled and
 retried by Spark instead of Airflow.
 
-Implemented over ``mapInPandas`` (Arrow batches in/out, no per-row
-Python overhead); per-invocation timeout mirrors the reference's
-``execution_timeout``. The subprocess runs once per batch — batch size
-(arrow maxRecordsPerBatch) is the latency/throughput knob.
+Implemented as Spark SQL's script transform (``SELECT TRANSFORM ...
+USING``): the executor JVM starts the child and converts rows on both
+sides (plan node ``SparkScriptTransformation``), so the stage needs no
+Hive and no Python worker. The child runs once per partition, so the
+partition count is the latency/throughput knob.
 """
 
 from __future__ import annotations
 
-import subprocess
-from typing import Callable, Iterator
+import shlex
 
-import pandas as pd
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
-from pyspark.sql import DataFrame
+from . import echem
+
+#: Seconds each child may run (coreutils ``timeout``); the reference's
+#: ``execution_timeout`` role, sized for the stand-in solver.
+CALL_TIMEOUT_S = 60
+
+#: Runs in the child (``/bin/bash -c``): buffer the partition's rows, run
+#: the command on them under the time limit, and pass its stdout on only
+#: when it holds one line per row. An empty partition runs nothing.
+_GUARD = """d=$(mktemp -d) || exit 1; trap 'rm -rf "$d"' EXIT; trap 'exit 143' TERM
+cat > "$d/in"; n=$(awk 'END { print NR }' "$d/in"); [ "$n" -eq 0 ] && exit 0
+timeout %(timeout)d %(cmd)s < "$d/in" > "$d/out" || {
+  rc=$?; printf 'pipe command %%s failed (rc=%%d)\\n' %(name)s $rc >&2; exit $rc; }
+m=$(awk 'END { print NR }' "$d/out"); [ "$m" -eq "$n" ] || {
+  printf 'pipe command %%s returned %%d lines for a batch of %%d rows\\n' \\
+    %(name)s $m $n >&2; exit 3; }
+cat "$d/out"
+"""
+
+_ROW_FORMAT = "ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\t'"
 
 
-def pipe_map(
-    df: DataFrame,
-    command: list[str],
-    output_schema: str,
-    serialize: Callable[[pd.DataFrame], str],
-    parse: Callable[[str, pd.DataFrame], pd.DataFrame],
-    timeout_s: float = 3 * 3600.0,
-) -> DataFrame:
-    """Run each Arrow batch through an external command.
+def _sql_literal(text: str) -> str:
+    """``text`` as a SQL string literal in a ``spark.sql`` format string."""
+    escaped = text.replace("\\", "\\\\").replace("'", "\\'")
+    return "'" + escaped.replace("{", "{{").replace("}", "}}") + "'"
 
-    ``serialize`` renders a batch to the child's stdin text; ``parse``
-    turns the child's stdout (plus the originating batch, for keys)
-    into the output batch. The protocol is one output line per input
-    row: a child that answers with another line count fails the task
-    instead of silently dropping or inventing rows. Timeout kills the
-    child and fails the task — Spark's retry/blacklist machinery then
-    re-schedules, replacing the reference's Airflow-level retry
-    handling.
+
+def _no_breaks(c: str, t: str) -> Column:
+    """Column ``c``; a string holding a tab or a line break, which would
+    split its row on the wire, fails the query."""
+    col = F.col(c)
+    if t != "string":
+        return col
+    bad = F.concat(F.lit(f"{c} "), col, F.lit(" holds a tab or a newline"))
+    return F.when(col.rlike("[\\t\\n\\r]"), F.raise_error(bad)).otherwise(col).alias(c)
+
+
+def pipe_map(df: DataFrame, command: list[str], output_schema: str) -> DataFrame:
+    """Run each partition's rows through an external command.
+
+    Rows cross the pipe tab-delimited, one line per row, in ``df``'s
+    column order; the child answers one tab-delimited line per input
+    row, read back as ``output_schema`` (``"name type, ..."``). A child
+    that fails, overruns :data:`CALL_TIMEOUT_S` or answers with another
+    line count fails the task with the reason in the message instead of
+    silently dropping or inventing rows — Spark's retry machinery then
+    re-schedules, replacing the reference's Airflow-level retry handling.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            proc = subprocess.run(
-                command,
-                input=serialize(pdf),
-                capture_output=True,
-                text=True,
-                timeout=timeout_s,
-            )
-            if proc.returncode != 0:
-                raise RuntimeError(
-                    f"pipe command {command!r} failed "
-                    f"(rc={proc.returncode}): {proc.stderr[:500]}"
-                )
-            lines = proc.stdout.split("\n")
-            n_out = len(lines) - (lines[-1] == "")
-            if n_out != len(pdf):
-                raise RuntimeError(
-                    f"pipe command {command!r} returned {n_out} lines "
-                    f"for a batch of {len(pdf)} rows"
-                )
-            yield parse(proc.stdout, pdf)
-
-    return df.mapInPandas(run, output_schema)
+    script = _GUARD % {
+        "timeout": CALL_TIMEOUT_S,
+        "cmd": shlex.join(command),
+        "name": shlex.quote(command[0]),
+    }
+    cols = ", ".join(f"`{c}`" for c in df.columns)
+    return df.sparkSession.sql(
+        f"SELECT TRANSFORM({cols}) {_ROW_FORMAT} USING {_sql_literal(script)}"
+        f" AS ({output_schema}) {_ROW_FORMAT} FROM {{df}}",
+        df=df.select(*[_no_breaks(c, t) for c, t in df.dtypes]),
+    )
 
 
-def pipe_solver_stub(runs: DataFrame, timeout_s: float = 60.0) -> DataFrame:
-    """The jdftx stage with a stand-in solver (awk) — demonstrates the
-    full serialize → subprocess → parse loop with real processes.
+def pipe_solver_stub(runs: DataFrame) -> DataFrame:
+    """The jdftx stage with a stand-in solver (awk) — the full rows →
+    child process → rows loop with real processes.
 
     Input: (run_id string, charge double). The stub 'solver' computes a
     fake chemical potential mu = -0.2 + 0.05*charge per run, emitted in
     the reference's 'FillingsUpdate: mu: ... nElectrons: ...' line
-    format (cf. output/gc_dft/*.out) so the downstream Q5/Q6 parser
-    consumes it unchanged.
-
-    Rows cross the pipe tab-delimited (``run_id<TAB>charge`` in,
-    ``run_id<TAB>FillingsUpdate: ...`` out) so a run id may hold
-    spaces; a run id with a tab or a newline is refused.
+    format (cf. output/gc_dft/*.out), which
+    :func:`echem.parse_fillings` turns into (run_id, mu, ne).
     """
     awk = (
         '{ printf "%s\\tFillingsUpdate:  mu: %.6f  nElectrons: %.3f\\n",'
         " $1, -0.2 + 0.05 * $2, 250 + 10 * $2 }"
     )
-
-    def serialize(pdf: pd.DataFrame) -> str:
-        lines = []
-        for r in pdf.itertuples(index=False):
-            if "\t" in r.run_id or "\n" in r.run_id:
-                raise ValueError(f"run_id {r.run_id!r} holds a tab or a newline")
-            lines.append(f"{r.run_id}\t{r.charge}\n")
-        return "".join(lines)
-
-    def parse(stdout: str, pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for line in stdout.split("\n")[:-1]:
-            run_id, fillings = line.split("\t", 1)
-            parts = fillings.split()
-            rows.append(
-                {
-                    "run_id": run_id,
-                    "mu": float(parts[2]),
-                    "ne": float(parts[4]),
-                }
-            )
-        return pd.DataFrame(rows, columns=["run_id", "mu", "ne"])
-
-    return pipe_map(
-        runs,
-        ["awk", "-F\t", awk],
-        "run_id string, mu double, ne double",
-        serialize,
-        parse,
-        timeout_s=timeout_s,
-    )
+    solved = pipe_map(runs, ["awk", "-F\\t", awk], "run_id string, fillings string")
+    return echem.parse_fillings(solved)

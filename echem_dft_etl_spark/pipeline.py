@@ -17,16 +17,18 @@ local checkpoints ([ck]) and released when the call returns:
       → crossJoin(facets) → explode(slabs)   [Q13, Q14]
       → sample(1)                            [Q12]
       → explode(charges) → serialize deck    [Q15, Q10]
-      → pipe(solver)                         [my_dag.py:135]
-      → parse last FillingsUpdate per run    [Q5, Q6]
+      → pipe(solver): SQL TRANSFORM          [my_dag.py:135]
+      → parse the FillingsUpdate line        [Q5, Q6]
       → join(geometry) → descriptors         [Q17-Q20, Q22]
       → checkpoint(descriptors)              [ck]
       → upsert(results table)                [Q16, S3]
       → append(report)                       [S4]
 
-The solver is pluggable: the default is the deterministic stub from
-operators/pipe.py; swap ``solver=`` for the real binary's command to run
-grand-canonical DFT per partition with Spark-managed retries.
+The solver is pluggable: a callable from (run_id, charge) rows to
+(run_id, mu, ne) rows. The default is the deterministic awk stub from
+operators/pipe.py; ``pipe_map`` with the real binary's command plus
+``echem.parse_fillings`` runs grand-canonical DFT per partition with
+Spark-managed retries.
 """
 
 from __future__ import annotations
@@ -266,23 +268,17 @@ def run_reference_pipeline(
             ["slab_id"],
         )
 
-        # pipe stage: solver per Arrow batch (my_dag.py:135 shape)
+        # pipe stage: one solver child per partition (my_dag.py:135 shape)
         solver_in = runs.select(
-            F.concat_ws("_", "slab_id", F.format_string("%.1f", "charge")).alias(
-                "run_id"
-            ),
+            echem.run_key(F.col("slab_id"), F.col("charge")).alias("run_id"),
             "charge",
         )
         solved = solver(solver_in)
 
         # Q9: recover slab/charge keys; Q17: join geometry
+        slab_id, charge = echem.split_run_key(F.col("run_id"))
         metrics = solved.select(
-            F.regexp_extract("run_id", r"(.+)_[^_]+$", 1).alias("slab_id"),
-            F.regexp_extract("run_id", r"_([^_]+)$", 1)
-            .cast("double")
-            .alias("charge"),
-            "mu",
-            "ne",
+            slab_id.alias("slab_id"), charge.alias("charge"), "mu", "ne"
         )
         geometry = picked.select("slab_id", "cell00", "cell11")
 

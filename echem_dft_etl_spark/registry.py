@@ -719,12 +719,14 @@ def q13_generate_grid(spark, sf_dir):
     as explode over a literal array — generation happens inside codegen,
     no shuffle. Run-id assembly mirrors the ``f'{id}_{charge}'`` filename
     (``my_dag.py:131``)."""
+    from .operators.echem import run_key
+
     n = _ld(spark, sf_dir, "nation")
     return n.select(
         "n_nationkey",
         "n_name",
         F.explode(F.array(F.lit(-0.1), F.lit(0.0), F.lit(0.1))).alias("charge"),
-    ).withColumn("run_id", F.format_string("%s_%.1f", F.col("n_name"), F.col("charge")))
+    ).withColumn("run_id", run_key(F.col("n_name"), F.col("charge")))
 
 
 #: Customers ranked within their nation by balance, ties to the lowest

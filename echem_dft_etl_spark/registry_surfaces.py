@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from .functions.hashing import det_hash_i64
 from .functions.text import DUCKDB_TOKENS
-from .operators import multimodal, pipe, udfs
+from .operators import echem, multimodal, pipe, udfs
 from .registry import (
     _SESSION_BOUNDARY_SQL,
     _TUMBLING_SQL,
@@ -334,22 +334,19 @@ def x14_udtf_table_args(spark, sf_dir):
     survey_ids=("S2", "Q15"),
 )
 def pipe_external_solver(spark, sf_dir):
-    """The external-solver pipe stage (my_dag.py:135): every Arrow batch
-    is piped through a real subprocess (awk standing in for jdftx) and
-    its stdout parsed back into rows. The oracle reproduces the child's
-    printf-rounded arithmetic exactly, so even the float formatting
-    round-trip is checked."""
+    """The external-solver pipe stage (my_dag.py:135): every partition
+    is piped through a real child process (awk standing in for jdftx)
+    by a SQL TRANSFORM and its stdout parsed back into rows. The oracle
+    reproduces the child's printf-rounded arithmetic exactly, so even
+    the float formatting round-trip is checked."""
     n = _ld(spark, sf_dir, "nation")
     runs = n.select(
         "n_name",
         F.explode(F.array(F.lit(-0.1), F.lit(0.0), F.lit(0.1))).alias("charge"),
     ).select(
-        F.concat_ws(
-            "_", F.col("n_name"), F.format_string("%.1f", F.col("charge"))
-        ).alias("run_id"),
-        "charge",
+        echem.run_key(F.col("n_name"), F.col("charge")).alias("run_id"), "charge"
     )
-    return pipe.pipe_solver_stub(runs, timeout_s=60.0)
+    return pipe.pipe_solver_stub(runs)
 
 
 #: Per-document geometry of the multimodal oracles: the text bytes as
@@ -2211,11 +2208,6 @@ def s01_sorted_layout_scan(spark, sf_dir):
     return result
 
 
-#: mu (group 1) and nElectrons (group 2) of a solver-output
-#: 'FillingsUpdate:' line, as the solverout sources serve it.
-_FILLINGS_RE = r"mu:\s+(-?[\d.]+)\s+nElectrons:\s+(-?[\d.]+)"
-
-
 @_register(
     "s02_custom_datasource",
     oracle="""
@@ -2268,8 +2260,7 @@ def s02_custom_datasource(spark, sf_dir):
     fillings = lines.filter(F.col("value").contains("FillingsUpdate:")).select(
         "run_id",
         "line_no",
-        F.regexp_extract("value", _FILLINGS_RE, 1).cast("double").alias("mu"),
-        F.regexp_extract("value", _FILLINGS_RE, 2).cast("double").alias("ne"),
+        *echem.fillings_mu_ne(F.col("value")),
     )
     result = fillings.groupBy("run_id").agg(
         F.count("*").alias("n_fillings"),
@@ -2483,7 +2474,7 @@ def x10_stream_custom_source(spark, sf_dir):
     fillings = lines.filter(F.col("value").contains("FillingsUpdate:")).select(
         "run_id",
         "line_no",
-        F.regexp_extract("value", _FILLINGS_RE, 1).cast("double").alias("mu"),
+        echem.fillings_mu_ne(F.col("value"))[0],
     )
     agg = fillings.groupBy("run_id").agg(
         F.count("*").alias("n_fillings"),

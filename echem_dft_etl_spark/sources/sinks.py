@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.dedup import first_per_key
 from ..operators.storage import release_rdds, tracked_checkpoint
 
 
@@ -88,12 +89,7 @@ def upsert_parquet(
     when the append fails.
     """
     spark = new_rows.sparkSession
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    batch = (
-        new_rows.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    batch = first_per_key(new_rows, key_cols, order_col)
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(table_path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -130,12 +126,7 @@ def write_jdbc(
     on the classpath — not bundled in this environment, so this is the
     documented production path, exercised only when a URL is reachable.
     """
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    batch = (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    batch = first_per_key(df, key_cols, order_col)
     writer = batch.write.mode("append").format("jdbc").option("url", url).option(
         "dbtable", f"{table}_staging"
     )
@@ -284,29 +275,62 @@ def execute_jdbc_statements(
         conn.close()
 
 
-def _committed_snapshots(spark: SparkSession, table_root: str):
-    """Sorted [(version, path)] of COMMITTED snapshots under a
-    :func:`merge_parquet` table root — committed means Spark's own
-    ``_SUCCESS`` marker exists, which is written last and is therefore
-    the atomic commit point on any filesystem."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(table_root)
+def _committed_dirs(spark: SparkSession, table_root: str, prefix: str):
+    """Sorted [(n, path)] of the COMMITTED ``<prefix><n>`` directories
+    under a :func:`merge_parquet` table root — committed means Spark's
+    own ``_SUCCESS`` marker exists, which is written last and is
+    therefore the atomic commit point on any filesystem. An in-flight
+    or crashed write is invisible to readers."""
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    root = path(table_root)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(root):
         return []
     out = []
-    for st in fs.globStatus(jvm.org.apache.hadoop.fs.Path(table_root, "snap_*")):
+    for st in fs.globStatus(path(table_root, prefix + "*")):
         p = st.getPath()
-        name = p.getName()
-        if not st.isDirectory() or not name.startswith("snap_"):
+        if not (st.isDirectory() and fs.exists(path(p, "_SUCCESS"))):
             continue
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")):
-            continue  # in-flight or crashed write: invisible to readers
         try:
-            out.append((int(name[len("snap_"):]), str(p)))
+            out.append((int(p.getName()[len(prefix):]), str(p)))
         except ValueError:
             continue
     return sorted(out)
+
+
+def _committed_snapshots(spark: SparkSession, table_root: str):
+    """Sorted [(version, path)] of the committed snapshots."""
+    return _committed_dirs(spark, table_root, "snap_")
+
+
+def _latest_snapshot(spark: SparkSession, table_root: str) -> tuple[int, str]:
+    """(version, path) of the newest committed snapshot; raises when
+    the table has none."""
+    snaps = _committed_snapshots(spark, table_root)
+    if not snaps:
+        raise ValueError(f"no committed snapshot under {table_root!r}")
+    return snaps[-1]
+
+
+def _commit_snapshot(
+    rows: DataFrame, table_root: str, version: int, keep_snapshots: int
+) -> DataFrame:
+    """Write ``rows`` as snapshot ``version + 1`` (its ``_SUCCESS``
+    marker, written last, is the commit), prune the old snapshots and
+    return the new one read back."""
+    spark = rows.sparkSession
+    new_path = f"{table_root}/snap_{version + 1:010d}"
+    rows.write.parquet(new_path)
+    _prune_snapshots(spark, table_root, keep_snapshots)
+    return spark.read.parquet(new_path)
+
+
+def _delete_dirs(spark: SparkSession, paths) -> None:
+    """Recursively delete each of ``paths``."""
+    jvm = spark._jvm
+    for path in paths:
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        hpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(hpath, True)
 
 
 def merge_parquet(
@@ -351,12 +375,7 @@ def merge_parquet(
     semantics match deliberately.
     """
     spark = new_rows.sparkSession
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    batch = (
-        new_rows.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    batch = first_per_key(new_rows, key_cols, order_col)
     snaps = _committed_snapshots(spark, table_root)
     if snaps:
         version, head = snaps[-1]
@@ -367,10 +386,7 @@ def merge_parquet(
         merged = batch.unionByName(untouched)
     else:
         version, merged = 0, batch
-    new_path = f"{table_root}/snap_{version + 1:010d}"
-    merged.write.parquet(new_path)  # _SUCCESS written last = commit
-    _prune_snapshots(spark, table_root, keep_snapshots)
-    return spark.read.parquet(new_path)
+    return _commit_snapshot(merged, table_root, version, keep_snapshots)
 
 
 def _prune_snapshots(
@@ -378,14 +394,8 @@ def _prune_snapshots(
 ) -> None:
     """Delete all but the newest ``keep_snapshots`` committed snapshots
     (>= 2 keeps time travel for in-flight readers of the previous one)."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(table_root).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    for _old_v, old_path in _committed_snapshots(spark, table_root)[
-        : -max(keep_snapshots, 1)
-    ]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(old_path), True)
+    old = _committed_snapshots(spark, table_root)[: -max(keep_snapshots, 1)]
+    _delete_dirs(spark, [path for _v, path in old])
 
 
 def delete_keys_parquet(
@@ -415,18 +425,12 @@ def delete_keys_parquet(
     merge.
     """
     spark = delete_keys.sparkSession
-    snaps = _committed_snapshots(spark, table_root)
-    if not snaps:
-        raise ValueError(f"no committed snapshot under {table_root!r}")
-    version, head = snaps[-1]
+    version, head = _latest_snapshot(spark, table_root)
     current = spark.read.parquet(head)
     kept = current.join(
         delete_keys.select(*key_cols).distinct(), key_cols, "left_anti"
     )
-    new_path = f"{table_root}/snap_{version + 1:010d}"
-    kept.write.parquet(new_path)  # _SUCCESS written last = commit
-    _prune_snapshots(spark, table_root, keep_snapshots)
-    return spark.read.parquet(new_path)
+    return _commit_snapshot(kept, table_root, version, keep_snapshots)
 
 
 def append_report(spark: SparkSession, path: str, lines: list[str]) -> None:
@@ -640,30 +644,9 @@ def read_snapshot(
 
 
 def _committed_dvs(spark: SparkSession, table_root: str, version: int):
-    """Sorted [(index, path)] of COMMITTED deletion-vector sidecars for
-    one snapshot version (same ``_SUCCESS``-marker commit point as the
-    snapshots themselves)."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(table_root)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return []
-    prefix = f"dv_{version:010d}_"
-    out = []
-    for st in fs.globStatus(
-        jvm.org.apache.hadoop.fs.Path(table_root, prefix + "*")
-    ):
-        p = st.getPath()
-        name = p.getName()
-        if not st.isDirectory():
-            continue
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")):
-            continue  # crashed dv write: invisible, exactly like snapshots
-        try:
-            out.append((int(name[len(prefix):]), str(p)))
-        except ValueError:
-            continue
-    return sorted(out)
+    """Sorted [(index, path)] of the committed deletion-vector sidecars
+    for one snapshot version."""
+    return _committed_dirs(spark, table_root, f"dv_{version:010d}_")
 
 
 def delete_keys_dv(
@@ -696,10 +679,7 @@ def delete_keys_dv(
     Returns the committed sidecar path.
     """
     spark = delete_keys.sparkSession
-    snaps = _committed_snapshots(spark, table_root)
-    if not snaps:
-        raise ValueError(f"no committed snapshot under {table_root!r}")
-    version, _head = snaps[-1]
+    version, _head = _latest_snapshot(spark, table_root)
     existing = _committed_dvs(spark, table_root, version)
     nxt = (existing[-1][0] + 1) if existing else 1
     path = f"{table_root}/dv_{version:010d}_{nxt:04d}"
@@ -713,10 +693,7 @@ def read_with_dv(spark: SparkSession, table_root: str) -> DataFrame:
     sidecar schema itself (the sidecar IS the key projection), so the
     reader needs no out-of-band metadata. One broadcast left-anti
     equi-join; the data side streams through shuffle-free."""
-    snaps = _committed_snapshots(spark, table_root)
-    if not snaps:
-        raise ValueError(f"no committed snapshot under {table_root!r}")
-    version, head = snaps[-1]
+    version, head = _latest_snapshot(spark, table_root)
     current = spark.read.parquet(head)
     dvs = _committed_dvs(spark, table_root, version)
     if not dvs:
@@ -737,10 +714,7 @@ def compact_dv(
     until the next dv delete. This is the maintenance op that keeps
     read amplification bounded — run it when sidecar count or deleted
     fraction crosses a threshold, not per delete."""
-    snaps = _committed_snapshots(spark, table_root)
-    if not snaps:
-        raise ValueError(f"no committed snapshot under {table_root!r}")
-    version, head = snaps[-1]
+    version, head = _latest_snapshot(spark, table_root)
     # List the sidecars ONCE and fold + vacuum exactly that list. A
     # second listing after the fold would also sweep any sidecar a
     # concurrent delete_keys_dv committed in between — deleting a
@@ -758,20 +732,13 @@ def compact_dv(
         )
     else:
         cleaned = current
-    new_path = f"{table_root}/snap_{version + 1:010d}"
-    cleaned.write.parquet(new_path)  # _SUCCESS written last = commit
-    _prune_snapshots(spark, table_root, keep_snapshots)
+    compacted = _commit_snapshot(cleaned, table_root, version, keep_snapshots)
     # vacuum ONLY the sidecars folded above: they are orphaned the
     # instant the new snapshot commits, and nothing else ever deletes
     # them — without this, every compaction cycle leaks its delete
     # history onto the filesystem.
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(table_root).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    for _i, dv_path in dvs:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(dv_path), True)
-    return spark.read.parquet(new_path)
+    _delete_dirs(spark, [path for _i, path in dvs])
+    return compacted
 
 
 def snapshot_changes(

@@ -400,5 +400,4 @@ def stream_merge_latest(
         )
 
     _run_stream(spark, start)
-    snaps = sinks._committed_snapshots(spark, table_root)
-    return spark.read.parquet(snaps[-1][1])
+    return sinks.read_snapshot(spark, table_root)

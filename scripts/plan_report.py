@@ -96,23 +96,19 @@ def main() -> None:
         captured: list[dict] = []
 
         def capture(self, eager=True, _acc=captured):
-            try:
-                _acc.append(plans.plan_summary(self))
-            except Exception:
-                pass  # never let profiling break the query build
+            _acc.append(plans.plan_summary(self))
             return orig_ckpt(self, eager=eager)
 
         def capture_lit(spark_, df, _acc=captured):
-            try:
-                _acc.append(plans.plan_summary(df))
-            except Exception:
-                pass
+            _acc.append(plans.plan_summary(df))
             return orig_lit(spark_, df)
 
         DataFrame.localCheckpoint = capture
         registry_surfaces._literal_result = capture_lit
         try:
             s = plans.plan_summary(spec.fn(spark, "/root/testdata/sf0.001"))
+        except Exception as e:
+            raise RuntimeError(f"plan summary of {name} failed") from e
         finally:
             DataFrame.localCheckpoint = orig_ckpt
             registry_surfaces._literal_result = orig_lit

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from echem_dft_etl_spark.operators import multimodal
+from echem_dft_etl_spark.operators import echem, multimodal
 from echem_dft_etl_spark.operators.dedup import first_wins_dedup
 from echem_dft_etl_spark.operators.pipe import pipe_map, pipe_solver_stub
 from tests.conftest import SF_SMOKE
@@ -75,9 +75,6 @@ def test_pipe_map_refuses_a_line_count_mismatch(spark):
         df,
         ["awk", "{ print; print }"],  # two lines per input row
         "v string",
-        lambda pdf: "".join(f"{v}\n" for v in pdf.v),
-        lambda out, pdf: pdf,
-        timeout_s=10,
     )
     with pytest.raises(Exception, match="returned 4 lines for a batch of 2 rows"):
         doubled.collect()
@@ -89,12 +86,36 @@ def test_pipe_failure_raises(spark):
         df,
         ["false"],  # exits 1 immediately
         "v string",
-        lambda pdf: "",
-        lambda out, pdf: pdf,
-        timeout_s=10,
     )
     with pytest.raises(Exception, match="(?i)pipe command|failed"):
         bad.collect()
+
+
+def test_pipe_solver_stub_runs_in_the_jvm(spark):
+    # The child is started by the executor JVM's script transform: no
+    # Python worker runs for the solver stage.
+    runs = spark.createDataFrame(
+        [("r1", -0.1), ("r2", 0.0)], "run_id string, charge double"
+    )
+    solved = pipe_solver_stub(runs)
+    solved.collect()
+    plan = solved._jdf.queryExecution().executedPlan().toString()
+    assert "SparkScriptTransformation" in plan
+    for python_exec in (
+        "MapInPandas", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython"
+    ):
+        assert python_exec not in plan
+
+
+def test_pipe_refuses_a_line_that_is_not_a_fillings_line(spark):
+    runs = spark.createDataFrame([("r1", 0.0)], "run_id string, charge double")
+    solved = pipe_map(
+        runs,
+        ["awk", "-F\\t", '{ printf "%s\\tconverged\\n", $1 }'],
+        "run_id string, fillings string",
+    )
+    with pytest.raises(Exception, match="not a FillingsUpdate line: converged"):
+        echem.parse_fillings(solved).collect()
 
 
 def test_multimodal_decode_real_bmp(spark):
