@@ -27,10 +27,9 @@ tripling the suite budget. Repetitions are INTERLEAVED round-robin
 across the whole set (r5; back-to-back k-runs let one JVM context
 spike poison every sample of a single query — r4's d15 spread 3.5x
 within one suite), and ANY query whose samples still spread >1.5x —
-headline or not — gets adaptive top-up rounds
-(SPARK_GRAFT_BENCH_K_EXTRA, default 2), so every reported number
-either has max/min <= 1.5 or carries its extra runs in the artifact
-(VERDICT r9 item 2).
+headline or not — gets up to ``K_EXTRA`` adaptive top-up rounds, so
+every reported number either has max/min <= 1.5 or carries its extra
+runs in the artifact (VERDICT r9 item 2).
 
 Load-proofing (r10): every timed sample records the 1-min loadavg it
 ran under (``run_loadavg`` in BENCH_DETAIL, parallel to ``runs``) so a
@@ -45,12 +44,19 @@ population and interpreter JIT that the old sf0.001 compile pass
 Each query is forced end-to-end with the noop sink (full execution, no
 driver collect bottleneck). One warm-up run of a tiny query first so JVM
 / codegen startup isn't attributed to the first query.
+
+The measurement core — :func:`timed_run`, :func:`release_leftovers`,
+the host-load gate :func:`wait_for_calm_host` and the round-numbered
+artifact path :func:`round_artifact` — is module-level so the probes
+under ``scripts/`` time, gate and name their artifacts exactly as the
+suite does.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -60,8 +66,12 @@ sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: 1/5/15-min loadavg sampled at suite start (set in main()).
-LOAD_AT_START: list[float] = []
+#: Headline queries are timed K times (median), the rest K_REST times
+#: (min); a query whose samples spread >1.5x gets up to K_EXTRA more
+#: interleaved rounds.
+K = 3
+K_REST = 2
+K_EXTRA = 2
 
 #: Host-load GATE (r11, VERDICT r10 item 3): r10 recorded
 #: contamination perfectly (60+ queries escalated under loadavg
@@ -69,36 +79,78 @@ LOAD_AT_START: list[float] = []
 #: escalation round, wait until the 1-min loadavg drops to the gate —
 #: up to the wait budget; if it never does, proceed anyway and record
 #: an explicit WAIVER in the artifact (a stalled bench is worse than a
-#: contaminated-but-labeled one). Gate 2.0 ~= 6% of 32 hardware
-#: threads: background noise, not a competing Spark suite.
-LOAD_GATE = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_GATE", "2.0"))
-LOAD_GATE_WAIT_S = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT", "300"))
+#: contaminated-but-labeled one). Gate 2.0 was set as ~6% of a
+#: 32-thread host (background noise, not a competing Spark suite); on
+#: a 4-CPU host it is half the machine.
+LOAD_GATE = 2.0
+LOAD_GATE_WAIT_S = 300.0
+#: Seconds between loadavg polls while the gate waits.
+LOAD_GATE_POLL_S = 10.0
 
 
-#: One dict per gate invocation, recorded in BENCH_DETAIL
-#: (``load_gate_events``): stage, loadavg before/after, seconds spent
-#: waiting, and whether the gate had to be WAIVED (still hot after the
-#: budget).
-LOAD_GATE_EVENTS: list[dict] = []
-
-
-def wait_for_calm_host(stage: str) -> None:
-    t0 = time.time()
+def wait_for_calm_host(stage: str, gate: float, wait_s: float) -> dict:
+    """Wait until the 1-min loadavg is at most ``gate``, for at most
+    ``wait_s`` seconds of polling. Returns the gate event (stage,
+    loadavg before/after, seconds waited, gate, and ``waived`` when
+    the host was still hot after the budget) for the caller's
+    artifact."""
     before = os.getloadavg()[0]
     la = before
-    while la > LOAD_GATE and time.time() - t0 < LOAD_GATE_WAIT_S:
-        time.sleep(10)
+    waited = 0.0
+    while la > gate and waited < wait_s:
+        time.sleep(LOAD_GATE_POLL_S)
+        waited += LOAD_GATE_POLL_S
         la = os.getloadavg()[0]
-    LOAD_GATE_EVENTS.append(
-        {
-            "stage": stage,
-            "loadavg_before": before,
-            "loadavg_after": la,
-            "waited_seconds": round(time.time() - t0, 1),
-            "gate": LOAD_GATE,
-            "waived": la > LOAD_GATE,
-        }
+    return {
+        "stage": stage,
+        "loadavg_before": before,
+        "loadavg_after": la,
+        "waited_seconds": waited,
+        "gate": gate,
+        "waived": la > gate,
+    }
+
+
+def release_leftovers(spark) -> None:
+    """Between-query storage hygiene (UNTIMED): drop any persistent
+    RDDs and cached plans a query left behind so later queries are
+    measured against a clean heap, not the accumulated storage of
+    everything before them (the whole registry shares this JVM)."""
+    from echem_dft_etl_spark.operators.storage import (
+        persistent_rdd_ids,
+        release_rdds,
     )
+
+    release_rdds(spark, persistent_rdd_ids(spark))
+    spark.catalog.clearCache()
+
+
+def timed_run(spark, fn) -> tuple[float, float]:
+    """Build ``fn(spark, SF_DIR)``, force it through the noop sink and
+    release what it left behind. Returns (elapsed seconds, 1-min
+    loadavg at run start); the release is not timed."""
+    la = os.getloadavg()[0]
+    t0 = time.perf_counter()
+    fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    elapsed = round(time.perf_counter() - t0, 3)
+    release_leftovers(spark)
+    return elapsed, la
+
+
+def round_artifact(prefix: str, override: str | None = None) -> Path:
+    """``override`` when given, else ``<prefix>_r{N}.json`` at the repo
+    root, where N is the round being built: one past the newest
+    ``CORRECTNESS_r{N}.json``. Every probe names its artifact this way."""
+    if override:
+        return Path(override)
+    rounds = [
+        int(m.group(1))
+        for f in REPO.glob("CORRECTNESS_r*.json")
+        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", f.name))
+    ]
+    n = (max(rounds) + 1) if rounds else 1
+    return REPO / f"{prefix}_r{n:02d}.json"
+
 
 #: Nothing is excluded: every registered query is benched (r8 —
 #: the reference e2e was previously skipped as "composes stages
@@ -191,16 +243,18 @@ def bench_names(specs) -> tuple[str, ...]:
 
 
 def main() -> None:
-    from echem_dft_etl_spark.operators.storage import persistent_rdd_ids, release_rdds
     from echem_dft_etl_spark.registry import all_queries
     from echem_dft_etl_spark.session import get_session
 
     # Gate FIRST — before the JVM spins up and starts contributing
-    # its own load to the reading.
-    wait_for_calm_host("suite_start")
+    # its own load to the reading. One event per gate invocation goes
+    # to BENCH_DETAIL (``load_gate.events``).
+    gate_events = [
+        wait_for_calm_host("suite_start", LOAD_GATE, LOAD_GATE_WAIT_S)
+    ]
 
-    global LOAD_AT_START
-    LOAD_AT_START = list(os.getloadavg())
+    # 1/5/15-min loadavg at suite start, after the gate.
+    load_at_start = list(os.getloadavg())
 
     # No console progress bar: its \r-spam shares the driver's ~2000-char
     # output tail with the one JSON line this script must deliver.
@@ -229,25 +283,7 @@ def main() -> None:
     # probes), as {"stage", "query", "error"}; empty on a clean run.
     harness_errors: list[dict] = []
 
-    def release_leftovers() -> None:
-        """Between-query storage hygiene (UNTIMED): drop any persistent
-        RDDs and cached plans a query left behind so later queries are
-        measured against a clean heap, not the accumulated storage of
-        everything before them (the whole registry shares this JVM)."""
-        release_rdds(spark, persistent_rdd_ids(spark))
-        spark.catalog.clearCache()
-
-    release_leftovers()
-
-    def timed_run(name: str) -> tuple[float, float]:
-        """(elapsed seconds, 1-min loadavg at run start)."""
-        la = os.getloadavg()[0]
-        t0 = time.perf_counter()
-        df = specs[name].fn(spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = round(time.perf_counter() - t0, 3)
-        release_leftovers()
-        return elapsed, la
+    release_leftovers(spark)
 
     # Early probes: queries whose in-suite timings are dominated by
     # SUITE CONTEXT (hundreds of compiled plans, GC debt of every
@@ -262,8 +298,9 @@ def main() -> None:
     for name in EARLY_PROBES:
         if name in names:
             try:
-                _cold = timed_run(name)  # codegen/cache, untimed record
-                dt, la = timed_run(name)
+                # first run pays codegen/cache: recorded, not the sample
+                _cold = timed_run(spark, specs[name].fn)
+                dt, la = timed_run(spark, specs[name].fn)
                 early_probe[name] = {
                     "seconds": dt,
                     "loadavg_1m": la,
@@ -282,20 +319,20 @@ def main() -> None:
     warmup_load: dict[str, float] = {}
     for name in names:
         try:
-            warmup_runs[name], warmup_load[name] = timed_run(name)
+            warmup_runs[name], warmup_load[name] = timed_run(
+                spark, specs[name].fn
+            )
         except Exception as exc:
             harness_errors.append(
                 {"stage": "warmup", "query": name, "error": repr(exc)}
             )
 
-    k = int(os.environ.get("SPARK_GRAFT_BENCH_K", "3"))
     # Non-headline queries get k=2/min instead of the old single shot:
     # the shared-JVM suite context spikes individual queries 3-7x
     # (measured d20 50.9 s vs 13.9 s isolated, q17 1.9/9.2/7.3 s within
     # one run), and a single sample can't tell a regression from one GC
     # pause. min-of-2 is the noise-floor estimator; headline queries
     # keep median-of-3 for round-over-round comparability.
-    k_rest = int(os.environ.get("SPARK_GRAFT_BENCH_K_REST", "2"))
     # Repetitions are INTERLEAVED (round-robin the whole set k times),
     # not run back-to-back per query: back-to-back attributes whatever
     # the JVM is digesting at that moment — a GC of the previous
@@ -308,35 +345,39 @@ def main() -> None:
     run_loadavg: dict[str, list[float]] = {n: [] for n in names}
 
     def sample(name: str) -> None:
-        dt, la = timed_run(name)
+        dt, la = timed_run(spark, specs[name].fn)
         runs[name].append(dt)
         run_loadavg[name].append(la)
 
-    passes = max(k, k_rest)
-    for p in range(passes):
+    for p in range(max(K, K_REST)):
         for name in names:
-            kq = k if name in HEADLINE else k_rest
+            kq = K if name in HEADLINE else K_REST
             if p < kq:
                 sample(name)
     # Adaptive top-up for EVERY query (r10; was headline-only at 2x):
-    # any query whose samples spread >1.5x gets up to
-    # SPARK_GRAFT_BENCH_K_EXTRA more interleaved rounds — so each
-    # reported number either has max/min <= 1.5 or carries k >= 3
-    # samples in the artifact for the reader to adjudicate.
-    extra = int(os.environ.get("SPARK_GRAFT_BENCH_K_EXTRA", "2"))
-    for _ in range(extra):
-        noisy = [
+    # any query whose samples spread >1.5x gets up to K_EXTRA more
+    # interleaved rounds — so each reported number either has
+    # max/min <= 1.5 or carries k >= 3 samples in the artifact for the
+    # reader to adjudicate.
+    def noisy() -> list[str]:
+        return [
             n
             for n in names
             if min(runs[n]) > 0 and max(runs[n]) / min(runs[n]) > 1.5
         ]
-        if not noisy:
+
+    for _ in range(K_EXTRA):
+        if not noisy():
             break
         # A noisy sample usually means the HOST was busy, not the
         # query: let the load decay before burning the retry budget
         # on another contaminated round.
-        wait_for_calm_host("escalation_round")
-        for name in noisy:
+        gate_events.append(
+            wait_for_calm_host(
+                "escalation_round", LOAD_GATE, LOAD_GATE_WAIT_S
+            )
+        )
+        for name in noisy():
             sample(name)
     timings: dict[str, float] = {}
     for name in names:
@@ -402,7 +443,7 @@ def main() -> None:
         harness_errors.append(
             {"stage": "phase_probe", "query": "s01_zorder_scan", "error": repr(exc)}
         )
-    release_leftovers()
+    release_leftovers(spark)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -434,11 +475,11 @@ def main() -> None:
                     "sf": sf_val,
                     "spark_version": spark.version,
                 },
-                "k_headline": k,
-                "k_rest": k_rest,
+                "k_headline": K,
+                "k_rest": K_REST,
                 "rest_stat": "min",
                 "headline_seconds": round(sum(headline.values()), 3),
-                "loadavg_start": LOAD_AT_START,
+                "loadavg_start": load_at_start,
                 "loadavg_end": list(os.getloadavg()),
                 "queries": timings,
                 "runs": runs,
@@ -447,13 +488,8 @@ def main() -> None:
                 "warmup_loadavg": warmup_load,
                 "spread_escalation": {
                     "threshold": 1.5,
-                    "max_extra_rounds": extra,
-                    "still_noisy": sorted(
-                        n
-                        for n in names
-                        if min(runs[n]) > 0
-                        and max(runs[n]) / min(runs[n]) > 1.5
-                    ),
+                    "max_extra_rounds": K_EXTRA,
+                    "still_noisy": sorted(noisy()),
                 },
                 "phase_seconds": phase_seconds,
                 "harness_errors": harness_errors,
@@ -461,8 +497,8 @@ def main() -> None:
                 "load_gate": {
                     "gate": LOAD_GATE,
                     "wait_budget_seconds": LOAD_GATE_WAIT_S,
-                    "events": LOAD_GATE_EVENTS,
-                    "waived": any(e["waived"] for e in LOAD_GATE_EVENTS),
+                    "events": gate_events,
+                    "waived": any(e["waived"] for e in gate_events),
                 },
             },
             f,
@@ -476,7 +512,7 @@ def main() -> None:
         "queries": headline,
         "sf": sf_val,
         "n_queries": len(timings),
-        "k": k,
+        "k": K,
         "detail": detail_path,
     }
     line = json.dumps(summary, separators=(",", ":"))

@@ -24,6 +24,7 @@ from .inspect import (
     pushed_filters,
     read_schema,
     plan_summary,
+    query_plan_summaries,
     wholestage_span_count,
 )
 from .asserts import (
@@ -44,6 +45,7 @@ __all__ = [
     "wholestage_span_count",
     "has_operator",
     "plan_summary",
+    "query_plan_summaries",
     "assert_pushed_filters",
     "assert_read_columns",
     "assert_broadcast_join",

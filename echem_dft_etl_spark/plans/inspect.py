@@ -28,13 +28,6 @@ def physical_plan(df: DataFrame) -> str:
             conf.set(key, prev)
 
 
-def formatted_plan(df: DataFrame) -> str:
-    """``explain('formatted')`` as a string (node list + details)."""
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[union-attr]
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """Filter expressions the scan pushed to the parquet reader.
 
@@ -113,6 +106,46 @@ def plan_summary(df: DataFrame) -> dict:
         "aqe": "AdaptiveSparkPlan" in plan,
         "bnlj_bounds": bnlj_build_side_bounds(df),
     }
+
+
+def query_plan_summaries(fn, spark, sf_dir: str) -> tuple[dict, list[dict]]:
+    """Build the query ``fn(spark, sf_dir)`` and return the
+    :func:`plan_summary` of its final frame plus one summary per
+    plan-truncation boundary crossed while building it, in order.
+
+    Iterative operators truncate lineage at every ``localCheckpoint``
+    and the write-then-read-back queries end in a literal relation
+    (``registry_surfaces._literal_result``), so the returned frame's
+    plan alone shows a bare ``LogicalRDD`` / ``LocalRelation`` scan.
+    Both are intercepted for the duration of the build, and each
+    frame is summarized the moment it crosses the boundary. Errors
+    propagate: a boundary that cannot be summarized fails the call.
+    """
+    # Spark 4: concrete frames are the classic subclass, which
+    # overrides localCheckpoint — patching the pyspark.sql.DataFrame
+    # base would never intercept.
+    from pyspark.sql.classic.dataframe import DataFrame as Classic
+
+    from .. import registry_surfaces as rs
+
+    orig_ckpt, orig_lit = Classic.localCheckpoint, rs._literal_result
+    parts: list[dict] = []
+
+    def checkpoint(self, eager=True):
+        parts.append(plan_summary(self))
+        return orig_ckpt(self, eager=eager)
+
+    def literal_result(spark_, df):
+        parts.append(plan_summary(df))
+        return orig_lit(spark_, df)
+
+    Classic.localCheckpoint = checkpoint
+    rs._literal_result = literal_result
+    try:
+        final = plan_summary(fn(spark, sf_dir))
+    finally:
+        Classic.localCheckpoint, rs._literal_result = orig_ckpt, orig_lit
+    return final, parts
 
 
 def bnlj_build_side_bounds(df: DataFrame) -> list[dict]:

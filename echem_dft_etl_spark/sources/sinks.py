@@ -304,11 +304,11 @@ def _committed_snapshots(spark: SparkSession, table_root: str):
 
 
 def _latest_snapshot(spark: SparkSession, table_root: str) -> tuple[int, str]:
-    """(version, path) of the newest committed snapshot; raises when
-    the table has none."""
+    """(version, path) of the newest committed snapshot; raises
+    ``KeyError`` when the table has none."""
     snaps = _committed_snapshots(spark, table_root)
     if not snaps:
-        raise ValueError(f"no committed snapshot under {table_root!r}")
+        raise KeyError(f"no committed snapshot under {table_root!r}")
     return snaps[-1]
 
 
@@ -626,15 +626,14 @@ def read_snapshot(
     (vacuuming older ones on each merge), so any retained version is
     readable by the same atomic ``_SUCCESS`` rule writers commit
     under — in-flight or crashed writes are invisible here exactly as
-    they are to latest-readers. Raises ``KeyError`` for a version that
-    was never committed or has been vacuumed.
+    they are to latest-readers. Raises ``KeyError`` when the table has
+    no committed snapshot, or for a version that was never committed or
+    has been vacuumed.
     """
-    snaps = _committed_snapshots(spark, table_root)
-    if not snaps:
-        raise KeyError(f"no committed snapshots under {table_root}")
-    if version is None:
-        return spark.read.parquet(snaps[-1][1])
-    by_version = dict(snaps)
+    latest, head = _latest_snapshot(spark, table_root)
+    if version is None or version == latest:
+        return spark.read.parquet(head)
+    by_version = dict(_committed_snapshots(spark, table_root))
     if version not in by_version:
         raise KeyError(
             f"snapshot {version} not available (retained: "

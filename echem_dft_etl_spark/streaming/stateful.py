@@ -41,6 +41,49 @@ def _to_us(ts: pd.Series) -> "pd.Series":
     return pd.Series(ts.values.astype("datetime64[us]").astype("int64"))
 
 
+def fold_profile(state: tuple | None, ts_chunks) -> tuple | None:
+    """One profile fold over a micro-batch's timestamp chunks (pandas
+    Series, any order): ``state`` is ``(n, first_us, last_us,
+    max_gap_us, version)`` or None for a new user. Returns the new
+    state, ``state`` itself when every chunk is empty. The gap from the
+    previous batch's last event to this batch's first one counts, so
+    folding [a,b,c,d] equals folding [a,b] then [c,d] (up to
+    ``version``, which counts the non-empty folds) — tests pin it."""
+    chunks = [_to_us(ts) for ts in ts_chunks if len(ts)]
+    if not chunks:
+        return state
+    n, first_us, last_us, max_gap_us, version = state or (0, None, None, 0, 0)
+    us = pd.concat(chunks).sort_values().reset_index(drop=True)
+    # gap spanning the batch boundary: previous last → new first
+    if last_us is not None:
+        max_gap_us = max(max_gap_us, int(us.iloc[0]) - last_us)
+    if len(us) > 1:
+        max_gap_us = max(max_gap_us, int(us.diff().max()))
+    lo, hi = int(us.iloc[0]), int(us.iloc[-1])
+    return (
+        n + len(us),
+        lo if first_us is None else min(first_us, lo),
+        hi if last_us is None else max(last_us, hi),
+        max_gap_us,
+        version + 1,
+    )
+
+
+def _profile_row(user_id, state: tuple) -> pd.DataFrame:
+    """The one-row emission of a user's profile state."""
+    n, first_us, last_us, max_gap_us, version = state
+    return pd.DataFrame(
+        {
+            "user_id": [user_id],
+            "n_events": [n],
+            "first_ts": [pd.Timestamp(first_us, unit="us")],
+            "last_ts": [pd.Timestamp(last_us, unit="us")],
+            "max_gap_us": [max_gap_us],
+            "version": [version],
+        }
+    )
+
+
 def user_activity_profile(events: DataFrame) -> DataFrame:
     """(user_id, ts) stream → running per-user activity profile.
 
@@ -61,36 +104,13 @@ def user_activity_profile(events: DataFrame) -> DataFrame:
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
-        if state.exists:
-            n, first_us, last_us, max_gap_us, version = state.get
-        else:
-            n, first_us, last_us, max_gap_us, version = 0, None, None, 0, 0
-
-        chunks = [_to_us(pdf["ts"]) for pdf in pdfs if len(pdf)]
-        if chunks:
-            us = pd.concat(chunks).sort_values().reset_index(drop=True)
-            # gap spanning the batch boundary: previous last → new first
-            if last_us is not None:
-                max_gap_us = max(max_gap_us, int(us.iloc[0]) - last_us)
-            if len(us) > 1:
-                max_gap_us = max(max_gap_us, int(us.diff().max()))
-            n += len(us)
-            first_us = int(us.iloc[0]) if first_us is None else min(first_us, int(us.iloc[0]))
-            last_us = int(us.iloc[-1]) if last_us is None else max(last_us, int(us.iloc[-1]))
-            version += 1
-            state.update((n, first_us, last_us, max_gap_us, version))
-        if first_us is None:  # key invoked with no data and no state
+        prior = state.get if state.exists else None
+        profile = fold_profile(prior, (pdf["ts"] for pdf in pdfs))
+        if profile is None:  # key invoked with no data and no state
             return
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n],
-                "first_ts": [pd.Timestamp(first_us, unit="us")],
-                "last_ts": [pd.Timestamp(last_us, unit="us")],
-                "max_gap_us": [max_gap_us],
-                "version": [version],
-            }
-        )
+        if profile is not prior:
+            state.update(profile)
+        yield _profile_row(user_id, profile)
 
     return events.groupBy("user_id").applyInPandasWithState(
         track,
@@ -130,43 +150,13 @@ def user_activity_profile_tws(events: DataFrame) -> DataFrame:
 
         def handleInputRows(self, key, rows, timerValues):
             (user_id,) = key
-            if self._state.exists():
-                n, first_us, last_us, max_gap_us, version = self._state.get()
-            else:
-                n, first_us, last_us, max_gap_us, version = 0, None, None, 0, 0
-
-            chunks = [_to_us(pdf["ts"]) for pdf in rows if len(pdf)]
-            if chunks:
-                us = pd.concat(chunks).sort_values().reset_index(drop=True)
-                if last_us is not None:
-                    max_gap_us = max(max_gap_us, int(us.iloc[0]) - last_us)
-                if len(us) > 1:
-                    max_gap_us = max(max_gap_us, int(us.diff().max()))
-                n += len(us)
-                first_us = (
-                    int(us.iloc[0])
-                    if first_us is None
-                    else min(first_us, int(us.iloc[0]))
-                )
-                last_us = (
-                    int(us.iloc[-1])
-                    if last_us is None
-                    else max(last_us, int(us.iloc[-1]))
-                )
-                version += 1
-                self._state.update((n, first_us, last_us, max_gap_us, version))
-            if first_us is None:
+            prior = self._state.get() if self._state.exists() else None
+            profile = fold_profile(prior, (pdf["ts"] for pdf in rows))
+            if profile is None:
                 return
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "first_ts": [pd.Timestamp(first_us, unit="us")],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                    "max_gap_us": [max_gap_us],
-                    "version": [version],
-                }
-            )
+            if profile is not prior:
+                self._state.update(profile)
+            yield _profile_row(user_id, profile)
 
         def close(self) -> None:
             pass

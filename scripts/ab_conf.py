@@ -5,8 +5,9 @@ suite-wide, not on 3 queries).
 
 Each round runs every query under arm A then arm B (order alternating
 per round so neither arm systematically inherits the warmer caches),
-recording per-sample loadavg. Decision stat is min-of-rounds per arm —
-the established noise discipline on this hypervisor-noisy host.
+recording per-sample loadavg (each sample is ``bench.timed_run``).
+Decision stat is min-of-rounds per arm — the established noise
+discipline on this hypervisor-noisy host.
 
 Usage:
     python scripts/ab_conf.py <conf_key> <valA> <valB> <q1,q2,...|ALL> \
@@ -16,15 +17,11 @@ Usage:
 from __future__ import annotations
 
 import json
-import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
@@ -33,10 +30,7 @@ def main() -> int:
     n_rounds = int(sys.argv[5]) if len(sys.argv) > 5 else 3
     out_path = Path(sys.argv[6]) if len(sys.argv) > 6 else REPO / "AB_CONF.json"
 
-    from echem_dft_etl_spark.operators.storage import (
-        persistent_rdd_ids,
-        release_rdds,
-    )
+    from bench import SF_DIR, timed_run
     from echem_dft_etl_spark.registry import all_queries
     from echem_dft_etl_spark.session import get_session
 
@@ -45,20 +39,9 @@ def main() -> int:
     specs = all_queries()
     names = list(specs) if qarg == "ALL" else qarg.split(",")
 
-    def release() -> None:
-        release_rdds(spark, persistent_rdd_ids(spark))
-        spark.catalog.clearCache()
-
     def timed(name: str, val: str) -> tuple[float, float]:
         spark.conf.set(conf_key, val)
-        la = os.getloadavg()[0]
-        t0 = time.perf_counter()
-        specs[name].fn(spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = round(time.perf_counter() - t0, 3)
-        release()
-        return dt, la
+        return timed_run(spark, specs[name].fn)
 
     results = {
         n: {"a": [], "b": [], "load_a": [], "load_b": []} for n in names

@@ -14,34 +14,22 @@ Usage:
     python scripts/calm_probe.py q1,q2 [n_runs] [gate] [out.json]
 
 Defaults: n_runs=6, gate=1.5, out=CALMPROBE_r{N}.json (N inferred
-like verify_local / scale_probe).
+like verify_local / scale_probe). Timing and the load gate are
+``bench.timed_run`` and ``bench.wait_for_calm_host``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _artifact_path() -> Path:
-    if len(sys.argv) > 4:
-        return Path(sys.argv[4])
-    rounds = [
-        int(m.group(1))
-        for f in REPO.glob("CORRECTNESS_r*.json")
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", f.name))
-    ]
-    n = (max(rounds) + 1) if rounds else 1
-    return REPO / f"CALMPROBE_r{n:02d}.json"
+#: Seconds the start gate waits for the host to calm down.
+GATE_WAIT_S = 900.0
 
 
 def main() -> int:
@@ -49,12 +37,10 @@ def main() -> int:
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 6
     gate = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
 
+    from bench import SF_DIR, round_artifact, timed_run, wait_for_calm_host
+
     # gate BEFORE the JVM exists (it adds its own load)
-    t0 = time.time()
-    waited = 0.0
-    while os.getloadavg()[0] > gate and time.time() - t0 < 900:
-        time.sleep(10)
-    waited = round(time.time() - t0, 1)
+    gate_event = wait_for_calm_host("probe_start", gate, GATE_WAIT_S)
     load_at_start = os.getloadavg()[0]
 
     from echem_dft_etl_spark.registry import all_queries
@@ -64,20 +50,12 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
 
-    def timed(name: str) -> tuple[float, float]:
-        la = os.getloadavg()[0]
-        t = time.perf_counter()
-        specs[name].fn(spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return round(time.perf_counter() - t, 3), la
-
     results = {n: {"runs": [], "run_loadavg": [], "warmup": None} for n in names}
     for name in names:  # untimed warmup pass (JIT, page cache, codegen)
-        results[name]["warmup"] = timed(name)[0]
+        results[name]["warmup"] = timed_run(spark, specs[name].fn)[0]
     for _ in range(n_runs):  # interleaved samples
         for name in names:
-            dt, la = timed(name)
+            dt, la = timed_run(spark, specs[name].fn)
             results[name]["runs"].append(dt)
             results[name]["run_loadavg"].append(la)
     for name in names:
@@ -90,13 +68,16 @@ def main() -> int:
         "generated_by": "scripts/calm_probe.py",
         "sf_dir": SF_DIR,
         "gate": gate,
-        "gate_wait_seconds": waited,
+        "gate_wait_seconds": gate_event["waited_seconds"],
+        "gate_waived": gate_event["waived"],
         "loadavg_at_start": load_at_start,
         "loadavg_at_end": os.getloadavg()[0],
         "n_runs": n_runs,
         "queries": results,
     }
-    out = _artifact_path()
+    out = round_artifact(
+        "CALMPROBE", sys.argv[4] if len(sys.argv) > 4 else None
+    )
     out.write_text(json.dumps(artifact, indent=1) + "\n")
     print(f"wrote {out}")
     for name in names:

@@ -8,10 +8,10 @@ Checkpoint-aware: iterative operators (connected components, PageRank,
 BFS, triangle counts, entity resolution) truncate lineage at every
 ``localCheckpoint``, so the RETURNED frame's plan alone under-reports
 their work (a ``LogicalRDD`` scan shows 0 exchanges / 0 read columns).
-The report therefore intercepts ``localCheckpoint`` while building each
-query and ACCUMULATES the plan summary of every frame at the moment it
-is checkpointed — the row shows the totals across all checkpoint
-boundaries plus the final frame, with the boundary count in ``ckpt``.
+Each query is therefore built through ``plans.query_plan_summaries``,
+which also summarizes every frame at the moment it crosses a
+plan-truncation boundary; the row ACCUMULATES those summaries with the
+final frame's, with the boundary count in ``ckpt``.
 """
 
 from __future__ import annotations
@@ -45,11 +45,6 @@ COUNTERS = (
 
 
 def main() -> None:
-    # Spark 4: concrete frames are the classic subclass, which
-    # overrides localCheckpoint — patching the pyspark.sql.DataFrame
-    # base would never intercept.
-    from pyspark.sql.classic.dataframe import DataFrame
-
     from echem_dft_etl_spark import plans
     from echem_dft_etl_spark.registry import all_queries
     from echem_dft_etl_spark.session import get_session
@@ -86,44 +81,20 @@ def main() -> None:
         " read cols | ckpt |"
     )
     print("|---|---|---|---|---|---|---|---|---|---|")
-    from echem_dft_etl_spark import registry_surfaces
-
-    orig_ckpt = DataFrame.localCheckpoint
-    orig_lit = registry_surfaces._literal_result
     for name, spec in sorted(all_queries().items()):
         if name in STREAMING:
             continue
-        captured: list[dict] = []
-
-        def capture(self, eager=True, _acc=captured):
-            _acc.append(plans.plan_summary(self))
-            return orig_ckpt(self, eager=eager)
-
-        def capture_lit(spark_, df, _acc=captured):
-            _acc.append(plans.plan_summary(df))
-            return orig_lit(spark_, df)
-
-        DataFrame.localCheckpoint = capture
-        registry_surfaces._literal_result = capture_lit
         try:
-            s = plans.plan_summary(spec.fn(spark, "/root/testdata/sf0.001"))
+            s, captured = plans.query_plan_summaries(
+                spec.fn, spark, "/root/testdata/sf0.001"
+            )
         except Exception as e:
             raise RuntimeError(f"plan summary of {name} failed") from e
-        finally:
-            DataFrame.localCheckpoint = orig_ckpt
-            registry_surfaces._literal_result = orig_lit
         for part in captured:
             for key in COUNTERS:
                 s[key] += part[key]
-            s["pushed_filters"] = list(s["pushed_filters"]) + list(
-                part["pushed_filters"]
-            )
-            s["read_schema"] = list(s["read_schema"]) + list(
-                part["read_schema"]
-            )
-            s["bnlj_bounds"] = list(s["bnlj_bounds"]) + list(
-                part["bnlj_bounds"]
-            )
+            for key in ("pushed_filters", "read_schema", "bnlj_bounds"):
+                s[key] = list(s[key]) + list(part[key])
         if s["bnlj_bounds"]:
             klass = ", ".join(
                 b["class"]

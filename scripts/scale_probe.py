@@ -44,7 +44,6 @@ from __future__ import annotations
 import json
 import math
 import os
-import re
 import sys
 import time
 from pathlib import Path
@@ -71,19 +70,6 @@ def scaled(df, keys, k: int, stride: int = 10_000_000):
             p = p.withColumn(key, F.col(key) + F.lit(i * stride))
         parts.append(p)
     return reduce(lambda a, b: a.unionByName(b), parts)
-
-
-def _artifact_path() -> Path:
-    override = os.environ.get("SCALEPROBE_OUT")
-    if override:
-        return Path(override)
-    rounds = [
-        int(m.group(1))
-        for f in REPO.glob("CORRECTNESS_r*.json")
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", f.name))
-    ]
-    n = (max(rounds) + 1) if rounds else 1
-    return REPO / f"SCALEPROBE_r{n:02d}.json"
 
 
 def _fit_exponent(ks: list[int], ys: list[float]) -> float | None:
@@ -626,11 +612,16 @@ def build_probes(spark, k: int, cc_stats: list, tmpdir: str,
 EXTRA_RUNG_K = 8
 EXTRA_RUNG_FAMILIES = {"join", "graph", "lsh", "ann"}
 
+#: Per-rung host-load gate: 1-min loadavg ceiling and wait budget.
+PROBE_LOAD_GATE = 3.0
+PROBE_LOAD_WAIT_S = 300.0
+
 
 def main() -> None:
     kmax = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     ks = sorted({1, max(2, kmax // 2), kmax})
 
+    from bench import round_artifact, wait_for_calm_host
     from echem_dft_etl_spark.session import get_session
 
     spark = get_session(app_name="scale-probe")
@@ -654,30 +645,11 @@ def main() -> None:
     # artifact's K=8 rungs ran under loadavg 10-17.6 — the probe's own
     # earlier rungs plus ambient noise — which manufactured a 6x knee
     # on a FIXED-OUTPUT twin whose isolated re-run measured ~1.2x.
-    # Waiting for the 1-min load to decay between rungs (same gate
-    # style as bench.py; budget-bounded, waivers recorded) makes the
-    # high rungs comparable to the low ones instead of measuring the
-    # queue behind them.
-    gate = float(os.environ.get("SPARK_GRAFT_PROBE_LOAD_GATE", "3.0"))
-    gate_wait = float(os.environ.get("SPARK_GRAFT_PROBE_LOAD_WAIT", "300"))
+    # Waiting for the 1-min load to decay between rungs (bench.py's
+    # gate; budget-bounded, waivers recorded) makes the high rungs
+    # comparable to the low ones instead of measuring the queue
+    # behind them.
     gate_events: list[dict] = []
-
-    def wait_calm(stage: str) -> None:
-        t0 = time.time()
-        before = os.getloadavg()[0]
-        la = before
-        while la > gate and time.time() - t0 < gate_wait:
-            time.sleep(10)
-            la = os.getloadavg()[0]
-        gate_events.append(
-            {
-                "stage": stage,
-                "loadavg_before": before,
-                "loadavg_after": la,
-                "waited_seconds": round(time.time() - t0, 1),
-                "waived": la > gate,
-            }
-        )
 
     # main ladder runs every family; the join and graph families get
     # one extra high rung to tighten their exponent fits.
@@ -686,7 +658,11 @@ def main() -> None:
         rungs.append((EXTRA_RUNG_K, set(EXTRA_RUNG_FAMILIES)))
     try:
         for k, families in rungs:
-            wait_calm(f"rung_k{k}")
+            gate_events.append(
+                wait_for_calm_host(
+                    f"rung_k{k}", PROBE_LOAD_GATE, PROBE_LOAD_WAIT_S
+                )
+            )
             cc_stats: list = []
             bfs_stats: list = []
             for entry in build_probes(
@@ -773,8 +749,8 @@ def main() -> None:
         "loadavg_start": load0,
         "cpus": os.cpu_count(),
         "load_gate": {
-            "gate": gate,
-            "wait_budget_seconds": gate_wait,
+            "gate": PROBE_LOAD_GATE,
+            "wait_budget_seconds": PROBE_LOAD_WAIT_S,
             "events": gate_events,
             "waived": any(e["waived"] for e in gate_events),
         },
@@ -793,7 +769,7 @@ def main() -> None:
             "1.0 are linear."
         ),
     }
-    out = _artifact_path()
+    out = round_artifact("SCALEPROBE", os.environ.get("SCALEPROBE_OUT"))
     out.write_text(json.dumps(artifact, indent=2) + "\n")
     print(f"wrote {out}")
     for name, slot in sorted(results.items()):

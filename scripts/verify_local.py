@@ -18,6 +18,7 @@ round) + 1, i.e. the round currently being built; override with
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from pathlib import Path
@@ -32,27 +33,12 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
 
 
-def _parity_out_path() -> Path:
-    import os
-    import re
-
-    override = os.environ.get("PARITY_OUT")
-    if override:
-        return Path(override)
-    rounds = [
-        int(m.group(1))
-        for f in REPO.glob("CORRECTNESS_r*.json")
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", f.name))
-    ]
-    n = (max(rounds) + 1) if rounds else 1
-    return REPO / f"PARITY_r{n:02d}.json"
-
-
 def main() -> int:
     import json
 
     import duckdb
 
+    from bench import round_artifact
     from echem_dft_etl_spark.registry import all_queries
     from echem_dft_etl_spark.session import get_session
     from echem_dft_etl_spark.sources import TABLES
@@ -140,7 +126,7 @@ def main() -> int:
             }
             print(f"  {name}: ERROR {type(exc).__name__}: {exc}")
     if ONLY is None:
-        out = _parity_out_path()
+        out = round_artifact("PARITY", os.environ.get("PARITY_OUT"))
         summary = {
             "sf_dir": SF_DIR,
             "n_queries": len(parity),

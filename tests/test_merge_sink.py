@@ -7,6 +7,9 @@ point for DeltaTable.merge when delta-spark is on the classpath."""
 
 from __future__ import annotations
 
+import pytest
+
+from echem_dft_etl_spark.sources import sinks
 from echem_dft_etl_spark.sources.sinks import (
     _committed_snapshots,
     merge_parquet,
@@ -182,8 +185,6 @@ def test_zorder_files_are_rectangles(spark, tmp_path):
 
 
 def test_read_snapshot_versions_and_retention(spark, tmp_path):
-    import pytest as _pytest
-
     from echem_dft_etl_spark.sources.sinks import merge_parquet, read_snapshot
 
     root = str(tmp_path / "tbl")
@@ -194,10 +195,10 @@ def test_read_snapshot_versions_and_retention(spark, tmp_path):
     assert _rows(read_snapshot(spark, root)) == {"a": 2.0}
     # third merge vacuums v1 (keep_snapshots=2): travel window moves
     merge_parquet(_mk(spark, [("a", 3.0)]), root, ["MP_id"], "pzc")
-    with _pytest.raises(KeyError):
+    with pytest.raises(KeyError):
         read_snapshot(spark, root, 1)
     assert _rows(read_snapshot(spark, root, 2)) == {"a": 2.0}
-    with _pytest.raises(KeyError):
+    with pytest.raises(KeyError):
         read_snapshot(spark, str(tmp_path / "nope"))
 
 
@@ -224,18 +225,45 @@ def test_delete_keys_removes_matched_only(spark, tmp_path):
 
 
 def test_delete_keys_rerun_is_idempotent_and_requires_table(spark, tmp_path):
-    import pytest
-
     from echem_dft_etl_spark.sources.sinks import delete_keys_parquet
 
     root = str(tmp_path / "tbl")
     doomed = spark.createDataFrame([("a",)], "MP_id string")
-    with pytest.raises(ValueError):
+    with pytest.raises(KeyError):
         delete_keys_parquet(doomed, root, ["MP_id"])
     merge_parquet(_mk(spark, [("a", 1.0), ("b", 2.0)]), root, ["MP_id"], "pzc")
     r1 = _rows(delete_keys_parquet(doomed, root, ["MP_id"]))
     r2 = _rows(delete_keys_parquet(doomed, root, ["MP_id"]))
     assert r1 == r2 == {"b": 2.0}
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda spark, keys, root: sinks.delete_keys_parquet(
+            keys, root, ["MP_id"]
+        ),
+        lambda spark, keys, root: sinks.delete_keys_dv(keys, root, ["MP_id"]),
+        lambda spark, keys, root: sinks.read_with_dv(spark, root),
+        lambda spark, keys, root: sinks.compact_dv(spark, root),
+        lambda spark, keys, root: sinks.read_snapshot(spark, root),
+    ],
+    ids=[
+        "delete_keys_parquet",
+        "delete_keys_dv",
+        "read_with_dv",
+        "compact_dv",
+        "read_snapshot",
+    ],
+)
+def test_managed_table_ops_on_empty_root_raise_key_error(
+    spark, tmp_path, call
+):
+    """A table with no committed snapshot is one condition with one
+    exception type across the whole managed-table family."""
+    keys = spark.createDataFrame([("a",)], "MP_id string")
+    with pytest.raises(KeyError, match="no committed snapshot"):
+        call(spark, keys, str(tmp_path / "tbl"))
 
 
 def test_deletion_vectors_merge_on_read_and_compaction(spark, tmp_path):
@@ -380,7 +408,6 @@ def test_snapshot_changes_rejects_pruned_version(spark, tmp_path):
     """Diffing against a version that pruning removed must raise with
     the available versions listed — a silent empty diff would read as
     'no changes' and corrupt downstream incremental state."""
-    import pytest
     from pyspark.sql import functions as F
 
     from echem_dft_etl_spark.sources.sinks import (
@@ -425,8 +452,6 @@ def test_snapshot_changes_contract_guards(spark, tmp_path):
     diff (empty struct), and a schema-evolved old snapshot would
     otherwise die on an unresolved column — diffing across evolution
     needs an explicit caller policy."""
-    import pytest
-
     from echem_dft_etl_spark.sources.sinks import snapshot_changes
 
     # key-only table: every column is a key

@@ -219,44 +219,16 @@ def test_engine_wide_plan_hygiene(spark):
         "x01_skyline_pareto": 4,
     }
     offenders = []
-    # Intercept plan-truncation boundaries exactly like
-    # scripts/plan_report.py: write-then-read-back queries end in a
-    # LocalRelation and iterative operators in a LogicalRDD, so a
-    # cartesian/unbounded-BNLJ in an INTERMEDIATE stage would be
-    # invisible on the returned frame alone (the s04 manifest
-    # crossJoin hid exactly there).
-    from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-    from echem_dft_etl_spark import registry_surfaces as _rs
-
-    orig_ckpt = _CDF.localCheckpoint
-    orig_lit = _rs._literal_result
+    # Plan-truncation boundaries are summarized as they are crossed
+    # (plans.query_plan_summaries, shared with scripts/plan_report.py):
+    # write-then-read-back queries end in a LocalRelation and iterative
+    # operators in a LogicalRDD, so a cartesian/unbounded-BNLJ in an
+    # INTERMEDIATE stage would be invisible on the returned frame
+    # alone (the s04 manifest crossJoin hid exactly there).
     for name, spec in sorted(all_queries().items()):
         if name in not_plan_inspectable:
             continue
-        captured: list[dict] = []
-
-        def _cap_ckpt(self, eager=True, _acc=captured):
-            try:
-                _acc.append(plans.plan_summary(self))
-            except Exception:
-                pass
-            return orig_ckpt(self, eager=eager)
-
-        def _cap_lit(spark_, df, _acc=captured):
-            try:
-                _acc.append(plans.plan_summary(df))
-            except Exception:
-                pass
-            return orig_lit(spark_, df)
-
-        _CDF.localCheckpoint = _cap_ckpt
-        _rs._literal_result = _cap_lit
-        try:
-            s = plans.plan_summary(spec.fn(spark, SF_SMOKE))
-        finally:
-            _CDF.localCheckpoint = orig_ckpt
-            _rs._literal_result = orig_lit
+        s, captured = plans.query_plan_summaries(spec.fn, spark, SF_SMOKE)
         for part in captured:
             if part["cartesian_products"]:
                 offenders.append((name, "cartesian-intermediate", part))

@@ -203,6 +203,32 @@ def test_stateful_profile_gap_spans_batches(spark, tmp_path):
     assert out.filter(F.col("user_id") == 1).count() >= 1
 
 
+def test_fold_profile_is_batch_split_invariant():
+    """Both state APIs fold through fold_profile: folding [a..d] in one
+    batch equals folding [a,b] then [c,d] — including the gap that
+    spans the split — up to the version counter."""
+    import pandas as pd
+
+    from echem_dft_etl_spark.streaming.stateful import fold_profile
+
+    t0 = pd.Timestamp("2024-01-01")
+    a, b, c, d = (t0 + pd.Timedelta(minutes=m) for m in (0, 1, 90, 95))
+    # the 89-minute b->c gap is the largest and crosses the split
+    whole = fold_profile(None, [pd.Series([c, a]), pd.Series([d, b])])
+    first = fold_profile(None, [pd.Series([b, a])])
+    split = fold_profile(first, [pd.Series([d, c])])
+    assert whole[:4] == split[:4]
+    n, first_us, last_us, max_gap_us, _ = whole
+    assert n == 4
+    assert (first_us, last_us) == (a.value // 1000, d.value // 1000)
+    assert max_gap_us == 89 * 60 * 1_000_000
+    assert (whole[4], split[4]) == (1, 2)
+    # empty chunks leave the state untouched; no state stays no state
+    empty = pd.Series([], dtype="datetime64[ns]")
+    assert fold_profile(split, [empty]) is split
+    assert fold_profile(None, []) is None
+
+
 def test_foreachbatch_streaming_upsert(spark, tmp_path):
     """Streaming first-wins upsert: each micro-batch lands through the
     batch upsert operator via foreachBatch — the streaming form of the
