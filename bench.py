@@ -137,19 +137,24 @@ def timed_run(spark, fn) -> tuple[float, float]:
     return elapsed, la
 
 
-def round_artifact(prefix: str, override: str | None = None) -> Path:
-    """``override`` when given, else ``<prefix>_r{N}.json`` at the repo
-    root, where N is the round being built: one past the newest
-    ``CORRECTNESS_r{N}.json``. Every probe names its artifact this way."""
-    if override:
-        return Path(override)
+def current_round() -> int:
+    """The round being built: one past the newest
+    ``CORRECTNESS_r{N}.json`` at the repo root."""
     rounds = [
         int(m.group(1))
         for f in REPO.glob("CORRECTNESS_r*.json")
         if (m := re.match(r"CORRECTNESS_r(\d+)\.json", f.name))
     ]
-    n = (max(rounds) + 1) if rounds else 1
-    return REPO / f"{prefix}_r{n:02d}.json"
+    return (max(rounds) + 1) if rounds else 1
+
+
+def round_artifact(prefix: str, override: str | None = None) -> Path:
+    """``override`` when given, else ``<prefix>_r{N}.json`` at the repo
+    root, N being :func:`current_round`. Every probe names its artifact
+    this way."""
+    if override:
+        return Path(override)
+    return REPO / f"{prefix}_r{current_round():02d}.json"
 
 
 #: Nothing is excluded: every registered query is benched (r8 —

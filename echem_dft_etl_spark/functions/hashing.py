@@ -99,10 +99,3 @@ def duckdb_det_hash_i64(expr: str, seed: int = 0) -> str:
 def duckdb_det_hash_str(expr: str) -> str:
     """DuckDB SQL fragment equivalent to :func:`det_hash_str`."""
     return f"(('0x' || substr(md5({expr}), 1, 12))::BIGINT)"
-
-
-def duckdb_minhash_perm(h_expr: str, perm_index: int) -> str:
-    """DuckDB SQL fragment equivalent to :func:`minhash_perm`."""
-    a = 2 * perm_index + 1
-    b = 7919 * (perm_index + 1)
-    return f"(({a} * (({h_expr}) % {MERSENNE31}) + {b}) % {MERSENNE31})"

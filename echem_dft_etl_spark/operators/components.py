@@ -512,7 +512,7 @@ def co_order_pairs(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def triangle_counts(pairs: DataFrame, checkpoint: bool = True) -> DataFrame:
+def triangle_counts(pairs: DataFrame) -> DataFrame:
     """Per-node exact triangle participation counts.
 
     ``pairs`` is an UNDIRECTED edge list in canonical form (a < b,
@@ -539,9 +539,9 @@ def triangle_counts(pairs: DataFrame, checkpoint: bool = True) -> DataFrame:
     hash-partitioned equi-join / aggregate — no windows, no broadcast
     of anything graph-sized (adjacency stays sharded by node).
 
-    ``checkpoint`` (default on) materializes the multiply-consumed
-    frames once — and r10 halved the round-trips (the pagerank
-    treatment, VERDICT r9 item 3): ``pairs`` (feeds the degree count
+    The multiply-consumed frames are materialized once — and r10
+    halved the round-trips (the pagerank treatment, VERDICT r9 item
+    3): ``pairs`` (feeds the degree count
     and the orientation join; the checkpoint also amortizes the
     caller's construction cost, e.g. a self-join+distinct) and ``adj``
     (the ONE frame the closure needs). ``oriented`` is no longer
@@ -552,20 +552,17 @@ def triangle_counts(pairs: DataFrame, checkpoint: bool = True) -> DataFrame:
     ``N+(v)``) instead of two. ``pairs`` drops out of the result
     lineage once ``adj`` is built, so its blocks are RELEASED before
     returning — the pinned storage backing the returned frame is
-    ``adj`` alone (|V| rows of O(sqrt(m)) arrays ≈ |E| ids). Pass
-    ``checkpoint=False`` to keep the fully-lazy lineage.
+    ``adj`` alone (|V| rows of O(sqrt(m)) arrays ≈ |E| ids).
     """
     spark = pairs.sparkSession
     pair_ids: list = []
     result_ids: list = []  # adj: backs the returned frame
     ok = False
-    n_pair_rows = 0
     try:
-        if checkpoint:
-            pairs = _tracked_checkpoint(pairs, pair_ids)
-            # one cheap job over the pinned blocks; sizes the
-            # adjacency-build narrowing below
-            n_pair_rows = pairs.count()
+        pairs = _tracked_checkpoint(pairs, pair_ids)
+        # one cheap job over the pinned blocks; sizes the
+        # adjacency-build narrowing below
+        n_pair_rows = pairs.count()
         # symmetric degree via one exploded scan (not a 2-arm union)
         deg = (
             pairs.select(F.explode(F.array("a", "b")).alias("v"))
@@ -585,19 +582,17 @@ def triangle_counts(pairs: DataFrame, checkpoint: bool = True) -> DataFrame:
         )
 
         adj = oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
-        closure_width = None
-        if checkpoint:
-            # Width discipline (storage.scoped_shuffle_width): the
-            # adjacency build — the ONE eager job here: degree +
-            # orient + collect_list over the edge list — pays ~6
-            # shuffle stages whose scheduling cost is proportional to
-            # width even when partitions are tiny (measured 4.0 s →
-            # 3.1 s at sf0.1's 1.2M edges from 32 → 8 idle-stage
-            # narrowing; a 100 TB edge list keeps full width). Only
-            # this materialization is wrapped: the returned closure
-            # plan executes later, at the caller's session width.
-            with scoped_shuffle_width(spark, n_pair_rows) as closure_width:
-                adj = _tracked_checkpoint(adj, result_ids)
+        # Width discipline (storage.scoped_shuffle_width): the
+        # adjacency build — the ONE eager job here: degree + orient +
+        # collect_list over the edge list — pays ~6 shuffle stages
+        # whose scheduling cost is proportional to width even when
+        # partitions are tiny (measured 4.0 s → 3.1 s at sf0.1's 1.2M
+        # edges from 32 → 8 idle-stage narrowing; a 100 TB edge list
+        # keeps full width). Only this materialization is wrapped: the
+        # returned closure plan executes later, at the caller's
+        # session width.
+        with scoped_shuffle_width(spark, n_pair_rows) as closure_width:
+            adj = _tracked_checkpoint(adj, result_ids)
 
         # Edge probe derived FROM adj: (u, N+(u), v) per oriented edge —
         # the u-side adjacency rides along map-side, so the closure is
@@ -969,9 +964,7 @@ def coreness_grid(
             _release_rdds(spark, keep_ids)
 
 
-def label_communities(
-    pairs: DataFrame, rounds: int = 3, checkpoint_every: int = 0
-) -> DataFrame:
+def label_communities(pairs: DataFrame, rounds: int = 3) -> DataFrame:
     """Fixed-round SYNCHRONOUS label propagation (LPA, Raghavan et
     al. 2007) over an undirected edge list (canonical a < b,
     distinct): every node starts labeled with itself; each round it
@@ -1009,78 +1002,55 @@ def label_communities(
     Per-round wire cost is O(E) label rows — never the text, never
     pairs of anything.
 
-    Storage: at the default ``checkpoint_every=0`` the WHOLE loop is
-    one lazy plan — for a shallow fixed prefix that is one job, with
-    the 2·rounds references to the pair construction collapsing to a
-    single runtime stage via ReusedExchange (measured 8.9 s vs 13.3 s
-    for the per-round-eager form at sf0.1: the eager loop pays
-    rounds+1 job submissions and block writes that a bounded-depth
-    lineage never needs — the OPPOSITE trade to connected_components,
-    whose data-dependent round count grows lineage unboundedly).
-    For deep prefixes pass ``checkpoint_every`` (the CC discipline:
-    tracked checkpoints, superseded blocks released immediately).
+    Storage: the WHOLE loop is one lazy plan — for a shallow fixed
+    prefix that is one job, with the 2·rounds references to the pair
+    construction collapsing to a single runtime stage via
+    ReusedExchange (measured 8.9 s vs 13.3 s for the per-round-eager
+    form at sf0.1: the eager loop pays rounds+1 job submissions and
+    block writes that a bounded-depth lineage never needs — the
+    OPPOSITE trade to connected_components, whose data-dependent round
+    count grows lineage unboundedly).
 
     Returns ``(v, community, community_size)``.
     """
     require_at_least("rounds", rounds, 1)
-    require_at_least("checkpoint_every", checkpoint_every, 0)
-    spark = pairs.sparkSession
-    owned: list = []
-    ok = False
-    try:
-        sym = pairs.select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        ).unionByName(
-            pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    sym = pairs.select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
+    ).unionByName(
+        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
+    # Round 1 in closed form: labels start as the identity over a
+    # DISTINCT edge list, so every neighbor label occurs exactly once
+    # and the count-then-min argmax reduces to the minimum neighbor id
+    # — one map-side-combinable aggregation replaces the initial
+    # distinct-label build, the first join and both first-round
+    # aggregations. Exact: sym is symmetric, so groupBy(dst) covers
+    # every node, matching the old distinct-over-src node set.
+    labels = sym.groupBy("dst").agg(F.min("src").alias("label"))
+    for _ in range(rounds - 1):
+        cnt = (
+            sym.join(
+                labels.select(F.col("dst").alias("src"), "label"),
+                "src",
+            )
+            .groupBy("dst", "label")
+            .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = None
-        for i in range(rounds):
-            if i == 0:
-                # Round 1 in closed form: labels start as the identity
-                # over a DISTINCT edge list, so every neighbor label
-                # occurs exactly once and the count-then-min argmax
-                # reduces to the minimum neighbor id — one
-                # map-side-combinable aggregation replaces the initial
-                # distinct-label build, the first join and both
-                # first-round aggregations. Exact: sym is symmetric, so
-                # groupBy(dst) covers every node, matching the old
-                # distinct-over-src node set.
-                labels = sym.groupBy("dst").agg(F.min("src").alias("label"))
-            else:
-                cnt = (
-                    sym.join(
-                        labels.select(F.col("dst").alias("src"), "label"),
-                        "src",
-                    )
-                    .groupBy("dst", "label")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                )
-                labels = (
-                    cnt.groupBy("dst")
-                    .agg(
-                        F.max(
-                            F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-                        ).alias("m")
-                    )
-                    .select("dst", (-F.col("m")["nl"]).alias("label"))
-                )
-            if checkpoint_every and i % checkpoint_every == checkpoint_every - 1:
-                round_ids: list = []
-                labels = _tracked_checkpoint(labels, round_ids)
-                _release_rdds(spark, owned)
-                owned = round_ids
-        labels = labels.select(F.col("dst").alias("v"), "label")
-        sizes = labels.groupBy("label").agg(
-            F.count(F.lit(1)).cast("bigint").alias("community_size")
+        labels = (
+            cnt.groupBy("dst")
+            .agg(
+                F.max(
+                    F.struct(F.col("c"), (-F.col("label")).alias("nl"))
+                ).alias("m")
+            )
+            .select("dst", (-F.col("m")["nl"]).alias("label"))
         )
-        out = labels.join(sizes, "label").select(
-            "v",
-            F.col("label").cast("bigint").alias("community"),
-            "community_size",
-        )
-        ok = True
-        # any final checkpoint blocks back the returned frame and stay
-        return out
-    finally:
-        if not ok:
-            _release_rdds(spark, owned)
+    labels = labels.select(F.col("dst").alias("v"), "label")
+    sizes = labels.groupBy("label").agg(
+        F.count(F.lit(1)).cast("bigint").alias("community_size")
+    )
+    return labels.join(sizes, "label").select(
+        "v",
+        F.col("label").cast("bigint").alias("community"),
+        "community_size",
+    )

@@ -815,7 +815,6 @@ def near_dups_against_corpus(
     shingle_n: int = 3,
     n_bands: int = N_BANDS,
     rows_per_band: int = ROWS_PER_BAND,
-    broadcast_probe: bool = True,
 ) -> DataFrame:
     """INCREMENTAL near-dup detection: for each document in a (small)
     incoming ``batch``, the documents in the (huge) existing ``corpus``
@@ -823,19 +822,13 @@ def near_dups_against_corpus(
     every production dedup pipeline, where re-running all-pairs over
     the full corpus per ingest would be absurd.
 
-    PRECONDITION for ``broadcast_probe=True`` (the default): the probe
-    frame is candidates × batch shingles, which scales with the LSH
-    CANDIDATE count, not the batch size alone — one hot / low-entropy
-    band key (e.g. a boilerplate-dominated corpus where many documents
-    share a band signature) multiplies candidates and can blow the
-    broadcast past executor memory. That holds for well-mixed corpora
-    at daily-increment batch sizes; if band-key entropy is in doubt
-    (or a probe-size probe says otherwise), pass
-    ``broadcast_probe=False`` to run the verify join as a plain
-    shuffle — same semantics and output, one extra exchange of the
-    corpus-side MATCHED shingles only (the band join already pruned
-    the corpus stream), which is the safe shape when candidates are
-    dense.
+    PRECONDITION: the broadcast probe frame is candidates × batch
+    shingles, which scales with the LSH CANDIDATE count, not the batch
+    size alone — one hot / low-entropy band key (e.g. a
+    boilerplate-dominated corpus where many documents share a band
+    signature) multiplies candidates and can blow the broadcast past
+    executor memory. That holds for well-mixed corpora at
+    daily-increment batch sizes.
 
     The asymmetry is the scale story: the corpus side never shuffles
     AT ALL. Array-shaped consumers use the narrow
@@ -848,7 +841,6 @@ def near_dups_against_corpus(
     but immune to the InferFiltersFromGenerate trap of exploding the
     array attribute — see its docstring). BOTH joins that touch the
     corpus broadcast their other side:
-    and BOTH joins that touch the corpus broadcast their other side:
     the candidate equi-join broadcasts the batch's banded keys, and
     the verify join broadcasts the candidate×batch-shingle probe
     (small by construction — the batch is a daily increment). The
@@ -897,9 +889,7 @@ def near_dups_against_corpus(
     sb = doc_shingles_local(corpus, shingle_n).select(
         F.col("doc_id").alias("corpus_id"), "shingle"
     )
-    probe = cands.join(sa, "batch_id")
-    if broadcast_probe:
-        probe = F.broadcast(probe)
+    probe = F.broadcast(cands.join(sa, "batch_id"))
     inter = (
         sb.join(probe, ["corpus_id", "shingle"])
         .groupBy("batch_id", "corpus_id")
@@ -928,7 +918,6 @@ def containment_pairs(
     threshold: float = 0.8,
     shingle_n: int = 3,
     max_df: int | None = DEFAULT_MAX_DF,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """DIRECTED near-superset pairs by exact shingle containment
     ``C(a→b) = |a ∩ b| / |a|``.
@@ -949,8 +938,8 @@ def containment_pairs(
     difference is the normalizer, so candidates are enumerated as
     unordered pairs once and each direction is tested independently.
 
-    ``checkpoint`` (default on, the triangle_counts discipline)
-    materializes the two multiply-consumed frames once: the df-capped
+    The two multiply-consumed frames are materialized once (the
+    triangle_counts discipline): the df-capped
     shingle index feeds THREE branches (sizes, both posting-list join
     arms) and ``sized`` feeds both direction branches of the final
     union — without it each branch re-shingles the corpus / re-runs
@@ -960,8 +949,7 @@ def containment_pairs(
     shingled = doc_shingles(docs, shingle_n)
     if max_df is not None:
         shingled = _df_cap(shingled, max_df)
-    if checkpoint:
-        shingled = shingled.localCheckpoint(eager=True)
+    shingled = shingled.localCheckpoint(eager=True)
     sizes = shingled.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sa = shingled.select(F.col("doc_id").alias("a"), "shingle")
     sb = shingled.select(F.col("doc_id").alias("b"), "shingle")
@@ -978,8 +966,7 @@ def containment_pairs(
         sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb")),
         "b",
     )
-    if checkpoint:
-        sized = sized.localCheckpoint(eager=True)
+    sized = sized.localCheckpoint(eager=True)
     fwd = sized.select(
         "a",
         "b",

@@ -1,17 +1,21 @@
 """The reference pipeline's analytical core, as relational operators.
 
 Re-expresses ``analyze_electrochem`` (reference ``dags/my_dag.py:140-184``)
-and the solver-output parser (``my_dag.py:152-158``) Spark-first:
+and the solver-output parser (``my_dag.py:152-158``) Spark-first. Each
+paper-stage rule is spelled once, here; the pipeline, the registry
+queries and their oracles' Spark sides all call it:
 
+- the charge grid (``my_dag.py:128``) is :func:`charge_grid`, an
+  explode over :data:`DEFAULT_CHARGES` (Q15), and a run is named by
+  :func:`run_key` / :func:`split_run_key` (Q9);
 - the per-file parse loop that keeps only the *last* matching line becomes
-  a filter + ``max_by(struct, line_no)`` aggregation (Q5/Q6);
-- the charge-grid lists (``my_dag.py:128``) become a long-format metrics
-  table;
+  a filter + ``max_by(struct, line_no)`` aggregation over the solver-output
+  connector's rows (:func:`parse_fillings_lines`, S2/Q5/Q6);
 - the anchor-row lookup ``nes[1]``/``fermis[1]`` (charge = 0.0 row,
   ``my_dag.py:164,169``) becomes a conditional aggregate within the same
   groupBy — no self-join, no second shuffle;
 - ``np.polyfit(pots, rhoes, 1)`` (``my_dag.py:171``) becomes the built-in
-  ``regr_slope``/``regr_intercept`` aggregates.
+  ``regr_slope`` aggregate over ``ne`` (:func:`electrochem_descriptors`).
 
 Scale notes: everything is one shuffle (the groupBy on slab key) with
 map-side partial aggregation; the geometry dimension joins broadcast. At
@@ -29,6 +33,9 @@ HARTREE_TO_EV = 27.2114
 SHE_OFFSET_EV = 4.66
 BOHR_ANGSTROM = 0.529177
 ELEMENTARY_CHARGE = 1.60217663e-19
+
+#: The reference's charge grid (``my_dag.py:128``).
+DEFAULT_CHARGES = (-0.1, 0.0, 0.1)
 
 #: The solver line format: 'FillingsUpdate:  mu: <mu> ... nElectrons: <ne> ...'
 FILLINGS_PATTERN = r"FillingsUpdate:\s+mu:\s+(-?[0-9.eE+-]+)\s+nElectrons:\s+([0-9.eE+-]+)"
@@ -51,32 +58,35 @@ def parse_fillings(solved: DataFrame) -> DataFrame:
     return solved.select("run_id", *fillings_mu_ne(checked))
 
 
-def parse_fillings_lines(
-    lines: DataFrame,
-    file_col: str = "file",
-    line_no_col: str = "line_no",
-    value_col: str = "value",
-) -> DataFrame:
-    """Q5+Q6: extract (mu, nElectrons) from the LAST matching line per file.
+def parse_fillings_lines(lines: DataFrame) -> DataFrame:
+    """Q5+Q6: the solver-output connector's ``(run_id, line_no, value)``
+    rows → ``(run_id, mu, ne, n_fillings)``, mu and ne from the LAST
+    ``FillingsUpdate:`` line of each run, ``n_fillings`` the number of
+    such lines.
 
     Mirrors the parse loop at ``my_dag.py:152-158``, where each match
     overwrites the previous one so only the final occurrence survives.
-    Expressed as filter → ``max_by(struct(line_no, mu, ne), line_no)``:
-    a single hash aggregation with map-side combine (each task keeps one
-    candidate row per file before the shuffle), instead of a sort or a
-    row_number window over every matching line.
+    Expressed as filter → ``max_by(struct(mu, ne), line_no)``: a single
+    hash aggregation with map-side combine (each task keeps one
+    candidate row per run before the shuffle), instead of a sort or a
+    row_number window over every matching line. It is a plain
+    aggregate, so a streaming source runs it too.
     """
-    f, ln, v = F.col(file_col), F.col(line_no_col), F.col(value_col)
+    v = F.col("value")
     matched = lines.filter(v.contains("FillingsUpdate:")).select(
-        f.alias("file"),
-        ln.alias("line_no"),
-        *fillings_mu_ne(v),
+        "run_id", "line_no", *fillings_mu_ne(v)
     ).filter(F.col("mu").isNotNull() & F.col("ne").isNotNull())
-    last = matched.groupBy("file").agg(
+    last = matched.groupBy("run_id").agg(
         F.max_by(F.struct("mu", "ne"), F.col("line_no")).alias("m"),
-        F.max("line_no").alias("last_line_no"),
+        F.count("*").alias("n_fillings"),
     )
-    return last.select("file", "m.mu", "m.ne", "last_line_no")
+    return last.select("run_id", "m.mu", "m.ne", "n_fillings")
+
+
+def charge_grid(charges: tuple[float, ...] = DEFAULT_CHARGES) -> Column:
+    """Q15: one row per charge of the grid, as a generator column
+    ``charge`` (the fan-out runs inside codegen, no shuffle)."""
+    return F.explode(F.array(*[F.lit(c) for c in charges])).alias("charge")
 
 
 def run_key(key: Column, charge: Column) -> Column:
@@ -92,17 +102,6 @@ def split_run_key(key: Column) -> tuple[Column, Column]:
         F.regexp_extract(key, r"(.+)_[^_]+$", 1),
         F.regexp_extract(key, r"_([^_]+)$", 1).cast("double"),
     )
-
-
-def slab_id_and_charge_from_file(df: DataFrame, file_col: str = "file") -> DataFrame:
-    """Q9: recover (slab_id, charge) from '<...>/<slab_id>_<charge>.out'.
-
-    The reference keys runs by filename (``Path(p).stem``,
-    ``my_dag.py:122,131``); pure string expressions, no UDF.
-    """
-    stem = F.regexp_extract(F.col(file_col), r"([^/]+)\.out$", 1)
-    slab_id, charge = split_run_key(stem)
-    return df.withColumn("slab_id", slab_id).withColumn("charge", charge)
 
 
 def potential_v(mu: Column) -> Column:
@@ -127,35 +126,35 @@ def electrochem_descriptors(metrics: DataFrame, geometry: DataFrame) -> DataFram
 
     ``metrics``: long-format ``(slab_id, charge, mu, ne)`` — one row per
     DFT run (3 charges/slab in the reference). ``geometry``:
-    ``(slab_id, cell00, cell11)``. Returns ``(MP_id, pzc, capacitance)``
-    exactly as ``my_dag.py:184`` does.
+    ``(slab_id, cell00, cell11)``, one row per slab. Returns
+    ``(MP_id, pzc, capacitance)`` exactly as ``my_dag.py:184`` does.
 
-    Single-shuffle formulation: the charge=0 anchor (``nes[1]``,
-    ``fermis[1]``) is pulled out with ``max_by(..., charge == 0)`` in a
-    first grouped pass fused with the fit — implemented as anchor columns
-    via a window-free conditional aggregate, then the regression runs over
-    the derived (potential, density) points. Geometry is broadcast.
+    One grouped aggregate after the broadcast geometry join, keyed by
+    the slab with its cell dimensions carried as group keys. The
+    reference fits ``rho`` against the potential, where ``rho =
+    -(ne - ne0)·e·1e6/(2·area)`` is an affine map of ``ne`` with
+    per-slab constants. A least-squares slope is invariant to the
+    offset and scales with the factor, so the capacitance is the
+    ``ne`` slope put through the same map with ``ne0 = 0``: the fit
+    needs neither the charge-0 anchor nor a second pass over the
+    points. The anchor ``ne`` is kept only as a guard, so a slab
+    without a charge-0 run gets NULL pzc and NULL capacitance.
     """
-    anchored = metrics.groupBy("slab_id").agg(
-        F.max(F.when(F.col("charge") == 0.0, F.col("ne"))).alias("ne0"),
-        F.max(F.when(F.col("charge") == 0.0, F.col("mu"))).alias("mu0"),
-        F.collect_list(F.struct("charge", "mu", "ne")).alias("pts"),
+    is_anchor = F.col("charge") == 0.0
+    fit = (
+        metrics.join(F.broadcast(geometry), "slab_id")
+        .groupBy("slab_id", "cell00", "cell11")
+        .agg(
+            F.max(F.when(is_anchor, F.col("ne"))).alias("ne0"),
+            F.max(F.when(is_anchor, F.col("mu"))).alias("mu0"),
+            F.regr_slope("ne", potential_v(F.col("mu"))).alias("dne_dpot"),
+        )
     )
-    pts = anchored.select(
-        "slab_id",
-        "ne0",
-        "mu0",
-        F.explode("pts").alias("p"),
-    ).join(F.broadcast(geometry), "slab_id")
-    derived = pts.select(
-        "slab_id",
-        "mu0",
-        potential_v(F.col("p.mu")).alias("pot_v"),
-        surface_charge_density(
-            F.col("p.ne"), F.col("ne0"), F.col("cell00"), F.col("cell11")
-        ).alias("rho_uc_cm2"),
+    capacitance = surface_charge_density(
+        F.col("dne_dpot"), F.lit(0.0), F.col("cell00"), F.col("cell11")
     )
-    return derived.groupBy("slab_id").agg(
-        potential_v(F.first("mu0")).alias("pzc"),
-        F.regr_slope("rho_uc_cm2", "pot_v").alias("capacitance"),
-    ).select(F.col("slab_id").alias("MP_id"), "pzc", "capacitance")
+    return fit.select(
+        F.col("slab_id").alias("MP_id"),
+        potential_v(F.col("mu0")).alias("pzc"),
+        F.when(F.col("ne0").isNotNull(), capacitance).alias("capacitance"),
+    )

@@ -26,14 +26,6 @@ def require_in_range(name: str, value, lo, hi) -> None:
         )
 
 
-def require_positive_fraction(name: str, value) -> None:
-    """``0 < value < 1`` (exclusive) or ValueError."""
-    if value is None or not (0.0 < value < 1.0):
-        raise ValueError(
-            f"{name} must be a fraction in (0, 1), got {value!r}"
-        )
-
-
 #: Max shift count that keeps ``1 << j`` a positive int64 — bit-packed
 #: bucket/signature builders must not exceed it.
 MAX_I64_BITS = 62

@@ -898,7 +898,6 @@ def semdedup(
     k: int = 8,
     rounds: int = 1,
     threshold: float = 0.4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Semantic deduplication (SemDeDup, Abbas et al. 2023): k-means
     the embedding space, then drop within-cluster near-duplicates —
@@ -925,8 +924,8 @@ def semdedup(
     double fold as every cosine in this module, so the DuckDB oracle
     reproduces them bit-for-bit.
 
-    ``checkpoint`` (default on, the triangle_counts discipline)
-    materializes the assigned-points frame once: it feeds THREE plan
+    The assigned-points frame is materialized once (the
+    triangle_counts discipline): it feeds THREE plan
     branches (both in-cell join arms and the final dominator join),
     each of which would otherwise re-scan the corpus and re-run the
     centroid-argmin assignment. Pinned storage is one |V|-row frame
@@ -939,8 +938,7 @@ def semdedup(
 
     asg = assignments(emb, k, rounds)
     pts = emb.select("vec_id", "embedding").join(asg, "vec_id")
-    if checkpoint:
-        pts = pts.localCheckpoint(eager=True)
+    pts = pts.localCheckpoint(eager=True)
     a = pts.select(
         F.col("vec_id").alias("a"), F.col("embedding").alias("a_emb"), "cell"
     )
@@ -990,7 +988,6 @@ def semdedup_incremental(
     k: int = 8,
     rounds: int = 1,
     threshold: float = 0.4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Incremental SemDeDup: screen a NEW batch of vectors against an
     already-clustered corpus WITHOUT re-clustering — the embedding-side
@@ -1038,26 +1035,20 @@ def semdedup_incremental(
         )
         .agg(F.collect_list(F.struct("cent_id", "c_vec")).alias("cents"))
     )
-    assigned_c = assign(pts_c, cent_arr)
     for _ in range(rounds):
-        cent_arr = update_centroids(assigned_c)
-        assigned_c = assign(pts_c, cent_arr)
-    if checkpoint:
-        # Pin the fitted centroids — THE persisted index artifact of a
-        # production deployment — so neither assignment re-embeds the
-        # Lloyd-fit lineage (without this the batch-side argmin's plan
-        # re-derived the whole corpus fit: +5 exchanges). The no-op
-        # limit(1) writes the one-row bound back into the plan — a
-        # localCheckpoint is a LogicalRDD with no static maxRows, and
-        # the broadcast in assign() must stay classifiable as a
-        # bounded BNLJ build side (plans.bnlj_build_side_bounds).
-        cent_arr = cent_arr.localCheckpoint(eager=True).limit(1)
-        assigned_c = assign(pts_c, cent_arr)
+        cent_arr = update_centroids(assign(pts_c, cent_arr))
+    # Pin the fitted centroids — THE persisted index artifact of a
+    # production deployment — so neither assignment re-embeds the
+    # Lloyd-fit lineage (without this the batch-side argmin's plan
+    # re-derived the whole corpus fit: +5 exchanges). The no-op
+    # limit(1) writes the one-row bound back into the plan — a
+    # localCheckpoint is a LogicalRDD with no static maxRows, and the
+    # broadcast in assign() must stay classifiable as a bounded BNLJ
+    # build side (plans.bnlj_build_side_bounds).
+    cent_arr = cent_arr.localCheckpoint(eager=True).limit(1)
     c_side = corpus.select("vec_id", "embedding").join(
-        assigned_c.select("vec_id", "cell"), "vec_id"
-    )
-    if checkpoint:
-        c_side = c_side.localCheckpoint(eager=True)
+        assign(pts_c, cent_arr).select("vec_id", "cell"), "vec_id"
+    ).localCheckpoint(eager=True)
     pts_b = batch.select(
         "vec_id", quantize_micro(F.col("embedding")).alias("qv")
     )

@@ -46,8 +46,6 @@ from .operators.storage import release_rdds, tracked_checkpoint
 from .operators.udfs import serialize_run_expr
 from .sources.sinks import append_report, upsert_parquet, write_partitioned
 
-DEFAULT_CHARGES = (-0.1, 0.0, 0.1)
-
 
 def sample_by_hash(df: DataFrame, key: str, n: int, seed: int) -> DataFrame:
     """Q11/Q12: deterministic hash-order sample (seeded, capped at input
@@ -213,7 +211,7 @@ def run_reference_pipeline(
     out_dir: str,
     n_bulk_sample: int = 2,
     facets: tuple[str, ...] = ("111",),
-    charges: tuple[float, ...] = DEFAULT_CHARGES,
+    charges: tuple[float, ...] = echem.DEFAULT_CHARGES,
     solver: Callable[[DataFrame], DataFrame] = pipe_solver_stub,
 ) -> DataFrame:
     """Execute the end-to-end dataflow; returns (MP_id, pzc, capacitance).
@@ -257,7 +255,7 @@ def run_reference_pipeline(
             "ion_names",
             "cell00",
             "cell11",
-            F.explode(F.array(*[F.lit(c) for c in charges])).alias("charge"),
+            echem.charge_grid(charges),
         ).withColumn(
             "deck",
             serialize_run_expr(F.col("lattice"), F.col("charge"), F.col("ion_names")),

@@ -687,13 +687,13 @@ def q12_det_pick_one(spark, sf_dir):
     """Deterministic pick-one (Q12): ``random.seed(20);
     random.sample(dirs, 1)`` (``my_dag.py:109-111``) as a hash-ordered
     ``LIMIT 1`` — a one-row reduction, no full sort needed at scale
-    (Spark executes it as a TakeOrderedAndProject)."""
+    (Spark executes it as a TakeOrderedAndProject). The pipeline's own
+    pick, pipeline.py::sample_by_hash."""
+    from .pipeline import sample_by_hash
+
     o = _ld(spark, sf_dir, "orders")
-    return (
-        o.withColumn("h", det_hash_i64(F.col("o_orderkey"), 20))
-        .orderBy("h", "o_orderkey")
-        .limit(1)
-        .select("o_orderkey", "o_custkey", "o_orderstatus")
+    return sample_by_hash(o, "o_orderkey", 1, seed=20).select(
+        "o_orderkey", "o_custkey", "o_orderstatus"
     )
 
 
@@ -719,14 +719,12 @@ def q13_generate_grid(spark, sf_dir):
     as explode over a literal array — generation happens inside codegen,
     no shuffle. Run-id assembly mirrors the ``f'{id}_{charge}'`` filename
     (``my_dag.py:131``)."""
-    from .operators.echem import run_key
+    from .operators.echem import charge_grid, run_key
 
     n = _ld(spark, sf_dir, "nation")
-    return n.select(
-        "n_nationkey",
-        "n_name",
-        F.explode(F.array(F.lit(-0.1), F.lit(0.0), F.lit(0.1))).alias("charge"),
-    ).withColumn("run_id", run_key(F.col("n_name"), F.col("charge")))
+    return n.select("n_nationkey", "n_name", charge_grid()).withColumn(
+        "run_id", run_key(F.col("n_name"), F.col("charge"))
+    )
 
 
 #: Customers ranked within their nation by balance, ties to the lowest
@@ -796,18 +794,16 @@ def q16_upsert_first_wins(spark, sf_dir):
     DO NOTHING`` (``my_dag.py:201-202``) = first-wins dedup of the
     incoming batch (deterministic ``row_number()==1``, NOT
     ``dropDuplicates`` which is partition-order arbitrary) + left-anti
-    join against existing keys. Idempotence (re-run-twice is a no-op) is
-    tested in tests/test_upsert.py."""
+    join against existing keys — the sinks' batch dedup,
+    operators/dedup.py::first_per_key. Idempotence (re-run-twice is a
+    no-op) is tested in tests/test_upsert_pipe_mm.py."""
+    from .operators.dedup import first_per_key
+
     orders = _ld(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-    winners = (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("o_custkey").alias("key"),
-            F.col("o_orderkey").alias("won_orderkey"),
-            _cents(F.col("o_totalprice")).alias("won_cents"),
-        )
+    winners = first_per_key(orders, ["o_custkey"], "o_orderkey").select(
+        F.col("o_custkey").alias("key"),
+        F.col("o_orderkey").alias("won_orderkey"),
+        _cents(F.col("o_totalprice")).alias("won_cents"),
     )
     existing = (
         _ld(spark, sf_dir, "customer")

@@ -3454,16 +3454,6 @@ def d30_group_split(spark, sf_dir):
     )
 
 
-#: Deterministic per-source footer planted on every 7th document (7 is
-#: coprime to the 20-source assignment, so each source gets ~1/7 of its
-#: docs stamped). The natural corpus's max same-source shingle df is 2
-#: (measured at sf0.01), below any sane boilerplate threshold — the
-#: plant gives the operator real template content to find, identically
-#: in the Spark query and the oracle (the planted-data-beats-0-rows
-#: rule; s12_near_pairs_pruned precedent).
-_BOILER_FOOTER = "© %s footer terms apply contact support email"
-
-
 @_register(
     "t13_boilerplate_shingles",
     oracle=f"""

@@ -97,7 +97,7 @@ def _runs_grid(spark, sf_dir):
     )
     return n.select(
         "n_nationkey",
-        F.explode(F.array(F.lit(-0.1), F.lit(0.0), F.lit(0.1))).alias("charge"),
+        echem.charge_grid(),
         lattice.alias("lattice"),
         ions.alias("ion_names"),
     )
@@ -340,10 +340,7 @@ def pipe_external_solver(spark, sf_dir):
     reproduces the child's printf-rounded arithmetic exactly, so even
     the float formatting round-trip is checked."""
     n = _ld(spark, sf_dir, "nation")
-    runs = n.select(
-        "n_name",
-        F.explode(F.array(F.lit(-0.1), F.lit(0.0), F.lit(0.1))).alias("charge"),
-    ).select(
+    runs = n.select("n_name", echem.charge_grid()).select(
         echem.run_key(F.col("n_name"), F.col("charge")).alias("run_id"), "charge"
     )
     return pipe.pipe_solver_stub(runs)
@@ -2233,9 +2230,10 @@ def s02_custom_datasource(spark, sf_dir):
     pruned files are NEVER OPENED (tests/test_datasource.py asserts
     the listing shrinks) — scan I/O proportional to the predicate,
     not the corpus, on a plain directory of text files. Downstream is
-    the reference's exact parse (my_dag.py:152-158): keep
-    FillingsUpdate lines, token-extract mu/nElectrons, last match per
-    file wins (max_by over line_no). The oracle replays the fixture
+    the reference's parse (my_dag.py:152-158) as the pipeline spells
+    it, operators/echem.py::parse_fillings_lines: keep FillingsUpdate
+    lines, extract mu/nElectrons, last match per file wins (max_by
+    over line_no). The oracle replays the fixture
     generator's printf arithmetic from the nation view — a green row
     proves generator → files → connector → parse end-to-end."""
     from .sources.solver_out import (
@@ -2257,15 +2255,8 @@ def s02_custom_datasource(spark, sf_dir):
         .load()
         .filter(F.col("run_id") < "NATION_2")
     )
-    fillings = lines.filter(F.col("value").contains("FillingsUpdate:")).select(
-        "run_id",
-        "line_no",
-        *echem.fillings_mu_ne(F.col("value")),
-    )
-    result = fillings.groupBy("run_id").agg(
-        F.count("*").alias("n_fillings"),
-        F.max_by("mu", F.col("line_no")).alias("mu"),
-        F.max_by("ne", F.col("line_no")).alias("ne"),
+    result = echem.parse_fillings_lines(lines).select(
+        "run_id", "n_fillings", "mu", "ne"
     )
     try:
         result = _literal_result(spark, result)
@@ -2432,7 +2423,7 @@ def x10_stream_custom_source(spark, sf_dir):
     trigger drains every batch, and ``processAllAvailable()`` returns
     once a trigger finds the source empty. Proves the
     streaming layer composes with user-defined sources exactly like
-    built-in ones: same parse expressions as the batch connector row
+    built-in ones: the same parse operator as the batch connector row
     (s02_custom_datasource), same oracle arithmetic, results equal to
     batch on replay (SURVEY §7 streaming-state discipline)."""
     from .sources.solver_out import (
@@ -2471,15 +2462,7 @@ def x10_stream_custom_source(spark, sf_dir):
         .option("batch_files", "7")
         .load()
     )
-    fillings = lines.filter(F.col("value").contains("FillingsUpdate:")).select(
-        "run_id",
-        "line_no",
-        echem.fillings_mu_ne(F.col("value"))[0],
-    )
-    agg = fillings.groupBy("run_id").agg(
-        F.count("*").alias("n_fillings"),
-        F.max_by("mu", F.col("line_no")).alias("mu"),
-    )
+    agg = echem.parse_fillings_lines(lines).select("run_id", "n_fillings", "mu")
     # 100 ms cadence: the corpus is bounded (7 micro-batches), so the
     # trigger interval is pure idle time between prefetched batches —
     # production cadence is a latency/cost knob, not a semantics one

@@ -10,8 +10,8 @@ The reference writes one POSCAR per material/slab in a Python loop
   ``partitionBy`` — a thousand executors write a million "files"
   without driver involvement; dynamic partition overwrite replaces only
   touched keys on re-runs.
-- S2 → ``read_text_runs``: ``spark.read.text`` + ``input_file_name()``
-  keys every line by its source file (the .out scan).
+- S2, the .out scan, is a connector of its own
+  (``sources/solver_out.py``): it keys every line by its run.
 - S3 → ``upsert_parquet`` / ``write_jdbc`` / ``merge_parquet``:
   first-wins conflict-skip as dedup + left-anti append (deterministic,
   re-run idempotent); the JDBC form ships the same frame to a staging
@@ -28,7 +28,6 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..operators.dedup import first_per_key
 from ..operators.storage import release_rdds, tracked_checkpoint
@@ -39,21 +38,6 @@ def write_partitioned(
 ) -> None:
     """S1: key-partitioned parquet sink (one dir per key value)."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def read_text_runs(spark: SparkSession, path_glob: str) -> DataFrame:
-    """S2: text-file scan keyed by source file, with line numbers.
-
-    ``input_file_name()`` + a per-file ``row_number`` reproduce the
-    reference's ``open(outfile); for line in f`` (my_dag.py:153) shape:
-    (file, line_no, value). The window is per-file — at scale each file
-    is small (solver logs), so partitioning by file keeps state tiny.
-    """
-    raw = spark.read.text(path_glob).withColumn("file", F.input_file_name())
-    w = Window.partitionBy("file").orderBy(F.monotonically_increasing_id())
-    return raw.select(
-        "file", F.row_number().over(w).alias("line_no"), F.col("value")
-    )
 
 
 def upsert_parquet(
@@ -310,6 +294,22 @@ def _latest_snapshot(spark: SparkSession, table_root: str) -> tuple[int, str]:
     if not snaps:
         raise KeyError(f"no committed snapshot under {table_root!r}")
     return snaps[-1]
+
+
+def _snapshot_paths(
+    spark: SparkSession, table_root: str, versions: list[int]
+) -> list[str]:
+    """Paths of the committed snapshots ``versions``; raises
+    ``KeyError`` naming any that was never committed or has been
+    vacuumed."""
+    snaps = dict(_committed_snapshots(spark, table_root))
+    missing = [v for v in versions if v not in snaps]
+    if missing:
+        raise KeyError(
+            f"versions {missing} not committed under {table_root!r} "
+            f"(have {sorted(snaps)})"
+        )
+    return [snaps[v] for v in versions]
 
 
 def _commit_snapshot(
@@ -630,16 +630,9 @@ def read_snapshot(
     no committed snapshot, or for a version that was never committed or
     has been vacuumed.
     """
-    latest, head = _latest_snapshot(spark, table_root)
-    if version is None or version == latest:
-        return spark.read.parquet(head)
-    by_version = dict(_committed_snapshots(spark, table_root))
-    if version not in by_version:
-        raise KeyError(
-            f"snapshot {version} not available (retained: "
-            f"{sorted(by_version)})"
-        )
-    return spark.read.parquet(by_version[version])
+    if version is None:
+        return spark.read.parquet(_latest_snapshot(spark, table_root)[1])
+    return spark.read.parquet(*_snapshot_paths(spark, table_root, [version]))
 
 
 def _committed_dvs(spark: SparkSession, table_root: str, version: int):
@@ -686,6 +679,16 @@ def delete_keys_dv(
     return path
 
 
+def _without_dvs(current: DataFrame, dvs) -> DataFrame:
+    """``current`` minus the keys of the deletion-vector sidecars
+    ``dvs`` ([(index, path)]): one broadcast left-anti equi-join on the
+    sidecar columns, which ARE the key projection."""
+    if not dvs:
+        return current
+    doomed = current.sparkSession.read.parquet(*[p for _i, p in dvs]).distinct()
+    return current.join(F.broadcast(doomed), doomed.columns, "left_anti")
+
+
 def read_with_dv(spark: SparkSession, table_root: str) -> DataFrame:
     """Merge-on-read scan: the current snapshot minus every committed
     deletion-vector sidecar for its version. Key columns come from the
@@ -693,12 +696,9 @@ def read_with_dv(spark: SparkSession, table_root: str) -> DataFrame:
     reader needs no out-of-band metadata. One broadcast left-anti
     equi-join; the data side streams through shuffle-free."""
     version, head = _latest_snapshot(spark, table_root)
-    current = spark.read.parquet(head)
-    dvs = _committed_dvs(spark, table_root, version)
-    if not dvs:
-        return current
-    doomed = spark.read.parquet(*[p for _i, p in dvs]).distinct()
-    return current.join(F.broadcast(doomed), doomed.columns, "left_anti")
+    return _without_dvs(
+        spark.read.parquet(head), _committed_dvs(spark, table_root, version)
+    )
 
 
 def compact_dv(
@@ -723,14 +723,7 @@ def compact_dv(
     # snapshot (or take a table lock around compaction — the
     # optimistic-concurrency conflict Delta/Iceberg abort on).
     dvs = _committed_dvs(spark, table_root, version)
-    current = spark.read.parquet(head)
-    if dvs:
-        doomed = spark.read.parquet(*[p for _i, p in dvs]).distinct()
-        cleaned = current.join(
-            F.broadcast(doomed), doomed.columns, "left_anti"
-        )
-    else:
-        cleaned = current
+    cleaned = _without_dvs(spark.read.parquet(head), dvs)
     compacted = _commit_snapshot(cleaned, table_root, version, keep_snapshots)
     # vacuum ONLY the sidecars folded above: they are orphaned the
     # instant the new snapshot commits, and nothing else ever deletes
@@ -764,18 +757,14 @@ def snapshot_changes(
     a real format prunes to changed FILES first, this keeps the
     same contract at snapshot granularity.
 
-    Raises ``ValueError`` when either version is not a committed
+    Raises ``KeyError`` when either version is not a committed
     snapshot (pruning keeps ``keep_snapshots`` — callers that want
     long diffs must retain accordingly)."""
-    snaps = dict(_committed_snapshots(spark, table_root))
-    missing = [v for v in (from_version, to_version) if v not in snaps]
-    if missing:
-        raise ValueError(
-            f"versions {missing} not committed under {table_root!r} "
-            f"(have {sorted(snaps)})"
-        )
-    old = spark.read.parquet(snaps[from_version])
-    new = spark.read.parquet(snaps[to_version])
+    old_path, new_path = _snapshot_paths(
+        spark, table_root, [from_version, to_version]
+    )
+    old = spark.read.parquet(old_path)
+    new = spark.read.parquet(new_path)
     val_cols = [c for c in new.columns if c not in key_cols]
     # Contract checks, not silent coercion: a key-only table would
     # build an empty struct (opaque analyzer error), and a schema-

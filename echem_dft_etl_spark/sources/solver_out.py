@@ -18,15 +18,23 @@ scale:
   corpus) that parquet gets from row-group stats, re-created for a
   directory-of-text-files layout.
 - **Typed projection**: the connector emits ``(run_id, line_no,
-  value)`` rows, so downstream operators never re-derive file identity
-  from paths.
+  value)`` rows — ``run_id`` is the file name without ``.out``,
+  ``line_no`` counts from 0 — so downstream operators never re-derive
+  file identity from paths. The batch reader ships each file as one
+  Arrow RecordBatch. ``operators/echem.py::parse_fillings_lines`` turns
+  these rows into the solver metrics.
 
-The class is built by a FACTORY (closure-defined) rather than at module
-level: Spark pickles the reader to executor workers, and a
-module-level class would serialize by reference — importable only if
-every worker has the repo on PYTHONPATH. The closure-defined class
-serializes by value (cloudpickle), making the connector self-contained
-exactly like the engine's mapInPandas closures.
+A streaming twin (:func:`make_solver_out_stream_datasource`) reads the
+same corpus as a file-drop stream; both readers share one sorted
+listing and one file read (:func:`_corpus_io`).
+
+The classes are built by FACTORIES (closure-defined) rather than at
+module level: Spark pickles the reader to executor workers, and a
+module-level class or function would serialize by reference —
+importable only if every worker has the repo on PYTHONPATH. The
+closure-defined classes and helpers serialize by value (cloudpickle),
+making the connector self-contained exactly like the engine's other
+executor-side closures.
 
 Registration is per-session and idempotent:
 ``spark.dataSource.register(make_solver_out_datasource())``.
@@ -37,6 +45,34 @@ from __future__ import annotations
 
 FORMAT_NAME = "solverout"
 SCHEMA = "run_id string, line_no int, value string"
+#: The solver-output file suffix; a run's id is its file name without it.
+SUFFIX = ".out"
+
+
+def _corpus_io():
+    """``(runs, read_lines)``, the listing and the file read both
+    readers use. Built per call, like the reader classes, so they
+    pickle by value with them (see module docstring)."""
+    import os
+
+    def runs(path: str) -> list[tuple[str, str]]:
+        """[(run_id, file path)] of the ``.out`` files under ``path``,
+        sorted by file name."""
+        return [
+            (n[: -len(SUFFIX)], os.path.join(path, n))
+            for n in sorted(os.listdir(path))
+            if n.endswith(SUFFIX)
+        ]
+
+    def read_lines(path: str) -> list[str]:
+        """The lines of one file, without their newlines."""
+        with open(path, "r", encoding="utf-8") as fh:
+            lines = fh.read().split("\n")
+        if lines and lines[-1] == "":  # trailing newline
+            lines.pop()
+        return lines
+
+    return runs, read_lines
 
 
 def make_solver_out_datasource():
@@ -55,6 +91,8 @@ def make_solver_out_datasource():
         LessThanOrEqual,
     )
 
+    runs, read_lines = _corpus_io()
+
     class SolverOutReader(DataSourceReader):
         """One partition per file; run_id predicates prune the listing."""
 
@@ -62,14 +100,6 @@ def make_solver_out_datasource():
             self.path = options.get("path")
             if not self.path:
                 raise ValueError("solverout source requires option 'path'")
-            self.suffix = options.get("suffix", ".out")
-            # Arrow is the default transfer path: one RecordBatch per
-            # file crosses the Python->JVM boundary as columnar
-            # buffers instead of per-row pickled tuples — the same
-            # ~10-100x batch-vs-row economics as pandas UDFs vs plain
-            # UDFs. option("mode", "rows") keeps the tuple path for
-            # parity testing.
-            self.use_arrow = options.get("mode", "arrow") != "rows"
             # run_id predicates consumed by pushFilters; applied to the
             # file listing in partitions().
             self._pushed = []
@@ -112,45 +142,32 @@ def make_solver_out_datasource():
 
         # -- planning ------------------------------------------------
         def partitions(self):
-            import os
-
-            names = sorted(
-                n
-                for n in os.listdir(self.path)
-                if n.endswith(self.suffix)
-            )
-            parts = []
-            for n in names:
-                run_id = n[: -len(self.suffix)]
-                if self._keep(run_id):
-                    parts.append(InputPartition((run_id, os.path.join(self.path, n))))
+            parts = [
+                InputPartition(run) for run in runs(self.path) if self._keep(run[0])
+            ]
             # Spark requires >= 1 partition; an empty listing yields an
             # empty sentinel partition that read() skips.
             return parts or [InputPartition(None)]
 
         # -- execution -----------------------------------------------
         def read(self, partition):
+            # One RecordBatch per file crosses the Python->JVM boundary
+            # as columnar buffers instead of per-row pickled tuples —
+            # the same ~10-100x batch-vs-row economics as pandas UDFs
+            # vs plain UDFs.
             if partition.value is None:
                 return
-            run_id, path = partition.value
-            if self.use_arrow:
-                import pyarrow as pa
+            import pyarrow as pa
 
-                with open(path, "r", encoding="utf-8") as fh:
-                    lines = fh.read().split("\n")
-                if lines and lines[-1] == "":  # trailing newline
-                    lines.pop()
-                yield pa.record_batch(
-                    {
-                        "run_id": pa.array([run_id] * len(lines), pa.string()),
-                        "line_no": pa.array(range(len(lines)), pa.int32()),
-                        "value": pa.array(lines, pa.string()),
-                    }
-                )
-                return
-            with open(path, "r", encoding="utf-8") as fh:
-                for i, line in enumerate(fh):
-                    yield (run_id, i, line.rstrip("\n"))
+            run_id, path = partition.value
+            lines = read_lines(path)
+            yield pa.record_batch(
+                {
+                    "run_id": pa.array([run_id] * len(lines), pa.string()),
+                    "line_no": pa.array(range(len(lines)), pa.int32()),
+                    "value": pa.array(lines, pa.string()),
+                }
+            )
 
     class SolverOutDataSource(DataSource):
         @classmethod
@@ -255,39 +272,29 @@ def make_solver_out_stream_datasource():
     class from the batch connector so each pickles only what it uses;
     both register under their own format name.
     """
-    import os
-
     from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+    runs, read_lines = _corpus_io()
 
     class SolverOutStreamReader(SimpleDataSourceStreamReader):
         def __init__(self, options):
             self.path = options.get("path")
             if not self.path:
                 raise ValueError("solverout_stream requires option 'path'")
-            self.suffix = options.get("suffix", ".out")
             self.batch_files = int(options.get("batch_files", "5"))
 
-        def _listing(self):
-            return sorted(
-                n for n in os.listdir(self.path) if n.endswith(self.suffix)
-            )
-
-        def _rows(self, names):
-            for n in names:
-                run_id = n[: -len(self.suffix)]
-                with open(
-                    os.path.join(self.path, n), "r", encoding="utf-8"
-                ) as fh:
-                    for i, line in enumerate(fh):
-                        yield (run_id, i, line.rstrip("\n"))
+        @staticmethod
+        def _rows(listed):
+            for run_id, path in listed:
+                for i, line in enumerate(read_lines(path)):
+                    yield (run_id, i, line)
 
         def initialOffset(self):
             return {"files_done": 0}
 
         def read(self, start):
-            names = self._listing()
             done = int(start["files_done"])
-            take = names[done : done + self.batch_files]
+            take = runs(self.path)[done : done + self.batch_files]
             # a materialized list_iterator, not a generator: the
             # simple-reader prefetch cache copy.copy()s the returned
             # iterator (generators are uncopyable) and later next()s
@@ -299,9 +306,8 @@ def make_solver_out_stream_datasource():
             return iter(list(self._rows(take))), {"files_done": done + len(take)}
 
         def readBetweenOffsets(self, start, end):
-            names = self._listing()
             return self._rows(
-                names[int(start["files_done"]) : int(end["files_done"])]
+                runs(self.path)[int(start["files_done"]) : int(end["files_done"])]
             )
 
         def commit(self, end):

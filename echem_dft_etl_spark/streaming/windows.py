@@ -155,15 +155,6 @@ def session_windows(
     )
 
 
-def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming stateful dedup (X10): drop duplicate event_ids whose
-    duplicates arrive within the watermark horizon — the streaming
-    analogue of the first-wins upsert (Q16)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
 def _run_stream(
     spark: SparkSession, start: Callable[[], StreamingQuery]
 ) -> StreamingQuery:

@@ -62,7 +62,7 @@ SURVEY_IDS: dict[str, str] = {
 #: ids intentionally not covered by a driver-checked query, with why.
 NON_QUERY_IDS: dict[str, str] = {
     "S1": "sink — `sources/sinks.py::write_partitioned`, partition-pruning plan test in `tests/test_plans.py`",
-    "S2": "source — `sources/sinks.py::read_text_runs`, tested in `tests/test_pipeline_e2e.py`",
+    "S2": "source — the `sources/solver_out.py` connector, tested in `tests/test_datasource.py`",
     "S4": "sink — `sources/sinks.py::append_report`, tested in `tests/test_pipeline_e2e.py`",
 }
 

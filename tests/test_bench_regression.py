@@ -52,6 +52,8 @@ from pathlib import Path
 
 import pytest
 
+from bench import current_round
+
 REPO = Path(__file__).resolve().parent.parent
 BASELINE_PATH = REPO / "BENCH_BASELINE.json"
 DETAIL_PATH = REPO / "BENCH_DETAIL.json"
@@ -271,17 +273,6 @@ def test_fingerprint_gate_passes_like_for_like():
     )
 
 
-def _current_round() -> int:
-    import re
-
-    rounds = [
-        int(m.group(1))
-        for f in REPO.glob("CORRECTNESS_r*.json")
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", f.name))
-    ]
-    return (max(rounds) + 1) if rounds else 1
-
-
 def calm_probe_minima(round_n: int) -> dict[str, float]:
     """Per-query min over THIS round's committed calm-probe artifacts
     (``CALMPROBE_r{N}*.json``). The calm probe is the established
@@ -360,7 +351,7 @@ def test_no_regressions_vs_committed_best_ever():
         pytest.skip(f"artifact not comparable to the baseline: {mismatch}")
     hits = find_regressions(detail, baseline)
     hits, _cleared = clear_by_calm_evidence(
-        hits, calm_probe_minima(_current_round())
+        hits, calm_probe_minima(current_round())
     )
     assert not hits, (
         "per-query bench regressions vs committed best-ever "

@@ -230,10 +230,13 @@ def test_stream_reader_offsets_partition_the_listing(fixture_path):
     assert off == {"files_done": 25}
     assert len({r[0] for r in seen}) == 25
     # whole corpus, line-exact: equals the batch connector's rows
-    # (tuple mode — the arrow default yields RecordBatches)
-    batch_rdr = _reader(fixture_path, mode="rows")
+    # (unpacked from its per-file RecordBatches)
+    batch_rdr = _reader(fixture_path)
     batch_rows = [
-        r for p in batch_rdr.partitions() for r in batch_rdr.read(p)
+        tuple(r.values())
+        for p in batch_rdr.partitions()
+        for b in batch_rdr.read(p)
+        for r in b.to_pylist()
     ]
     assert sorted(seen) == sorted(batch_rows)
 
@@ -246,32 +249,6 @@ def test_stream_reader_replay_is_deterministic(fixture_path):
     # a replayed range never overlaps its neighbors
     before = list(rdr.readBetweenOffsets({"files_done": 0}, {"files_done": 4}))
     assert {r[0] for r in before}.isdisjoint({r[0] for r in first})
-
-
-def test_arrow_and_row_modes_identical(spark, fixture_path):
-    """The connector's Arrow RecordBatch fast path returns exactly the
-    per-row tuple path's rows (mode is a transfer detail, not a
-    semantic)."""
-    from echem_dft_etl_spark.sources.solver_out import make_solver_out_datasource
-
-    spark.dataSource.register(make_solver_out_datasource())
-
-    def rows(mode):
-        df = (
-            spark.read.format("solverout")
-            .option("path", fixture_path)
-            .option("mode", mode)
-            .load()
-        )
-        return sorted((r.run_id, r.line_no, r.value) for r in df.collect())
-
-    prev = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        arrow, tuples = rows("arrow"), rows("rows")
-    finally:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", prev)
-    assert arrow == tuples and len(arrow) > 100
 
 
 def test_stream_foreachbatch_into_report_sink(spark, tmp_path):

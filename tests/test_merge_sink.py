@@ -425,7 +425,7 @@ def test_snapshot_changes_rejects_pruned_version(spark, tmp_path):
         base.withColumn("v", F.col("v") + 1), root, ["k"], "k",
         keep_snapshots=1,
     )
-    with pytest.raises(ValueError, match=r"versions \[1\].*have \[2\]"):
+    with pytest.raises(KeyError, match=r"versions \[1\].*have \[2\]"):
         snapshot_changes(spark, root, 1, 2, ["k"])
 
 

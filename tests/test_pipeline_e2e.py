@@ -21,7 +21,6 @@ from echem_dft_etl_spark.pipeline import (
 )
 from echem_dft_etl_spark.sources.sinks import (
     append_report,
-    read_text_runs,
     upsert_parquet,
 )
 
@@ -180,19 +179,6 @@ def test_upsert_leaves_no_pinned_storage(spark, tmp_path, monkeypatch):
     assert sorted(r.MP_id for r in spark.read.parquet(path).collect()) == [
         "a", "b",
     ]
-
-
-def test_read_text_runs_lines(spark, tmp_path):
-    d = tmp_path / "outs"
-    d.mkdir()
-    (d / "s1_0.0.out").write_text("alpha\nbeta\n")
-    (d / "s1_0.1.out").write_text("gamma\n")
-    df = read_text_runs(spark, str(d))
-    pdf = df.toPandas()
-    assert set(df.columns) == {"file", "line_no", "value"}
-    by_file = pdf.groupby(pdf.file.str.split("/").str[-1])
-    assert sorted(by_file.get_group("s1_0.0.out").line_no) == [1, 2]
-    assert list(by_file.get_group("s1_0.1.out").value) == ["gamma"]
 
 
 def test_append_report(spark, tmp_path):

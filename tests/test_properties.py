@@ -2037,7 +2037,7 @@ def test_triangle_counts_match_bruteforce(spark):
     pairs = spark.createDataFrame(edges, "a long, b long")
     got = {
         r["v"]: r["n_triangles"]
-        for r in triangle_counts(pairs, checkpoint=True).collect()
+        for r in triangle_counts(pairs).collect()
     }
     assert got == want
     assert sum(want.values()) > 30, "fixture too sparse to prove anything"
