@@ -42,12 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-# Storage lifecycle lives in operators/storage.py (public API); the
-# underscore aliases remain for this module's historical call sites.
-from .storage import persistent_rdd_ids as _persistent_rdd_ids  # noqa: F401
-from .storage import release_rdds as _release_rdds
-from .storage import scoped_shuffle_width
-from .storage import tracked_checkpoint as _tracked_checkpoint
+from .storage import CheckpointScope, scoped_shuffle_width
 
 
 def connected_components(
@@ -96,43 +91,30 @@ def connected_components(
     # MinHash pipeline per iteration (measured: ~2s of the per-round
     # cost at sf0.1; at 100 TB it would dominate everything).
     spark = vertices.sparkSession
-    # Storage discipline: every checkpoint's pinned blocks are released
-    # as soon as they are superseded (previous round) or on exit (edge
-    # set); only the FINAL labels checkpoint — which the returned frame
-    # reads — stays pinned. All checkpoints here are materialized
-    # eagerly, so releasing predecessors never recomputes lineage.
-    sym_ids: list = []
-    # The union's arms would otherwise each recompute the caller's
-    # edge lineage (for duplicate_clusters that is the whole MinHash
-    # pipeline — twice, inside one materialization job): pin the edge
-    # projection first, symmetrize FROM the pin, release the pin once
-    # sym is materialized.
-    base_ids: list = []
-    base = _tracked_checkpoint(
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        ),
-        base_ids,
-    )
-
-    prev_ids: list = []
-    labels = _tracked_checkpoint(
-        vertices.select(F.col(id_col).alias("v"), F.col(id_col).alias("lbl")),
-        prev_ids,
-    )
-    # Size the LOOP's exchanges to the graph, not the session default
-    # (storage.scoped_shuffle_width; measured 14.8 s → 8.9 s for an
-    # 8-round run at sf0.1 just from narrowing idle stages, and 24 s
-    # vs 9 s at width 8 vs width 1 on the same graph). The count is
-    # one cheap job over the already-materialized checkpoint (the same
-    # authoring-time-probe class as grouped_percentiles_with_guard).
-    # try/finally: failures (no-fixpoint, a mid-round task error) must
-    # not leak the edge set or the in-flight round's blocks — leaking
-    # on the error path would reintroduce the exact session-lifetime
-    # storage growth this bookkeeping exists to prevent; the width
-    # restore rides the scoped_shuffle_width context manager.
-    converged = False
-    try:
+    # Storage discipline: each checkpoint is released as soon as it is
+    # superseded (previous round) or on exit (edge set); only the FINAL
+    # labels — which the returned frame reads — stay pinned. All
+    # checkpoints are eager, so releasing predecessors never recomputes
+    # lineage.
+    with CheckpointScope(spark) as ck:
+        # The union's arms would otherwise each recompute the caller's
+        # edge lineage (for duplicate_clusters that is the whole MinHash
+        # pipeline — twice, inside one materialization job): pin the
+        # edge projection first, symmetrize FROM the pin, release the
+        # pin once sym is materialized.
+        base = ck.pin(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        )
+        labels = ck.pin(
+            vertices.select(F.col(id_col).alias("v"), F.col(id_col).alias("lbl"))
+        )
+        # Size the LOOP's exchanges to the graph, not the session
+        # default (storage.scoped_shuffle_width; measured 14.8 s → 8.9 s
+        # for an 8-round run at sf0.1 just from narrowing idle stages,
+        # and 24 s vs 9 s at width 8 vs width 1 on the same graph). The
+        # count is one cheap job over the already-materialized
+        # checkpoint (the same authoring-time-probe class as
+        # grouped_percentiles_with_guard).
         with scoped_shuffle_width(spark, 2 * base.count()) as loop_width:
             # Symmetrized edges PLUS one self-loop per vertex: the
             # self-loop folds the vertex's own label into the neighbor-min
@@ -142,7 +124,7 @@ def connected_components(
             # PRESERVES that partitioning, so every round's edge side
             # joins exchange-free; only the (much smaller after
             # contraction) label side shuffles.
-            sym = _tracked_checkpoint(
+            sym = ck.pin(
                 base.union(
                     base.select(
                         F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -151,10 +133,9 @@ def connected_components(
                 .union(labels.select(F.col("v").alias("src"), F.col("v").alias("dst")))
                 .repartition(*(
                     (loop_width, "src") if loop_width is not None else ("src",)
-                )),
-                sym_ids,
+                ))
             )
-            _release_rdds(spark, base_ids)
+            ck.release(base)
 
             # Labels are per-vertex MONOTONE non-increasing (relax takes a
             # min that includes self; jump follows pointers downward), so
@@ -183,18 +164,13 @@ def connected_components(
                 # Pointer jump: label(v) <- label(label(v)). Labels are
                 # always live vertex ids, so the self-join total-resolves.
                 m = cur.select(F.col("v").alias("mv"), F.col("lbl").alias("mlbl"))
-                round_ids: list = []
-                jumped = _tracked_checkpoint(
+                jumped = ck.pin(
                     cur.join(m, cur["lbl"] == m["mv"]).select(
                         "v", F.col("mlbl").alias("lbl")
-                    ),
-                    round_ids,
+                    )
                 )
-                # From here until the promote below, BOTH rounds' ids are
-                # in prev_ids, so a throwing action (the stats join needs
-                # the previous round's blocks alive) cannot leak either.
-                prev_ids.extend(round_ids)
                 if round_stats is not None:
+                    # reads the previous round's blocks: before release
                     changed = (
                         jumped.join(
                             labels.select("v", F.col("lbl").alias("prev_lbl")),
@@ -203,10 +179,7 @@ def connected_components(
                         .filter(F.col("lbl") != F.col("prev_lbl"))
                         .count()
                     )
-                _release_rdds(
-                    spark, [i for i in prev_ids if i not in round_ids]
-                )
-                prev_ids = round_ids
+                ck.release(labels)
                 labels = jumped
                 s = jumped.agg(lbl_sum).collect()[0][0]
                 if round_stats is not None:
@@ -218,18 +191,13 @@ def connected_components(
                         }
                     )
                 if s == prev_sum:
-                    converged = True
                     break
                 prev_sum = s
-            if not converged:
+            else:
                 raise RuntimeError(
                     f"connected_components: no fixpoint in {max_rounds} rounds"
                 )
-    finally:
-        _release_rdds(spark, sym_ids)
-        _release_rdds(spark, base_ids)  # no-op unless sym build failed
-        if not converged:  # error path: the last round's blocks are dead too
-            _release_rdds(spark, prev_ids)
+        ck.keep(labels)
     return labels.select(F.col("v").alias(id_col), F.col("lbl").alias("cluster_id"))
 
 
@@ -279,56 +247,47 @@ def forest_root_depth(
 
     Same storage discipline as :func:`connected_components`: per-round
     eager localCheckpoint (else round k's plan contains 2^k state
-    scans), previous round's blocks released immediately, error paths
-    release the in-flight round. Every round is a hash equi-join on
-    node ids — no broadcast of data-sized frames; skewed fan-in (a hub
-    parent) is ordinary join skew, absorbed by AQE.
+    scans), previous round's blocks released immediately. Every round
+    is a hash equi-join on node ids — no broadcast of data-sized
+    frames; skewed fan-in (a hub parent) is ordinary join skew,
+    absorbed by AQE.
     """
-    spark = nodes.sparkSession
-    prev_ids: list = []
-    state = _tracked_checkpoint(
-        nodes.select(
-            F.col(id_col).alias("v"),
-            F.coalesce(F.col(parent_col), F.col(id_col)).alias("anc"),
-            F.when(F.col(parent_col).isNull(), 0)
-            .otherwise(1)
-            .cast("bigint")
-            .alias("d"),
-        ),
-        prev_ids,
-    )
-    converged = False
-    try:
+    with CheckpointScope(nodes.sparkSession) as ck:
+        pinned = state = ck.pin(
+            nodes.select(
+                F.col(id_col).alias("v"),
+                F.coalesce(F.col(parent_col), F.col(id_col)).alias("anc"),
+                F.when(F.col(parent_col).isNull(), 0)
+                .otherwise(1)
+                .cast("bigint")
+                .alias("d"),
+            )
+        )
         for _round in range(max_rounds):
             m = state.select(
                 F.col("v").alias("mv"),
                 F.col("anc").alias("manc"),
                 F.col("d").alias("md"),
             )
-            round_ids: list = []
-            nxt = _tracked_checkpoint(
+            nxt = ck.pin(
                 state.join(m, state["anc"] == m["mv"]).select(
                     "v",
                     F.col("manc").alias("anc"),
                     (F.col("d") + F.col("md")).alias("d"),
                     (F.col("md") > 0).alias("_moved"),
-                ),
-                round_ids,
+                )
             )
-            _release_rdds(spark, prev_ids)
-            prev_ids = round_ids
+            ck.release(pinned)
+            pinned = nxt
             changed = nxt.filter(F.col("_moved")).count()
             state = nxt.drop("_moved")
             if changed == 0:
-                converged = True
                 break
-        if not converged:
+        else:
             raise RuntimeError(
                 f"forest_root_depth: no fixpoint in {max_rounds} rounds"
             )
-    finally:
-        if not converged:
-            _release_rdds(spark, prev_ids)
+        ck.keep(pinned)
     return state.select(
         F.col("v").alias(id_col),
         F.col("anc").alias("root"),
@@ -394,7 +353,6 @@ def integer_pagerank(
     spark = edges.sparkSession
     base = node_mass * (damp_den - damp_num) // damp_den
 
-    owned: list = []
     # SINGLE edge-scale materialization (VERDICT r10 item 1): the
     # caller's edge plan (often a scan + explode + distinct) is pinned
     # exactly once, as-is — no pre-partitioning; each round's join
@@ -409,30 +367,28 @@ def integer_pagerank(
     # so it rides the mass frame through the loop instead of being
     # joined back onto the edge list (the r10 annotate-the-edges
     # layout paid a second edge-scale checkpoint for it, +2 s setup
-    # at sf0.1).
-    ed = _tracked_checkpoint(edges, owned)
-    n_edge_rows = ed.count()
-    prev_ids: list = []
-    ok = False
-    try:
+    # at sf0.1). The edge list and node set are loop statics, released
+    # on exit; the final mass checkpoint backs the returned frame.
+    with CheckpointScope(spark) as ck:
+        ed = ck.pin(edges)
         # Same loop-width discipline as connected_components: size the
         # per-round exchanges to the edge frame, restored on exit
         # (serial-planning assumption documented in
-        # storage.scoped_shuffle_width). The count above is one cheap
-        # job over the already-pinned blocks.
-        with scoped_shuffle_width(spark, n_edge_rows):
+        # storage.scoped_shuffle_width). The count is one cheap job
+        # over the already-pinned blocks.
+        with scoped_shuffle_width(spark, ed.count()):
             # node set AND out-degree in one pass over the pinned
             # blocks, built at loop width so the per-round left join
             # stays narrow
-            nodes = _tracked_checkpoint(
+            nodes = ck.pin(
                 ed.groupBy(F.col("src").alias("v")).agg(
                     F.count(F.lit(1)).alias("outdeg")
-                ),
-                owned,
+                )
             )
             mass = nodes.select(
                 "v", F.lit(node_mass).cast("bigint").alias("mass"), "outdeg"
             )
+            pinned = None
             for i in range(iterations):
                 shares = ed.join(
                     mass, ed["src"] == mass["v"]
@@ -461,20 +417,12 @@ def integer_pagerank(
                 # superseded checkpoint are dead as soon as this
                 # returns
                 if i % 3 == 2 or i == iterations - 1:
-                    round_ids: list = []
-                    mass = _tracked_checkpoint(mass, round_ids)
-                    _release_rdds(spark, prev_ids)
-                    prev_ids = round_ids
-        ok = True
-        # outdeg was loop plumbing, never part of the contract
-        return mass.select("v", "mass")
-    finally:
-        # statics (edge list, node/outdeg set) are never part of the
-        # returned frame — always released; the FINAL round's blocks
-        # back the returned frame and stay, except on failure
-        _release_rdds(spark, owned)
-        if not ok:
-            _release_rdds(spark, prev_ids)
+                    mass = ck.pin(mass)
+                    ck.release(pinned)
+                    pinned = mass
+        ck.keep(mass)
+    # outdeg was loop plumbing, never part of the contract
+    return mass.select("v", "mass")
 
 
 def co_order_pairs(lineitem: DataFrame) -> DataFrame:
@@ -555,11 +503,8 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     ``adj`` alone (|V| rows of O(sqrt(m)) arrays ≈ |E| ids).
     """
     spark = pairs.sparkSession
-    pair_ids: list = []
-    result_ids: list = []  # adj: backs the returned frame
-    ok = False
-    try:
-        pairs = _tracked_checkpoint(pairs, pair_ids)
+    with CheckpointScope(spark) as ck:
+        pairs = ck.pin(pairs)
         # one cheap job over the pinned blocks; sizes the
         # adjacency-build narrowing below
         n_pair_rows = pairs.count()
@@ -592,7 +537,7 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
         # returned closure plan executes later, at the caller's
         # session width.
         with scoped_shuffle_width(spark, n_pair_rows) as closure_width:
-            adj = _tracked_checkpoint(adj, result_ids)
+            adj = ck.keep(ck.pin(adj))
 
         # Edge probe derived FROM adj: (u, N+(u), v) per oriented edge —
         # the u-side adjacency rides along map-side, so the closure is
@@ -637,18 +582,9 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
         corners = tri_base.select(
             F.explode("apexes").alias("w"), "u", "v"
         ).select(F.explode(F.array("u", "v", "w")).alias("v"))
-        ok = True
         return corners.groupBy("v").agg(
             F.count("*").cast("bigint").alias("n_triangles")
         )
-    finally:
-        # pairs is no longer in the returned frame's lineage (adj is
-        # the checkpoint root) — always release it; on failure also
-        # release the frames that would have backed the returned
-        # frame, or they leak for the session lifetime.
-        _release_rdds(spark, pair_ids)
-        if not ok:
-            _release_rdds(spark, result_ids)
 
 
 def bfs_distances(
@@ -663,7 +599,7 @@ def bfs_distances(
     round is appended — ``{"round", "frontier"}`` (newly discovered
     nodes that round) — so harnesses (scripts/scale_probe.py) can
     record convergence shape without re-running the loop; the counts
-    are the ones the loop already computes for eager materialization.
+    are the ones the loop already computes for its exit probe.
 
     ``edges`` is an UNDIRECTED canonical edge list (a < b, distinct);
     ``seeds`` a single-column frame of source node ids (hops 0 whether
@@ -684,13 +620,13 @@ def bfs_distances(
 
     Storage discipline matches the sibling loops: the static edge list
     is checkpointed once and released on exit; each layer is
-    checkpointed (its ``count()`` doubles as the eager materialization
-    AND the empty-frontier early-exit probe — convergence needs a
-    driver-visible boolean, same class as CC's delta count), and layer
-    blocks BACK the returned frame, so they are released only on
-    failure. Loop exchanges are sized to the edge list, not the
-    session default (idle-stage overhead dominates small-graph rounds
-    otherwise), and the width is restored on exit.
+    checkpointed, and its ``count()`` over the pinned blocks is the
+    empty-frontier early-exit probe — convergence needs a
+    driver-visible boolean, same class as CC's delta count. Non-empty
+    layers BACK the returned frame and stay pinned. Loop exchanges are
+    sized to the edge list, not the session default (idle-stage
+    overhead dominates small-graph rounds otherwise), and the width is
+    restored on exit.
 
     At 100 TB the frontier join is the textbook BSP BFS (Pregel's
     shape on vanilla DataFrames); hub fan-out is AQE-split, and the
@@ -703,61 +639,45 @@ def bfs_distances(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionAll(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
 
-    statics: list = []
-    layer_ids: list = []
-    ok = False
-    try:
-        sym = _tracked_checkpoint(sym, statics)
-        n_sym_rows = sym.count()
+    with CheckpointScope(spark) as ck:
+        sym = ck.pin(sym)
         # Width discipline (storage.scoped_shuffle_width): the eager
         # work is the per-round frontier-expansion checkpoints inside
         # this block; the returned union-of-layers plan executes
         # later, at the caller's session width, reading pinned blocks.
-        with scoped_shuffle_width(spark, n_sym_rows):
-            frontier = _tracked_checkpoint(
-                seeds.select(
-                    F.col(seeds.columns[0]).cast("bigint").alias("v"),
-                    F.lit(0).cast("bigint").alias("hops"),
-                ).distinct(),
-                layer_ids,
+        with scoped_shuffle_width(spark, sym.count()):
+            frontier = ck.keep(
+                ck.pin(
+                    seeds.select(
+                        F.col(seeds.columns[0]).cast("bigint").alias("v"),
+                        F.lit(0).cast("bigint").alias("hops"),
+                    ).distinct()
+                )
             )
-            frontier.count()
             layers = [frontier]
             visited = frontier.select("v")
             for i in range(1, max_hops + 1):
-                round_ids: list = []
-                nxt = _tracked_checkpoint(
+                nxt = ck.pin(
                     frontier.select("v")
                     .join(sym, F.col("v") == F.col("src"))
                     .select(F.col("dst").alias("v"))
                     .distinct()
                     .join(visited, "v", "left_anti")
-                    .select("v", F.lit(i).cast("bigint").alias("hops")),
-                    round_ids,
+                    .select("v", F.lit(i).cast("bigint").alias("hops"))
                 )
-                try:
-                    n_new = nxt.count()  # eager + convergence probe in one
-                except Exception:
-                    _release_rdds(spark, round_ids)
-                    raise
+                n_new = nxt.count()  # the empty-frontier probe
                 if round_stats is not None:
                     round_stats.append({"round": i, "frontier": n_new})
                 if n_new == 0:
-                    _release_rdds(spark, round_ids)
+                    ck.release(nxt)
                     break
-                layer_ids.extend(round_ids)
-                layers.append(nxt)
+                layers.append(ck.keep(nxt))
                 visited = visited.unionAll(nxt.select("v"))
                 frontier = nxt
         out = layers[0]
         for lay in layers[1:]:
             out = out.unionAll(lay)
-        ok = True
         return out
-    finally:
-        _release_rdds(spark, statics)
-        if not ok:
-            _release_rdds(spark, layer_ids)
 
 
 def kcore_nodes(
@@ -800,10 +720,8 @@ def kcore_nodes(
     require_at_least("k", k, 1)
     require_at_least("rounds", rounds, 1)
     spark = pairs.sparkSession
-    prev_ids: list = []
-    ok = False
-    try:
-        ed = _tracked_checkpoint(pairs, prev_ids)
+    with CheckpointScope(spark) as ck:
+        ed = pinned = ck.pin(pairs)
         n_edge_rows = ed.count()
         with scoped_shuffle_width(spark, n_edge_rows):
             for i in range(rounds):
@@ -836,10 +754,9 @@ def kcore_nodes(
                 # per round, and the frame only ever SHRINKS, so later
                 # materializations are cheap
                 if i % 2 == 1 or i == rounds - 1:
-                    round_ids: list = []
-                    ed = _tracked_checkpoint(ed, round_ids)
-                    _release_rdds(spark, prev_ids)
-                    prev_ids = round_ids
+                    ed = ck.pin(ed)
+                    ck.release(pinned)
+                    pinned = ed
                     # the count over the fresh blocks doubles as the
                     # convergence probe (docstring: equal counts
                     # across any gap prove the fixpoint, so breaking
@@ -853,12 +770,9 @@ def kcore_nodes(
                 .groupBy("v")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
             )
-        ok = True
-        # the FINAL round's blocks back the returned frame and stay
+        # the FINAL round's blocks back the returned frame
+        ck.keep(ed)
         return out
-    finally:
-        if not ok:
-            _release_rdds(spark, prev_ids)
 
 
 def coreness_grid(
@@ -888,10 +802,9 @@ def coreness_grid(
     stops outright.
 
     Storage discipline matches kcore_nodes: per-grade checkpoints
-    every second round with tracked release of superseded blocks; the
-    blocks backing each grade's survivor frame (and the base edges,
-    which back the grade-0 node set) live until the caller drops the
-    returned frame.
+    every second round, superseded blocks released; the blocks backing
+    each grade's survivor frame (and the base edges, which back the
+    grade-0 node set) stay pinned for the returned frame.
     """
     require_at_least("rounds", rounds, 1)
     if not ks or list(ks) != sorted(set(ks)) or min(ks) < 1:
@@ -899,8 +812,6 @@ def coreness_grid(
             f"ks must be strictly ascending positive grades, got {ks!r}"
         )
     spark = pairs.sparkSession
-    keep_ids: list = []  # blocks the RETURNED frame depends on
-    ok = False
 
     # no per-frame distinct(): every (v, grade) stream feeds ONE final
     # max-aggregate whose map-side partial combine collapses duplicates
@@ -909,15 +820,15 @@ def coreness_grid(
     def _nodes(ed):
         return ed.select(F.explode(F.array("a", "b")).alias("v"))
 
-    try:
-        ed = _tracked_checkpoint(pairs, keep_ids)
+    with CheckpointScope(spark) as ck:
+        ed = ck.keep(ck.pin(pairs))
         n_edges = ed.count()
         grades = [_nodes(ed).select("v", F.lit(0).alias("grade"))]
         with scoped_shuffle_width(spark, n_edges):
             for k in ks:
                 if n_edges == 0:
                     break  # higher grades peel an empty graph: empty
-                loop_ids: list = []
+                pinned = None
                 cur = n_edges
                 for i in range(rounds):
                     deg = (
@@ -936,16 +847,15 @@ def coreness_grid(
                         drop.select(F.col("v").alias("b")), "b", "left_anti"
                     )
                     if i % 2 == 1 or i == rounds - 1:
-                        round_ids: list = []
-                        ed = _tracked_checkpoint(ed, round_ids)
-                        _release_rdds(spark, loop_ids)
-                        loop_ids = round_ids
+                        ed = ck.pin(ed)
+                        ck.release(pinned)
+                        pinned = ed
                         n_now = ed.count()
                         if n_now == cur:
                             break
                         cur = n_now
                 # this grade's final blocks back its survivor frame
-                keep_ids.extend(loop_ids)
+                ck.keep(ed)
                 n_edges = cur
                 if cur > 0:
                     grades.append(
@@ -954,14 +864,9 @@ def coreness_grid(
             out = grades[0]
             for g in grades[1:]:
                 out = out.unionByName(g)
-            out = out.groupBy("v").agg(
+            return out.groupBy("v").agg(
                 F.max("grade").cast("bigint").alias("coreness")
             )
-        ok = True
-        return out
-    finally:
-        if not ok:
-            _release_rdds(spark, keep_ids)
 
 
 def label_communities(pairs: DataFrame, rounds: int = 3) -> DataFrame:

@@ -30,6 +30,7 @@ import numpy as np
 import pandas as pd
 
 from .guards import MAX_I64_BITS, require_at_least, require_in_range
+from .storage import CheckpointScope
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -943,30 +944,31 @@ def containment_pairs(
     shingle index feeds THREE branches (sizes, both posting-list join
     arms) and ``sized`` feeds both direction branches of the final
     union — without it each branch re-shingles the corpus / re-runs
-    the intersection join. Pinned storage is the shingle index and the
-    candidate-pair frame, the algorithm's own working set.
+    the intersection join. The returned frame reads only ``sized``, so
+    the shingle index is released on exit and ``sized`` stays pinned.
     """
     shingled = doc_shingles(docs, shingle_n)
     if max_df is not None:
         shingled = _df_cap(shingled, max_df)
-    shingled = shingled.localCheckpoint(eager=True)
-    sizes = shingled.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    sa = shingled.select(F.col("doc_id").alias("a"), "shingle")
-    sb = shingled.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        sa.join(sb, "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sized = inter.join(
-        sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na")),
-        "a",
-    ).join(
-        sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb")),
-        "b",
-    )
-    sized = sized.localCheckpoint(eager=True)
+    with CheckpointScope(docs.sparkSession) as ck:
+        shingled = ck.pin(shingled)
+        sizes = shingled.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+        sa = shingled.select(F.col("doc_id").alias("a"), "shingle")
+        sb = shingled.select(F.col("doc_id").alias("b"), "shingle")
+        inter = (
+            sa.join(sb, "shingle")
+            .filter(F.col("a") < F.col("b"))
+            .groupBy("a", "b")
+            .agg(F.count("*").alias("n_inter"))
+        )
+        sized = inter.join(
+            sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na")),
+            "a",
+        ).join(
+            sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb")),
+            "b",
+        )
+        sized = ck.keep(ck.pin(sized))
     fwd = sized.select(
         "a",
         "b",

@@ -42,7 +42,7 @@ from pyspark.sql.window import Window
 from .functions.hashing import MOD32, det_hash_i64, det_hash_str
 from .operators import echem
 from .operators.pipe import pipe_solver_stub
-from .operators.storage import release_rdds, tracked_checkpoint
+from .operators.storage import CheckpointScope
 from .operators.udfs import serialize_run_expr
 from .sources.sinks import append_report, upsert_parquet, write_partitioned
 
@@ -220,16 +220,16 @@ def run_reference_pipeline(
     array<array<double>>, ion_names array<string>, cell00, cell11).
     Side effects mirror the reference's sinks under ``out_dir``.
     """
-    owned: list = []  # storage ids of this call's checkpoints
-    try:
+    # the returned table is a parquet read-back, independent of the
+    # checkpoints, which are all released on exit
+    with CheckpointScope(spark) as ck:
         # Q1/Q3: pushed predicate + projection, scanned ONCE: the bulk
         # store, the sample, the slab store, the decks, the solver input
         # and the geometry all read the checkpoint, not the source
-        bulks = tracked_checkpoint(
+        bulks = ck.pin(
             materials.filter(F.col("chemsys") == "V-O").select(
                 "material_id", "lattice", "ion_names", "cell00", "cell11"
-            ),
-            owned,
+            )
         )
         # S1: persist the bulk store partitioned by material
         write_partitioned(bulks, f"{out_dir}/bulk_store", ["material_id"])
@@ -284,9 +284,7 @@ def run_reference_pipeline(
         # consumers (upsert write + report count): without it the whole
         # upstream pipeline — including the external-solver pipe stage —
         # executes once PER consumer.
-        result = tracked_checkpoint(
-            echem.electrochem_descriptors(metrics, geometry), owned
-        )
+        result = ck.pin(echem.electrochem_descriptors(metrics, geometry))
 
         # Q16/S3: first-wins upsert into the results table
         table = upsert_parquet(
@@ -303,10 +301,6 @@ def run_reference_pipeline(
             f"{out_dir}/report",
             [f"## run: {n} slab(s) analyzed", "![plot](visualize/echem.png)"],
         )
-    finally:
-        # the returned table is a parquet read-back, independent of
-        # the released blocks
-        release_rdds(spark, owned)
     return table
 
 

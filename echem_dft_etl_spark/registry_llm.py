@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from .functions.hashing import KNUTH, MERSENNE31, MOD32, duckdb_det_hash_i64
 from .operators import dedup, similarity, textstats
+from .operators.storage import CheckpointScope
 from .registry import _register, _ld
 
 # --- shared DuckDB fragments (same conventions as functions/text.py) --
@@ -1957,42 +1958,43 @@ def d20_training_pipeline(spark, sf_dir):
     )
     evals = docs.filter(F.col("doc_id") % 97 == 0)
 
-    # The gate SIGNALS are checkpointed BEFORE the keep-filter: pushing
-    # the filter into the lazy gate plan lets CollapseProject inline
-    # the whole keep-conjunction into the filter condition, and every
-    # conjunct lane re-derives the token array — measured 25s for this
-    # stage at sf0.1 (re-tokenizing ~10x) vs ~2s materialized.
-    gated = (
-        quality_gate(train)
-        .localCheckpoint(eager=True)
-        .filter(F.col("keep"))
-        .select("doc_id", "n_tokens")
-    )
-    # Stage materialization: each stage output is checkpointed before
-    # it fans out (every stage feeds BOTH the next stage and the final
-    # per-source attrition flags, and the near-dup stage feeds the LSH
-    # chain besides) — without it Catalyst re-executes the whole
-    # upstream chain once per consumer (measured 128 exchanges / 29
-    # window nodes in the naive composed plan). This is the Spark
-    # spelling of what a production pipeline does anyway: persist
-    # inter-stage corpora. At 100 TB these are parquet writes between
-    # jobs; in one session, checkpoint blocks.
-    q = train.join(gated, "doc_id").localCheckpoint(eager=True)
+    with CheckpointScope(spark) as ck:
+        # The gate SIGNALS are checkpointed BEFORE the keep-filter: pushing
+        # the filter into the lazy gate plan lets CollapseProject inline
+        # the whole keep-conjunction into the filter condition, and every
+        # conjunct lane re-derives the token array — measured 25s for this
+        # stage at sf0.1 (re-tokenizing ~10x) vs ~2s materialized. Only
+        # q reads the gate frame, so its pin is released on exit.
+        gated = (
+            ck.pin(quality_gate(train))
+            .filter(F.col("keep"))
+            .select("doc_id", "n_tokens")
+        )
+        # Stage materialization: each stage output is checkpointed before
+        # it fans out (every stage feeds BOTH the next stage and the final
+        # per-source attrition flags, and the near-dup stage feeds the LSH
+        # chain besides) — without it Catalyst re-executes the whole
+        # upstream chain once per consumer (measured 128 exchanges / 29
+        # window nodes in the naive composed plan). This is the Spark
+        # spelling of what a production pipeline does anyway: persist
+        # inter-stage corpora. At 100 TB these are parquet writes between
+        # jobs; in one session, checkpoint blocks.
+        q = ck.keep(ck.pin(train.join(gated, "doc_id")))
 
-    from .functions.text import norm_text
+        from .functions.text import norm_text
 
-    w_first = dedup.first_wins_dedup(
-        q.select("doc_id", norm_text(F.col("text")).alias("norm_key")),
-        ["norm_key"],
-        "doc_id",
-    ).select("doc_id")
-    ex = q.join(w_first, "doc_id").localCheckpoint(eager=True)
+        w_first = dedup.first_wins_dedup(
+            q.select("doc_id", norm_text(F.col("text")).alias("norm_key")),
+            ["norm_key"],
+            "doc_id",
+        ).select("doc_id")
+        ex = ck.keep(ck.pin(q.join(w_first, "doc_id")))
 
-    pairs = dedup.near_dup_pairs_minhash(
-        ex.select("doc_id", "text"), threshold=0.8
-    )
-    dup_b = pairs.select(F.col("b").alias("doc_id")).distinct()
-    nd = ex.join(dup_b, "doc_id", "left_anti").localCheckpoint(eager=True)
+        pairs = dedup.near_dup_pairs_minhash(
+            ex.select("doc_id", "text"), threshold=0.8
+        )
+        dup_b = pairs.select(F.col("b").alias("doc_id")).distinct()
+        nd = ck.keep(ck.pin(ex.join(dup_b, "doc_id", "left_anti")))
 
     cont = (
         dedup.decontaminate(nd.select("doc_id", "text"), evals, shingle_n=5)
@@ -2770,59 +2772,48 @@ def d25_entity_resolution(spark, sf_dir):
     aggregate. The oracle replays matching as the naive quadratic form
     and the closure as a recursive CTE — both stages independently
     proven, here proven composed."""
-    from .operators.components import (
-        _release_rdds,
-        _tracked_checkpoint,
-        connected_components,
-    )
+    from .operators.components import connected_components
     from .operators.fuzzy import fuzzy_match_pairs
 
     part = _ld(spark, sf_dir, "part")
-    # ONE tracked checkpoint of the narrow blocking base feeds every
-    # branch (segment generation, probe generation, name re-attach for
-    # the verify, both vertex arms), so the parquet scan runs once;
-    # the catalog groupBy is pinned on top of it because its THREE
-    # consumers would otherwise each replay the exchange (r9 trim,
-    # same discipline as the r8 CC rewrite). Tracked pins — released
-    # below once the CC loop has materialized its labels — instead of
-    # raw localCheckpoint, which would leak executor storage for the
-    # session lifetime on every invocation.
-    pins: list = []
-    base = _tracked_checkpoint(part.select("p_partkey", "p_name"), pins)
-    base.count()
-    catalog = _tracked_checkpoint(
-        base.groupBy("p_name")
-        .agg(F.min("p_partkey").alias("name_id"))
-        .select("name_id", F.col("p_name").alias("cname")),
-        pins,
-    )
-    catalog.count()
-    queries = base.select(
-        (F.col("p_partkey") + _ER_OFFSET).alias("qid"),
-        F.expr(_TYPO_NAME_SQL).alias("qname"),
-    )
-    matches = fuzzy_match_pairs(
-        catalog, queries, "name_id", "cname", "qid", "qname", k=2
-    ).select(F.col("qid").alias("a"), F.col("cat_id").alias("b"))
+    # ONE checkpoint of the narrow blocking base feeds every branch
+    # (segment generation, probe generation, name re-attach for the
+    # verify, both vertex arms), so the parquet scan runs once; the
+    # catalog groupBy is pinned on top of it because its THREE
+    # consumers would otherwise each replay the exchange (r9 trim, same
+    # discipline as the r8 CC rewrite). The CC loop materializes its
+    # labels eagerly, so nothing downstream reads either pin: the scope
+    # releases both on exit.
+    with CheckpointScope(spark) as ck:
+        base = ck.pin(part.select("p_partkey", "p_name"))
+        catalog = ck.pin(
+            base.groupBy("p_name")
+            .agg(F.min("p_partkey").alias("name_id"))
+            .select("name_id", F.col("p_name").alias("cname"))
+        )
+        queries = base.select(
+            (F.col("p_partkey") + _ER_OFFSET).alias("qid"),
+            F.expr(_TYPO_NAME_SQL).alias("qname"),
+        )
+        matches = fuzzy_match_pairs(
+            catalog, queries, "name_id", "cname", "qid", "qname", k=2
+        ).select(F.col("qid").alias("a"), F.col("cat_id").alias("b"))
 
-    # No distinct over the union: name_ids are unique by construction
-    # (MIN per name group), qids are unique (one per part row), and
-    # the _ER_OFFSET range split keeps the two populations disjoint —
-    # a distinct here would be a pure-overhead exchange.
-    verts = catalog.select(F.col("name_id").alias("v")).unionByName(
-        queries.select(F.col("qid").alias("v"))
-    )
-    labels = connected_components(
-        verts, matches, id_col="v", src_col="a", dst_col="b",
-        # chained matches give this graph real diameter (8 one-hop
-        # rounds measured at sf0.1): one 8-hop propagate round, then a
-        # single-relax fixpoint confirm — the 2-round floor with the
-        # confirm round at 1/8th the join cost
-        relax_per_round=(8, 1),
-    )
-    # The CC loop materializes eagerly, so nothing downstream reads
-    # the blocking pins anymore: release them before returning.
-    _release_rdds(spark, pins)
+        # No distinct over the union: name_ids are unique by construction
+        # (MIN per name group), qids are unique (one per part row), and
+        # the _ER_OFFSET range split keeps the two populations disjoint —
+        # a distinct here would be a pure-overhead exchange.
+        verts = catalog.select(F.col("name_id").alias("v")).unionByName(
+            queries.select(F.col("qid").alias("v"))
+        )
+        labels = connected_components(
+            verts, matches, id_col="v", src_col="a", dst_col="b",
+            # chained matches give this graph real diameter (8 one-hop
+            # rounds measured at sf0.1): one 8-hop propagate round, then a
+            # single-relax fixpoint confirm — the 2-round floor with the
+            # confirm round at 1/8th the join cost
+            relax_per_round=(8, 1),
+        )
     return labels.groupBy(F.col("cluster_id").alias("entity_id")).agg(
         F.count("*").alias("n_members"),
         F.sum(F.when(F.col("v") < _ER_OFFSET, 1).otherwise(0))

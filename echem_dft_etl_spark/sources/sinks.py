@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import first_per_key
-from ..operators.storage import release_rdds, tracked_checkpoint
+from ..operators.storage import CheckpointScope
 
 
 def write_partitioned(
@@ -64,13 +64,13 @@ def upsert_parquet(
     JDBC MERGE path (:func:`write_jdbc`).
 
     The insert set is read from the table it is appended to, so it is
-    pinned before the append starts, as a tracked local checkpoint
-    rather than a cache. The checkpoint is one eager job; with
-    ``cache(); count()`` a one-row upsert on local[4] ran 10 jobs and
-    162 tasks, now 8 and 21. A checkpoint's lineage is cut, so no block
+    pinned before the append starts, as a local checkpoint in a
+    ``storage.CheckpointScope`` rather than a cache. The checkpoint is
+    one eager job; with ``cache(); count()`` a one-row upsert on
+    local[4] ran 10 jobs and 162 tasks, now 8 and 21. A checkpoint's lineage is cut, so no block
     can be recomputed against the half-appended table the way an
-    evicted cache block would be, and the ``finally`` releases it even
-    when the append fails.
+    evicted cache block would be, and the scope releases it even when
+    the append fails.
     """
     spark = new_rows.sparkSession
     batch = first_per_key(new_rows, key_cols, order_col)
@@ -82,13 +82,8 @@ def upsert_parquet(
         to_insert = batch.join(
             existing.select(*key_cols).distinct(), key_cols, "left_anti"
         )
-        owned: list = []
-        try:
-            tracked_checkpoint(to_insert, owned).write.mode("append").parquet(
-                table_path
-            )
-        finally:
-            release_rdds(spark, owned)
+        with CheckpointScope(spark) as ck:
+            ck.pin(to_insert).write.mode("append").parquet(table_path)
     else:  # first write: table does not exist yet
         batch.write.mode("overwrite").parquet(table_path)
     return spark.read.parquet(table_path)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.storage import scoped_shuffle_width
 from ..sources.tables import load_table, prepare_session
 
 #: Shuffle width (= state-store instances per stateful operator) for the
@@ -162,9 +163,10 @@ def _run_stream(
 
     ``start`` is a zero-argument callable returning a started query.
     The shuffle width is narrowed to ``min(session, STREAM_STATE_WIDTH)``
-    for the query's lifetime — the width is baked in at stream START
-    and, for a checkpointed production query, pinned by the checkpoint
-    — and restored after. Completion is ``processAllAvailable()``: it
+    for the query's lifetime through ``storage.scoped_shuffle_width`` —
+    the width is baked in at stream START and, for a checkpointed
+    production query, pinned by the checkpoint — and restored after.
+    Completion is ``processAllAvailable()``: it
     returns once a trigger finds no new data or the query terminates (an
     ``availableNow`` query stops itself), and raises the query's
     failure. The query is stopped either way.
@@ -177,10 +179,8 @@ def _run_stream(
     attempt's state. Errors raised by ``start()`` itself (analysis,
     bad options) are not transient and propagate at once.
     """
-    conf_key = "spark.sql.shuffle.partitions"
-    saved_width = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, str(min(int(saved_width), STREAM_STATE_WIDTH)))
-    try:
+    # state width tracks state keys, not rows: n_rows=0, floor = width
+    with scoped_shuffle_width(spark, 0, floor=STREAM_STATE_WIDTH):
         for attempt in (1, 2):
             q = start()
             try:
@@ -196,8 +196,6 @@ def _run_stream(
                 )
             finally:
                 q.stop()
-    finally:
-        spark.conf.set(conf_key, saved_width)
 
 
 def run_to_memory(

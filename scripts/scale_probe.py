@@ -250,9 +250,9 @@ def build_probes(spark, k: int, cc_stats: list, tmpdir: str,
     """(family, name, build_fn[, setup_fn]) tuples over K-scaled
     corpora. Every probe returns a DataFrame whose count() forces full
     execution. An optional 4th element is a SETUP callable run OUTSIDE
-    the timed region: it receives an owned-rdd-ids list (for tracked
-    checkpoints the runner releases after the probe) and returns a
-    context passed to build_fn — how the ivfpq probe measures the
+    the timed region: it returns a context passed to build_fn (its
+    checkpoints are released after the probe with everything else the
+    probe pinned) — how the ivfpq probe measures the
     SERVING path with the index built once per rung (r8 judge finding:
     folding the per-run index build into the timed query made the
     committed exponent describe the wrong path).
@@ -404,19 +404,15 @@ def build_probes(spark, k: int, cc_stats: list, tmpdir: str,
             edges, seeds, max_hops=4, round_stats=bfs_stats
         )
 
-    def ivfpq_index_setup(owned_ids: list):
+    def ivfpq_index_setup():
         """Build the IVF-PQ index ONCE per rung, eagerly checkpointed,
         so the timed region is the query/serving path — the path the
         100 TB story depends on (the index is a materialized artifact
         there, not per-query work). The runner releases the pinned
-        blocks after the probe via ``owned_ids``."""
-        from echem_dft_etl_spark.operators.storage import (
-            tracked_checkpoint,
-        )
-
+        blocks after the probe with everything else the probe pinned."""
         idx = similarity.ivfpq_build_index(emb)
         for key in ("cells", "codes", "cb_arr", "cent_arr"):
-            idx[key] = tracked_checkpoint(idx[key], owned_ids)
+            idx[key] = idx[key].localCheckpoint(eager=True)
         return idx
 
     probes = [
@@ -670,7 +666,6 @@ def main() -> None:
             ):
                 family, name, build = entry[0], entry[1], entry[2]
                 setup = entry[3] if len(entry) > 3 else None
-                setup_ids: list = []
                 # release EVERYTHING a probe pins (fixture
                 # localCheckpoints, setup indexes, returned-frame
                 # blocks) once its count lands: before this, each
@@ -678,7 +673,7 @@ def main() -> None:
                 # and the late K=8 rung ran under ~7 rungs of dead
                 # blocks (bfs measured 45 s polluted vs 16-22 s clean)
                 pinned_before = _persistent_rdd_ids(spark)
-                ctx = setup(setup_ids) if setup else None
+                ctx = setup() if setup else None
                 # loadavg beside every sample (the bench/calm_probe
                 # protocol): r12's first artifact carried a 6x K=8
                 # knee on a FIXED-OUTPUT twin that an isolated re-run

@@ -2043,43 +2043,49 @@ def test_triangle_counts_match_bruteforce(spark):
     assert sum(want.values()) > 30, "fixture too sparse to prove anything"
 
 
-def test_storage_tracked_checkpoint_roundtrip(spark):
-    """operators/storage.py public API: tracked_checkpoint records
-    exactly the RDD ids it pinned, release_rdds frees them (and
-    tolerates already-released / unknown ids), and the checkpointed
-    frame stays readable until released."""
+def test_storage_checkpoint_scope_roundtrip(spark):
+    """operators/storage.py public API: a CheckpointScope pin holds
+    exactly the RDD ids it pinned and stays readable; release frees
+    them at once (twice is a no-op, as is release_rdds of unknown ids);
+    on a normal exit only the kept pin survives."""
     from echem_dft_etl_spark.operators.storage import (
+        CheckpointScope,
         persistent_rdd_ids,
         release_rdds,
-        tracked_checkpoint,
     )
 
     before = persistent_rdd_ids(spark)
-    owned: list = []
-    ck = tracked_checkpoint(
-        spark.range(1000).selectExpr("id", "id * 2 AS dbl"), owned
-    )
-    assert owned, "checkpoint pinned no storage?"
-    assert set(owned) <= persistent_rdd_ids(spark) - before
-    assert ck.count() == 1000
-    release_rdds(spark, owned)
-    assert not (set(owned) & persistent_rdd_ids(spark))
+    frame = spark.range(1000).selectExpr("id", "id * 2 AS dbl")
+    with CheckpointScope(spark) as ck:
+        early = ck.pin(frame)
+        owned = persistent_rdd_ids(spark) - before
+        assert owned, "checkpoint pinned no storage?"
+        assert early.count() == 1000
+        ck.release(early)
+        assert not (owned & persistent_rdd_ids(spark))
+        ck.release(early)  # twice: no raise
+        kept = ck.keep(ck.pin(frame))
+        kept_ids = persistent_rdd_ids(spark) - before
+        ck.pin(frame)
+    assert persistent_rdd_ids(spark) - before == kept_ids
+    assert kept.count() == 1000
+    release_rdds(spark, kept_ids)
     # idempotent / unknown ids: no raise
-    release_rdds(spark, owned)
+    release_rdds(spark, kept_ids)
     release_rdds(spark, [999_999])
+    assert persistent_rdd_ids(spark) == before
 
 
-def test_storage_tracked_checkpoint_records_a_failed_job(spark):
-    """A failed eager checkpoint job leaves its RDD pinned; the ids
-    still land in ``owned`` so the caller's ``finally`` frees them."""
+def test_storage_checkpoint_scope_frees_a_failed_job(spark):
+    """A failed eager checkpoint job leaves its RDD pinned; the scope
+    still owns it and frees it on exit, and an exception out of the
+    scope frees every pin, kept ones included."""
     from echem_dft_etl_spark.operators.storage import (
+        CheckpointScope,
         persistent_rdd_ids,
-        release_rdds,
-        tracked_checkpoint,
     )
 
     before = persistent_rdd_ids(spark)
-    owned: list = []
     # over a range, not local rows, so the optimizer cannot fold the
     # error into the plan; no shuffle, so it fails in the checkpoint job
     bad = spark.range(4).select(
@@ -2087,10 +2093,113 @@ def test_storage_tracked_checkpoint_records_a_failed_job(spark):
         .otherwise(F.col("id"))
         .alias("id")
     )
+    with CheckpointScope(spark) as ck:
+        with pytest.raises(Exception, match="bad row"):
+            ck.pin(bad)
+        assert persistent_rdd_ids(spark) - before
+    assert persistent_rdd_ids(spark) == before
+
     with pytest.raises(Exception, match="bad row"):
-        tracked_checkpoint(bad, owned)
-    assert owned
-    release_rdds(spark, owned)
+        with CheckpointScope(spark) as ck:
+            ck.keep(ck.pin(spark.range(10)))
+            ck.pin(bad)
+    assert persistent_rdd_ids(spark) == before
+
+
+def _checkpointing_calls(spark):
+    """name -> (zero-argument operator call, number of checkpoints its
+    result reads), on graphs small enough to run every loop to its end."""
+    from echem_dft_etl_spark.operators import components as c
+    from echem_dft_etl_spark.operators.dedup import containment_pairs
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "a long, b long"
+    )
+    k4 = spark.createDataFrame(
+        [(a, b) for a in range(4) for b in range(a + 1, 4)], "a long, b long"
+    )
+    directed = chain.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    directed = directed.unionAll(directed.select("dst", "src"))
+    tree = spark.createDataFrame(
+        [(0, None)] + [(i, i - 1) for i in range(1, 6)], "node long, parent long"
+    )
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e f g h")], "doc_id long, text string"
+    )
+    seeds = spark.createDataFrame([(0,)], "v long")
+    return {
+        "connected_components": (
+            lambda: c.connected_components(
+                spark.range(6).select(F.col("id").alias("doc_id")), chain
+            ),
+            1,
+        ),
+        "forest_root_depth": (lambda: c.forest_root_depth(tree), 1),
+        "integer_pagerank": (
+            lambda: c.integer_pagerank(directed, iterations=4), 1
+        ),
+        "triangle_counts": (lambda: c.triangle_counts(k4), 1),
+        # the seed layer and five non-empty layers; the empty sixth goes
+        "bfs_distances": (lambda: c.bfs_distances(chain, seeds), 6),
+        "kcore_nodes": (lambda: c.kcore_nodes(k4, k=3, rounds=2), 1),
+        # the base edges plus each grade's survivors
+        "coreness_grid": (
+            lambda: c.coreness_grid(k4, ks=(2, 3), rounds=2), 3
+        ),
+        "containment_pairs": (lambda: containment_pairs(docs), 1),
+    }
+
+
+_CHECKPOINTING_OPERATORS = (
+    "bfs_distances",
+    "connected_components",
+    "containment_pairs",
+    "coreness_grid",
+    "forest_root_depth",
+    "integer_pagerank",
+    "kcore_nodes",
+    "triangle_counts",
+)
+
+
+@pytest.mark.parametrize("name", _CHECKPOINTING_OPERATORS)
+def test_operator_checkpoints_leave_only_what_the_result_reads(
+    spark, monkeypatch, name
+):
+    """Every checkpointing operator owns its pins through one
+    CheckpointScope: after a successful call only the checkpoints the
+    result reads stay pinned, and a call whose LAST checkpoint fails —
+    the point where the most pins are held, kept ones included —
+    leaves nothing pinned."""
+    from pyspark.sql.classic.dataframe import DataFrame as Classic
+
+    from echem_dft_etl_spark.operators.storage import (
+        persistent_rdd_ids,
+        release_rdds,
+    )
+
+    call, n_kept = _checkpointing_calls(spark)[name]
+    orig = Classic.localCheckpoint
+    calls = {"n": 0, "fail_at": None}
+
+    def checkpoint(self, eager=True):
+        calls["n"] += 1
+        out = orig(self, eager=eager)
+        if calls["n"] == calls["fail_at"]:
+            raise RuntimeError("checkpoint job failed")
+        return out
+
+    monkeypatch.setattr(Classic, "localCheckpoint", checkpoint)
+    before = persistent_rdd_ids(spark)
+    res = call()
+    kept = persistent_rdd_ids(spark) - before
+    assert len(kept) == n_kept, kept
+    res.collect()
+    release_rdds(spark, kept)
+
+    calls.update(n=0, fail_at=calls["n"])
+    with pytest.raises(RuntimeError, match="checkpoint job failed"):
+        call()
     assert persistent_rdd_ids(spark) == before
 
 
