@@ -2,7 +2,8 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
 Runs the registry's full query inventory on local[$SPARK_GRAFT_CPUS]
-(default sf0.1, local[32]) and prints exactly ONE COMPACT JSON line:
+(default sf0.1, every core when unset) and prints exactly ONE COMPACT
+JSON line:
 
     {"metric": "suite_seconds", "value": <total>, "unit": "sec",
      "queries": {"<headline name>": <median sec>, ...}, "sf": <sf>,
@@ -49,7 +50,9 @@ The measurement core — :func:`timed_run`, :func:`release_leftovers`,
 the host-load gate :func:`wait_for_calm_host` and the round-numbered
 artifact path :func:`round_artifact` — is module-level so the probes
 under ``scripts/`` time, gate and name their artifacts exactly as the
-suite does.
+suite does. A query's isolated re-run, away from the suite's shared-JVM
+context, is ``scripts/calm_probe.py``; ``scripts/bench_compare.py`` and
+``tests/test_bench_regression.py`` judge artifacts by one rule.
 """
 
 from __future__ import annotations
@@ -284,37 +287,11 @@ def main() -> None:
     multimodal.materialize_bmp_files(spark, SF_DIR, docs)
     multimodal.materialize_wav_files(spark, SF_DIR, docs)
 
-    # Failures of the best-effort stages (early probes, warm-up, phase
-    # probes), as {"stage", "query", "error"}; empty on a clean run.
+    # Failures of the best-effort stages (warm-up, phase probe), as
+    # {"stage", "query", "error"}; empty on a clean run.
     harness_errors: list[dict] = []
 
     release_leftovers(spark)
-
-    # Early probes: queries whose in-suite timings are dominated by
-    # SUITE CONTEXT (hundreds of compiled plans, GC debt of every
-    # prior query) rather than their own plan get one extra timed run
-    # HERE — same process, before the suite deposits that context —
-    # recorded separately as early_probe_seconds. x05_triangle_counts
-    # measures ~5 s isolated but 6-7 s behind 200 queries of JVM
-    # debris; the pair of numbers is the evidence that separates plan
-    # cost from context cost (the d20 cold-start lesson, r10).
-    EARLY_PROBES = ("x05_triangle_counts", "x05_pagerank")
-    early_probe: dict[str, dict] = {}
-    for name in EARLY_PROBES:
-        if name in names:
-            try:
-                # first run pays codegen/cache: recorded, not the sample
-                _cold = timed_run(spark, specs[name].fn)
-                dt, la = timed_run(spark, specs[name].fn)
-                early_probe[name] = {
-                    "seconds": dt,
-                    "loadavg_1m": la,
-                    "first_run_seconds": _cold[0],
-                }
-            except Exception as exc:
-                harness_errors.append(
-                    {"stage": "early_probe", "query": name, "error": repr(exc)}
-                )
 
     # UNTIMED warmup pass at the benched scale factor: pays codegen,
     # shuffle-file creation and page-cache fill once, outside the
@@ -498,7 +475,6 @@ def main() -> None:
                 },
                 "phase_seconds": phase_seconds,
                 "harness_errors": harness_errors,
-                "early_probe_seconds": early_probe,
                 "load_gate": {
                     "gate": LOAD_GATE,
                     "wait_budget_seconds": LOAD_GATE_WAIT_S,

@@ -43,9 +43,9 @@ def main() -> int:
     from echem_dft_etl_spark.session import get_session
     from echem_dft_etl_spark.sources import TABLES
     from tests.test_oracle_parity import (
-        _arrow_family,
-        _normalize_rows,
-        _spark_family,
+        _duck_result,
+        _spark_result,
+        parity_problems,
     )
 
     spark = get_session(app_name="verify-local")
@@ -61,9 +61,8 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            df = spec.fn(spark, SF_DIR)
-            s_cols = [c.lower() for c in df.columns]
-            s_rows = [tuple(r) for r in df.collect()]
+            spark_res = _spark_result(spark, spec.fn, SF_DIR)
+            s_rows = spark_res[1]
             if spec.oracle is None:
                 parity[name] = {
                     "status": "rows-only",
@@ -74,41 +73,12 @@ def main() -> int:
                 print(f"  {name}: rows-only, {len(s_rows)} rows "
                       f"[{time.time()-t0:.1f}s]")
                 continue
-            cur = duck.sql(spec.oracle)
-            d_cols = [c.lower() for c in cur.columns]
-            d_rows = [tuple(r) for r in cur.fetchall()]
-            sc, sn = _normalize_rows(s_cols, s_rows)
-            dc, dn = _normalize_rows(d_cols, d_rows)
-            problems = []
-            # Driver-hash-visible type families (the arrow path widens
-            # DuckDB HUGEINT to decimal/float — the r3-r5 s01 red).
-            s_fams = {
-                f.name.lower(): _spark_family(f.dataType)
-                for f in df.schema.fields
-            }
-            d_fams = {
-                f.name.lower(): _arrow_family(f.type)
-                for f in duck.sql(spec.oracle).arrow().schema
-            }
-            fam_diffs = {
-                c: (s_fams.get(c), d_fams.get(c))
-                for c in set(s_fams) | set(d_fams)
-                if s_fams.get(c) != d_fams.get(c)
-            }
-            if fam_diffs:
-                problems.append(f"type-family mismatch {fam_diffs}")
-            if sc != dc:
-                problems.append(f"cols {sc} vs {dc}")
-            if len(sn) != len(dn):
-                problems.append(f"rowcount {len(sn)} vs {len(dn)}")
-            elif sc == dc:
-                bad = [(a, b) for a, b in zip(sn, dn) if a != b]
-                if bad:
-                    problems.append(f"{len(bad)} value mismatches, first: {bad[0]}")
+            duck_res = _duck_result(duck, spec.oracle)
+            problems = parity_problems(spark_res, duck_res)
             parity[name] = {
                 "status": "fail" if problems else "pass",
-                "spark_rows": len(sn),
-                "oracle_rows": len(dn),
+                "spark_rows": len(s_rows),
+                "oracle_rows": len(duck_res[1]),
                 "sec": round(time.time() - t0, 2),
                 **({"problems": problems} if problems else {}),
             }
@@ -116,7 +86,7 @@ def main() -> int:
                 failures += 1
                 print(f"  {name}: FAIL {problems} [{time.time()-t0:.1f}s]")
             else:
-                print(f"  {name}: OK {len(sn)} rows [{time.time()-t0:.1f}s]")
+                print(f"  {name}: OK {len(s_rows)} rows [{time.time()-t0:.1f}s]")
         except Exception as exc:  # noqa: BLE001
             failures += 1
             parity[name] = {

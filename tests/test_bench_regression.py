@@ -1,14 +1,15 @@
 """Per-query bench regression gate (VERDICT r10 item 7).
 
-Ten rounds of committed BENCH_DETAIL.json artifacts existed and
-``scripts/bench_compare.py`` could diff any two, but nothing FAILED
-when a query got slower — the r10 ``x05_pagerank`` regression
-(best-ever 4.03 s → 6.19 s min-of-runs) was caught at judging, not at
-commit time. This module is the commit-time tripwire:
+Ten rounds of committed BENCH_DETAIL.json artifacts existed, but
+nothing FAILED when a query got slower — the r10 ``x05_pagerank``
+regression (best-ever 4.03 s → 6.19 s min-of-runs) was caught at
+judging, not at commit time. This module is the commit-time tripwire
+and the one regression rule: ``scripts/bench_compare.py`` judges two
+artifacts with the same functions.
 
-- ``BENCH_BASELINE.json`` (``scripts/bench_baseline.py``) is the
+- ``BENCH_BASELINE.json`` (``scripts/bench_baseline.py update``) is the
   committed memory: per query, the smallest clean-load min-of-runs any
-  committed artifact ever recorded.
+  artifact with the baseline's host fingerprint recorded.
 - :func:`find_regressions` is the detection rule: a query regresses
   when its current min-of-runs exceeds ``threshold × best_ever``, with
   a suite-median drift adjustment — this host drifts 1.3-1.7× wholesale
@@ -39,30 +40,36 @@ driver's 8-core run judged against 32-core minima flagged two queries
 at 2.7-2.9×). It also skips when the working-tree artifact itself is
 wholesale-contaminated (suite loadavg_start above the bar, or the
 bench's own load gate recorded a waiver): per-query calls from such an
-artifact are exactly the unreliable comparisons bench_compare.py warns
-about. bench.py's r11 load gate exists to make clean artifacts the
-norm.
+artifact are unreliable. bench.py's r11 load gate exists to make clean
+artifacts the norm. A hit this round's calm probe
+(``scripts/calm_probe.py``, its ``{}`` arms) measures inside the raw
+bar is cleared.
 """
 
 from __future__ import annotations
 
 import json
 import statistics
+import sys
 from pathlib import Path
 
 import pytest
 
+import bench
 from bench import current_round
+from scripts import bench_baseline, calm_probe
+from tests.conftest import SF_SMOKE
 
 REPO = Path(__file__).resolve().parent.parent
 BASELINE_PATH = REPO / "BENCH_BASELINE.json"
 DETAIL_PATH = REPO / "BENCH_DETAIL.json"
 
 #: Queries faster than this (both sides) are scheduling noise, not
-#: signal — same floor bench_compare.py uses.
+#: signal.
 NOISE_FLOOR_S = 0.3
-#: Per-sample / suite-start contamination bar (bench_compare.py's).
-LOAD_BAR = 4.0
+#: Per-sample / suite-start contamination bar: the one the baseline
+#: distills its minima under.
+LOAD_BAR = bench_baseline.LOAD_BAR
 THRESHOLD = 1.5
 #: A hit must ALSO exceed its best-ever by this many absolute seconds:
 #: this host carries 0.3-0.5 s of per-stage scheduling jitter, so a
@@ -275,23 +282,29 @@ def test_fingerprint_gate_passes_like_for_like():
 
 def calm_probe_minima(round_n: int) -> dict[str, float]:
     """Per-query min over THIS round's committed calm-probe artifacts
-    (``CALMPROBE_r{N}*.json``). The calm probe is the established
-    re-adjudication slot for suite-context inflation (judge-endorsed,
-    VERDICT r10 item 2): isolated fresh-session samples with the load
-    recorded beside each. Minima only from the current round — a
-    stale artifact must not keep vouching for a query that later
-    regressed."""
+    (``CALMPROBE_r{N}*.json``), from their ``{}`` arms only: a
+    conf-override arm is not evidence for the engine as committed. The
+    calm probe is the established re-adjudication slot for
+    suite-context inflation (VERDICT r10 item 2): isolated
+    fresh-session samples with the load recorded beside each. Minima
+    only from the current round — a stale artifact must not keep
+    vouching for a query that later regressed. An unreadable artifact
+    fails the gate, naming its path."""
     out: dict[str, float] = {}
-    for f in REPO.glob(f"CALMPROBE_r{round_n:02d}*.json"):
+    for f in sorted(REPO.glob(f"CALMPROBE_r{round_n:02d}*.json")):
         try:
-            data = json.loads(f.read_text())
-        except Exception:
-            continue
-        for name, entry in (data.get("queries") or {}).items():
-            runs = [s for s in (entry.get("runs") or []) if s > 0]
-            if runs:
-                m = min(runs)
-                out[name] = min(out.get(name, m), m)
+            arms = json.loads(f.read_text())["arms"]
+            calm = [arm["queries"] for arm in arms if arm["conf"] == {}]
+            for queries in calm:
+                for name, entry in queries.items():
+                    runs = [s for s in entry["runs"] if s > 0]
+                    if runs:
+                        m = min(runs)
+                        out[name] = min(out.get(name, m), m)
+        except (ValueError, KeyError, TypeError, AttributeError) as exc:
+            raise ValueError(
+                f"unreadable calm-probe artifact {f}: {exc!r}"
+            ) from exc
     return out
 
 
@@ -363,3 +376,177 @@ def test_no_regressions_vs_committed_best_ever():
             for h in hits
         )
     )
+
+
+def test_calm_probe_minima_fails_on_an_unreadable_artifact(
+    monkeypatch, tmp_path
+):
+    monkeypatch.setattr(sys.modules[__name__], "REPO", tmp_path)
+    bad = tmp_path / "CALMPROBE_r07.json"
+    bad.write_text('{"arms": [{"conf": {}, "queries": ')
+    with pytest.raises(ValueError, match=str(bad)):
+        calm_probe_minima(7)
+
+
+def test_calm_probe_minima_reads_only_the_unset_conf_arm(
+    monkeypatch, tmp_path
+):
+    monkeypatch.setattr(sys.modules[__name__], "REPO", tmp_path)
+    arms = [
+        {"conf": {}, "queries": {"a": {"runs": [2.0, 1.5]}}},
+        {"conf": {"k": "v"}, "queries": {"a": {"runs": [0.5]}}},
+    ]
+    (tmp_path / "CALMPROBE_r07.json").write_text(json.dumps({"arms": arms}))
+    assert calm_probe_minima(7) == {"a": 1.5}
+
+
+FP = {"cpus": 4, "sf": 0.1, "spark_version": "4.1.2"}
+
+
+def _suite(runs: dict[str, list[float]], fp=FP, start=1.0) -> dict:
+    """A bench artifact with ``MIN_SUITE_QUERIES`` queries: ``runs``
+    plus 1.0 s fillers."""
+    runs = {
+        **{f"fill{i}": [1.0] for i in range(bench_baseline.MIN_SUITE_QUERIES)},
+        **runs,
+    }
+    return {
+        "fingerprint": fp,
+        "loadavg_start": [start, start, start],
+        "queries": {n: min(s) for n, s in runs.items()},
+        "runs": runs,
+        "run_loadavg": {n: [1.0] * len(s) for n, s in runs.items()},
+    }
+
+
+@pytest.fixture
+def baseline_files(monkeypatch, tmp_path):
+    """``bench_baseline`` pointed at tmp BASELINE/DETAIL files; returns
+    ``update(detail) -> baseline``."""
+    monkeypatch.setattr(bench_baseline, "BASELINE", tmp_path / "base.json")
+    monkeypatch.setattr(bench_baseline, "DETAIL", tmp_path / "detail.json")
+
+    def update(detail: dict) -> dict:
+        bench_baseline.DETAIL.write_text(json.dumps(detail))
+        bench_baseline.update()
+        return json.loads(bench_baseline.BASELINE.read_text())
+
+    return update
+
+
+def test_baseline_update_refuses_an_artifact_without_fingerprint(
+    baseline_files,
+):
+    with pytest.raises(SystemExit, match="no fingerprint"):
+        baseline_files(_suite({"a": [2.0]}, fp=None))
+    assert not bench_baseline.BASELINE.exists()
+
+
+def test_baseline_update_only_lowers_minima(baseline_files):
+    base = baseline_files(_suite({"a": [2.0, 2.5], "b": [3.0]}))
+    assert base["fingerprint"] == FP
+    assert (base["a"]["min_seconds"], base["b"]["min_seconds"]) == (2.0, 3.0)
+    base = baseline_files(_suite({"a": [4.0], "b": [1.0], "c": [5.0]}))
+    assert base["a"]["min_seconds"] == 2.0
+    assert base["b"]["min_seconds"] == 1.0
+    assert base["c"]["min_seconds"] == 5.0
+
+
+def test_baseline_update_starts_anew_on_a_fingerprint_change(baseline_files):
+    baseline_files(_suite({"a": [1.0], "b": [3.0]}))
+    base = baseline_files(_suite({"a": [2.0]}, fp={**FP, "cpus": 8}))
+    assert base["fingerprint"]["cpus"] == 8
+    assert base["a"]["min_seconds"] == 2.0
+    assert "b" not in base
+
+
+def test_baseline_update_skips_contaminated_and_partial_suites(baseline_files):
+    base = baseline_files(_suite({"a": [2.0]}))
+    hot = baseline_files(_suite({"a": [1.0]}, start=LOAD_BAR + 1))
+    assert hot == base
+    partial = _suite({})
+    partial["runs"] = partial["queries"] = {"a": [1.0]}
+    assert baseline_files(partial) == base
+
+
+def test_bench_compare_refuses_the_fingerprintless_r13_artifact(
+    tmp_path, capsys
+):
+    from scripts import bench_compare
+
+    old = REPO / "plans/r13/bench_before_detail.json"
+    new = tmp_path / "new.json"
+    stamped = {**json.loads(old.read_text()), "fingerprint": FP}
+    new.write_text(json.dumps(stamped))
+    assert bench_compare.main([str(old), str(new)]) == 2
+    out = capsys.readouterr().out
+    for f in FINGERPRINT_FIELDS:
+        assert f"{f} missing from the baseline" in out
+    assert "regressions" not in out
+
+
+def test_bench_compare_reports_the_gate_hits(tmp_path, capsys):
+    """Same fingerprint on both sides: bench_compare's verdict is
+    exactly find_regressions' on the frozen r13 gate numbers."""
+    from scripts import bench_compare
+
+    frozen = json.loads(
+        (REPO / "tests/data/bench_r13_c8_gate.json").read_text()
+    )
+    minima = {n: e["min_seconds"] for n, e in frozen["baseline"].items()}
+    runs = {n: [m] for n, m in minima.items()}
+    old = {"fingerprint": FP, "queries": minima, "runs": runs}
+    new = {**frozen["detail"], "fingerprint": FP}
+    expected = find_regressions(frozen["detail"], frozen["baseline"])
+    assert {h["query"] for h in expected} == {
+        "mm_audio_chunks",
+        "mm_decode_features",
+    }
+    assert bench_compare.compare(old, new) == (None, expected)
+
+    paths = [tmp_path / "old.json", tmp_path / "new.json"]
+    for p, d in zip(paths, (old, new)):
+        p.write_text(json.dumps(d))
+    assert bench_compare.main([str(p) for p in paths]) == 1
+    listed = [
+        ln.split()[1].rstrip(":")
+        for ln in capsys.readouterr().out.splitlines()
+        if ln.startswith("  ")
+    ]
+    assert listed == [h["query"] for h in expected]
+
+
+@pytest.fixture
+def smoke_probe(spark, monkeypatch, tmp_path):
+    """Runs ``calm_probe.main`` on the test session at SF_SMOKE with a
+    gate of 99 and 1 round; returns the artifact it wrote."""
+    monkeypatch.setattr(bench, "SF_DIR", SF_SMOKE)
+    monkeypatch.setattr(sys.modules[__name__], "REPO", tmp_path)
+    out = tmp_path / "CALMPROBE_r07.json"
+
+    def run(queries: str, *arms: str) -> dict:
+        argv = [queries, "1", "99", str(out), *arms]
+        assert calm_probe.main(argv, spark=spark) == 0
+        return json.loads(out.read_text())
+
+    return run
+
+
+def test_calm_probe_single_arm_feeds_the_gate(smoke_probe):
+    art = smoke_probe("q01_pushdown_scan")
+    assert [a["conf"] for a in art["arms"]] == [{}]
+    assert art["sf_dir"] == SF_SMOKE
+    assert set(calm_probe_minima(7)) == {"q01_pushdown_scan"}
+
+
+def test_calm_probe_ab_arms_restore_the_conf(spark, smoke_probe):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    art = smoke_probe("q01_pushdown_scan,q08_scalar_arithmetic", f"{key}=3,5")
+    assert spark.conf.get(key) == before
+    assert [a["conf"] for a in art["arms"]] == [{key: "3"}, {key: "5"}]
+    for arm in art["arms"]:
+        for res in arm["queries"].values():
+            assert len(res["runs"]) == len(res["run_loadavg"]) == 1
+            assert res["warmup"] > 0 and res["min_seconds"] == res["runs"][0]
+    assert calm_probe_minima(7) == {}

@@ -81,8 +81,8 @@ def _arrow_family(t):
             "binary": "binary", "large_binary": "binary"}.get(s, s)
 
 
-def _spark_result(spark, fn):
-    df = fn(spark, SF_SMOKE)
+def _spark_result(spark, fn, sf_dir=SF_SMOKE):
+    df = fn(spark, sf_dir)
     fams = {f.name.lower(): _spark_family(f.dataType) for f in df.schema.fields}
     return [f.lower() for f in df.columns], [tuple(r) for r in df.collect()], fams
 
@@ -107,33 +107,50 @@ def _queries_with_oracle():
     return [(n, s) for n, s in sorted(all_queries().items()) if s.oracle]
 
 
-@pytest.mark.parametrize(
-    "name,spec", _queries_with_oracle(), ids=[n for n, _ in _queries_with_oracle()]
-)
-def test_oracle_parity(spark, duck, name, spec):
-    s_cols, s_rows, s_fams = _spark_result(spark, spec.fn)
-    d_cols, d_rows, d_fams = _duck_result(duck, spec.oracle)
+def parity_problems(spark_result, duck_result) -> list[str]:
+    """Every way a Spark ``(cols, rows, families)`` result differs from
+    its oracle's: type families, columns, row count, values. Empty when
+    they agree."""
+    s_cols, s_rows, s_fams = spark_result
+    d_cols, d_rows, d_fams = duck_result
+    problems = []
     fam_diffs = {
         c: (s_fams.get(c), d_fams.get(c))
         for c in set(s_fams) | set(d_fams)
         if s_fams.get(c) != d_fams.get(c)
     }
-    assert not fam_diffs, (
-        f"{name}: type-family mismatch {fam_diffs} (spark, duckdb-arrow) — "
-        "the driver hash stringifies cells, so int-vs-float/decimal "
-        "diverges even with equal values; cast the oracle (or the query) "
-        "so families agree."
-    )
+    if fam_diffs:
+        problems.append(
+            f"type-family mismatch {fam_diffs} (spark, duckdb-arrow) — "
+            "the driver hash stringifies cells, so int-vs-float/decimal "
+            "diverges even with equal values; cast the oracle (or the "
+            "query) so families agree."
+        )
     s_cols, s_norm = _normalize_rows(s_cols, s_rows)
     d_cols, d_norm = _normalize_rows(d_cols, d_rows)
-    assert s_cols == d_cols, f"{name}: column mismatch {s_cols} vs {d_cols}"
-    assert len(s_norm) == len(d_norm), (
-        f"{name}: row count {len(s_norm)} vs {len(d_norm)}"
+    if s_cols != d_cols:
+        problems.append(f"column mismatch {s_cols} vs {d_cols}")
+    if len(s_norm) != len(d_norm):
+        problems.append(f"row count {len(s_norm)} vs {len(d_norm)}")
+    elif s_cols == d_cols:
+        mismatches = [
+            (i, a, b) for i, (a, b) in enumerate(zip(s_norm, d_norm)) if a != b
+        ]
+        if mismatches:
+            problems.append(
+                f"{len(mismatches)} value mismatches, first: {mismatches[:3]}"
+            )
+    return problems
+
+
+@pytest.mark.parametrize(
+    "name,spec", _queries_with_oracle(), ids=[n for n, _ in _queries_with_oracle()]
+)
+def test_oracle_parity(spark, duck, name, spec):
+    problems = parity_problems(
+        _spark_result(spark, spec.fn), _duck_result(duck, spec.oracle)
     )
-    mismatches = [
-        (i, a, b) for i, (a, b) in enumerate(zip(s_norm, d_norm)) if a != b
-    ]
-    assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"
+    assert not problems, f"{name}: " + "; ".join(problems)
 
 
 def test_entry_smoke(spark):
