@@ -283,8 +283,13 @@ def run_reference_pipeline(
         # Q18-Q20, Q22: descriptors. Checkpoint before fan-out to two
         # consumers (upsert write + report count): without it the whole
         # upstream pipeline — including the external-solver pipe stage —
-        # executes once PER consumer.
-        result = ck.pin(echem.electrochem_descriptors(metrics, geometry))
+        # executes once PER consumer. The report's row count rides the
+        # eager checkpoint job as an observation, not a count job.
+        descriptors, obs = with_observation(
+            echem.electrochem_descriptors(metrics, geometry),
+            {"n": F.count(F.lit(1))},
+        )
+        result = ck.pin(descriptors)
 
         # Q16/S3: first-wins upsert into the results table
         table = upsert_parquet(
@@ -295,11 +300,13 @@ def run_reference_pipeline(
         )
 
         # S4: append-only report
-        n = result.count()
         append_report(
             spark,
             f"{out_dir}/report",
-            [f"## run: {n} slab(s) analyzed", "![plot](visualize/echem.png)"],
+            [
+                f"## run: {obs.get['n']} slab(s) analyzed",
+                "![plot](visualize/echem.png)",
+            ],
         )
     return table
 

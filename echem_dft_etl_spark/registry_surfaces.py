@@ -658,15 +658,16 @@ def x10_stream_dedup_keys(spark, sf_dir):
     """Streaming stateful dedup (dropDuplicatesWithinWatermark) on
     (user_id, event_type): the surviving key set is deterministic
     (= DISTINCT keys) even though which physical row survives depends
-    on arrival order — so the key projection is the checkable output."""
+    on arrival order — so the key projection is the checkable output.
+    The stream projects it before the memory sink, so the result reads
+    back with no job."""
     from .streaming.windows import read_events_stream, run_to_memory
 
     ev = read_events_stream(spark, sf_dir)
     deduped = ev.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-    out = run_to_memory(deduped, spark, mode="append")
-    return out.select("user_id", "event_type")
+    return run_to_memory(deduped.select("user_id", "event_type"), spark, mode="append")
 
 
 @_register(

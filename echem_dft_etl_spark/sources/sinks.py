@@ -79,9 +79,9 @@ def upsert_parquet(
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(hpath):
         existing = spark.read.parquet(table_path)
-        to_insert = batch.join(
-            existing.select(*key_cols).distinct(), key_cols, "left_anti"
-        )
+        # a left-anti join keeps a row iff no key matches, so duplicate
+        # existing keys need no distinct (it would add an aggregate)
+        to_insert = batch.join(existing.select(*key_cols), key_cols, "left_anti")
         with CheckpointScope(spark) as ck:
             ck.pin(to_insert).write.mode("append").parquet(table_path)
     else:  # first write: table does not exist yet

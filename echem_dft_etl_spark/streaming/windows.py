@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.storage import scoped_shuffle_width
-from ..sources.tables import load_table, prepare_session
+from ..sources.tables import parquet_schema, prepare_session
 
 #: Shuffle width (= state-store instances per stateful operator) for the
 #: bounded fixture replays. Stateful streams instantiate one state store
@@ -69,11 +69,13 @@ def read_table_stream(
     spark: SparkSession, sf_dir: str, table: str
 ) -> DataFrame:
     """Open ANY corpus table as a bounded stream (availableNow replay)
-    — schema from a batch peek (streaming readers need it up front),
-    no column normalization. Use :func:`read_events_stream` for events
-    (it additionally normalizes the ts vintage)."""
+    — streaming readers need the schema up front; it is the file's raw
+    schema as ``load_table`` reads it (``tables.parquet_schema``,
+    inferred once per file version), with no column normalization. Use
+    :func:`read_events_stream` for events (it additionally normalizes
+    the ts vintage)."""
     prepare_session(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/{table}.parquet")
     return spark.readStream.schema(raw_schema).parquet(
         _as_stream_dir(sf_dir, table)
     )
@@ -82,8 +84,8 @@ def read_table_stream(
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open the events table as a bounded stream (availableNow replay).
 
-    Schema comes from a batch peek (streaming readers need it up
-    front); the nanos→µs truncation matches the batch loader.
+    The raw schema is the batch loader's (:func:`read_table_stream`);
+    the nanos→µs truncation matches the batch loader.
     """
     stream = read_table_stream(spark, sf_dir, "events")
     ts_dtype = dict(stream.dtypes)["ts"]

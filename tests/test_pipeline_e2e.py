@@ -63,6 +63,17 @@ def test_pipeline_end_to_end(spark, materials, tmp_path):
     assert (tmp_path / "run" / "report").exists()
 
 
+def test_pipeline_report_counts_the_analyzed_slabs(spark, materials, tmp_path):
+    """The report's row count (observed on the descriptor checkpoint's
+    job) is the number of result rows."""
+    run_reference_pipeline(spark, materials, str(tmp_path / "run"))
+    (part,) = (tmp_path / "run" / "report").glob("part-*")
+    assert part.read_text().splitlines() == [
+        "## run: 1 slab(s) analyzed",
+        "![plot](visualize/echem.png)",
+    ]
+
+
 def test_pipeline_rerun_idempotent(spark, materials, tmp_path):
     out = str(tmp_path / "run")
     first = run_reference_pipeline(spark, materials, out).collect()
@@ -147,6 +158,22 @@ def test_upsert_first_wins(spark, tmp_path):
     )
     got2 = {r.MP_id: r.pzc for r in t2.collect()}
     assert got2 == {"a": 1.0, "b": 3.0, "c": 4.0}
+
+
+def test_upsert_skips_a_key_the_table_already_holds_twice(spark, tmp_path):
+    """Existing duplicate keys (two raw appends) still block the key:
+    the upsert adds no third copy, and the new key lands once."""
+    path = str(tmp_path / "tbl")
+    schema = "MP_id string, pzc double"
+    for pzc in (1.0, 2.0):
+        spark.createDataFrame([("a", pzc)], schema).write.mode("append").parquet(path)
+    table = upsert_parquet(
+        spark.createDataFrame([("a", 0.5), ("b", 3.0)], schema),
+        path, key_cols=["MP_id"], order_col="pzc",
+    )
+    assert sorted((r.MP_id, r.pzc) for r in table.collect()) == [
+        ("a", 1.0), ("a", 2.0), ("b", 3.0),
+    ]
 
 
 def test_upsert_leaves_no_pinned_storage(spark, tmp_path, monkeypatch):
